@@ -1,29 +1,46 @@
-"""Query path: driver-side planning (partition pruning + file collection)
-and a single declarative Spark scan.
+"""Query path: one driver-side planner (partition pruning + file
+collection) feeding one of two readers.
 
 Mirrors the reference lifecycle (SURVEY §3.1; QueryPlanner.java:160-237;
 LeafPartitionQueryExecutor.java:73-131) re-shaped for Spark:
 
 1. Prune: leaves whose region overlaps any query region.
 2. Collect files: each pruned leaf's files plus its ancestors' files (a
-   row may still live in an ancestor-partition file before compaction).
-3. Scan ONCE over the distinct file set with the predicate
-   ``(OR query regions) AND (OR selected leaf regions)``.
+   row may still live in an ancestor-partition file before compaction),
+   then skip files by sidecar min/max (``value_ranges``) and, for point
+   queries, by each file's first-row-key Bloom filter.
+3. Read the surviving files with ONE of two readers:
 
-Step 3 is the Spark-shaped dedup guard. The reference reads each leaf
-separately, ANDing that leaf's region so a row in a shared ancestor file
-is returned by exactly one leaf (RangeQueryUtils.java:49-56). Reading each
-distinct physical file exactly once and ORing the selected leaf regions is
-equivalent — leaf regions are disjoint, so every matching row passes for
-exactly the one leaf that owns it — and it collapses N per-leaf scans into
-one Catalyst scan node: one pass over the data, full predicate pushdown to
-Parquet row groups/pages, no union of hundreds of subplans at 100 TB.
+   - **Spark plan** (default): one scan over the distinct file set with
+     the predicate ``(OR query regions) AND (OR selected leaf regions)``.
+   - **Driver read** (point queries): when every region pins the first
+     row key (:func:`bloom_points`), the per-leaf ``heapq.merge`` reader
+     that ``sorted_rows`` uses reads only the row groups whose footer
+     min/max can hold a probe point, applies the table's processing on
+     the driver, and returns the rows as a local DataFrame — no Spark
+     job, like the reference's single-reader LeafPartitionQueryExecutor.
+     The Spark plan runs instead when a table- or query-level custom
+     iterator has no row-wise form, or when the matched row groups hold
+     more than :data:`DRIVER_BATCH_ROWS` rows (a hot key stays
+     distributed). ``batch_exact_key_query`` is always the Spark plan.
+
+The Spark plan's predicate is the Spark-shaped dedup guard. The
+reference reads each leaf separately, ANDing that leaf's region so a row
+in a shared ancestor file is returned by exactly one leaf
+(RangeQueryUtils.java:49-56). Reading each distinct physical file exactly
+once and ORing the selected leaf regions is equivalent — leaf regions are
+disjoint, so every matching row passes for exactly the one leaf that owns
+it — and it collapses N per-leaf scans into one Catalyst scan node: one
+pass over the data, full predicate pushdown to Parquet row groups/pages,
+no union of hundreds of subplans at 100 TB. The driver reader applies the
+leaf region per leaf instead, exactly like the reference.
 
 Query-time vs table-time processing split follows
 LeafPartitionQueryExecutor.java:80-99: table iterators (filters +
 aggregation) are ALWAYS applied; an extra query-time config may add more.
 The SQL stage (Q1, rust/query_sql/src/lib.rs:28-55) registers results as
-``query_results`` and accepts a SELECT-only statement.
+``query_results`` and accepts a SELECT-only statement; it runs on either
+reader's DataFrame.
 """
 
 from __future__ import annotations
@@ -35,15 +52,17 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sleeper_spark.iterators import (
     apply_custom_iterators,
     parse_aggregations,
     parse_filters,
+    parse_row_iterators,
 )
 from sleeper_spark.partitions import Partition
 from sleeper_spark.processing import apply_processing
-from sleeper_spark.ranges import Region, regions_to_column
+from sleeper_spark.ranges import Range, Region, regions_to_column
 from sleeper_spark.schema import Schema
 from sleeper_spark.statestore import FileReference, StateStore
 
@@ -83,7 +102,6 @@ class Query:
 
     @staticmethod
     def from_json(d: dict[str, Any], schema: Schema | None = None) -> "Query":
-        from sleeper_spark.ranges import Range
         return Query(
             regions=[Region.from_json(r, schema) for r in d["regions"]],
             requested_value_fields=d.get("requestedValueFields"),
@@ -304,8 +322,66 @@ def compile_value_ranges(value_ranges):
     return matches
 
 
+#: rows per Arrow batch of the driver reader, and the most rows a point
+#: query's matched row groups may hold for the query to be read on the
+#: driver; above it the Spark plan runs, so a hot key (an index posting
+#: list, say) stays distributed
+DRIVER_BATCH_ROWS = 8192
+
+#: the Python type the driver reader compares each key type's values
+#: with; a query bound of another type runs as the Spark plan, whose
+#: casts the driver reader does not reproduce
+_KEY_PY_TYPES = {T.IntegerType: int, T.LongType: int, T.StringType: str,
+                 T.BinaryType: (bytes, bytearray)}
+
+
+def _bounds_comparable(query: Query, schema: Schema) -> bool:
+    for region in query.regions:
+        for r in region.ranges:
+            want = _KEY_PY_TYPES.get(type(schema.field(r.field).dtype))
+            if want is None or not all(
+                    v is None or isinstance(v, want) for v in (r.min, r.max)):
+                return False
+    return True
+
+
+def _point_row_groups(files: list[str], key_name: str, points) -> dict:
+    """``{file: (ParquetFile, row groups, rows)}`` for the files with at
+    least one row group whose footer min/max on ``key_name`` can hold
+    one of ``points``. A row group without statistics is kept."""
+    import pyarrow.parquet as pq_mod
+
+    from sleeper_spark.sketches import row_groups_overlapping
+
+    bounds = [Range(key_name, p, p, True, True).canonicalise()
+              for p in points]
+    out = {}
+    for fn in files:
+        pf = pq_mod.ParquetFile(fn)
+        md = pf.metadata
+        rgs = set()
+        for r in bounds:
+            got = row_groups_overlapping(pf, key_name, r.min, r.max)
+            rgs.update(range(md.num_row_groups) if got is None else got)
+        if rgs:
+            rgs = sorted(rgs)
+            out[fn] = (pf, rgs,
+                       sum(md.row_group(g).num_rows for g in rgs))
+    return out
+
+
+def _projected_columns(schema: Schema, query: Query) -> list[str] | None:
+    """Keys always returned; value fields as requested (None = all)
+    (LeafPartitionQueryExecutor.java:105-131)."""
+    if query.requested_value_fields is None:
+        return None
+    wanted = set(query.requested_value_fields)
+    return schema.key_names + [v for v in schema.value_names if v in wanted]
+
+
 class QueryExecutor:
-    """Build the (single) Spark plan for a query."""
+    """Plan a query once and read it with the Spark plan or, for point
+    queries, on the driver (module docstring)."""
 
     def __init__(self, spark: SparkSession, store: StateStore, schema: Schema,
                  table_filters: str = "", table_aggregations: str = "",
@@ -341,6 +417,29 @@ class QueryExecutor:
             files = [f for f in files if file_may_contain_keys(f, pts)]
         return files
 
+    def _row_iterators(self, query: Query) -> tuple[list, list]:
+        """The table- and query-level custom iterator chains in row-wise
+        form; raises ValueError if one has no row-wise form."""
+        return (parse_row_iterators(self.table_iterators, self.schema),
+                parse_row_iterators(query.query_time_iterators, self.schema))
+
+    def _driver_plan(self, query: Query, files: list[str]):
+        """``(row iterators, matched row groups)`` when ``query`` is a
+        point query the driver can answer, else None (module
+        docstring). Decided from the query, the table config and the
+        surviving files' footers only."""
+        pts = bloom_points(query, self.schema.row_key_names[0])
+        if pts is None or not _bounds_comparable(query, self.schema):
+            return None
+        try:
+            iterators = self._row_iterators(query)
+        except ValueError:
+            return None
+        matched = _point_row_groups(files, self.schema.row_key_names[0], pts)
+        if sum(rows for _, _, rows in matched.values()) > DRIVER_BATCH_ROWS:
+            return None
+        return iterators, matched
+
     def explain_scan(self, query: Query) -> dict:
         """Scan audit: how many physical files each pruning tier
         eliminated for this query, BEFORE reading any data. At 100 TB
@@ -354,10 +453,15 @@ class QueryExecutor:
         min/max value skipping, first-row-key Bloom (point queries).
         ``rows_upper_bound`` sums the surviving references' recorded
         row counts — the worst-case rows the scan can touch.
-        Metadata-only: no Spark job runs."""
+        ``read_path`` is the reader :meth:`execute` picks (``"driver"``
+        or ``"spark"``); point queries also report
+        ``point_rows_matched``, the rows of the row groups whose footer
+        min/max can hold a probe point — the figure the driver read is
+        capped on. Metadata-only: no Spark job runs."""
         leaf_queries = QueryPlanner(self.store).split_into_leaf_queries(
             query)
-        files_total = {r.filename for r in self.store.all_references()}
+        refs = self.store.all_references()
+        files_total = {r.filename for r in refs}
         after_part = sorted({f.filename for lq in leaf_queries
                              for f in lq.files})
         after_vr = after_part
@@ -365,15 +469,15 @@ class QueryExecutor:
             after_vr = [f for f in after_part
                         if _file_may_match(f, query.value_ranges)]
         after_bloom = after_vr
-        pts = bloom_points(query, self.schema.row_key_names[0])
+        key0 = self.schema.row_key_names[0]
+        pts = bloom_points(query, key0)
         if pts is not None:
             after_bloom = [f for f in after_vr
                            if file_may_contain_keys(f, pts)]
         surviving = set(after_bloom)
-        rows_ub = sum(r.number_of_rows for r in
-                      self.store.all_references()
+        rows_ub = sum(r.number_of_rows for r in refs
                       if r.filename in surviving)
-        return {
+        audit = {
             "files_total": len(files_total),
             "leaf_partitions_hit": len(leaf_queries),
             "files_after_partition_pruning": len(after_part),
@@ -384,13 +488,76 @@ class QueryExecutor:
             "pruned_by_bloom": len(after_vr) - len(after_bloom),
             "files_scanned": after_bloom,
             "rows_upper_bound": rows_ub,
+            "read_path": ("spark" if self._driver_plan(query, after_bloom)
+                          is None else "driver"),
         }
+        if pts is not None:
+            audit["point_rows_matched"] = sum(
+                rows for _, _, rows in
+                _point_row_groups(after_bloom, key0, pts).values())
+        return audit
 
     def execute(self, query: Query, now_millis: int) -> DataFrame:
         reject_value_ranges_on_aggregation(
             query.value_ranges, self.table_aggregations)
         leaf_queries = QueryPlanner(self.store).split_into_leaf_queries(query)
         files = self._files_of(leaf_queries, query)
+        plan = self._driver_plan(query, files)
+        if plan is None:
+            df = self._spark_frame(query, leaf_queries, files, now_millis)
+        else:
+            df = self._driver_frame(query, leaf_queries, plan, now_millis)
+        if query.sql:
+            df = run_sql_stage(self.spark, df, query.sql,
+                               sort_cols=self.schema.key_names)
+        return df
+
+    def sorted_rows(self, query: Query, now_millis: int,
+                    batch_size: int = DRIVER_BATCH_ROWS):
+        """Driver-read ``query`` as a row-dict stream in total table key
+        order (see :func:`_sorted_row_iterator_gen`). Argument errors
+        (value_ranges on an aggregation table, an iterator without a
+        row-wise form) raise here, at the call site, not at the first
+        ``next()``."""
+        reject_value_ranges_on_aggregation(
+            query.value_ranges, self.table_aggregations)
+        iterators = self._row_iterators(query)
+        leaf_queries = QueryPlanner(self.store).split_into_leaf_queries(query)
+        files = self._files_of(leaf_queries, query)
+        return self._driver_rows(query, leaf_queries, files, iterators,
+                                 now_millis, batch_size)
+
+    def _driver_rows(self, query, leaf_queries, files, iterators,
+                     now_millis, batch_size, row_groups=None):
+        return _sorted_row_iterator_gen(
+            self.schema, query, leaf_queries, files, batch_size,
+            parse_filters(self.table_filters),
+            parse_aggregations(self.table_aggregations),
+            iterators, now_millis, row_groups)
+
+    def _driver_frame(self, query: Query, leaf_queries, plan,
+                      now_millis: int) -> DataFrame:
+        """The point query's rows, read and processed on the driver, as
+        a local DataFrame: ``createDataFrame`` of an Arrow table plans a
+        LocalRelation, so collecting it runs no Spark job, and it keeps
+        the table's types (maps included) and nullability."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        iterators, matched = plan
+        rows = list(self._driver_rows(
+            query, leaf_queries, list(matched), iterators, now_millis,
+            DRIVER_BATCH_ROWS, matched))
+        struct = self.schema.to_struct_type()
+        cols = _projected_columns(self.schema, query)
+        if cols is not None:
+            struct = T.StructType([struct[c] for c in cols])
+        return self.spark.createDataFrame(
+            pa.Table.from_pylist(rows, schema=to_arrow_schema(struct)),
+            struct)
+
+    def _spark_frame(self, query: Query, leaf_queries, files: list[str],
+                     now_millis: int) -> DataFrame:
         if not files:
             # an EMPTY source still flows through the same
             # post-processing below: an early return here would hand
@@ -432,17 +599,9 @@ class QueryExecutor:
             df = apply_processing(df, self.schema, qf, [], now_millis)
         df = apply_custom_iterators(df, query.query_time_iterators, self.schema)
 
-        # projection: keys always returned; value fields as requested
-        # (LeafPartitionQueryExecutor.java:105-131)
-        if query.requested_value_fields is not None:
-            cols = self.schema.key_names + [
-                v for v in self.schema.value_names if v in set(query.requested_value_fields)
-            ]
+        cols = _projected_columns(self.schema, query)
+        if cols is not None:
             df = df.select(*cols)
-
-        if query.sql:
-            df = run_sql_stage(self.spark, df, query.sql,
-                               sort_cols=self.schema.key_names)
         return df
 
 
@@ -480,25 +639,10 @@ def _null_safe_key(values):
     return tuple((v is not None, v if v is not None else 0) for v in values)
 
 
-def sorted_row_iterator(store: StateStore, schema: Schema,
-                        query: Query, batch_size: int = 8192,
-                        filters=None, aggs=None, row_iterators=None,
-                        now_millis: int = 0):
-    """Eager-validation wrapper around the merge generator: argument
-    errors (value_ranges on an aggregation table) must raise AT THE
-    CALL SITE, exactly like query()/sorted_scan() — a generator would
-    defer them to first iteration, far from the caller. See
-    :func:`_sorted_row_iterator_gen` for the merge itself."""
-    reject_value_ranges_on_aggregation(query.value_ranges, aggs)
-    return _sorted_row_iterator_gen(store, schema, query, batch_size,
-                                    filters, aggs, row_iterators,
-                                    now_millis)
-
-
-def _sorted_row_iterator_gen(store: StateStore, schema: Schema,
-                             query: Query, batch_size: int = 8192,
-                             filters=None, aggs=None, row_iterators=None,
-                             now_millis: int = 0):
+def _sorted_row_iterator_gen(schema: Schema, query: Query, leaf_queries,
+                             files: list[str], batch_size: int,
+                             filters, aggs, iterators, now_millis: int,
+                             row_groups: dict | None = None):
     """J1 k-way sorted merge: stream query results in total table order
     (row keys..., sort keys...) WITHOUT a global Spark sort.
 
@@ -508,6 +652,12 @@ def _sorted_row_iterator_gen(store: StateStore, schema: Schema,
     disjoint, so leaf-order concat of sorted runs is globally sorted).
     This is the same shape driver-side: leaves in key order, per-leaf
     ``heapq.merge`` over pyarrow batch readers, O(merge-width) memory.
+
+    Reads the plan :class:`QueryExecutor` made: ``leaf_queries`` and the
+    ``files`` that survived skipping; ``row_groups`` (``{file:
+    (ParquetFile, row groups, rows)}``, point queries) narrows each read
+    to the listed row groups. ``iterators`` are the table- and
+    query-level custom chains in row-wise form.
 
     Use when a consumer needs ordered streaming (export to a
     sorted-input system, head-k in key order). For distributed consumers
@@ -521,21 +671,29 @@ def _sorted_row_iterator_gen(store: StateStore, schema: Schema,
     vr = bool(query.value_ranges)
     in_value_ranges = compile_value_ranges(query.value_ranges)
 
-    tree = store.tree
-    assert tree is not None
     key_names = schema.key_names
     col_names = [f.name for f in schema.all_fields()]
+    # Arrow hands maps back as (key, value) lists; the aggregation merge
+    # and Spark's rows both use dicts
+    map_cols = {f.name for f in schema.all_fields()
+                if isinstance(f.dtype, T.MapType)}
+    surviving = set(files)
 
-    def file_rows(filename, leaf):
-        pf = pq_mod.ParquetFile(filename)
+    def file_rows(filename):
+        pf, rgs, _ = (row_groups or {}).get(filename) or (
+            pq_mod.ParquetFile(filename), None, None)
         # schema evolution: a file written before add_value_column lacks
         # the new column(s) — read what it has, yield None for the rest
         have = set(pf.schema_arrow.names)
         cols_here = [c for c in col_names if c in have]
         for batch in pf.iter_batches(batch_size=batch_size,
-                                     columns=cols_here):
-            cols = [batch.column(i) for i in range(batch.num_columns)]
-            pydict = {n: c.to_pylist() for n, c in zip(batch.schema.names, cols)}
+                                     columns=cols_here, row_groups=rgs):
+            pydict = {}
+            for n, c in zip(batch.schema.names, batch.columns):
+                vals = c.to_pylist()
+                if n in map_cols:
+                    vals = [None if v is None else dict(v) for v in vals]
+                pydict[n] = vals
             for i in range(batch.num_rows):
                 row = {n: pydict[n][i] if n in have else None
                        for n in col_names}
@@ -566,22 +724,10 @@ def _sorted_row_iterator_gen(store: StateStore, schema: Schema,
     agg_ops = {a.column: a for a in (aggs or [])}
     row_key = lambda row: _null_safe_key(row[k] for k in key_names)  # noqa: E731
 
-    # exact-point queries consult per-file Blooms here too — the sorted
-    # iterator is the reference's point-read shape, exactly where
-    # skipping whole runs matters most
-    pts = bloom_points(query, schema.row_key_names[0])
-
-    def leaf_stream(leaf, leaf_ranges):
-        refs = store.files_for_leaf_query(leaf.id)
-        if not refs:
-            return
-        fns = sorted({r.filename for r in refs})
-        if vr:  # sidecar-stats file skipping, same rule as execute()
-            fns = [fn for fn in fns
-                   if _file_may_match(fn, query.value_ranges)]
-        if pts is not None:
-            fns = [fn for fn in fns if file_may_contain_keys(fn, pts)]
-        runs = [file_rows(fn, leaf) for fn in fns]
+    def leaf_stream(lq, leaf_ranges):
+        # the leaf's files that survived the planner's skipping
+        fns = sorted({r.filename for r in lq.files} & surviving)
+        runs = [file_rows(fn) for fn in fns]
         for row in heapq.merge(*runs, key=row_key):
             # leaf region is the dedup guard for shared ancestor files
             if not in_ranges(row, leaf_ranges):
@@ -600,10 +746,10 @@ def _sorted_row_iterator_gen(store: StateStore, schema: Schema,
                 yield row
 
     def stream():
-        leaves = [lf for lf in tree.leaves_overlapping(query.regions)]
         # key order: unbounded-below (min=None) sorts first per dimension
-        leaves.sort(key=lambda lf: [
-            (0,) if r.min is None else (1, r.min) for r in lf.region.ranges])
+        leaves = sorted(leaf_queries, key=lambda lq: [
+            (0,) if r.min is None else (1, r.min)
+            for r in lq.leaf.region.ranges])
         dim0 = key_names[0]
         # concatenating disjoint-dim-0 leaves preserves total order, but
         # a tree split on a later dimension has leaves whose dim-0
@@ -613,8 +759,8 @@ def _sorted_row_iterator_gen(store: StateStore, schema: Schema,
         # ranges touch the running max), merge within, concat across.
         components: list[list] = []
         cur_hi: tuple | None = None  # (bounded?, value); None = empty
-        for leaf in leaves:
-            ranges = canon(leaf.region)
+        for lq in leaves:
+            ranges = canon(lq.leaf.region)
             lo = next((mn for f, mn, mx in ranges if f == dim0), None)
             hi = next((mx for f, mn, mx in ranges if f == dim0), None)
             # new component iff the previous one is bounded above and
@@ -622,10 +768,10 @@ def _sorted_row_iterator_gen(store: StateStore, schema: Schema,
             # [min, max), so lo == prev hi means disjoint-adjacent)
             if not components or (cur_hi is not None and cur_hi[0]
                                   and lo is not None and lo >= cur_hi[1]):
-                components.append([(leaf, ranges)])
+                components.append([(lq, ranges)])
                 cur_hi = (hi is not None, hi)
             else:
-                components[-1].append((leaf, ranges))
+                components[-1].append((lq, ranges))
                 if cur_hi is not None and cur_hi[0]:
                     cur_hi = (hi is not None,
                               hi if hi is None or hi > cur_hi[1]
@@ -635,30 +781,20 @@ def _sorted_row_iterator_gen(store: StateStore, schema: Schema,
                 yield from leaf_stream(*comp[0])
             else:
                 yield from heapq.merge(
-                    *(leaf_stream(lf, rs) for lf, rs in comp), key=row_key)
+                    *(leaf_stream(lq, rs) for lq, rs in comp), key=row_key)
 
     # query-time processing — the same post-aggregation pipeline order as
-    # QueryExecutor.execute (table customs -> query-time filters ->
-    # query-time customs -> projection); the iterator path previously
-    # ignored these Query fields, leaking rows every other read path drops
-    from sleeper_spark.iterators import (
-        parse_filters as _pf,
-        parse_row_iterators as _pri,
-    )
-
-    qt_filters = _pf(query.query_time_filters)
-    qt_iters = _pri(query.query_time_iterators, schema)
-    proj_cols = None
-    if query.requested_value_fields is not None:
-        wanted = set(query.requested_value_fields)
-        proj_cols = list(key_names) + [
-            f.name for f in schema.value_fields if f.name in wanted]
+    # the Spark plan (table customs -> query-time filters -> query-time
+    # customs -> projection)
+    row_iterators, qt_iters = iterators
+    qt_filters = parse_filters(query.query_time_filters)
+    proj_cols = _projected_columns(schema, query)
 
     def apply_row_iterators(row):
         # custom chain runs AFTER filters + aggregation, matching the
         # reference's filters -> aggregation -> custom composition
         # (IteratorFactory.java:79-91) and the Spark read path
-        for fn in (row_iterators or []):
+        for fn in row_iterators:
             row = fn(row)
             if row is None:
                 return None

@@ -27,7 +27,7 @@ from sleeper_spark import maintenance
 from sleeper_spark.ingest import ingest_dataframe
 from sleeper_spark.partitions import PartitionTree
 from sleeper_spark.properties import TableProperties
-from sleeper_spark.query import Query, QueryExecutor
+from sleeper_spark.query import DRIVER_BATCH_ROWS, Query, QueryExecutor
 from sleeper_spark.ranges import Range, Region
 from sleeper_spark.schema import Field, Schema
 from sleeper_spark.statestore import FileReference, StateStore
@@ -493,7 +493,19 @@ class SleeperTable:
 
     def exact_key_query(self, now_millis: int | None = None, **keys: Any) -> DataFrame:
         """Point lookup: min=max inclusive on each given row key
-        (SleeperClient.exact_key_query, python/src/sleeper/client.py:221-260)."""
+        (SleeperClient.exact_key_query, python/src/sleeper/client.py:221-260).
+
+        Read on the driver, like the reference's single-reader leaf
+        query: the Bloom-surviving files' row groups that can hold the
+        key are merged and processed by the ``sorted_rows`` reader and
+        returned as a local DataFrame, so collecting it runs no Spark
+        job. The rows are read when this is called: a frame taken
+        before a compaction and GC still holds the earlier rows. It
+        runs as the Spark plan instead when a table iterator has no
+        row-wise form or the matched row groups hold more than
+        ``query.DRIVER_BATCH_ROWS`` rows; ``explain_query`` reports the
+        choice as ``read_path``. Many keys at once belong in
+        ``batch_exact_key_query``, which stays one Spark job."""
         return self.query(Query([Region.exact(self.schema, **keys)]), now_millis)
 
     def range_key_query(
@@ -523,30 +535,20 @@ class SleeperTable:
         return self.query(Query([full], value_ranges=value_ranges or []),
                           now_millis)
 
-    def sorted_rows(self, query: Query | None = None, batch_size: int = 8192,
+    def sorted_rows(self, query: Query | None = None,
+                    batch_size: int = DRIVER_BATCH_ROWS,
                     now_millis: int | None = None):
         """Stream query results in total table key order (J1 k-way merge,
         MergingIterator.java:37-114) with the table's filters and
         group-adjacent aggregation applied — no global Spark sort;
         single-reader streaming like the reference's query iterator."""
-        from sleeper_spark.iterators import (
-            parse_aggregations,
-            parse_filters,
-            parse_row_iterators,
-        )
-        from sleeper_spark.query import sorted_row_iterator
         if query is None:
             full = Region(tuple(Range(f.name, None, None)
                                 for f in self.schema.row_key_fields))
             query = Query([full])
         now_millis = now_millis if now_millis is not None else int(time.time() * 1000)
-        return sorted_row_iterator(
-            self.store, self.schema, query, batch_size,
-            filters=parse_filters(self.props.filters),
-            aggs=parse_aggregations(self.props.aggregations),
-            row_iterators=parse_row_iterators(self.props.iterators, self.schema),
-            now_millis=now_millis,
-        )
+        self.store.refresh_if_stale(self.props.query_cache_timeout_seconds)
+        return self.executor().sorted_rows(query, now_millis, batch_size)
 
     def batch_exact_key_query(self, keys: list[dict],
                               now_millis: int | None = None) -> DataFrame:
@@ -620,6 +622,7 @@ class SleeperTable:
         one task per leaf, rows sorted within partitions and partitions
         in leaf key order (see sorted_scan module docstring)."""
         from sleeper_spark.sorted_scan import distributed_sorted_scan
+        self.store.refresh_if_stale(self.props.query_cache_timeout_seconds)
         return distributed_sorted_scan(self, query, now_millis)
 
     def query_tracked(self, query: Query, tracker,
