@@ -16,13 +16,16 @@ LeafPartitionQueryExecutor.java:73-131) re-shaped for Spark:
    - **Driver read** (point queries): when every region pins the first
      row key (:func:`bloom_points`), the per-leaf ``heapq.merge`` reader
      that ``sorted_rows`` uses reads only the row groups whose footer
-     min/max can hold a probe point, applies the table's processing on
-     the driver, and returns the rows as a local DataFrame — no Spark
-     job, like the reference's single-reader LeafPartitionQueryExecutor.
-     The Spark plan runs instead when a table- or query-level custom
-     iterator has no row-wise form, or when the matched row groups hold
-     more than :data:`DRIVER_BATCH_ROWS` rows (a hot key stays
-     distributed). ``batch_exact_key_query`` is always the Spark plan.
+     min/max can hold a probe point, keeps the probe keys' rows in
+     Arrow, applies the table's processing on the driver, and returns
+     the rows as a local DataFrame — no Spark job, like the reference's
+     single-reader LeafPartitionQueryExecutor. The Spark plan runs
+     instead when a table- or query-level custom iterator has no
+     row-wise form, when the matched row groups hold more than
+     :data:`POINT_SCAN_ROWS` rows, or when more than
+     :data:`POINT_KEY_ROWS` of their rows hold a probe key (a hot key
+     stays distributed). ``batch_exact_key_query`` is always the Spark
+     plan.
 
 The Spark plan's predicate is the Spark-shaped dedup guard. The
 reference reads each leaf separately, ANDing that leaf's region so a row
@@ -322,11 +325,24 @@ def compile_value_ranges(value_ranges):
     return matches
 
 
-#: rows per Arrow batch of the driver reader, and the most rows a point
-#: query's matched row groups may hold for the query to be read on the
-#: driver; above it the Spark plan runs, so a hot key (an index posting
-#: list, say) stays distributed
+#: rows per Arrow batch of the driver reader
 DRIVER_BATCH_ROWS = 8192
+
+#: A point query is read on the driver only while it stays within both
+#: of these caps; otherwise the Spark plan runs. Set at the crossover measured on a
+#: 4-core host (local[4], one file, a (long, long, string) row) between
+#: a point get read on the driver and the same get as the Spark plan:
+#:
+#: - the rows of the matched row groups, which the driver reads in
+#:   Arrow: a 1-row key took 20 / 24 / 44 / 72 / 131 ms on the driver
+#:   against 95 / 76 / 69 / 65 / 62 ms in Spark with 8,192 / 65,536 /
+#:   524,288 / 1,048,576 / 2,097,152 rows in its row group;
+POINT_SCAN_ROWS = 1 << 19
+#: - the rows holding the probe keys, which the driver turns into Python
+#:   rows: in a 65,536-row group, a key of 8,192 rows took 73 ms against
+#:   90 ms in Spark, one of 16,384 rows 165 ms against 130 ms. So a hot
+#:   key (an index posting list, say) stays distributed.
+POINT_KEY_ROWS = 8192
 
 #: the Python type the driver reader compares each key type's values
 #: with; a query bound of another type runs as the Spark plan, whose
@@ -368,6 +384,20 @@ def _point_row_groups(files: list[str], key_name: str, points) -> dict:
             out[fn] = (pf, rgs,
                        sum(md.row_group(g).num_rows for g in rgs))
     return out
+
+
+def _point_key_rows(row_groups: dict, key_name: str, points) -> int:
+    """Rows of ``row_groups`` (as :func:`_point_row_groups` returns
+    them) whose ``key_name`` is one of ``points``; reads that column
+    only."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    value_set = pa.array(points)
+    return sum(
+        pc.sum(pc.is_in(pf.read_row_groups(rgs, columns=[key_name])
+                        .column(0), value_set=value_set)).as_py() or 0
+        for pf, rgs, _ in row_groups.values())
 
 
 def _projected_columns(schema: Schema, query: Query) -> list[str] | None:
@@ -424,21 +454,31 @@ class QueryExecutor:
                 parse_row_iterators(query.query_time_iterators, self.schema))
 
     def _driver_plan(self, query: Query, files: list[str]):
-        """``(row iterators, matched row groups)`` when ``query`` is a
-        point query the driver can answer, else None (module
-        docstring). Decided from the query, the table config and the
-        surviving files' footers only."""
-        pts = bloom_points(query, self.schema.row_key_names[0])
+        """``(plan, counts)``. ``plan`` is ``(row iterators, matched row
+        groups)`` when ``query`` is a point query the driver can answer,
+        else None (module docstring). ``counts`` holds, for a point
+        query, ``point_rows_matched`` (rows of the row groups whose
+        footer min/max can hold a probe point) and, unless those exceed
+        :data:`POINT_SCAN_ROWS`, ``point_key_rows`` (their rows holding
+        a probe point). Decided from the query, the table config, the
+        surviving files' footers and their first row key column."""
+        key0 = self.schema.row_key_names[0]
+        pts = bloom_points(query, key0)
         if pts is None or not _bounds_comparable(query, self.schema):
-            return None
+            return None, {}
+        matched = _point_row_groups(files, key0, pts)
+        counts = {"point_rows_matched":
+                  sum(rows for _, _, rows in matched.values())}
+        if counts["point_rows_matched"] > POINT_SCAN_ROWS:
+            return None, counts
+        counts["point_key_rows"] = _point_key_rows(matched, key0, pts)
+        if counts["point_key_rows"] > POINT_KEY_ROWS:
+            return None, counts
         try:
             iterators = self._row_iterators(query)
         except ValueError:
-            return None
-        matched = _point_row_groups(files, self.schema.row_key_names[0], pts)
-        if sum(rows for _, _, rows in matched.values()) > DRIVER_BATCH_ROWS:
-            return None
-        return iterators, matched
+            return None, counts
+        return (iterators, matched), counts
 
     def explain_scan(self, query: Query) -> dict:
         """Scan audit: how many physical files each pruning tier
@@ -454,10 +494,11 @@ class QueryExecutor:
         ``rows_upper_bound`` sums the surviving references' recorded
         row counts — the worst-case rows the scan can touch.
         ``read_path`` is the reader :meth:`execute` picks (``"driver"``
-        or ``"spark"``); point queries also report
-        ``point_rows_matched``, the rows of the row groups whose footer
-        min/max can hold a probe point — the figure the driver read is
-        capped on. Metadata-only: no Spark job runs."""
+        or ``"spark"``); point queries also report the two figures that
+        choice is capped on, ``point_rows_matched`` and
+        ``point_key_rows`` (:meth:`_driver_plan`). Reads footers, and
+        for point queries the first row key column of the matched row
+        groups; no Spark job runs."""
         leaf_queries = QueryPlanner(self.store).split_into_leaf_queries(
             query)
         refs = self.store.all_references()
@@ -488,13 +529,10 @@ class QueryExecutor:
             "pruned_by_bloom": len(after_vr) - len(after_bloom),
             "files_scanned": after_bloom,
             "rows_upper_bound": rows_ub,
-            "read_path": ("spark" if self._driver_plan(query, after_bloom)
-                          is None else "driver"),
         }
-        if pts is not None:
-            audit["point_rows_matched"] = sum(
-                rows for _, _, rows in
-                _point_row_groups(after_bloom, key0, pts).values())
+        plan, counts = self._driver_plan(query, after_bloom)
+        audit["read_path"] = "spark" if plan is None else "driver"
+        audit.update(counts)
         return audit
 
     def execute(self, query: Query, now_millis: int) -> DataFrame:
@@ -502,7 +540,7 @@ class QueryExecutor:
             query.value_ranges, self.table_aggregations)
         leaf_queries = QueryPlanner(self.store).split_into_leaf_queries(query)
         files = self._files_of(leaf_queries, query)
-        plan = self._driver_plan(query, files)
+        plan, _ = self._driver_plan(query, files)
         if plan is None:
             df = self._spark_frame(query, leaf_queries, files, now_millis)
         else:
@@ -666,6 +704,8 @@ def _sorted_row_iterator_gen(schema: Schema, query: Query, leaf_queries,
     """
     import heapq
 
+    import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq_mod
 
     vr = bool(query.value_ranges)
@@ -678,6 +718,12 @@ def _sorted_row_iterator_gen(schema: Schema, query: Query, leaf_queries,
     map_cols = {f.name for f in schema.all_fields()
                 if isinstance(f.dtype, T.MapType)}
     surviving = set(files)
+    # a point read keeps only the probe keys' rows, in Arrow, before any
+    # row becomes a Python dict: the matched row groups may be far larger
+    # than the keys' rows, and the region filter below drops the rest
+    key0 = schema.row_key_names[0]
+    points = None if row_groups is None else bloom_points(query, key0)
+    probe = None if points is None else pa.array(points)
 
     def file_rows(filename):
         pf, rgs, _ = (row_groups or {}).get(filename) or (
@@ -688,6 +734,9 @@ def _sorted_row_iterator_gen(schema: Schema, query: Query, leaf_queries,
         cols_here = [c for c in col_names if c in have]
         for batch in pf.iter_batches(batch_size=batch_size,
                                      columns=cols_here, row_groups=rgs):
+            if probe is not None:
+                batch = batch.filter(pc.is_in(batch.column(key0),
+                                              value_set=probe))
             pydict = {}
             for n, c in zip(batch.schema.names, batch.columns):
                 vals = c.to_pylist()

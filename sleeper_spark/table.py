@@ -502,10 +502,12 @@ class SleeperTable:
         job. The rows are read when this is called: a frame taken
         before a compaction and GC still holds the earlier rows. It
         runs as the Spark plan instead when a table iterator has no
-        row-wise form or the matched row groups hold more than
-        ``query.DRIVER_BATCH_ROWS`` rows; ``explain_query`` reports the
-        choice as ``read_path``. Many keys at once belong in
-        ``batch_exact_key_query``, which stays one Spark job."""
+        row-wise form, when the matched row groups hold more than
+        ``query.POINT_SCAN_ROWS`` rows, or when more than
+        ``query.POINT_KEY_ROWS`` of their rows hold the key;
+        ``explain_query`` reports the choice as ``read_path``. Many keys
+        at once belong in ``batch_exact_key_query``, which stays one
+        Spark job."""
         return self.query(Query([Region.exact(self.schema, **keys)]), now_millis)
 
     def range_key_query(

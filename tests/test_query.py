@@ -1,6 +1,6 @@
 """Point queries read on the driver (query.QueryExecutor): an exact-key
-query whose matched row groups are small is answered by the sorted-rows
-reader and handed back as a local DataFrame — no Spark job — while the
+query whose matched row groups and key rows are under the caps is
+answered by the sorted-rows reader and handed back as a local DataFrame — no Spark job — while the
 Spark plan stays the answer for every other query. The two readers must
 agree row for row, and both must agree with a pure-Python model."""
 
@@ -16,7 +16,7 @@ from pyspark.sql import types as T
 from sleeper_spark import query as query_mod
 from sleeper_spark.iterators import register_iterator
 from sleeper_spark.properties import TableProperties
-from sleeper_spark.query import DRIVER_BATCH_ROWS, Query
+from sleeper_spark.query import POINT_KEY_ROWS, Query
 from sleeper_spark.ranges import Region
 from sleeper_spark.schema import Field, Schema
 from sleeper_spark.table import SleeperTable
@@ -285,13 +285,41 @@ def test_dataframe_only_iterator_falls_back_to_spark(spark, tmp_path):
     assert rows == t.range_key_query([("key", 5, 6)]).collect()
 
 
+def test_cold_key_in_a_large_row_group_reads_on_the_driver(spark, tmp_path):
+    n = 4 * POINT_KEY_ROWS  # one row group, one row per key
+    t = _plain(spark, str(tmp_path / "t"), [(k, k) for k in range(n)])
+    audit = t.explain_query(Query([Region.exact(t.schema, key=n // 2)]))
+    assert audit["read_path"] == "driver"
+    assert audit["point_rows_matched"] == n
+    assert audit["point_key_rows"] == 1
+    rows, jobs = _jobs_of(
+        spark, lambda: t.exact_key_query(key=n // 2).collect())
+    assert [tuple(r) for r in rows] == [(n // 2, n // 2)]
+    assert jobs == []
+
+
+def test_row_groups_past_the_scan_cap_fall_back_to_spark(spark, tmp_path):
+    t = _plain(spark, str(tmp_path / "t"), [(k, k) for k in range(100)])
+    with mock.patch.object(query_mod, "POINT_SCAN_ROWS", 99):
+        audit = t.explain_query(Query([Region.exact(t.schema, key=5)]))
+        assert audit["read_path"] == "spark"
+        assert audit["point_rows_matched"] == 100
+        assert "point_key_rows" not in audit
+        rows, jobs = _jobs_of(spark,
+                              lambda: t.exact_key_query(key=5).collect())
+    assert [tuple(r) for r in rows] == [(5, 5)]
+    assert len(jobs) >= 1
+
+
 def test_hot_key_past_the_cap_falls_back_to_spark(spark, tmp_path):
-    n = DRIVER_BATCH_ROWS + 1
+    n = POINT_KEY_ROWS + 1
     t = _plain(spark, str(tmp_path / "t"),
                [(1, i) for i in range(n)] + [(2, 0)])
     audit = t.explain_query(Query([Region.exact(t.schema, key=1)]))
     assert audit["read_path"] == "spark"
-    assert audit["point_rows_matched"] > DRIVER_BATCH_ROWS
+    assert audit["point_key_rows"] == n
+    assert t.explain_query(Query([Region.exact(t.schema, key=2)]))[
+        "read_path"] == "driver"
     rows, jobs = _jobs_of(spark, lambda: t.exact_key_query(key=1).collect())
     assert len(jobs) >= 1
     assert sorted(r.v for r in rows) == list(range(n))
