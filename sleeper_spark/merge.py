@@ -43,12 +43,10 @@ commit-free.
 Incremental consumers: the commit carries tombstones (old rows of
 replaced key groups — the deletion feed) and its addFiles flow through
 ``added_rows_between``; MaterializedView applies a merge seq as
-delete-old + ingest-new. Append-only replication (``replication.sync``)
-REFUSES a window holding a MERGE commit (shipping the insert half
-while the replaced rows survive would duplicate key versions);
-``replication.sync_cdc`` converges through it by replaying the commit
-as a replica-side merge of its insert rows (replication.py module
-doc).
+delete-old + ingest-new, and ``replication.sync_cdc`` replays the
+commit as a replica-side merge of its insert rows (replication.py
+module doc) — shipping the insert half alone while the replaced rows
+survive would duplicate key versions.
 """
 
 from __future__ import annotations

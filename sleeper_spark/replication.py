@@ -1,53 +1,42 @@
 """Incremental table replication over the change data feed.
 
-Keeps a replica SleeperTable converged with a source table by shipping
-ONLY appended rows (``poll_changes``), never re-reading the source:
-at 100 TB the per-sync cost is the new data. Compactions on the source
-correctly ship nothing (REPLACE rewrites are content-neutral in the
-feed) — the replica runs its own compactions on its own schedule, and
-the tables still converge because the table algebra is
-commutative/associative by construction (the same property that lets
-the reference collapse at arbitrary compaction times,
+Keeps a replica SleeperTable converged with a source table by replaying
+the source's log past the replica's watermark, never re-reading the
+whole source: at 100 TB the per-sync cost is the new history. Compactions
+on the source correctly ship nothing (REPLACE rewrites are
+content-neutral in the feed) — the replica runs its own compactions on
+its own schedule, and the tables still converge because the table
+algebra is commutative/associative by construction (the same property
+that lets the reference collapse at arbitrary compaction times,
 docs/usage/data-processing.md:88-93).
 
-Crash safety without a checkpoint file: each sync ingests under a job
-id that ENCODES the source identity and the replicated seq range
-(``cdf-sync-<src-ident>-<from>-<to>``, so multiple sources feeding one
-replica keep independent watermarks),
-and the applied watermark is recovered from the replica's own durable
-``ingest_jobs_seen`` log. A sync that crashes after its ingest commit
-simply replays as a no-op (the state store's ingest idempotency
-dedupes the job and cleans the orphan files); one that crashes before
-it re-runs cleanly. There is no side-file that can disagree with the
-log.
+:func:`sync_cdc` is the one replication step. It replays the FULL
+content history: appends ship (as file copies when the files line up
+with the replica, else as a row-replay ingest), ``delete_where``
+commits apply as exact-row deletes of the tombstone feed (key-exact
+``delete_where`` on aggregation tables, where whole key groups are the
+unit), ``update_where`` as delete-old + ingest-new, and
+``merge_upsert`` as a replica-side merge of the commit's insert rows —
+each at its own seq, strictly in log order, individually durable before
+the next event is touched. Source schema evolutions (``EVOLVE_SCHEMA``
+log records) replay automatically, so an evolving source converges
+without operator intervention. :func:`sync_cdc_to_head` repeats the
+step until the replica is caught up.
+
+Crash safety without a checkpoint file: each applied event commits
+either an ingest under a job id that ENCODES the source identity and
+the replicated seq range (``cdf-sync-<src-ident>-<from>-<to>``, so
+multiple sources feeding one replica keep independent watermarks) or a
+zero-file marker transaction whose id parses to the event seq, and the
+applied watermark is recovered from the replica's own durable
+``ingest_jobs_seen`` log. Every event's application is idempotent
+(exact-row re-delete is a no-op, ingests/merges dedupe by deterministic
+job id), so a crash anywhere replays at most one event. There is no
+side-file that can disagree with the log.
 
 Beyond-reference surface (the reference replicates via S3 itself);
 this is the disaster-recovery / cross-region story an on-prem
 deployment needs.
-
-Two tiers:
-
-- :func:`sync` ships the APPEND feed only, and REFUSES loudly when the
-  polled window contains a ``delete_where``/``update_where``/
-  ``merge_upsert`` commit (silently shipping a merge's insert half
-  while the replaced rows survive on the replica would leave duplicate
-  key versions — the r9 ADVICE finding). Append-only sources (the
-  common 100 TB ingest pipeline) pay zero classification overhead
-  beyond the window scan.
-- :func:`sync_cdc` replays the FULL content history: appends ingest,
-  ``delete_where`` commits apply as exact-row deletes of the tombstone
-  feed (key-exact ``delete_where`` on aggregation tables, where whole
-  key groups are the unit), ``update_where`` as delete-old +
-  ingest-new, and ``merge_upsert`` as a replica-side merge of the
-  commit's insert rows — each at its own seq, strictly in log order,
-  individually durable before the next event is touched. Every
-  event's application is idempotent (exact-row re-delete is a no-op,
-  ingests/merges dedupe by deterministic job id), so a crash anywhere
-  replays at most one event. The watermark stays side-file-free: each
-  applied event commits either its own ingest job or a zero-file
-  marker transaction whose id parses to the event seq. Source schema
-  evolutions (``EVOLVE_SCHEMA`` log records) replay automatically, so
-  an evolving source converges without operator intervention.
 """
 
 from __future__ import annotations
@@ -56,10 +45,19 @@ from typing import Any
 
 JOB_PREFIX = "cdf-sync-"
 
+# Safety bounds, not tuning knobs: a source event touching more distinct
+# keys/rows than these is a mass restatement that should re-seed the
+# replica (the driver collects each event's key/row set), and a
+# sync_cdc_to_head that has not caught up after MAX_STEPS steps is a
+# source outrunning replication.
+DELETE_CAP = 1_000_000
+MERGE_CAP = 1_000_000
+MAX_STEPS = 10_000
+
 
 def source_prefix(src: Any) -> str:
-    """Default job-id prefix for replication from ``src``: derived from
-    the source's identity (its table path), so two different sources
+    """Job-id prefix for replication from ``src``: derived from the
+    source's identity (its table path), so two different sources
     syncing into ONE replica keep independent watermarks. With a shared
     prefix, ``applied_seq`` would take the max ``to`` across BOTH
     sources' job ids even though their seq spaces are unrelated — the
@@ -71,20 +69,11 @@ def source_prefix(src: Any) -> str:
 
 def applied_seq(dst: Any, prefix: str = JOB_PREFIX) -> int:
     """The source seq the replica has durably applied: the largest
-    ``to`` of any ``cdf-sync-...-<from>-<to>`` ingest job in the
-    replica's own transaction log. Recovered from the log, so it
-    survives any crash that the log survives.
-
-    Only jobs under the SCOPED ``prefix`` count — a replica that holds
-    legacy identity-less ``cdf-sync-<from>-<to>`` ids (pre-upgrade
-    syncs) reads 0 here until :func:`migrate_legacy_watermark` has
-    recorded those ids' watermark under the scoped prefix. The old
-    implicit fallback (consult legacy ids whenever the scoped prefix
-    is empty) was a data-loss hazard: a source NEWLY added to a
-    replica carrying ANOTHER source's legacy ids would inherit that
-    other source's watermark instead of its correct 0 and silently
-    skip its first seqs. Migration is therefore an explicit, one-time,
-    durably-recorded act, never a read-time heuristic."""
+    trailing seq of any job id under ``prefix`` (``<prefix><from>-<to>``
+    ingests and ``<prefix>applied-<seq>`` markers) in the replica's own
+    transaction log. Recovered from the log, so it survives any crash
+    that the log survives. Pass ``source_prefix(src)`` for one source's
+    watermark."""
     best = 0
     for j in dst.store.ingest_jobs_seen:
         if j.startswith(prefix):
@@ -95,103 +84,12 @@ def applied_seq(dst: Any, prefix: str = JOB_PREFIX) -> int:
     return best
 
 
-def legacy_seq(dst: Any) -> int:
-    """The watermark held by legacy identity-less job ids
-    (``cdf-sync-<from>-<to>``, pre-source-scoping syncs). 0 when the
-    replica has no pre-upgrade history."""
-    import re
-
-    legacy = re.compile(re.escape(JOB_PREFIX) + r"(\d+)-(\d+)$")
-    best = 0
-    for j in dst.store.ingest_jobs_seen:
-        m = legacy.fullmatch(j)
-        if m:
-            best = max(best, int(m.group(2)))
-    return best
-
-
-def migrate_legacy_watermark(dst: Any, prefix: str) -> int:
-    """One-time upgrade of a replica synced before job ids became
-    source-scoped: rewrite the legacy ids' watermark under ``prefix``
-    by committing a zero-file marker transaction whose job id
-    (``<prefix>migrated-<to>``) parses to the legacy ``to`` in
-    :func:`applied_seq`. The marker lives in the replica's own
-    transaction log — as durable and crash-safe as the watermark
-    itself — and the commit is idempotent (ingest-job id dedupe), so
-    replaying the migration is a no-op.
-
-    Call this exactly once per PRE-UPGRADE source (the source whose
-    syncs produced the legacy ids). Never call it for a source newly
-    added to the replica: its correct watermark is 0, and inheriting
-    another source's legacy ``to`` would silently skip its first seqs.
-    Only the operator knows which source the legacy ids belong to —
-    that is why this is an explicit call and not a read-time fallback.
-
-    No-op (returns the existing watermark) when the scoped prefix
-    already has jobs or there is no legacy history. Returns the
-    scoped watermark after migration."""
-    scoped = applied_seq(dst, prefix)
-    if scoped > 0:
-        return scoped
-    legacy_to = legacy_seq(dst)
-    if legacy_to > 0:
-        dst.store.add_files([], job_id=f"{prefix}migrated-{legacy_to}")
-    return applied_seq(dst, prefix)
-
-
-def sync(src: Any, dst: Any, max_seqs: int | None = None,
-         prefix: str | None = None, migrate_legacy: bool = False) -> dict:
-    """One incremental replication step: poll the source's change feed
-    past the replica's applied watermark and ingest the appended rows
-    under the range-encoded job id. Returns a summary dict; repeated
-    calls are idempotent (a replayed range dedupes in the state store,
-    a caught-up replica polls empty).
-
-    ``max_seqs`` bounds how much source history one step covers — the
-    backpressure knob for a replica catching up from far behind.
-
-    ``migrate_legacy=True`` performs the one-time
-    :func:`migrate_legacy_watermark` upgrade first — pass it on the
-    first post-upgrade sync of a replica whose history was written by
-    the pre-source-scoping version FROM THIS SOURCE, and never for a
-    newly-added source (see the migration docstring for why the
-    distinction cannot be inferred).
-
-    Schema drift is refused loudly: if the source evolved (e.g.
-    ``add_value_column``) and the replica did not, silently ingesting
-    would DROP the new column from shipped rows (ingest projects to the
-    replica's schema) — replicate the evolution first, then the data
-    (or use :func:`sync_cdc`, which replays the source's
-    ``EVOLVE_SCHEMA`` records onto the replica automatically).
-
-    Destructive source commits are refused just as loudly: a
-    ``delete_where``/``update_where``/``merge_upsert`` in the polled
-    window means the append feed alone cannot converge the replica
-    (shipping a merge's insert half while the replaced rows survive
-    would leave duplicate key versions) — use :func:`sync_cdc`, or
-    re-seed."""
-    _check_schema(src, dst)
-    if prefix is None:
-        prefix = source_prefix(src)
-    if migrate_legacy and prefix != JOB_PREFIX:
-        migrate_legacy_watermark(dst, prefix)
-    from_seq = applied_seq(dst, prefix)
-    rows, to_seq = src.poll_changes(from_seq, max_seqs=max_seqs)
-    if to_seq == from_seq:
-        return {"from_seq": from_seq, "to_seq": to_seq,
-                "files_ingested": 0, "caught_up": True}
-    _refuse_destructive(src, from_seq, to_seq)
-    job = f"{prefix}{from_seq}-{to_seq}"
-    # file-shipping fast path (see _ship_append_window): copy the
-    # committed files + sidecars instead of re-sorting the rows
-    refs = _ship_append_window(
-        src, dst, src.store.transactions_between(from_seq, to_seq), job)
-    if refs is None:
-        refs = dst.ingest(rows, job_id=job)
-    head = src.store.current_seq
-    return {"from_seq": from_seq, "to_seq": to_seq,
-            "files_ingested": len(refs),
-            "caught_up": to_seq >= head}
+def _columns(struct: Any) -> list[tuple[str, str]]:
+    """``(name, Spark simpleString)`` per column of a Spark StructType:
+    the column signature replica and source schemas (and shipped file
+    footers) must agree on. Nullability is deliberately not part of
+    it."""
+    return [(f.name, f.dataType.simpleString()) for f in struct.fields]
 
 
 def _ship_append_window(src: Any, dst: Any, window: list, job_id: str):
@@ -214,9 +112,11 @@ def _ship_append_window(src: Any, dst: Any, window: list, job_id: str):
     - the file and its sketch sidecar still exist, and the sidecar's
       row count matches the reference (the sidecar also ships, so the
       replica keeps split planning / Bloom skipping without a re-read);
-    - the file's physical columns equal the replica's CURRENT schema
-      (pre-evolution files lack replayed columns and take the row path,
-      which projects through the source's head schema);
+    - the file's physical columns — names AND Spark types — equal the
+      replica's CURRENT schema (pre-evolution files lack replayed
+      columns, or hold a dropped-then-re-added column under its old
+      type, and take the row path, which projects through the source's
+      head schema);
     - the file's per-row-key [min, max] box (sidecar endpoints are
       exact) fits inside ONE replica leaf — the shipped file keeps the
       one-leaf-per-file invariant under ANY replica split tree, or the
@@ -233,6 +133,7 @@ def _ship_append_window(src: Any, dst: Any, window: list, job_id: str):
     from dataclasses import replace
 
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     from sleeper_spark import sketches as sk
     from sleeper_spark.statestore import FileReference
@@ -245,7 +146,7 @@ def _ship_append_window(src: Any, dst: Any, window: list, job_id: str):
     if job_id in dst.store.ingest_jobs_seen:
         return []  # replayed window: committed previously
     dst.store.check_writable()
-    dst_fields = sorted(f.name for f in dst.schema.all_fields())
+    dst_cols = sorted(_columns(dst.schema.to_struct_type()))
     row_key_names = [f.name for f in dst.schema.row_key_fields]
     plans = []
     for r in refs:
@@ -256,10 +157,11 @@ def _ship_append_window(src: Any, dst: Any, window: list, job_id: str):
         if sc is None or sc.get("rows") != r.number_of_rows:
             return None
         try:
-            names = sorted(pq.read_schema(r.filename).names)
+            cols = sorted(_columns(
+                from_arrow_schema(pq.read_schema(r.filename))))
         except Exception:  # noqa: BLE001 - unreadable footer -> row path
             return None
-        if names != dst_fields:
+        if cols != dst_cols:
             return None
         fields = sc.get("fields", {})
         lo, hi = {}, {}
@@ -300,46 +202,29 @@ def _ship_append_window(src: Any, dst: Any, window: list, job_id: str):
 
 
 _CDC_REFUSE_MSG = (
-    "source ran delete_where/update_where/merge_upsert in the "
-    "replicated window — the append-only feed cannot converge the "
-    "replica through it (a merge's insert half would ship while the "
-    "replaced rows survive, leaving duplicate key versions); use "
-    "replication.sync_cdc to replay the full content history, or "
-    "re-seed the replica")
+    "the source log holds a legacy pre-tombstone delete in the "
+    "replicated window — its removed rows cannot be recovered from the "
+    "log, so the replica cannot replay it; re-seed the replica from the "
+    "source")
 
 
-def _refuse_destructive(src: Any, from_seq: int, to_seq: int) -> None:
-    """Raise :data:`_CDC_REFUSE_MSG` if ``(from_seq, to_seq]`` holds a
-    content-destructive commit (tombstones/updates/merges), reusing
-    the views classifier (which also refuses legacy pre-tombstone
-    deletes — equally unconvergeable, for a different reason)."""
-    from sleeper_spark.views import classify_window
-
-    txs = src.store.transactions_between(from_seq, to_seq)
-    events, _barrier = classify_window(src.store, txs, _CDC_REFUSE_MSG)
-    if events:
-        raise ValueError(_CDC_REFUSE_MSG)
-
-
-def sync_cdc(src: Any, dst: Any, max_seqs: int | None = None,
-             prefix: str | None = None,
-             delete_cap: int = 1_000_000,
-             merge_cap: int = 1_000_000) -> dict:
-    """One CDC replication step: replay the source's FULL content
-    history — appends, deletes, updates and merges — onto the replica,
-    strictly in log order. The delete/update-aware tier of
-    :func:`sync` (module doc): converges a replica through
-    ``delete_where`` / ``update_where`` / ``merge_upsert`` without a
-    re-seed, because the source commits carry everything needed
-    (tombstones = removed rows, ``updates`` = new versions, MERGE
-    addFiles = upserted rows).
+def sync_cdc(src: Any, dst: Any, max_seqs: int | None = None) -> dict:
+    """One replication step: replay the source's FULL content history
+    — appends, deletes, updates and merges — onto the replica, strictly
+    in log order. Converges a replica through ``delete_where`` /
+    ``update_where`` / ``merge_upsert`` without a re-seed, because the
+    source commits carry everything needed (tombstones = removed rows,
+    ``updates`` = new versions, MERGE addFiles = upserted rows).
+    ``max_seqs`` bounds how much source history one step covers — the
+    backpressure knob for a replica catching up from far behind.
 
     Event application per kind, each individually durable before the
-    next event is touched:
+    next event is touched (``prefix`` is :func:`source_prefix`):
 
-    - append window ``(a, b]`` → ``dst.ingest(job_id=prefix+"a-b")``
-      (idempotent by job id; windows with no ADD_FILES commit nothing
-      and cost nothing);
+    - append window ``(a, b]`` → the committed files ship as copies
+      (:func:`_ship_append_window`), else ``dst.ingest(job_id=prefix+
+      "a-b")`` (idempotent by job id; windows with no ADD_FILES commit
+      nothing and cost nothing);
     - ``delete`` at seq d → ``dst.delete_exact_rows(tombstones)``
       (key-exact ``delete_where`` on aggregation tables, where source
       deletes are key-region only and whole key groups are the unit),
@@ -352,15 +237,14 @@ def sync_cdc(src: Any, dst: Any, max_seqs: int | None = None,
       job_id="merge-"+prefix+"(d-1)-d")`` (durably idempotent via the
       merge replay contract), then the marker.
 
-    Crash safety without a side file, same recovery story as
-    :func:`sync`: the watermark is recovered from the replica's own
-    log (:func:`applied_seq` parses the trailing seq of every job id
-    under ``prefix``), every application is idempotent against a
-    replica already holding its effect (re-deleting absent rows
-    no-ops, re-ingests/re-merges dedupe), and ordering is enforced by
-    never applying event N+1 before event N's watermark commit is
-    durable — so a replay can never re-apply an old delete AFTER rows
-    it would wrongly match were legitimately re-added.
+    Crash safety without a side file (module doc): the watermark is
+    recovered from the replica's own log (:func:`applied_seq`), every
+    application is idempotent against a replica already holding its
+    effect (re-deleting absent rows no-ops, re-ingests/re-merges
+    dedupe), and ordering is enforced by never applying event N+1
+    before event N's watermark commit is durable — so a replay can
+    never re-apply an old delete AFTER rows it would wrongly match were
+    legitimately re-added.
 
     Schema evolution REPLAYS (r10 VERDICT Next #3): the source's
     ``add_value_column``/``drop_value_column`` commits an
@@ -376,19 +260,19 @@ def sync_cdc(src: Any, dst: Any, max_seqs: int | None = None,
     is also safe: ingest projects to the replica schema, so pre-add
     rows carry the new column as all-NULL and pre-drop rows lose only
     values the drop erases anyway. Drift with NO evolution record
-    anywhere past the watermark still refuses loudly (manual/
-    divergent drift cannot converge).
+    anywhere past the watermark refuses loudly (manual/divergent drift
+    cannot converge; ingesting through the narrower schema would
+    silently drop columns).
 
     An in-flight delete/update claim (commit not yet landed) is a
     BARRIER: the step stops before its seq and reports
-    ``caught_up=False``; the next call re-plans. ``delete_cap`` /
-    ``merge_cap`` bound the driver-side row sets per event (a mass
+    ``caught_up=False``; the next call re-plans. :data:`DELETE_CAP` /
+    :data:`MERGE_CAP` bound the driver-side row sets per event (a mass
     delete should re-seed instead — the caps raise loudly)."""
     from sleeper_spark.ranges import Region
     from sleeper_spark.views import classify_window
 
-    if prefix is None:
-        prefix = source_prefix(src)
+    prefix = source_prefix(src)
     from_seq = applied_seq(dst, prefix)
     src.store.refresh_if_stale(0)
     head = src.store.current_seq
@@ -414,7 +298,8 @@ def sync_cdc(src: Any, dst: Any, max_seqs: int | None = None,
         if to_seq <= from_seq:
             return summary  # blocked on the in-flight claim
 
-    if _schemas_differ(src, dst):
+    if (_columns(src.schema.to_struct_type())
+            != _columns(dst.schema.to_struct_type())):
         # drift. Every feed (added/deleted/updated_rows_between) reads
         # through the source's HEAD schema, so the only consistent
         # replica shape is head's — find the evolution records that
@@ -478,7 +363,7 @@ def sync_cdc(src: Any, dst: Any, max_seqs: int | None = None,
 
     def _mark(seq: int) -> None:
         # zero-file marker: parses to `seq` in applied_seq, durable in
-        # the replica's own log (the migrate_legacy_watermark pattern)
+        # the replica's own log like any ingest job id
         dst.store.add_files([], job_id=f"{prefix}applied-{seq}")
 
     cur = from_seq
@@ -499,24 +384,24 @@ def sync_cdc(src: Any, dst: Any, max_seqs: int | None = None,
             # are unchanged
             from pyspark.sql import functions as _F
             both = (ins.select(*key_names_row).distinct()
-                    .limit(merge_cap + 1).withColumn("__ins", _F.lit(True))
+                    .limit(MERGE_CAP + 1).withColumn("__ins", _F.lit(True))
                     .unionByName(
                         old.select(*key_names_row).distinct()
-                        .limit(merge_cap + 1)
+                        .limit(MERGE_CAP + 1)
                         .withColumn("__ins", _F.lit(False)))
                     .collect())
             ins_keys = {tuple(r[k] for k in key_names_row)
                         for r in both if r["__ins"]}
             old_keys = [tuple(r[k] for k in key_names_row)
                         for r in both if not r["__ins"]]
-            if len(old_keys) > merge_cap or len(ins_keys) > merge_cap:
+            if len(old_keys) > MERGE_CAP or len(ins_keys) > MERGE_CAP:
                 raise ValueError(
                     f"merge commit at seq {eseq} touched more than "
-                    f"{merge_cap} distinct keys — a mass restatement; "
+                    f"{MERGE_CAP} distinct keys — a mass restatement; "
                     "re-seed the replica instead")
             gone = sorted(k for k in old_keys if k not in ins_keys)
             from sleeper_spark.merge import merge_upsert as _mu
-            _mu(dst, ins, cap=merge_cap, delete_keys=gone,
+            _mu(dst, ins, cap=MERGE_CAP, delete_keys=gone,
                 job_id=f"merge-{prefix}{eseq - 1}-{eseq}")
             _mark(eseq)
             summary["merges_applied"] += 1
@@ -528,11 +413,11 @@ def sync_cdc(src: Any, dst: Any, max_seqs: int | None = None,
                 # the well-defined unit (physical pre-collapse rows
                 # differ between source and replica by design)
                 keys = old.select(*key_names).distinct() \
-                    .limit(delete_cap + 1).collect()
-                if len(keys) > delete_cap:
+                    .limit(DELETE_CAP + 1).collect()
+                if len(keys) > DELETE_CAP:
                     raise ValueError(
                         f"delete commit at seq {eseq} removed more "
-                        f"than {delete_cap} distinct keys — a mass "
+                        f"than {DELETE_CAP} distinct keys — a mass "
                         "delete; re-seed the replica instead")
                 if keys:
                     def _norm(v):
@@ -549,7 +434,7 @@ def sync_cdc(src: Any, dst: Any, max_seqs: int | None = None,
                 # so a source row holding float NaN must still be
                 # removable from the replica (NaN-as-equal), or a
                 # legitimate source delete would strand the replica
-                res = dst.delete_exact_rows(old, cap=delete_cap,
+                res = dst.delete_exact_rows(old, cap=DELETE_CAP,
                                             match_nan=True)
                 summary["rows_deleted"] += res["rows_deleted"]
             if kind == "update":
@@ -583,8 +468,6 @@ def _apply_evolution(dst: Any, tx: dict) -> bool:
     record's stamped resulting schema raises loudly — a divergently
     evolved replica cannot converge and must re-seed. Returns True
     when the action actually changed the replica."""
-    import json as _json
-
     from sleeper_spark.schema import Field, Schema
 
     action = tx.get("action")
@@ -611,11 +494,8 @@ def _apply_evolution(dst: Any, tx: dict) -> bool:
         raise ValueError(
             f"unknown schema-evolution action {action!r} in the source "
             "log — upgrade the replica's engine before syncing")
-    want = Schema.from_json(tx["schema"])
-    want_cols = [(f.name, f.dtype.simpleString())
-                 for f in want.all_fields()]
-    got_cols = [(f.name, f.dtype.simpleString())
-                for f in dst.schema.all_fields()]
+    want_cols = _columns(Schema.from_json(tx["schema"]).to_struct_type())
+    got_cols = _columns(dst.schema.to_struct_type())
     if want_cols != got_cols:
         raise ValueError(
             "replica schema after replaying the source evolution "
@@ -625,149 +505,49 @@ def _apply_evolution(dst: Any, tx: dict) -> bool:
     return applied
 
 
-def _schemas_differ(src: Any, dst: Any) -> bool:
-    return ([(f.name, f.dtype.simpleString())
-             for f in src.schema.all_fields()]
-            != [(f.name, f.dtype.simpleString())
-                for f in dst.schema.all_fields()])
-
-
 def _check_schema(src: Any, dst: Any) -> None:
-    src_cols = [(f.name, f.dtype.simpleString())
-                for f in src.schema.all_fields()]
-    dst_cols = [(f.name, f.dtype.simpleString())
-                for f in dst.schema.all_fields()]
+    src_cols = _columns(src.schema.to_struct_type())
+    dst_cols = _columns(dst.schema.to_struct_type())
     if src_cols != dst_cols:
         raise ValueError(
             "replica schema differs from source "
-            f"(source {src_cols} vs replica {dst_cols}): apply the "
-            "same schema evolution to the replica before syncing — "
-            "ingesting through the narrower schema would silently drop "
-            "columns")
+            f"(source {src_cols} vs replica {dst_cols}) and no source "
+            "schema evolution past the replica's watermark explains it: "
+            "apply the same schema evolution to the replica, or re-seed "
+            "it — ingesting through the narrower schema would silently "
+            "drop columns")
 
 
-def sync_via_tail(src: Any, dst: Any, staging_dir: str,
-                  max_seqs: int | None = None,
-                  prefix: str | None = None) -> dict:
-    """One replication step driven by the change-feed tail
-    (:class:`sleeper_spark.streaming.ChangeFeedTail`) instead of a
-    direct poll: the tail lands each (from, to] range crash-safely as
-    ONE deterministically-named parquet file in ``staging_dir``, and
-    the replica ingests landed ranges IN ORDER under the same
-    range-encoded job ids :func:`sync` uses. One range-landing code
-    path, one idempotency story — and the staging dir doubles as a
-    file-source stream (``tail.read_stream``), so the same landing
-    feeds the replica AND any streaming consumers.
-
-    Crash safety is the composition of the two parts' own guarantees:
-    the tail replays a pending range onto the same file name, and a
-    landed-but-not-ingested file is re-discovered by the next call
-    (ingest job ids dedupe in the replica's state store). A fresh tail
-    pointed at an already-partially-synced replica fast-forwards its
-    checkpoint to the replica's applied watermark instead of re-landing
-    history. Ranges are applied strictly in watermark order; a gap
-    (staging dir manually pruned below the watermark chain) raises
-    rather than silently skipping source data."""
-    import os
-    import re
-
-    from sleeper_spark.streaming import ChangeFeedTail
-
-    _check_schema(src, dst)
-    if prefix is None:
-        prefix = source_prefix(src)
-    tail = ChangeFeedTail(src, staging_dir, max_seqs=max_seqs)
-    applied = applied_seq(dst, prefix)
-    if tail.state["seq"] == 0 and not tail.state.get("pending"):
-        # fresh staging dir, possibly pre-synced replica: start the
-        # tail at the replica's watermark, not at the dawn of the log
-        tail.state["seq"] = applied
-        tail._save()
-    landed_rows = tail.drain()
-    # refusal AFTER the drain (which refreshes to the head it staged
-    # through): the tail lands the APPEND feed only, so a destructive
-    # commit anywhere past the watermark cannot be converged through
-    # this path — checking before the drain would leave a window for
-    # a commit landing in between to ship its insert half silently.
-    # Staged-but-unapplied files are harmless (the next call re-finds
-    # them); applying them is what this guards.
-    src.store.refresh_if_stale(0)
-    _refuse_destructive(src, applied, src.store.current_seq)
-    start_applied = applied
-    ranges = []
-    for fn in os.listdir(staging_dir):
-        m = re.fullmatch(r"changes-(\d{12})-(\d{12})\.parquet", fn)
-        if m:
-            ranges.append((int(m.group(1)) - 1, int(m.group(2)), fn))
-    files_ingested = 0
-    for from_seq, to_seq, fn in sorted(ranges):
-        if to_seq <= applied:
-            continue  # already applied (or another consumer's history)
-        if from_seq > applied:
-            raise RuntimeError(
-                f"replication gap: replica applied up to seq {applied} "
-                f"but the next staged range starts at {from_seq} — a "
-                "staged file below the watermark chain was removed; "
-                "re-land it (fresh staging dir) or re-seed the replica")
-        if from_seq < applied:
-            # staged range straddles the watermark (possible only when
-            # sync(max_seqs=...) and tail staging were mixed on one
-            # replica): the staged file holds plain table rows with no
-            # seq column, so the already-applied prefix cannot be
-            # filtered out — ingesting it whole would duplicate those
-            # rows. Refuse loudly, like the gap case.
-            raise RuntimeError(
-                f"replication overlap: replica applied up to seq "
-                f"{applied} but staged range ({from_seq}, {to_seq}] "
-                "straddles that watermark — direct sync() and "
-                "sync_via_tail were mixed on this replica; re-land "
-                "from a fresh staging dir (the tail fast-forwards to "
-                "the replica's watermark) instead of reusing this one")
-        rows = dst.spark.read.parquet(os.path.join(staging_dir, fn))
-        dst.ingest(rows, job_id=f"{prefix}{from_seq}-{to_seq}")
-        files_ingested += 1
-        applied = to_seq
-    head = src.store.current_seq
-    return {"from_seq": start_applied, "to_seq": applied,
-            "landed_rows": landed_rows,
-            "files_ingested": files_ingested,
-            "caught_up": applied >= head}
-
-
-def sync_cdc_to_head(src: Any, dst: Any, max_seqs: int | None = None,
-                     prefix: str | None = None,
-                     max_steps: int = 10_000,
-                     delete_cap: int = 1_000_000,
-                     merge_cap: int = 1_000_000,
-                     compact_replica: bool = True) -> list[dict]:
+def sync_cdc_to_head(src: Any, dst: Any,
+                     max_seqs: int | None = None) -> list[dict]:
     """Run :func:`sync_cdc` steps until the replica is caught up with
-    the source head observed at each step — the CDC twin of
-    :func:`sync_to_head`, with the same ``max_steps`` runaway guard.
-    A persistent in-flight delete/update claim on the source keeps
-    ``caught_up`` false by design (the barrier); this surfaces as the
-    max_steps error rather than a silent spin.
+    the source head observed at each step, at most :data:`MAX_STEPS`
+    of them — a runaway guard: a source committing faster than the
+    replica applies would otherwise loop forever. A persistent
+    in-flight delete/update claim on the source keeps ``caught_up``
+    false by design (the barrier); three consecutive no-progress steps
+    raise instead of spinning.
 
-    ``compact_replica`` (default on) runs the replica's own
-    ``compact()`` after every step that progressed: each replayed
-    delete/update rewrites candidate files 1:1, so a long replay
-    otherwise accretes N generations of small files and replica reads
-    degrade. The call is the table's normal strategy-gated compaction
-    — planning is metadata-only and produces jobs only when the
-    strategy's thresholds trip (r10 VERDICT Next #6), so steady-state
-    steps pay one in-memory plan, not a rewrite."""
+    The replica's own ``compact()`` runs after every step that
+    progressed: each replayed delete/update rewrites candidate files
+    1:1, so a long replay otherwise accretes N generations of small
+    files and replica reads degrade. The call is the table's normal
+    strategy-gated compaction — planning is metadata-only and produces
+    jobs only when the strategy's thresholds trip (r10 VERDICT Next
+    #6), so steady-state steps pay one in-memory plan, not a
+    rewrite."""
     steps = []
     blocked = 0
-    for _ in range(max_steps):
-        s = sync_cdc(src, dst, max_seqs=max_seqs, prefix=prefix,
-                     delete_cap=delete_cap, merge_cap=merge_cap)
+    for _ in range(MAX_STEPS):
+        s = sync_cdc(src, dst, max_seqs=max_seqs)
         steps.append(s)
-        if compact_replica and s["to_seq"] > s["from_seq"]:
+        if s["to_seq"] > s["from_seq"]:
             dst.compact()
         if s["caught_up"]:
             return steps
         # a barrier step makes no progress; three consecutive
         # no-progress steps means the claim is not resolving — say so
-        # instead of burning max_steps polls
+        # instead of burning MAX_STEPS polls
         if s["to_seq"] <= s["from_seq"]:
             blocked += 1
             if blocked >= 3:
@@ -779,23 +559,6 @@ def sync_cdc_to_head(src: Any, dst: Any, max_seqs: int | None = None,
         else:
             blocked = 0
     raise RuntimeError(
-        f"replica still behind after {max_steps} sync_cdc steps — the "
-        "source is outrunning replication; raise max_seqs or max_steps")
-
-
-def sync_to_head(src: Any, dst: Any, max_seqs: int | None = None,
-                 prefix: str | None = None,
-                 max_steps: int = 10_000) -> list[dict]:
-    """Run :func:`sync` steps until the replica is caught up with the
-    source head observed at each step. Bounded by ``max_steps`` as a
-    runaway guard (a source ingesting faster than the replica ships
-    would otherwise loop forever — surface that loudly instead)."""
-    steps = []
-    for _ in range(max_steps):
-        s = sync(src, dst, max_seqs=max_seqs, prefix=prefix)
-        steps.append(s)
-        if s["caught_up"]:
-            return steps
-    raise RuntimeError(
-        f"replica still behind after {max_steps} sync steps — the "
-        "source is outrunning replication; raise max_seqs or max_steps")
+        f"replica still behind after {MAX_STEPS} sync_cdc steps — the "
+        "source is outrunning replication; raise max_seqs, or call "
+        "again once the source's write rate drops")

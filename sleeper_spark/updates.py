@@ -59,10 +59,9 @@ ingest gate.
 Change-feed note: like deletes, updates do NOT flow through the
 append-only ``added_rows_between`` feed — incremental consumers read
 ``updated_rows_between``/``deleted_rows_between`` (MaterializedView
-and SecondaryIndex do this through their refresh). Append-only
-replication (``replication.sync``) REFUSES a window holding an update
-commit; ``replication.sync_cdc`` converges through it by applying the
-tombstone + update feeds as delete-old + ingest-new on the replica.
+and SecondaryIndex do this through their refresh), and
+``replication.sync_cdc`` converges a replica through an update by
+applying the tombstone + update feeds as delete-old + ingest-new.
 """
 
 from __future__ import annotations

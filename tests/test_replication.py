@@ -1,7 +1,9 @@
 """Incremental replication over the change feed (replication.py):
 convergence, compaction-neutrality (rewrites ship zero rows), crash
-idempotency recovered from the replica's own log, and aggregation-table
-convergence through independent collapse schedules."""
+idempotency recovered from the replica's own log, aggregation-table
+convergence through independent collapse schedules, delete/update/
+merge and schema-evolution replay, the file-shipping fast path and the
+loud safety bounds."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -37,19 +39,19 @@ class TestReplication:
         src.ingest(_rows(spark, 0, 100))
         src.ingest(_rows(spark, 100, 200))
 
-        steps = replication.sync_to_head(src, dst)
+        steps = replication.sync_cdc_to_head(src, dst)
         assert steps[-1]["caught_up"]
         assert _sorted_rows(dst) == _sorted_rows(src)
 
         # compaction on the source must ship NOTHING
         src.compact()
-        s = replication.sync(src, dst)
-        assert s["files_ingested"] == 0
+        s = replication.sync_cdc(src, dst)
+        assert s["files_ingested"] == 0 and s["caught_up"]
         assert _sorted_rows(dst) == _sorted_rows(src)
 
         # further appends flow; the replica compacts on its own schedule
         src.ingest(_rows(spark, 200, 250))
-        replication.sync_to_head(src, dst)
+        replication.sync_cdc_to_head(src, dst)
         dst.compact()
         assert _sorted_rows(dst) == _sorted_rows(src)
 
@@ -58,11 +60,11 @@ class TestReplication:
         src = SleeperTable.create(spark, str(tmp_path / "src"), _schema())
         dst = SleeperTable.create(spark, str(tmp_path / "dst"), _schema())
         src.ingest(_rows(spark, 0, 50))
-        s1 = replication.sync(src, dst)
+        s1 = replication.sync_cdc(src, dst)
         assert s1["files_ingested"] >= 1
 
         # caught-up re-run: no-op
-        s2 = replication.sync(src, dst)
+        s2 = replication.sync_cdc(src, dst)
         assert s2["files_ingested"] == 0 and s2["caught_up"]
 
         # crash-after-ingest replay: re-running the SAME range's ingest
@@ -77,7 +79,7 @@ class TestReplication:
         src = SleeperTable.create(spark, str(tmp_path / "src"), _schema())
         dst = SleeperTable.create(spark, str(tmp_path / "dst"), _schema())
         src.ingest(_rows(spark, 0, 30))
-        replication.sync_to_head(src, dst)
+        replication.sync_cdc(src, dst)
         applied = replication.applied_seq(dst)
         assert applied == src.store.current_seq
 
@@ -91,7 +93,7 @@ class TestReplication:
         dst = SleeperTable.create(spark, str(tmp_path / "dst"), _schema())
         for i in range(4):
             src.ingest(_rows(spark, i * 10, (i + 1) * 10))
-        steps = replication.sync_to_head(src, dst, max_seqs=1)
+        steps = replication.sync_cdc_to_head(src, dst, max_seqs=1)
         assert len(steps) >= 4  # one source seq at a time
         assert _sorted_rows(dst) == _sorted_rows(src)
 
@@ -105,7 +107,7 @@ class TestReplication:
         src.ingest(_rows(spark, 0, 40))
         src.ingest(_rows(spark, 0, 40))
         src.compact()  # source collapses BEFORE replication catches up
-        replication.sync_to_head(src, dst)
+        replication.sync_cdc_to_head(src, dst)
         # the feed shipped the RAW appends; the replica's own read-time
         # collapse yields the identical aggregate view
         assert _sorted_rows(dst) == _sorted_rows(src)
@@ -123,179 +125,15 @@ class TestReplication:
         # a runs far ahead in seq space before b syncs at all
         for i in range(4):
             a.ingest(_rows(spark, i * 10, (i + 1) * 10))
-        replication.sync_to_head(a, dst)
+        replication.sync_cdc(a, dst)
         b.ingest(_rows(spark, 1000, 1020))
-        s = replication.sync(b, dst)
+        s = replication.sync_cdc(b, dst)
         assert s["files_ingested"] >= 1  # NOT skipped by a's watermark
         want = sorted(_sorted_rows(a) + _sorted_rows(b))
         assert _sorted_rows(dst) == want
         # each source's watermark is its own
         assert (replication.applied_seq(dst, replication.source_prefix(b))
                 == b.store.current_seq)
-
-    def test_tail_replica_converges_with_sync_replica(self, spark,
-                                                      tmp_path):
-        """sync_via_tail (replication through ChangeFeedTail's staged
-        landings) must converge to the same rows as the direct sync
-        path — including across a simulated poller crash — and its
-        staging dir stays a valid stream source."""
-        import os
-        src = SleeperTable.create(spark, str(tmp_path / "src"), _schema())
-        d1 = SleeperTable.create(spark, str(tmp_path / "d1"), _schema())
-        d2 = SleeperTable.create(spark, str(tmp_path / "d2"), _schema())
-        staging = str(tmp_path / "staging")
-        src.ingest(_rows(spark, 0, 60))
-        src.ingest(_rows(spark, 60, 90))
-
-        replication.sync_to_head(src, d1)
-        s = replication.sync_via_tail(src, d2, staging)
-        assert s["caught_up"] and s["files_ingested"] >= 1
-        assert _sorted_rows(d2) == _sorted_rows(d1) == _sorted_rows(src)
-
-        # crash BETWEEN landing and ingest: drain landed a range but
-        # the replica never saw it — the next sync_via_tail must pick
-        # the staged file up purely from the directory + job-id dedupe
-        from sleeper_spark.streaming import ChangeFeedTail
-        src.ingest(_rows(spark, 90, 120))
-        tail = ChangeFeedTail(src, staging)
-        tail.drain()  # "crashed" here: staged but not ingested
-        s2 = replication.sync_via_tail(src, d2, staging)
-        assert s2["files_ingested"] >= 1 and s2["caught_up"]
-
-        # crash DURING landing: forcing the pending intent to replay
-        # must not duplicate rows in the replica
-        src.ingest(_rows(spark, 120, 130))
-        tail2 = ChangeFeedTail(src, staging)
-        _, head = src.poll_changes(tail2.state["seq"])
-        tail2.state["pending"] = [tail2.state["seq"], head]
-        tail2._save()  # intent written, then "crash" before the write
-        s3 = replication.sync_via_tail(src, d2, staging)
-        assert s3["caught_up"]
-        assert _sorted_rows(d2) == _sorted_rows(src)
-
-        # the staged landings double as a batch-readable feed with
-        # exactly the shipped rows (stream-source shape: same files)
-        fed = spark.read.schema(src.schema.to_struct_type()).parquet(
-            os.path.join(staging, "changes-*.parquet"))
-        assert sorted((r.k, r.v) for r in fed.collect()) \
-            == _sorted_rows(src)
-
-    def test_tail_fast_forwards_on_presynced_replica(self, spark,
-                                                     tmp_path):
-        """Pointing a FRESH staging dir at a replica that already
-        synced directly must not re-land (or re-ingest) history: the
-        tail checkpoint fast-forwards to the replica's watermark."""
-        src = SleeperTable.create(spark, str(tmp_path / "src"), _schema())
-        dst = SleeperTable.create(spark, str(tmp_path / "dst"), _schema())
-        src.ingest(_rows(spark, 0, 40))
-        replication.sync_to_head(src, dst)  # direct path first
-        src.ingest(_rows(spark, 40, 50))
-        s = replication.sync_via_tail(src, dst, str(tmp_path / "st2"))
-        assert s["caught_up"]
-        assert s["landed_rows"] == 10  # only the delta, never history
-        assert _sorted_rows(dst) == _sorted_rows(src)
-
-    def test_schema_drift_refused_then_syncs_after_evolution(
-            self, spark, tmp_path):
-        from pyspark.sql import types as T2
-        from sleeper_spark.schema import Field as F2
-        src = SleeperTable.create(spark, str(tmp_path / "src"), _schema())
-        dst = SleeperTable.create(spark, str(tmp_path / "dst"), _schema())
-        src.ingest(_rows(spark, 0, 20))
-        replication.sync_to_head(src, dst)
-
-        # source evolves; an unsuspecting sync must refuse LOUDLY (a
-        # silent sync would drop the new column from shipped rows)
-        src.add_value_column(F2("extra", T2.LongType(), True))
-        src.ingest(_rows(spark, 20, 30).withColumn(
-            "extra", F.col("k") * 100))
-        with pytest.raises(ValueError, match="schema"):
-            replication.sync(src, dst)
-
-        # evolve the replica the same way -> sync flows, column intact
-        dst.add_value_column(F2("extra", T2.LongType(), True))
-        replication.sync_to_head(src, dst)
-        got = sorted((r.k, r.v, r.extra)
-                     for r in dst.full_scan().collect())
-        want = sorted((r.k, r.v, r.extra)
-                      for r in src.full_scan().collect())
-        assert got == want
-        assert any(e is not None for _, _, e in got)
-
-    def test_legacy_watermark_migrates_to_scoped_prefix(self, spark,
-                                                        tmp_path):
-        """A replica synced BEFORE job ids became source-scoped holds
-        legacy 'cdf-sync-<from>-<to>' ids. The first post-upgrade sync
-        (scoped default prefix) must recover the watermark from those
-        legacy ids — NOT read 0 and re-ingest the entire source history
-        under new ids that don't dedupe against the old ones."""
-        src = SleeperTable.create(spark, str(tmp_path / "src"), _schema())
-        dst = SleeperTable.create(spark, str(tmp_path / "dst"), _schema())
-        src.ingest(_rows(spark, 0, 40))
-        # pre-upgrade sync: identity-less legacy prefix
-        replication.sync(src, dst, prefix=replication.JOB_PREFIX)
-        n_before = dst.full_scan().count()
-        assert n_before == 40
-        # without explicit migration the scoped watermark reads 0 —
-        # the implicit fallback is gone (it lost data for a NEW source
-        # on a replica carrying another source's legacy ids)
-        assert replication.applied_seq(
-            dst, replication.source_prefix(src)) == 0
-        # explicit one-time migration on the first post-upgrade sync
-        s = replication.sync(src, dst, migrate_legacy=True)
-        assert s["files_ingested"] == 0 and s["caught_up"]
-        assert dst.full_scan().count() == n_before  # no duplication
-        # the marker is durable: subsequent DEFAULT syncs see the
-        # migrated watermark, and a replay of the migration is a no-op
-        assert replication.applied_seq(
-            dst, replication.source_prefix(src)) > 0
-        replication.migrate_legacy_watermark(
-            dst, replication.source_prefix(src))
-        assert dst.full_scan().count() == n_before
-        # new appends flow under the scoped ids without the flag
-        src.ingest(_rows(spark, 40, 60))
-        replication.sync_to_head(src, dst)
-        assert _sorted_rows(dst) == _sorted_rows(src)
-
-    def test_new_source_on_legacy_replica_starts_at_zero(self, spark,
-                                                         tmp_path):
-        """A source NEWLY added to a replica that carries ANOTHER
-        source's legacy identity-less job ids must start at watermark
-        0 — under the old implicit fallback it inherited the other
-        source's legacy 'to' and silently skipped its first seqs."""
-        a = SleeperTable.create(spark, str(tmp_path / "a"), _schema())
-        b = SleeperTable.create(spark, str(tmp_path / "b"), _schema())
-        dst = SleeperTable.create(spark, str(tmp_path / "dst"), _schema())
-        a.ingest(_rows(spark, 0, 30))
-        # pre-upgrade history from source a under the legacy prefix
-        replication.sync(a, dst, prefix=replication.JOB_PREFIX)
-        assert dst.full_scan().count() == 30
-        # source b is new post-upgrade: its watermark is 0 and its
-        # first sync ships ALL its rows (the old fallback skipped them)
-        b.ingest(_rows(spark, 100, 120))
-        assert replication.applied_seq(
-            dst, replication.source_prefix(b)) == 0
-        s = replication.sync(b, dst)
-        assert s["files_ingested"] > 0
-        assert dst.full_scan().count() == 50
-
-    def test_straddling_staged_range_refused(self, spark, tmp_path):
-        """A staged range that STRADDLES the replica watermark (only
-        possible when direct sync and tail staging were mixed on one
-        replica) must raise, not re-ingest the already-applied prefix:
-        the staged file holds plain rows with no seq column, so the
-        overlap cannot be filtered out."""
-        from sleeper_spark.streaming import ChangeFeedTail
-
-        src = SleeperTable.create(spark, str(tmp_path / "src"), _schema())
-        dst = SleeperTable.create(spark, str(tmp_path / "dst"), _schema())
-        src.ingest(_rows(spark, 0, 10))
-        src.ingest(_rows(spark, 10, 20))
-        staging = str(tmp_path / "staging")
-        ChangeFeedTail(src, staging).drain()  # lands (0, head] as one range
-        replication.sync(src, dst, max_seqs=1)  # watermark INTO the range
-        with pytest.raises(RuntimeError, match="straddles"):
-            replication.sync_via_tail(src, dst, staging)
 
 
 def _full_schema():
@@ -318,30 +156,6 @@ def _fsorted(t):
 
 
 class TestSyncCdc:
-    def test_plain_sync_refuses_destructive_window(self, spark,
-                                                   tmp_path):
-        """r9 ADVICE: sync must not silently ship a merge's insert
-        half (or skip a delete); it refuses and names sync_cdc."""
-        from sleeper_spark.ranges import Range, Region
-        src = SleeperTable.create(spark, str(tmp_path / "s"),
-                                  _full_schema())
-        dst = SleeperTable.create(spark, str(tmp_path / "d"),
-                                  _full_schema())
-        src.ingest(_frows(spark, 0, 50))
-        replication.sync_to_head(src, dst)
-        src.delete_where(regions=[Region.of(Range("k", 0, 10))])
-        with pytest.raises(ValueError, match="sync_cdc"):
-            replication.sync(src, dst)
-        with pytest.raises(ValueError, match="sync_cdc"):
-            replication.sync_via_tail(src, dst,
-                                      str(tmp_path / "staging"))
-        # sync_cdc converges through it; plain sync works again after
-        replication.sync_cdc(src, dst)
-        assert _fsorted(dst) == _fsorted(src)
-        src.ingest(_frows(spark, 100, 120))
-        replication.sync(src, dst)
-        assert _fsorted(dst) == _fsorted(src)
-
     def test_converges_through_full_history(self, spark, tmp_path):
         """ingest + delete + update + merge on the source, replica
         hash-equals without a re-seed (r9 VERDICT Next #3)."""
@@ -415,7 +229,7 @@ class TestSyncCdc:
                                   props=props)
         src.ingest(_rows(spark, 0, 40))
         src.ingest(_rows(spark, 0, 40))  # duplicate keys pre-collapse
-        replication.sync_to_head(src, dst)
+        replication.sync_cdc(src, dst)
         dst.compact()  # replica collapses on ITS schedule
         src.delete_where(regions=[Region.of(Range("k", 10, 20))])
         s = replication.sync_cdc(src, dst)
@@ -451,7 +265,7 @@ class TestSyncCdc:
         src.ingest(grows("del"))
         src.ingest(grows("keep"))
         src.ingest(grows("keep"))  # duplicate pre-collapse rows
-        replication.sync_to_head(src, dst)
+        replication.sync_cdc(src, dst)
         dst.compact()  # replica collapses on ITS schedule
         # delete ONE sort-key group of a row-key range on the source
         src.delete_where(regions=[Region.of(
@@ -487,7 +301,7 @@ class TestSyncCdc:
             F.when(F.col("id") % 3 == 0, float("nan"))
             .otherwise(F.col("id") * 1.5).alias("v"))
         src.ingest(rows)
-        replication.sync_to_head(src, dst)
+        replication.sync_cdc(src, dst)
         src.delete_where(regions=[Region.of(Range("k", 0, 10))])
         s = replication.sync_cdc(src, dst)  # window holds NaN rows
         assert s["caught_up"] and s["rows_deleted"] == 10
@@ -510,7 +324,7 @@ class TestSyncCdc:
         dst = SleeperTable.create(spark, str(tmp_path / "d"),
                                   _full_schema())
         src.ingest(_frows(spark, 0, 100))
-        replication.sync_to_head(src, dst)
+        replication.sync_cdc(src, dst)
         # conditional merge: delete keys 10-19 outright, bump 20-29,
         # insert 200-204 — one MERGE_FILES commit
         # the table has a column literally named "s": the default
@@ -561,7 +375,7 @@ class TestSyncCdcSchemaEvolution:
         src = SleeperTable.create(spark, str(tmp_path / "s"), _schema())
         dst = SleeperTable.create(spark, str(tmp_path / "d"), _schema())
         src.ingest(_rows(spark, 0, 50))
-        replication.sync_to_head(src, dst)
+        replication.sync_cdc(src, dst)
         src.add_value_column(Field("w", T.StringType(), True))
         src.ingest(spark.range(50, 80).select(
             F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
@@ -587,7 +401,7 @@ class TestSyncCdcSchemaEvolution:
         dst = SleeperTable.create(spark, str(tmp_path / "d"),
                                   _full_schema())
         src.ingest(_frows(spark, 0, 40))
-        replication.sync_to_head(src, dst)
+        replication.sync_cdc(src, dst)
         src.drop_value_column("s")
         # post-drop appends no longer carry the column: the replica
         # must apply the drop BEFORE ingesting them (eager replay)
@@ -623,7 +437,7 @@ class TestSyncCdcSchemaEvolution:
         src = SleeperTable.create(spark, str(tmp_path / "s"), _schema())
         dst = SleeperTable.create(spark, str(tmp_path / "d"), _schema())
         src.ingest(_rows(spark, 0, 20))
-        replication.sync_to_head(src, dst)
+        replication.sync_cdc(src, dst)
         f = Field("w", T.StringType(), True)
         src.add_value_column(f)
         dst.add_value_column(f)  # operator ran ahead
@@ -645,7 +459,7 @@ class TestSyncCdcSchemaEvolution:
         src = SleeperTable.create(spark, str(tmp_path / "s"), _schema())
         dst = SleeperTable.create(spark, str(tmp_path / "d"), _schema())
         src.ingest(_rows(spark, 0, 20))
-        replication.sync_to_head(src, dst)
+        replication.sync_cdc(src, dst)
         src.add_value_column(Field("w", T.StringType(), True))
         dst.add_value_column(Field("w", T.LongType(), True))
         with pytest.raises(ValueError, match="divergently"):
@@ -665,7 +479,7 @@ class TestSyncCdcSchemaEvolution:
         src = SleeperTable.create(spark, str(tmp_path / "s"), _schema())
         dst = SleeperTable.create(spark, str(tmp_path / "d"), _schema())
         src.ingest(_rows(spark, 0, 20))
-        replication.sync_to_head(src, dst)
+        replication.sync_cdc(src, dst)
 
         f = Field("w", T.StringType(), True)
         real_open = builtins.open
@@ -703,15 +517,33 @@ class TestSyncCdcSchemaEvolution:
 
     def test_unexplained_drift_still_refused(self, spark, tmp_path):
         """Replica-only drift (no EVOLVE record in the source window)
-        keeps the strict refusal."""
+        keeps the strict refusal, whether or not the window holds data
+        (a silent sync would drop the column from shipped rows); once
+        the source evolves the same way, the sync flows with the
+        column intact."""
         src = SleeperTable.create(spark, str(tmp_path / "s"), _schema())
         dst = SleeperTable.create(spark, str(tmp_path / "d"), _schema())
         src.ingest(_rows(spark, 0, 20))
-        replication.sync_to_head(src, dst)
-        dst.add_value_column(Field("w", T.StringType(), True))
+        replication.sync_cdc(src, dst)
+        f = Field("w", T.LongType(), True)
+        dst.add_value_column(f)
+        with pytest.raises(ValueError, match="schema"):
+            replication.sync_cdc(src, dst)  # caught up: nothing to ship
         src.ingest(_rows(spark, 20, 30))
         with pytest.raises(ValueError, match="schema"):
             replication.sync_cdc(src, dst)
+        assert dst.full_scan().count() == 20  # the refusal shipped nothing
+
+        src.add_value_column(f)
+        src.ingest(_rows(spark, 30, 40).withColumn("w", F.col("k") * 100))
+        s = replication.sync_cdc(src, dst)
+        assert s["caught_up"] and s["schema_evolutions_applied"] == 0
+
+        def rows(t):
+            return sorted((r.k, r.v, r.w)
+                          for r in t.full_scan().collect())
+        assert rows(dst) == rows(src)
+        assert any(w is not None for _k, _v, w in rows(dst))
 
 
 def test_cdc_replica_file_count_stays_bounded(spark, tmp_path):
@@ -745,13 +577,6 @@ def test_cdc_replica_file_count_stays_bounded(spark, tmp_path):
     # bounded: single-leaf table -> a handful of refs, not ~50
     n_refs = len(dst.store.all_references())
     assert n_refs <= 4, f"replica accreted {n_refs} file refs"
-    # opting out preserves the old behavior (no replica compactions)
-    dst2 = SleeperTable.create(spark, str(tmp_path / "d2"),
-                               _full_schema())
-    replication.sync_cdc_to_head(src, dst2, max_seqs=5,
-                                 compact_replica=False)
-    assert _fsorted(dst2) == _fsorted(src)
-    assert len(dst2.store.all_references()) > n_refs
 
 
 def test_sync_cdc_to_head_and_blocked_claim(spark, tmp_path):
@@ -781,6 +606,76 @@ def test_sync_cdc_to_head_and_blocked_claim(spark, tmp_path):
     assert _fsorted(dst) == _fsorted(src)
 
 
+class TestSafetyBounds:
+    """Every refusal is loud and names the fix: the caps are patched
+    small to test the rules, not the values."""
+
+    def _synced(self, spark, tmp_path, props=None):
+        src = SleeperTable.create(spark, str(tmp_path / "s"), _schema(),
+                                  props=props)
+        dst = SleeperTable.create(spark, str(tmp_path / "d"), _schema(),
+                                  props=props)
+        src.ingest(_rows(spark, 0, 20))
+        replication.sync_cdc(src, dst)
+        return src, dst
+
+    def test_aggregation_delete_key_cap(self, spark, tmp_path,
+                                        monkeypatch):
+        from sleeper_spark.ranges import Range, Region
+        src, dst = self._synced(spark, tmp_path,
+                                TableProperties(aggregations="sum(v)"))
+        monkeypatch.setattr(replication, "DELETE_CAP", 2)
+        src.delete_where(regions=[Region.of(Range("k", 0, 5))])
+        with pytest.raises(ValueError, match="more than 2 distinct keys"
+                           ".*re-seed"):
+            replication.sync_cdc(src, dst)
+        assert dst.full_scan().count() == 20
+
+    def test_plain_delete_row_cap(self, spark, tmp_path, monkeypatch):
+        from sleeper_spark.ranges import Range, Region
+        src, dst = self._synced(spark, tmp_path)
+        monkeypatch.setattr(replication, "DELETE_CAP", 2)
+        src.delete_where(regions=[Region.of(Range("k", 0, 5))])
+        with pytest.raises(ValueError, match="more than 2 rows.*re-seed"):
+            replication.sync_cdc(src, dst)
+        assert dst.full_scan().count() == 20
+
+    def test_merge_key_cap(self, spark, tmp_path, monkeypatch):
+        src, dst = self._synced(spark, tmp_path)
+        monkeypatch.setattr(replication, "MERGE_CAP", 2)
+        src.merge_upsert(_rows(spark, 15, 25))
+        with pytest.raises(ValueError, match="more than 2 distinct keys"
+                           ".*re-seed"):
+            replication.sync_cdc(src, dst)
+        assert dst.full_scan().count() == 20
+
+    def test_sync_cdc_to_head_runaway_guard(self, spark, tmp_path,
+                                            monkeypatch):
+        src, dst = self._synced(spark, tmp_path)
+        for i in range(3):
+            src.ingest(_rows(spark, 100 + i * 10, 110 + i * 10))
+        monkeypatch.setattr(replication, "MAX_STEPS", 2)
+        with pytest.raises(RuntimeError, match="still behind after 2 "
+                           "sync_cdc steps"):
+            replication.sync_cdc_to_head(src, dst, max_seqs=1)
+        # the steps taken are durable: the next call resumes and ends
+        monkeypatch.setattr(replication, "MAX_STEPS", 10)
+        assert replication.sync_cdc_to_head(src, dst)[-1]["caught_up"]
+        assert _sorted_rows(dst) == _sorted_rows(src)
+
+    def test_legacy_delete_refusal_names_reseed(self, spark, tmp_path):
+        """A pre-tombstone delete (jobless, empty-output replacement)
+        carries no removed rows: the step refuses, naming the re-seed."""
+        src, dst = self._synced(spark, tmp_path)
+        ref = src.store.all_references()[0]
+        src.store.replace_file_references_batch(
+            [(ref.partition_id, [ref.filename], [])],
+            allow_empty_outputs=True)
+        with pytest.raises(ValueError, match="legacy pre-tombstone "
+                           "delete.*re-seed the replica"):
+            replication.sync_cdc(src, dst)
+
+
 class TestFileShipping:
     """The append-window file-shipping fast path (_ship_append_window):
     committed source files copy byte-for-byte into the replica instead
@@ -793,7 +688,7 @@ class TestFileShipping:
         dst = SleeperTable.create(spark, str(tmp_path / "dst"), _schema(),
                                   split_points=[100])
         refs = src.ingest(_rows(spark, 0, 200))
-        s = replication.sync(src, dst)
+        s = replication.sync_cdc(src, dst)
         assert s["files_ingested"] == len(refs)
         dfiles = [r for refs_ in dst.store.files.values()
                   for r in refs_.values()]
@@ -822,7 +717,7 @@ class TestFileShipping:
         dst = SleeperTable.create(spark, str(tmp_path / "dst"), _schema(),
                                   split_points=[50])
         src.ingest(_rows(spark, 0, 100))
-        s = replication.sync(src, dst)
+        s = replication.sync_cdc(src, dst)
         assert s["files_ingested"] >= 1
         assert all("-ship-" not in fn for fn in dst.store.files)
         assert _sorted_rows(dst) == _sorted_rows(src)
@@ -836,7 +731,7 @@ class TestFileShipping:
         dst = SleeperTable.create(spark, str(tmp_path / "dst"), _schema(),
                                   split_points=[100, 5000])
         src.ingest(_rows(spark, 0, 200))  # values < 2000: leaves map 1:1
-        replication.sync(src, dst)
+        replication.sync_cdc(src, dst)
         assert any("-ship-" in fn for fn in dst.store.files)
         assert _sorted_rows(dst) == _sorted_rows(src)
 
@@ -844,7 +739,7 @@ class TestFileShipping:
         src = SleeperTable.create(spark, str(tmp_path / "src"), _schema())
         dst = SleeperTable.create(spark, str(tmp_path / "dst"), _schema())
         src.ingest(_rows(spark, 0, 80))
-        replication.sync(src, dst)
+        replication.sync_cdc(src, dst)
         n_files = len(dst.store.files)
         # a crashed-then-replayed window dedupes on the job id
         window = src.store.transactions_between(0, src.store.current_seq)
@@ -867,3 +762,35 @@ class TestFileShipping:
         assert s["caught_up"] and s["deletes_applied"] == 1
         assert any("-ship-" in fn for fn in dst.store.files)
         assert _sorted_rows(dst) == _sorted_rows(src)
+
+    def test_fast_path_refuses_files_of_a_stale_column_type(
+            self, spark, tmp_path):
+        """A column dropped and re-added with another type keeps its
+        name: the pre-drop files match the replica's column NAMES but
+        hold the old type. Shipping them would leave files the replica
+        cannot read — the guard compares types too, so whatever the
+        step does, the replica holds no file of the wrong type and
+        still scans."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        src = SleeperTable.create(spark, str(tmp_path / "src"), _schema())
+        dst = SleeperTable.create(spark, str(tmp_path / "dst"), _schema())
+        src.ingest(_rows(spark, 0, 20))
+        src.ingest(_rows(spark, 20, 40))
+        src.drop_value_column("v")
+        src.compact()
+        src.add_value_column(Field("v", T.StringType(), True))
+        src.ingest(spark.range(40, 60).select(
+            F.col("id").alias("k"), F.col("id").cast("string").alias("v")))
+        assert src.full_scan().count() == 60
+        try:
+            replication.sync_cdc(src, dst)
+        except Exception:  # noqa: BLE001 - only the replica's state matters
+            pass
+        want = {f.name: f.dtype for f in dst.schema.all_fields()}
+        assert want["v"] == T.StringType()
+        for r in dst.store.all_references():
+            for f in from_arrow_schema(pq.read_schema(r.filename)).fields:
+                assert f.dataType == want[f.name], (r.filename, f)
+        dst.full_scan().collect()
