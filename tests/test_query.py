@@ -7,6 +7,7 @@ agree row for row, and both must agree with a pure-Python model."""
 from __future__ import annotations
 
 import contextlib
+import itertools
 from unittest import mock
 
 import pytest
@@ -23,11 +24,15 @@ from sleeper_spark.table import SleeperTable
 
 NOW = 10_000
 
+#: job group names are never reused: an ``id()`` can be, and the status
+#: tracker would then report an earlier call's jobs as this call's
+_GROUP_SEQ = itertools.count()
+
 
 def _jobs_of(spark, fn):
     """(result of ``fn()``, Spark job ids it ran) via a job group."""
     sc = spark.sparkContext
-    group = f"test-query-{id(fn)}"
+    group = f"test-query-{next(_GROUP_SEQ)}"
     sc.setJobGroup(group, "job count")
     try:
         out = fn()

@@ -135,6 +135,36 @@ class TestReplication:
         assert (replication.applied_seq(dst, replication.source_prefix(b))
                 == b.store.current_seq)
 
+    def test_schema_drift_refused_then_syncs_after_evolution(
+            self, spark, tmp_path):
+        src = SleeperTable.create(spark, str(tmp_path / "src"), _schema())
+        dst = SleeperTable.create(spark, str(tmp_path / "dst"), _schema())
+        src.ingest(_rows(spark, 0, 20))
+        replication.sync_cdc(src, dst)
+
+        # the replica drifts with no EVOLVE record in the source window;
+        # a sync must refuse LOUDLY (a silent sync would drop the new
+        # column from shipped rows) and ship nothing
+        extra = Field("extra", T.LongType(), True)
+        dst.add_value_column(extra)
+        src.ingest(_rows(spark, 20, 30))
+        with pytest.raises(ValueError, match="schema"):
+            replication.sync_cdc(src, dst)
+        assert dst.full_scan().count() == 20
+
+        # evolve the source the same way -> sync flows, column intact
+        src.add_value_column(extra)
+        src.ingest(_rows(spark, 30, 40).withColumn(
+            "extra", F.col("k") * 100))
+        steps = replication.sync_cdc_to_head(src, dst)
+        assert steps[-1]["caught_up"]
+        got = sorted((r.k, r.v, r.extra)
+                     for r in dst.full_scan().collect())
+        want = sorted((r.k, r.v, r.extra)
+                      for r in src.full_scan().collect())
+        assert got == want
+        assert any(e is not None for _, _, e in got)
+
 
 def _full_schema():
     return Schema(
@@ -517,33 +547,18 @@ class TestSyncCdcSchemaEvolution:
 
     def test_unexplained_drift_still_refused(self, spark, tmp_path):
         """Replica-only drift (no EVOLVE record in the source window)
-        keeps the strict refusal, whether or not the window holds data
-        (a silent sync would drop the column from shipped rows); once
-        the source evolves the same way, the sync flows with the
-        column intact."""
+        keeps the strict refusal, whether or not the window holds
+        data."""
         src = SleeperTable.create(spark, str(tmp_path / "s"), _schema())
         dst = SleeperTable.create(spark, str(tmp_path / "d"), _schema())
         src.ingest(_rows(spark, 0, 20))
         replication.sync_cdc(src, dst)
-        f = Field("w", T.LongType(), True)
-        dst.add_value_column(f)
+        dst.add_value_column(Field("w", T.StringType(), True))
         with pytest.raises(ValueError, match="schema"):
             replication.sync_cdc(src, dst)  # caught up: nothing to ship
         src.ingest(_rows(spark, 20, 30))
         with pytest.raises(ValueError, match="schema"):
             replication.sync_cdc(src, dst)
-        assert dst.full_scan().count() == 20  # the refusal shipped nothing
-
-        src.add_value_column(f)
-        src.ingest(_rows(spark, 30, 40).withColumn("w", F.col("k") * 100))
-        s = replication.sync_cdc(src, dst)
-        assert s["caught_up"] and s["schema_evolutions_applied"] == 0
-
-        def rows(t):
-            return sorted((r.k, r.v, r.w)
-                          for r in t.full_scan().collect())
-        assert rows(dst) == rows(src)
-        assert any(w is not None for _k, _v, w in rows(dst))
 
 
 def test_cdc_replica_file_count_stays_bounded(spark, tmp_path):
