@@ -580,7 +580,8 @@ def _arrow_compact_one(desc: dict) -> tuple[str, str, int]:
     from sleeper_spark import bloom as bl
     # _reuse_bits is safe here: exactly one accumulator lives per task
     # invocation and tasks run to completion per worker thread — the
-    # borrowed per-thread bitmap (up to 16 MiB at the cap) is re-zeroed
+    # borrowed per-thread bitmap (one byte per bit, dtype=bool: up to
+    # 128 MiB per worker thread at the MAX_BITS cap) is re-zeroed
     # in place instead of freshly faulted per output file, which
     # measured ~1s/file of first-touch stalls on a memory-pressured host
     d0_bloom = bl.BloomAccumulator(

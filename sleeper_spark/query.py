@@ -8,24 +8,27 @@ LeafPartitionQueryExecutor.java:73-131) re-shaped for Spark:
 2. Collect files: each pruned leaf's files plus its ancestors' files (a
    row may still live in an ancestor-partition file before compaction),
    then skip files by sidecar min/max (``value_ranges``) and, for point
-   queries, by each file's first-row-key Bloom filter.
+   queries only, by each file's first-row-key Bloom filter.
 3. Read the surviving files with ONE of two readers:
 
    - **Spark plan** (default): one scan over the distinct file set with
      the predicate ``(OR query regions) AND (OR selected leaf regions)``.
-   - **Driver read** (point queries): when every region pins the first
-     row key (:func:`bloom_points`), the per-leaf ``heapq.merge`` reader
-     that ``sorted_rows`` uses reads only the row groups whose footer
-     min/max can hold a probe point, keeps the probe keys' rows in
-     Arrow, applies the table's processing on the driver, and returns
-     the rows as a local DataFrame — no Spark job, like the reference's
-     single-reader LeafPartitionQueryExecutor. The Spark plan runs
-     instead when a table- or query-level custom iterator has no
-     row-wise form, when the matched row groups hold more than
-     :data:`POINT_SCAN_ROWS` rows, or when more than
-     :data:`POINT_KEY_ROWS` of their rows hold a probe key (a hot key
-     stays distributed). ``batch_exact_key_query`` is always the Spark
-     plan.
+   - **Driver read** (key-bounded queries): when every region bounds
+     the first row key on both sides (:func:`_key_bounds` — point gets,
+     small range scans, ``batch_exact_key_query``), the per-leaf
+     ``heapq.merge`` reader that ``sorted_rows`` uses reads only the row
+     groups whose footer min/max overlap a region's key range, keeps
+     the rows inside those ranges in Arrow, applies the table's
+     processing on the driver, and returns the rows as a local
+     DataFrame — no Spark job, like the reference's single-reader
+     LeafPartitionQueryExecutor. The Spark plan runs instead when a
+     region leaves the first row key unbounded (a full scan), when a
+     table- or query-level custom iterator has no row-wise form, when
+     the matched row groups hold more than :data:`DRIVER_SCAN_ROWS`
+     rows, or when more than :data:`DRIVER_KEY_ROWS` of their rows lie
+     inside the key ranges (a hot key or a wide range stays
+     distributed). ``batch_exact_key_query`` plans its leaves by tree
+     descent and falls back to a broadcast-join Spark plan.
 
 The Spark plan's predicate is the Spark-shaped dedup guard. The
 reference reads each leaf separately, ANDing that leaf's region so a row
@@ -328,21 +331,25 @@ def compile_value_ranges(value_ranges):
 #: rows per Arrow batch of the driver reader
 DRIVER_BATCH_ROWS = 8192
 
-#: A point query is read on the driver only while it stays within both
-#: of these caps; otherwise the Spark plan runs. Set at the crossover measured on a
-#: 4-core host (local[4], one file, a (long, long, string) row) between
-#: a point get read on the driver and the same get as the Spark plan:
+#: A key-bounded query is read on the driver only while it stays
+#: within both of these caps; otherwise the Spark plan runs. Set at the
+#: crossover measured on a 4-core host (local[4], one file, a (long,
+#: long, string) row) between a query read on the driver and the same
+#: query as the Spark plan:
 #:
 #: - the rows of the matched row groups, which the driver reads in
 #:   Arrow: a 1-row key took 20 / 24 / 44 / 72 / 131 ms on the driver
 #:   against 95 / 76 / 69 / 65 / 62 ms in Spark with 8,192 / 65,536 /
 #:   524,288 / 1,048,576 / 2,097,152 rows in its row group;
-POINT_SCAN_ROWS = 1 << 19
-#: - the rows holding the probe keys, which the driver turns into Python
-#:   rows: in a 65,536-row group, a key of 8,192 rows took 73 ms against
-#:   90 ms in Spark, one of 16,384 rows 165 ms against 130 ms. So a hot
-#:   key (an index posting list, say) stays distributed.
-POINT_KEY_ROWS = 8192
+DRIVER_SCAN_ROWS = 1 << 19
+#: - the rows inside the first row key's bounds, which the driver turns
+#:   into Python rows: in a 65,536-row group, a key of 8,192 rows took
+#:   73 ms against 90 ms in Spark, one of 16,384 rows 165 ms against
+#:   130 ms; a range of 1,024 / 4,096 / 8,192 / 16,384 / 32,768 rows
+#:   (one row per key) took 76 / 120 / 168 / 339 / 628 ms against
+#:   242 / 246 / 216 / 234 / 373 ms. So a hot key (an index posting
+#:   list, say) and a wide range stay distributed.
+DRIVER_KEY_ROWS = 8192
 
 #: the Python type the driver reader compares each key type's values
 #: with; a query bound of another type runs as the Spark plan, whose
@@ -361,42 +368,105 @@ def _bounds_comparable(query: Query, schema: Schema) -> bool:
     return True
 
 
-def _point_row_groups(files: list[str], key_name: str, points) -> dict:
+@dataclass(frozen=True)
+class _KeyBounds:
+    """A query's bounds on the first row key: the regions' canonical
+    ``[lo, hi)`` ranges, sorted and merged into disjoint ``intervals``
+    (empty ranges dropped), plus the probe ``points`` as an Arrow array
+    when every region pins the key (else None)."""
+
+    points: Any
+    intervals: list[tuple]
+
+
+def _key_bounds(query: Query, key_name: str) -> _KeyBounds | None:
+    """The query's :class:`_KeyBounds` on ``key_name``, or None when a
+    region leaves it unbounded on either side (a full scan). Bounds must
+    have a successor type (:func:`_bounds_comparable`)."""
+    import pyarrow as pa
+
+    ranges = []
+    for region in query.regions:
+        r = region.range_for(key_name)
+        if r is None or r.min is None or r.max is None:
+            return None
+        r = r.canonicalise()
+        if r.min < r.max:
+            ranges.append((r.min, r.max))
+    intervals: list[tuple] = []
+    for lo, hi in sorted(ranges):
+        if intervals and lo <= intervals[-1][1]:
+            intervals[-1] = (intervals[-1][0], max(hi, intervals[-1][1]))
+        else:
+            intervals.append((lo, hi))
+    points = bloom_points(query, key_name)
+    return _KeyBounds(None if points is None else pa.array(points),
+                      intervals)
+
+
+def _key_mask(column, bounds: _KeyBounds):
+    """Arrow boolean mask of the ``column`` values inside ``bounds``
+    (which hold at least one interval): set membership when every region
+    is a point, ORed ``>= lo & < hi`` otherwise."""
+    import functools
+
+    import pyarrow.compute as pc
+
+    if bounds.points is not None:
+        return pc.is_in(column, value_set=bounds.points)
+    return functools.reduce(pc.or_, (
+        pc.and_(pc.greater_equal(column, lo), pc.less(column, hi))
+        for lo, hi in bounds.intervals))
+
+
+def _matched_row_groups(files: list[str], key_name: str,
+                        bounds: _KeyBounds) -> dict:
     """``{file: (ParquetFile, row groups, rows)}`` for the files with at
-    least one row group whose footer min/max on ``key_name`` can hold
-    one of ``points``. A row group without statistics is kept."""
+    least one row group whose footer min/max on ``key_name`` overlaps
+    one of ``bounds.intervals``. A row group without statistics is kept.
+    Reads each file's statistics once and bisects the sorted intervals,
+    so a many-key batch costs one footer walk per file."""
+    import bisect
+
     import pyarrow.parquet as pq_mod
 
-    from sleeper_spark.sketches import row_groups_overlapping
+    from sleeper_spark import sketches
 
-    bounds = [Range(key_name, p, p, True, True).canonicalise()
-              for p in points]
+    if not bounds.intervals:  # every range is empty
+        return {}
+    los = [lo for lo, _ in bounds.intervals]
+    his = [hi for _, hi in bounds.intervals]
+
+    def overlaps(mm) -> bool:
+        if mm is None:
+            return True
+        # the first interval ending past the group's min, if it starts
+        # at or before the group's max
+        i = bisect.bisect_right(his, mm[0])
+        return i < len(los) and los[i] <= mm[1]
+
     out = {}
     for fn in files:
         pf = pq_mod.ParquetFile(fn)
         md = pf.metadata
-        rgs = set()
-        for r in bounds:
-            got = row_groups_overlapping(pf, key_name, r.min, r.max)
-            rgs.update(range(md.num_row_groups) if got is None else got)
+        stats = sketches.row_group_key_stats(pf, key_name)
+        rgs = (list(range(md.num_row_groups)) if stats is None
+               else [g for g, mm in enumerate(stats) if overlaps(mm)])
         if rgs:
-            rgs = sorted(rgs)
             out[fn] = (pf, rgs,
                        sum(md.row_group(g).num_rows for g in rgs))
     return out
 
 
-def _point_key_rows(row_groups: dict, key_name: str, points) -> int:
-    """Rows of ``row_groups`` (as :func:`_point_row_groups` returns
-    them) whose ``key_name`` is one of ``points``; reads that column
+def _key_rows(row_groups: dict, key_name: str, bounds: _KeyBounds) -> int:
+    """Rows of ``row_groups`` (as :func:`_matched_row_groups` returns
+    them) whose ``key_name`` lies inside ``bounds``; reads that column
     only."""
-    import pyarrow as pa
     import pyarrow.compute as pc
 
-    value_set = pa.array(points)
     return sum(
-        pc.sum(pc.is_in(pf.read_row_groups(rgs, columns=[key_name])
-                        .column(0), value_set=value_set)).as_py() or 0
+        pc.sum(_key_mask(pf.read_row_groups(rgs, columns=[key_name])
+                        .column(0), bounds)).as_py() or 0
         for pf, rgs, _ in row_groups.values())
 
 
@@ -410,8 +480,8 @@ def _projected_columns(schema: Schema, query: Query) -> list[str] | None:
 
 
 class QueryExecutor:
-    """Plan a query once and read it with the Spark plan or, for point
-    queries, on the driver (module docstring)."""
+    """Plan a query once and read it with the Spark plan or, for
+    key-bounded queries, on the driver (module docstring)."""
 
     def __init__(self, spark: SparkSession, store: StateStore, schema: Schema,
                  table_filters: str = "", table_aggregations: str = "",
@@ -455,30 +525,33 @@ class QueryExecutor:
 
     def _driver_plan(self, query: Query, files: list[str]):
         """``(plan, counts)``. ``plan`` is ``(row iterators, matched row
-        groups)`` when ``query`` is a point query the driver can answer,
-        else None (module docstring). ``counts`` holds, for a point
-        query, ``point_rows_matched`` (rows of the row groups whose
-        footer min/max can hold a probe point) and, unless those exceed
-        :data:`POINT_SCAN_ROWS`, ``point_key_rows`` (their rows holding
-        a probe point). Decided from the query, the table config, the
+        groups, key bounds)`` when ``query`` bounds the first row key on
+        both sides in every region and the driver can answer it, else
+        None (module docstring). ``counts`` holds, for a key-bounded
+        query, ``rows_matched`` (rows of the row groups whose footer
+        min/max overlap the key bounds) and, unless those exceed
+        :data:`DRIVER_SCAN_ROWS`, ``key_rows`` (their rows inside the
+        key bounds). Decided from the query, the table config, the
         surviving files' footers and their first row key column."""
         key0 = self.schema.row_key_names[0]
-        pts = bloom_points(query, key0)
-        if pts is None or not _bounds_comparable(query, self.schema):
+        if not _bounds_comparable(query, self.schema):
             return None, {}
-        matched = _point_row_groups(files, key0, pts)
-        counts = {"point_rows_matched":
+        bounds = _key_bounds(query, key0)
+        if bounds is None:
+            return None, {}
+        matched = _matched_row_groups(files, key0, bounds)
+        counts = {"rows_matched":
                   sum(rows for _, _, rows in matched.values())}
-        if counts["point_rows_matched"] > POINT_SCAN_ROWS:
+        if counts["rows_matched"] > DRIVER_SCAN_ROWS:
             return None, counts
-        counts["point_key_rows"] = _point_key_rows(matched, key0, pts)
-        if counts["point_key_rows"] > POINT_KEY_ROWS:
+        counts["key_rows"] = _key_rows(matched, key0, bounds)
+        if counts["key_rows"] > DRIVER_KEY_ROWS:
             return None, counts
         try:
             iterators = self._row_iterators(query)
         except ValueError:
             return None, counts
-        return (iterators, matched), counts
+        return (iterators, matched, bounds), counts
 
     def explain_scan(self, query: Query) -> dict:
         """Scan audit: how many physical files each pruning tier
@@ -494,11 +567,11 @@ class QueryExecutor:
         ``rows_upper_bound`` sums the surviving references' recorded
         row counts — the worst-case rows the scan can touch.
         ``read_path`` is the reader :meth:`execute` picks (``"driver"``
-        or ``"spark"``); point queries also report the two figures that
-        choice is capped on, ``point_rows_matched`` and
-        ``point_key_rows`` (:meth:`_driver_plan`). Reads footers, and
-        for point queries the first row key column of the matched row
-        groups; no Spark job runs."""
+        or ``"spark"``); key-bounded queries also report the two figures
+        that choice is capped on, ``rows_matched`` and ``key_rows``
+        (:meth:`_driver_plan`). Reads footers, and for key-bounded
+        queries the first row key column of the matched row groups; no
+        Spark job runs."""
         leaf_queries = QueryPlanner(self.store).split_into_leaf_queries(
             query)
         refs = self.store.all_references()
@@ -540,11 +613,9 @@ class QueryExecutor:
             query.value_ranges, self.table_aggregations)
         leaf_queries = QueryPlanner(self.store).split_into_leaf_queries(query)
         files = self._files_of(leaf_queries, query)
-        plan, _ = self._driver_plan(query, files)
-        if plan is None:
+        df = self.driver_frame(query, leaf_queries, files, now_millis)
+        if df is None:
             df = self._spark_frame(query, leaf_queries, files, now_millis)
-        else:
-            df = self._driver_frame(query, leaf_queries, plan, now_millis)
         if query.sql:
             df = run_sql_stage(self.spark, df, query.sql,
                                sort_cols=self.schema.key_names)
@@ -566,26 +637,32 @@ class QueryExecutor:
                                  now_millis, batch_size)
 
     def _driver_rows(self, query, leaf_queries, files, iterators,
-                     now_millis, batch_size, row_groups=None):
+                     now_millis, batch_size, row_groups=None,
+                     bounds=None):
         return _sorted_row_iterator_gen(
             self.schema, query, leaf_queries, files, batch_size,
             parse_filters(self.table_filters),
             parse_aggregations(self.table_aggregations),
-            iterators, now_millis, row_groups)
+            iterators, now_millis, row_groups, bounds)
 
-    def _driver_frame(self, query: Query, leaf_queries, plan,
-                      now_millis: int) -> DataFrame:
-        """The point query's rows, read and processed on the driver, as
-        a local DataFrame: ``createDataFrame`` of an Arrow table plans a
+    def driver_frame(self, query: Query, leaf_queries, files: list[str],
+                     now_millis: int) -> DataFrame | None:
+        """The rows of ``query`` over the planned ``leaf_queries`` and
+        surviving ``files``, read and processed on the driver, as a
+        local DataFrame; None when :meth:`_driver_plan` declines the
+        query. ``createDataFrame`` of an Arrow table plans a
         LocalRelation, so collecting it runs no Spark job, and it keeps
         the table's types (maps included) and nullability."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        iterators, matched = plan
+        plan, _ = self._driver_plan(query, files)
+        if plan is None:
+            return None
+        iterators, matched, bounds = plan
         rows = list(self._driver_rows(
             query, leaf_queries, list(matched), iterators, now_millis,
-            DRIVER_BATCH_ROWS, matched))
+            DRIVER_BATCH_ROWS, matched, bounds))
         struct = self.schema.to_struct_type()
         cols = _projected_columns(self.schema, query)
         if cols is not None:
@@ -677,10 +754,33 @@ def _null_safe_key(values):
     return tuple((v is not None, v if v is not None else 0) for v in values)
 
 
+def _exact_keys(regions) -> tuple[tuple, set] | None:
+    """``(fields, key tuples)`` when every region pins the same key
+    fields each to a single point (min == max, both inclusive), else
+    None. A row matches such a query iff its tuple of those fields is
+    in the set."""
+    fields, keys = None, set()
+    for region in regions:
+        got = {}
+        for r in region.ranges:
+            if (r.min is None or r.min != r.max or r.field in got
+                    or not (r.min_inclusive and r.max_inclusive)):
+                return None
+            got[r.field] = (bytes(r.min) if isinstance(r.min, bytearray)
+                            else r.min)
+        if fields is None:
+            fields = tuple(sorted(got))
+        elif set(got) != set(fields):
+            return None
+        keys.add(tuple(got[f] for f in fields))
+    return None if fields is None else (fields, keys)
+
+
 def _sorted_row_iterator_gen(schema: Schema, query: Query, leaf_queries,
                              files: list[str], batch_size: int,
                              filters, aggs, iterators, now_millis: int,
-                             row_groups: dict | None = None):
+                             row_groups: dict | None = None,
+                             bounds: _KeyBounds | None = None):
     """J1 k-way sorted merge: stream query results in total table order
     (row keys..., sort keys...) WITHOUT a global Spark sort.
 
@@ -693,9 +793,11 @@ def _sorted_row_iterator_gen(schema: Schema, query: Query, leaf_queries,
 
     Reads the plan :class:`QueryExecutor` made: ``leaf_queries`` and the
     ``files`` that survived skipping; ``row_groups`` (``{file:
-    (ParquetFile, row groups, rows)}``, point queries) narrows each read
-    to the listed row groups. ``iterators`` are the table- and
-    query-level custom chains in row-wise form.
+    (ParquetFile, row groups, rows)}``, key-bounded queries) narrows each
+    read to the listed row groups, and ``bounds`` (the query's
+    :class:`_KeyBounds`) drops the rows outside them in Arrow.
+    ``iterators`` are the table- and query-level custom chains in
+    row-wise form.
 
     Use when a consumer needs ordered streaming (export to a
     sorted-input system, head-k in key order). For distributed consumers
@@ -704,8 +806,6 @@ def _sorted_row_iterator_gen(schema: Schema, query: Query, leaf_queries,
     """
     import heapq
 
-    import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq_mod
 
     vr = bool(query.value_ranges)
@@ -718,12 +818,11 @@ def _sorted_row_iterator_gen(schema: Schema, query: Query, leaf_queries,
     map_cols = {f.name for f in schema.all_fields()
                 if isinstance(f.dtype, T.MapType)}
     surviving = set(files)
-    # a point read keeps only the probe keys' rows, in Arrow, before any
-    # row becomes a Python dict: the matched row groups may be far larger
-    # than the keys' rows, and the region filter below drops the rest
+    # a key-bounded read keeps only the rows inside the first row key's
+    # bounds, in Arrow, before any row becomes a Python dict: the matched
+    # row groups may be far larger than those rows, and the region
+    # filter below drops the rest
     key0 = schema.row_key_names[0]
-    points = None if row_groups is None else bloom_points(query, key0)
-    probe = None if points is None else pa.array(points)
 
     def file_rows(filename):
         pf, rgs, _ = (row_groups or {}).get(filename) or (
@@ -734,9 +833,8 @@ def _sorted_row_iterator_gen(schema: Schema, query: Query, leaf_queries,
         cols_here = [c for c in col_names if c in have]
         for batch in pf.iter_batches(batch_size=batch_size,
                                      columns=cols_here, row_groups=rgs):
-            if probe is not None:
-                batch = batch.filter(pc.is_in(batch.column(key0),
-                                              value_set=probe))
+            if bounds is not None:
+                batch = batch.filter(_key_mask(batch.column(key0), bounds))
             pydict = {}
             for n, c in zip(batch.schema.names, batch.columns):
                 vals = c.to_pylist()
@@ -765,10 +863,19 @@ def _sorted_row_iterator_gen(schema: Schema, query: Query, leaf_queries,
                 return False
         return True
 
-    q_regions = [canon(reg) for reg in query.regions]
+    exact = _exact_keys(query.regions)
+    if exact is not None:
+        # every region pins the same key fields (a batch get): one set
+        # lookup per row instead of a scan over the regions
+        exact_fields, exact_set = exact
 
-    def row_matches(row):
-        return any(in_ranges(row, rs) for rs in q_regions)
+        def row_matches(row):
+            return tuple(row[f] for f in exact_fields) in exact_set
+    else:
+        q_regions = [canon(reg) for reg in query.regions]
+
+        def row_matches(row):
+            return any(in_ranges(row, rs) for rs in q_regions)
 
     agg_ops = {a.column: a for a in (aggs or [])}
     row_key = lambda row: _null_safe_key(row[k] for k in key_names)  # noqa: E731

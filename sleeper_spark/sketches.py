@@ -507,11 +507,10 @@ def _ranked_candidates_from_row_groups(files: list[str], key_name: str,
     return out
 
 
-def row_groups_overlapping(pf, key_name: str, lo, hi) -> list[int] | None:
-    """Row-group indices whose [min, max] key statistics intersect
-    [lo, hi) — the Parquet predicate-pushdown primitive the subrange
-    merge uses so each of K range tasks reads ~1/K of every sorted input
-    file. Returns None when stats are unavailable (read everything)."""
+def row_group_key_stats(pf, key_name: str) -> list[tuple | None] | None:
+    """Per row group of ``pf``, the footer ``(min, max)`` of column
+    ``key_name``, or None for a row group without statistics. Returns
+    None when the file has no such column. One walk of the footer."""
     md = pf.metadata
     if md.num_row_groups == 0:
         return []
@@ -522,17 +521,25 @@ def row_groups_overlapping(pf, key_name: str, lo, hi) -> list[int] | None:
             break
     if ci is None:
         return None
-    keep: list[int] = []
+    out: list[tuple | None] = []
     for g in range(md.num_row_groups):
         st = md.row_group(g).column(ci).statistics
-        if st is None or not st.has_min_max:
-            keep.append(g)
-            continue
-        if (hi is not None and not st.min < hi) or \
-                (lo is not None and not st.max >= lo):
-            continue
-        keep.append(g)
-    return keep
+        out.append((st.min, st.max)
+                   if st is not None and st.has_min_max else None)
+    return out
+
+
+def row_groups_overlapping(pf, key_name: str, lo, hi) -> list[int] | None:
+    """Row-group indices whose [min, max] key statistics intersect
+    [lo, hi) — the Parquet predicate-pushdown primitive the subrange
+    merge uses so each of K range tasks reads ~1/K of every sorted input
+    file. Returns None when stats are unavailable (read everything)."""
+    stats = row_group_key_stats(pf, key_name)
+    if stats is None:
+        return None
+    return [g for g, mm in enumerate(stats)
+            if mm is None or ((hi is None or mm[0] < hi)
+                              and (lo is None or mm[1] >= lo))]
 
 
 # ---------------------------------------------------------------------------

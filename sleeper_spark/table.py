@@ -27,7 +27,12 @@ from sleeper_spark import maintenance
 from sleeper_spark.ingest import ingest_dataframe
 from sleeper_spark.partitions import PartitionTree
 from sleeper_spark.properties import TableProperties
-from sleeper_spark.query import DRIVER_BATCH_ROWS, Query, QueryExecutor
+from sleeper_spark.query import (
+    DRIVER_BATCH_ROWS,
+    LeafPartitionQuery,
+    Query,
+    QueryExecutor,
+)
 from sleeper_spark.ranges import Range, Region
 from sleeper_spark.schema import Field, Schema
 from sleeper_spark.statestore import FileReference, StateStore
@@ -503,11 +508,11 @@ class SleeperTable:
         before a compaction and GC still holds the earlier rows. It
         runs as the Spark plan instead when a table iterator has no
         row-wise form, when the matched row groups hold more than
-        ``query.POINT_SCAN_ROWS`` rows, or when more than
-        ``query.POINT_KEY_ROWS`` of their rows hold the key;
+        ``query.DRIVER_SCAN_ROWS`` rows, or when more than
+        ``query.DRIVER_KEY_ROWS`` of their rows hold the key;
         ``explain_query`` reports the choice as ``read_path``. Many keys
-        at once belong in ``batch_exact_key_query``, which stays one
-        Spark job."""
+        at once belong in ``batch_exact_key_query``, which plans them
+        in one tree descent per key."""
         return self.query(Query([Region.exact(self.schema, **keys)]), now_millis)
 
     def range_key_query(
@@ -520,7 +525,15 @@ class SleeperTable:
         ``value_ranges`` are conjunctive Range predicates on VALUE
         columns — applied as ordinary filters AND as Iceberg-style file
         skipping against sidecar-held footer min/max stats (see
-        Query.value_ranges; rejected on aggregation-configured tables)."""
+        Query.value_ranges; rejected on aggregation-configured tables).
+
+        When every range bounds the first row key on both sides, the
+        query is read on the driver like ``exact_key_query`` (a local
+        DataFrame, no Spark job) while the row groups overlapping the
+        ranges hold at most ``query.DRIVER_SCAN_ROWS`` rows and at most
+        ``query.DRIVER_KEY_ROWS`` of their rows lie inside the ranges;
+        a wide range, like a full scan, is the Spark plan
+        (``explain_query`` reports ``read_path``)."""
         regions = []
         for r in ranges:
             if isinstance(r, Range):
@@ -554,21 +567,28 @@ class SleeperTable:
 
     def batch_exact_key_query(self, keys: list[dict],
                               now_millis: int | None = None) -> DataFrame:
-        """Thousands of point lookups as ONE Spark job (the reference's
-        headline access pattern: "many thousands in parallel",
-        README.md:22-24, each query a one-point region).
+        """Thousands of point lookups in one planned read (the
+        reference's headline access pattern: "many thousands in
+        parallel", README.md:22-24, each query a one-point region). A
+        key duplicated in ``keys`` returns its rows once; an absent key
+        returns nothing.
 
-        A naive N-region Query would build an N-branch OR predicate —
-        Catalyst analysis cost grows with N and pushdown degrades. This
-        shape is N-invariant: leaf pruning is a driver-side tree descent
-        per key (metadata only), the pruned files are scanned ONCE, and
-        the key set joins as a broadcast hash join on the row-key
-        columns. No leaf dedup guard is needed — the equi-join on exact
-        keys already selects precisely the requested rows, wherever they
-        physically live (split ancestor files included).
+        Planning is O(keys x tree depth) and metadata only: a tree
+        descent per key finds its leaf, and each file of those leaves
+        (ancestors included) is kept if its first-row-key Bloom may
+        hold a requested key. The batch is then read on the driver like
+        ``exact_key_query`` — the files' row groups that can hold a key,
+        one k-way merge per leaf, a local DataFrame, no Spark job —
+        while it stays within ``query.DRIVER_SCAN_ROWS`` and
+        ``query.DRIVER_KEY_ROWS``. Otherwise it is ONE Spark job: the
+        pruned files are scanned once and the key set joins as a
+        broadcast hash join on the row-key columns. A naive N-region
+        Spark predicate would be an N-branch OR whose analysis cost
+        grows with N; the join is N-invariant, and needs no leaf dedup
+        guard, since the equi-join on exact keys selects precisely the
+        requested rows wherever they physically live (split ancestor
+        files included).
         """
-        import pyspark.sql.functions as F  # noqa: N812 — local, matches module style
-
         from sleeper_spark.iterators import (
             apply_custom_iterators,
             parse_aggregations,
@@ -576,26 +596,38 @@ class SleeperTable:
         )
         from sleeper_spark.processing import apply_processing
 
+        if not keys:
+            return self.spark.createDataFrame([], self.schema.to_struct_type())
         now_millis = now_millis if now_millis is not None else int(time.time() * 1000)
         self.store.refresh_if_stale(self.props.query_cache_timeout_seconds)
         tree = self.store.tree
         assert tree is not None
         key_names = [f.name for f in self.schema.row_key_fields]
-        leaf_ids = {tree.leaf_for_row({k: key[k] for k in key_names}).id
-                    for key in keys}
-        files = sorted({
-            ref.filename
-            for lid in leaf_ids
-            for ref in self.store.files_for_leaf_query(lid)
-        })
+        leaves = {}
+        for key in keys:
+            leaf = tree.leaf_for_row({k: key[k] for k in key_names})
+            leaves[leaf.id] = leaf
+        leaf_queries = [
+            LeafPartitionQuery(leaf, tuple(
+                self.store.files_for_leaf_query(lid)))
+            for lid, leaf in leaves.items()]
+        files = sorted({ref.filename for lq in leaf_queries
+                        for ref in lq.files})
         # Bloom file skip (bloom.py): keep a file only if SOME requested
         # key's first-row-key value may be present. At thousands of
         # point lookups per batch this prunes every LSM run that holds
         # none of the probed keys — driver-side metadata, no IO
         from sleeper_spark.query import file_may_contain_keys
-        pts = [key[key_names[0]] for key in keys] if keys else []
+        pts = [key[key_names[0]] for key in keys]
         files = [f for f in files if file_may_contain_keys(f, pts)]
-        if not files or not keys:
+        query = Query([Region.exact(self.schema,
+                                    **{k: key[k] for k in key_names})
+                       for key in keys])
+        df = self.executor().driver_frame(query, leaf_queries, files,
+                                          now_millis)
+        if df is not None:
+            return df
+        if not files:
             return self.spark.createDataFrame([], self.schema.to_struct_type())
         scan = self.spark.read.schema(self.schema.to_struct_type()).parquet(*files)
         from pyspark.sql import types as T

@@ -22,6 +22,8 @@ from pyspark.sql import types as T
 
 from sleeper_spark import Field, Schema, SleeperTable
 from sleeper_spark.properties import TableProperties
+from sleeper_spark.query import Query
+from sleeper_spark.ranges import Range, Region
 
 SF = "/root/testdata/sf0.01"
 
@@ -100,16 +102,22 @@ def test_sample_stratified_prunes_groups(spark, entry):
     assert "WindowGroupLimit" in plan
 
 
-def test_sleeper_query_scans_only_overlapping_partitions(spark, tmp_path):
+def test_sleeper_query_scans_only_overlapping_partitions(spark, tmp_path,
+                                                       spark_plan):
     """Driver-side pruning: a range query touching one leaf partition
-    must scan exactly that partition's file (of 4)."""
+    must scan exactly that partition's file (of 4). So small a range is
+    read on the driver by default; the shape checked is the Spark plan
+    it takes past the driver caps."""
     ev = spark.read.parquet(f"{SF}/events.parquet").select("event_id", "user_id")
     schema = Schema((Field("event_id", T.LongType()),), (),
                     (Field("user_id", T.LongType(), True),))
     t = SleeperTable.create(spark, str(tmp_path / "t"), schema,
                             TableProperties(), split_points=[2500, 5000, 7500])
     t.ingest(ev)
-    q = t.range_key_query([("event_id", 100, 200)])
+    assert t.explain_query(Query([Region.of(Range(
+        "event_id", 100, 200))]))["read_path"] == "driver"
+    with spark_plan():
+        q = t.range_key_query([("event_id", 100, 200)])
     plan = plan_of(q)
     m = re.search(r"InMemoryFileIndex\((\d+) paths?\)", plan)
     assert m, plan

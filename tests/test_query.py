@@ -1,13 +1,15 @@
-"""Point queries read on the driver (query.QueryExecutor): an exact-key
-query whose matched row groups and key rows are under the caps is
-answered by the sorted-rows reader and handed back as a local DataFrame — no Spark job — while the
-Spark plan stays the answer for every other query. The two readers must
-agree row for row, and both must agree with a pure-Python model."""
+"""Key-bounded queries read on the driver (query.QueryExecutor): a point
+get, a range scan or a batch get whose matched row groups and in-bounds
+key rows are under the caps is answered by the sorted-rows reader and
+handed back as a local DataFrame — no Spark job — while the Spark plan
+stays the answer for every other query. The two readers must agree row
+for row, and both must agree with a pure-Python model."""
 
 from __future__ import annotations
 
 import contextlib
 import itertools
+from collections import Counter
 from unittest import mock
 
 import pytest
@@ -15,10 +17,11 @@ from hypothesis import HealthCheck, Phase, given, settings, strategies as st
 from pyspark.sql import types as T
 
 from sleeper_spark import query as query_mod
+from sleeper_spark import sketches
 from sleeper_spark.iterators import register_iterator
 from sleeper_spark.properties import TableProperties
-from sleeper_spark.query import POINT_KEY_ROWS, Query
-from sleeper_spark.ranges import Region
+from sleeper_spark.query import DRIVER_KEY_ROWS, Query
+from sleeper_spark.ranges import Range, Region
 from sleeper_spark.schema import Field, Schema
 from sleeper_spark.table import SleeperTable
 
@@ -116,7 +119,7 @@ KINDS = {
             "key": st.binary(min_size=1, max_size=2).map(
                 lambda b: bytes(x % 4 for x in b)),
             "v": st.integers(0, 9)}),
-        model=list, succ=lambda k: k + b"\x00",
+        model=list,
         key=st.binary(min_size=1, max_size=2).map(
             lambda b: bytes(x % 5 for x in b))),
     "two_dim_key": dict(
@@ -126,8 +129,50 @@ KINDS = {
         row=st.fixed_dictionaries({
             "key": _KEYS, "k2": st.sampled_from("pq"),
             "v": st.integers(0, 9)}),
-        model=list),
+        model=list, batch=[{"k2": "p"}, {"k2": "q"}, {"k2": "r"}],
+        k2=st.sampled_from(["", "p", "q", "r"])),
+    "double_value": dict(
+        schema=Schema((_long("key"),), (), (
+            Field("d", T.DoubleType(), True), _long("v", True))),
+        props={},
+        row=st.fixed_dictionaries({
+            "key": _KEYS,
+            "d": st.one_of(st.none(), st.sampled_from([-1.5, 0.0, 2.5])),
+            "v": st.integers(0, 9)}),
+        model=list,
+        value=st.one_of(st.none(), st.sampled_from([-1.5, 0.0, 1.0, 2.5]))),
 }
+
+
+def _bounds(values):
+    """(min, max, min_inclusive, max_inclusive) drawn from ``values``."""
+    return st.tuples(values, values, st.booleans(), st.booleans())
+
+
+def _region(spec):
+    """A region bounding the first row key on both sides, inclusive or
+    exclusive at either end (possibly empty), plus a range on ``k2``
+    when the kind has one."""
+    dims = [_bounds(spec.get("key", st.integers(0, 9))).map(
+        lambda b: Range("key", *b))]
+    if "k2" in spec:
+        dims.append(st.one_of(st.none(), _bounds(spec["k2"]).map(
+            lambda b: Range("k2", *b))))
+    return st.tuples(*dims).map(
+        lambda rs: Region(tuple(r for r in rs if r is not None)))
+
+
+def _inside(v, r: Range) -> bool:
+    """``v`` within ``r``, from its inclusive flags (not canonicalised);
+    a NULL fails any real bound, an unbounded range keeps it (the SQL
+    semantics of value_ranges)."""
+    if r.min is None and r.max is None:
+        return True
+    if v is None:
+        return False
+    return ((r.min is None or r.min < v or (r.min_inclusive and v == r.min))
+            and (r.max is None or v < r.max
+                 or (r.max_inclusive and v == r.max)))
 
 
 def _build(spark, tmp_path, kind, batches, evolve=False, split=False):
@@ -153,33 +198,52 @@ def _build(spark, tmp_path, kind, batches, evolve=False, split=False):
     return t
 
 
-def _check_parity(t, kind, rows, probe_keys, bloom_fp):
+def _check_parity(t, kind, rows, probe_keys, bloom_fp, regions,
+                  value_range, spark_plan):
     spec = KINDS[kind]
-    succ = spec.get("succ", lambda k: k + 1)
     cols = [f.name for f in t.schema.all_fields()]
     held = spec["model"]([dict({c: None for c in cols}, **r) for r in rows])
+
+    def agree(read, want, query=None):
+        """The driver read runs no Spark job and equals the Spark plan
+        and the model; ``explain_query`` names the driver for it."""
+        if query is not None:
+            assert t.explain_query(query)["read_path"] == "driver"
+        got, jobs = _jobs_of(t.spark, lambda: read().collect())
+        with spark_plan():
+            oracle = _norm(read().collect(), cols)
+        assert jobs == [], (kind, query)
+        assert _norm(got, cols) == oracle == _norm(want, cols), (kind, query)
+
     ctx = (mock.patch.object(query_mod, "file_may_contain_keys",
                              lambda f, pts: True)
            if bloom_fp else contextlib.nullcontext())
     with ctx:  # a Bloom false positive keeps every file
         for k in probe_keys:
-            q = Query([Region.exact(t.schema, key=k)])
-            assert t.explain_query(q)["read_path"] == "driver"
-            got = _norm(t.exact_key_query(NOW, key=k).collect(), cols)
-            spark_plan = _norm(t.range_key_query(
-                [("key", k, succ(k))], NOW).collect(), cols)
-            model = _norm([r for r in held if r["key"] == k], cols)
-            assert got == spark_plan == model, (kind, k)
+            agree(lambda: t.exact_key_query(NOW, key=k),
+                  [r for r in held if r["key"] == k],
+                  Query([Region.exact(t.schema, key=k)]))
         # one region per key: the regions may hit several leaves that
         # share an ancestor file, which each leaf must read only for
         # its own keys
         q = Query([Region.exact(t.schema, key=k) for k in probe_keys])
-        assert t.explain_query(q)["read_path"] == "driver"
-        got = _norm(t.query(q, NOW).collect(), cols)
-        spark_plan = _norm(t.range_key_query(
-            [("key", k, succ(k)) for k in probe_keys], NOW).collect(), cols)
-        model = _norm([r for r in held if r["key"] in probe_keys], cols)
-        assert got == spark_plan == model, (kind, probe_keys)
+        agree(lambda: t.query(q, NOW),
+              [r for r in held if r["key"] in probe_keys], q)
+        # a batch get of the probe keys, the first one twice: its rows
+        # come back once
+        batch = [dict(extra, key=k) for k in probe_keys + probe_keys[:1]
+                 for extra in spec.get("batch", [{}])]
+        agree(lambda: t.batch_exact_key_query(batch, NOW),
+              [r for r in held if any(all(r[f] == v for f, v in b.items())
+                                      for b in batch)])
+    # a range scan: the OR of one to three regions
+    vrs = [] if value_range is None else [Range("d", *value_range)]
+    q = Query(regions, value_ranges=vrs)
+    agree(lambda: t.query(q, NOW),
+          [r for r in held
+           if any(all(_inside(r[rr.field], rr) for rr in reg.ranges)
+                  for reg in regions)
+           and all(_inside(r[vr.field], vr) for vr in vrs)], q)
 
 
 # no shrinking: every example builds a table through Spark, so a
@@ -193,14 +257,20 @@ _SETTINGS = settings(
 
 def _parity_test(kind, evolve=False, split=False):
     spec = KINDS[kind]
+    draws = dict(
+        batches=st.lists(st.lists(spec["row"], max_size=8),
+                         min_size=2, max_size=3),
+        probe_keys=st.lists(spec.get("key", st.integers(0, 9)),
+                            min_size=1, max_size=3, unique=True),
+        bloom_fp=st.booleans(),
+        regions=st.lists(_region(spec), min_size=1, max_size=3),
+        value_range=(_bounds(spec["value"]) if "value" in spec
+                     else st.none()))
 
     @_SETTINGS
-    @given(batches=st.lists(st.lists(spec["row"], max_size=8),
-                            min_size=2, max_size=3),
-           probe_keys=st.lists(spec.get("key", st.integers(0, 9)),
-                               min_size=1, max_size=3, unique=True),
-           bloom_fp=st.booleans())
-    def run(spark, tmp_path_factory, batches, probe_keys, bloom_fp):
+    @given(**draws)
+    def run(spark, tmp_path_factory, spark_plan, batches, probe_keys,
+            bloom_fp, regions, value_range):
         if split:  # enough distinct keys in the root file to split it
             batches = [[{"key": k, "label": "public", "v": k}
                         for k in range(8)]] + batches
@@ -212,7 +282,8 @@ def _parity_test(kind, evolve=False, split=False):
         if evolve:
             rows = ([dict(r, extra=None) for b in batches[:-1] for r in b]
                     + [dict(r, extra=f"e{r['v']}") for r in batches[-1]])
-        _check_parity(t, kind, rows, probe_keys, bloom_fp)
+        _check_parity(t, kind, rows, probe_keys, bloom_fp, regions,
+                      value_range, spark_plan)
     return run
 
 
@@ -225,10 +296,12 @@ test_parity_ancestor_file_after_split = _parity_test("row_iterator",
                                                      split=True)
 test_parity_binary_key = _parity_test("binary_key")
 test_parity_two_dim_key_first_pinned = _parity_test("two_dim_key")
+test_parity_value_ranges_on_a_nullable_double = _parity_test("double_value")
 
 
 # ---------------------------------------------------------------------------
-# job counts: eligible point gets run no Spark job; the rest fall back
+# job counts: eligible key-bounded reads run no Spark job; the rest fall
+# back
 # ---------------------------------------------------------------------------
 
 def _plain(spark, path, rows, **props):
@@ -245,7 +318,7 @@ def test_point_get_runs_no_spark_job(spark, tmp_path):
     assert jobs == []
     audit = t.explain_query(Query([Region.exact(t.schema, key=7)]))
     assert audit["read_path"] == "driver"
-    assert 1 <= audit["point_rows_matched"] <= 50
+    assert 1 <= audit["rows_matched"] <= 50
     # an absent key reads nothing at all
     rows, jobs = _jobs_of(spark, lambda: t.exact_key_query(key=99).collect())
     assert rows == [] and jobs == []
@@ -291,12 +364,12 @@ def test_dataframe_only_iterator_falls_back_to_spark(spark, tmp_path):
 
 
 def test_cold_key_in_a_large_row_group_reads_on_the_driver(spark, tmp_path):
-    n = 4 * POINT_KEY_ROWS  # one row group, one row per key
+    n = 4 * DRIVER_KEY_ROWS  # one row group, one row per key
     t = _plain(spark, str(tmp_path / "t"), [(k, k) for k in range(n)])
     audit = t.explain_query(Query([Region.exact(t.schema, key=n // 2)]))
     assert audit["read_path"] == "driver"
-    assert audit["point_rows_matched"] == n
-    assert audit["point_key_rows"] == 1
+    assert audit["rows_matched"] == n
+    assert audit["key_rows"] == 1
     rows, jobs = _jobs_of(
         spark, lambda: t.exact_key_query(key=n // 2).collect())
     assert [tuple(r) for r in rows] == [(n // 2, n // 2)]
@@ -305,11 +378,11 @@ def test_cold_key_in_a_large_row_group_reads_on_the_driver(spark, tmp_path):
 
 def test_row_groups_past_the_scan_cap_fall_back_to_spark(spark, tmp_path):
     t = _plain(spark, str(tmp_path / "t"), [(k, k) for k in range(100)])
-    with mock.patch.object(query_mod, "POINT_SCAN_ROWS", 99):
+    with mock.patch.object(query_mod, "DRIVER_SCAN_ROWS", 99):
         audit = t.explain_query(Query([Region.exact(t.schema, key=5)]))
         assert audit["read_path"] == "spark"
-        assert audit["point_rows_matched"] == 100
-        assert "point_key_rows" not in audit
+        assert audit["rows_matched"] == 100
+        assert "key_rows" not in audit
         rows, jobs = _jobs_of(spark,
                               lambda: t.exact_key_query(key=5).collect())
     assert [tuple(r) for r in rows] == [(5, 5)]
@@ -317,12 +390,12 @@ def test_row_groups_past_the_scan_cap_fall_back_to_spark(spark, tmp_path):
 
 
 def test_hot_key_past_the_cap_falls_back_to_spark(spark, tmp_path):
-    n = POINT_KEY_ROWS + 1
+    n = DRIVER_KEY_ROWS + 1
     t = _plain(spark, str(tmp_path / "t"),
                [(1, i) for i in range(n)] + [(2, 0)])
     audit = t.explain_query(Query([Region.exact(t.schema, key=1)]))
     assert audit["read_path"] == "spark"
-    assert audit["point_key_rows"] == n
+    assert audit["key_rows"] == n
     assert t.explain_query(Query([Region.exact(t.schema, key=2)]))[
         "read_path"] == "driver"
     rows, jobs = _jobs_of(spark, lambda: t.exact_key_query(key=1).collect())
@@ -330,6 +403,132 @@ def test_hot_key_past_the_cap_falls_back_to_spark(spark, tmp_path):
     assert sorted(r.v for r in rows) == list(range(n))
     assert sorted(rows) == sorted(
         t.range_key_query([("key", 1, 2)]).collect())
+
+
+def _leaved(spark, path, n, leaves=4, files=2):
+    """A plain table of keys 0..n-1 (v = 10 * key) over ``leaves``
+    leaves, each key ingested into one of ``files`` files per leaf."""
+    schema = Schema((_long("key"),), (), (_long("v"),))
+    t = SleeperTable.create(spark, path, schema, TableProperties(),
+                            split_points=[n * i // leaves
+                                          for i in range(1, leaves)])
+    for f in range(files):
+        t.ingest(spark.createDataFrame(
+            [(k, 10 * k) for k in range(f, n, files)],
+            schema.to_struct_type()))
+    return t
+
+
+def test_small_range_scan_runs_no_spark_job(spark, tmp_path):
+    t = _leaved(spark, str(tmp_path / "t"), 10_000)
+    lo, hi = 2_450, 2_550  # 1 % of the keys, across a leaf boundary
+    q = Query([Region.of(Range("key", lo, hi))])
+    audit = t.explain_query(q)
+    assert audit["read_path"] == "driver"
+    assert audit["key_rows"] == hi - lo
+    assert hi - lo <= audit["rows_matched"] <= 10_000
+    rows, jobs = _jobs_of(
+        spark, lambda: t.range_key_query([("key", lo, hi)]).collect())
+    assert jobs == []
+    assert sorted(tuple(r) for r in rows) == [
+        (k, 10 * k) for k in range(lo, hi)]
+
+
+def test_batch_get_runs_no_spark_job(spark, tmp_path):
+    t = _leaved(spark, str(tmp_path / "t"), 10_000)
+    keys = [{"key": k} for k in range(0, 20_000, 500)]  # 40, half absent
+    rows, jobs = _jobs_of(
+        spark, lambda: t.batch_exact_key_query(keys).collect())
+    assert jobs == []
+    assert sorted(tuple(r) for r in rows) == [
+        (k, 10 * k) for k in range(0, 10_000, 500)]
+
+
+def test_range_past_the_key_cap_falls_back_to_spark(spark, tmp_path):
+    n = DRIVER_KEY_ROWS + 100
+    t = _leaved(spark, str(tmp_path / "t"), n, leaves=1, files=1)
+    q = Query([Region.of(Range("key", 0, DRIVER_KEY_ROWS + 1))])
+    audit = t.explain_query(q)
+    assert audit["read_path"] == "spark"
+    assert audit["key_rows"] == DRIVER_KEY_ROWS + 1
+    rows, jobs = _jobs_of(spark, lambda: t.query(q).collect())
+    assert len(jobs) >= 1
+    assert sorted(tuple(r) for r in rows) == [
+        (k, 10 * k) for k in range(DRIVER_KEY_ROWS + 1)]
+    # a range just under the cap in the same file reads on the driver
+    assert t.explain_query(Query([Region.of(Range(
+        "key", 0, DRIVER_KEY_ROWS))]))["read_path"] == "driver"
+
+
+def test_range_past_the_scan_cap_falls_back_to_spark(spark, tmp_path):
+    t = _plain(spark, str(tmp_path / "t"), [(k, k) for k in range(100)])
+    q = Query([Region.of(Range("key", 10, 20))])
+    with mock.patch.object(query_mod, "DRIVER_SCAN_ROWS", 99):
+        audit = t.explain_query(q)
+        assert audit["read_path"] == "spark"
+        assert audit["rows_matched"] == 100
+        assert "key_rows" not in audit
+        rows, jobs = _jobs_of(spark, lambda: t.query(q).collect())
+        batch, batch_jobs = _jobs_of(spark, lambda: t.batch_exact_key_query(
+            [{"key": 3}, {"key": 3}, {"key": 200}]).collect())
+    assert len(jobs) >= 1 and len(batch_jobs) >= 1
+    assert sorted(tuple(r) for r in rows) == [(k, k) for k in range(10, 20)]
+    assert [tuple(r) for r in batch] == [(3, 3)]
+
+
+def test_full_scan_keeps_the_spark_plan(spark, tmp_path):
+    t = _plain(spark, str(tmp_path / "t"), [(k, k) for k in range(10)])
+    audit = t.explain_query(Query([Region.of(Range("key", None, None))]))
+    assert audit["read_path"] == "spark"
+    assert "rows_matched" not in audit
+    # one side unbounded is not key-bounded either
+    audit = t.explain_query(Query([Region.of(Range("key", 3, None))]))
+    assert audit["read_path"] == "spark"
+
+
+def test_many_key_batch_reads_each_footer_once(spark, tmp_path):
+    t = _leaved(spark, str(tmp_path / "t"), 6_000)
+    files = {r.filename for r in t.store.all_references()}
+    keys = [{"key": k} for k in range(0, 10_000, 2)]  # 5,000 keys
+    stats = sketches.row_group_key_stats
+    calls = []
+
+    def counted(pf, key_name):
+        calls.append(key_name)
+        return stats(pf, key_name)
+    with mock.patch.object(sketches, "row_group_key_stats", counted):
+        rows, jobs = _jobs_of(
+            spark, lambda: t.batch_exact_key_query(keys).collect())
+    assert jobs == []
+    assert sorted(tuple(r) for r in rows) == [
+        (k, 10 * k) for k in range(0, 6_000, 2)]
+    assert 0 < len(calls) <= len(files) == 8
+
+
+def test_exact_and_canonicalised_string_bounds(spark, tmp_path,
+                                               spark_plan):
+    schema = Schema((Field("key", T.StringType()),), (), (_long("v"),))
+    t = SleeperTable.create(spark, str(tmp_path / "t"), schema)
+    words = ["a", "a\x00", "ab", "b", "b\x00", "ba", "c"]
+    t.ingest(spark.createDataFrame([(w, i) for i, w in enumerate(words)],
+                                   schema.to_struct_type()))
+    cases = [
+        Range("key", "a", "b", False, True),   # (a, b]
+        Range("key", "a", "a", True, True),    # [a, a]
+        Range("key", "b", "b", False, True),   # (b, b]: empty
+        Range("key", "b", "a"),                # [b, a): empty
+        Range("key", "ab", "b\x00", True, False),
+    ]
+    for r in cases:
+        q = Query([Region.of(r)])
+        assert t.explain_query(q)["read_path"] == "driver"
+        got = sorted(x.key for x in t.query(q).collect())
+        with spark_plan():
+            oracle = sorted(x.key for x in t.query(q).collect())
+        # the sorted_rows stream reads without the key pre-filter
+        streamed = [x["key"] for x in t.sorted_rows(q)]
+        assert got == oracle == streamed == [
+            w for w in sorted(words) if _inside(w, r)], r
 
 
 def test_point_get_frame_outlives_compaction_and_gc(spark, tmp_path):

@@ -430,10 +430,11 @@ def test_compact_mixed_ingest_strategies(spark, tmp_path):
     assert before == after and len(after) == 2 * li.count()
 
 
-def test_batch_exact_key_query(spark, tmp_path):
-    """N point lookups in ONE job: broadcast key-set join over
-    driver-pruned files; results equal N individual exact-key queries,
-    including keys duplicated in the request and missing keys."""
+def test_batch_exact_key_query(spark, tmp_path, spark_plan):
+    """N point lookups read on the driver, or past its caps in ONE job:
+    a broadcast key-set join over driver-pruned files; results equal N
+    individual exact-key queries, including keys duplicated in the
+    request and missing keys."""
     t = SleeperTable.create(spark, str(tmp_path / "t"), numbered_schema(),
                             split_points=["row-%019d" % 50])
     t.ingest(numbered_rows(spark))
@@ -446,9 +447,16 @@ def test_batch_exact_key_query(spark, tmp_path):
     for i in (3, 17, 64, 99):  # dup request keys collapse via distinct
         want += [("row-%019d" % i, i, f"value-{i}")] * 2
     assert got == sorted(want)
-    # plan shape: ONE broadcast hash join, no N-branch OR chain
+    # read on the driver: a local relation, no scan
     plan = t.batch_exact_key_query(keys) \
         ._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "FileScan" not in plan
+    # the Spark plan: ONE broadcast hash join, no N-branch OR chain
+    with spark_plan():
+        df = t.batch_exact_key_query(keys)
+        assert sorted((r.key, r.timestamp, r.value)
+                      for r in df.collect()) == sorted(want)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 
 
