@@ -1036,8 +1036,8 @@ def q_upsert_last_writer(spark: SparkSession, sf: str) -> DataFrame:
     on ts break deterministically on the value (lexicographic struct
     extremum), which the oracle replays as ORDER BY ts DESC, value
     DESC. Ingested in two halves and compacted, so the collapse runs
-    through the real engine path (auto engine falls back to Spark —
-    max_by is outside the Arrow kernels' algebra)."""
+    through the real engine path (the auto engine picks Arrow
+    compaction, whose kernels keep max_by's (order, value) pair)."""
     ev = _load(spark, sf, "events").select(
         F.col("user_id"), F.col("event_type"),
         F.col("ts_us"), F.col("value"))

@@ -490,34 +490,11 @@ def run_jobs(
 # parallel and the only cross-node traffic is the object-store read/write,
 # exactly like the reference's per-container DataFusion jobs.
 
-def arrow_algebra_supported(schema: Schema, aggregations: str) -> bool:
-    """Is an aggregation config inside the Arrow kernels' algebra?
-    Scalar sum/min/max (numeric sum; min/max on any orderable),
-    string/binary concat-sum, and map_sum/map_min/map_max — the same
-    surface as the reference's DataFusion engine (aggregate.rs:70-103,
-    rust/aggregator_udfs/src/map_aggregate.rs:28-40)."""
-    from pyspark.sql import types as T
-
-    for a in parse_aggregations(aggregations):
-        f = schema.field(a.column)
-        if isinstance(f.dtype, T.ArrayType):
-            return False  # no array-valued aggregation in either engine
-        if a.op.endswith("_by"):
-            return False  # max_by/min_by pair state: Spark engine only
-        if a.op.startswith("map_") != isinstance(f.dtype, T.MapType):
-            return False  # map ops on map columns only, and vice versa
-    return True
-
-
 def arrow_engine_supported(schema: Schema, props: TableProperties) -> bool:
     """The Arrow COMPACTION engine covers ageOff + the full aggregation
-    algebra; only custom iterators (arbitrary DataFrame transforms)
-    force the Spark engine. The zero-shuffle scan has a weaker gate —
-    it applies custom iterators afterwards as DataFrame transforms, so
-    it checks :func:`arrow_algebra_supported` alone."""
-    if props.iterators:
-        return False
-    return arrow_algebra_supported(schema, props.aggregations)
+    algebra that ``validate_aggregations`` admits; only custom iterators
+    (arbitrary DataFrame transforms) force the Spark engine."""
+    return not props.iterators
 
 
 def _arrow_compact_one(desc: dict) -> tuple[str, str, int]:
@@ -702,7 +679,9 @@ def run_jobs_arrow(
 
     out_dir = os.path.join(data_dir, f"compaction-{uuid.uuid4().hex[:12]}")
     os.makedirs(out_dir, exist_ok=True)
-    aggs = [(a.column, a.op) for a in parse_aggregations(props.aggregations)]
+    from sleeper_spark.sorted_scan import _agg_spec
+
+    aggs = _agg_spec(parse_aggregations(props.aggregations))
     filters = [(f.column, f.max_age_millis) for f in parse_filters(props.filters)]
     key0 = schema.key_names[0]
     parallelism = spark.sparkContext.defaultParallelism

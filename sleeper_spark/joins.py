@@ -167,16 +167,15 @@ def cokeyed_join(table_a, table_b, how: str = "inner",
 
     Requirements (validated): identical row-key fields, identical leaf
     key ranges (same split points — the co-location guarantee), no
-    custom iterators (filters + Arrow-algebra aggregations are fine:
-    both apply inside the task, so the join sees COLLAPSED rows).
+    custom iterators (filters + aggregations are fine: both apply
+    inside the task, so the join sees COLLAPSED rows).
     ``how``: 'inner' or 'left'. B-side non-key columns that collide
     with A-side names get ``rsuffix``. Duplicate keys join
     many-to-many (multiset semantics, like SQL)."""
     import time as _time
 
-    from sleeper_spark import compaction as compaction_mod
     from sleeper_spark.iterators import parse_aggregations, parse_filters
-    from sleeper_spark.sorted_scan import _declared_arrow_schema
+    from sleeper_spark.sorted_scan import _agg_spec, _declared_arrow_schema
 
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
@@ -193,11 +192,6 @@ def cokeyed_join(table_a, table_b, how: str = "inner",
             raise ValueError(
                 "cokeyed_join does not support custom iterators (they "
                 "are DataFrame transforms; apply them after the join)")
-        if parse_aggregations(t.props.aggregations) and \
-                not compaction_mod.arrow_algebra_supported(
-                    t.schema, t.props.aggregations):
-            raise ValueError(
-                "cokeyed_join needs Arrow-expressible aggregations")
     table_a.store.refresh_if_stale(
         table_a.props.query_cache_timeout_seconds)
     table_b.store.refresh_if_stale(
@@ -233,8 +227,7 @@ def cokeyed_join(table_a, table_b, how: str = "inner",
             "query_regions": [],
             "filters": [(f.column, f.max_age_millis)
                         for f in parse_filters(table.props.filters)],
-            "aggs": [(a.column, a.op) for a in
-                     parse_aggregations(table.props.aggregations)],
+            "aggs": _agg_spec(parse_aggregations(table.props.aggregations)),
             "now_millis": now_millis,
             "batch_rows": batch_rows,
         }

@@ -8,8 +8,8 @@ Reference surfaces:
   here behind a callback.
 - Bulk export re-reads the whole table through the compaction read path,
   one job per leaf partition (BulkExportQuerySplitter.java:43,106). Spark
-  shape: ONE job over all leaves — the tagged-union + partitionBy write
-  used by batched compaction — emitting one sorted file per leaf.
+  shape: ONE job over all leaves — the zero-shuffle sorted scan with a
+  partitionBy write — emitting one sorted file per leaf.
 """
 
 from __future__ import annotations
@@ -21,7 +21,6 @@ from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from sleeper_spark.table import SleeperTable
 
@@ -280,78 +279,21 @@ def bulk_export(table: SleeperTable, dest: str) -> dict[str, str]:
     Spark tasks). Table filters/aggregations apply, so the export is the
     user-visible collapsed view. Returns {leaf_partition_id: file}.
 
-    Zero-shuffle path: when the table's processing config is
-    Arrow-expressible, the export rides ``sorted_scan`` — one task per
-    leaf merges its sorted runs and ``partitionBy`` writes that task's
-    single leaf directly, so the plan has NO exchange and NO re-sort
-    (the fallback shape below shuffles every row once to co-locate
-    leaves). At 100 TB the export is then pure streaming IO.
+    Zero-shuffle: the export rides ``sorted_scan`` — one task per leaf
+    merges its sorted runs and ``partitionBy`` writes that task's leaf
+    directly, so the plan has NO exchange and NO re-sort; custom
+    iterators apply as DataFrame transforms, which keep the leaf tag.
+    At 100 TB the export is then pure streaming IO.
     """
-    tree = table.store.tree
-    assert tree is not None
-    spark = table.spark
-
     from sleeper_spark.sorted_scan import distributed_sorted_scan
-    try:
-        df = distributed_sorted_scan(table, leaf_id_col=EXPORT_COL)
-    except ValueError:  # non-Arrow aggregation config -> shuffle fallback
-        df = None
-    if df is not None:
-        (
-            df.write.option("compression", table.props.compression)
-            .partitionBy(EXPORT_COL)
-            .parquet(dest)
-        )
-        return _exported_files(tree, dest)
 
-    # same N-invariant shape as batched compaction: ONE scan over the
-    # distinct files + broadcast file->(leaf, region) map, instead of an
-    # N-branch union that grows the plan linearly in leaf count
-    from sleeper_spark.compaction import CompactionJob, JOB_COL, _tag_rows_with_jobs
-    pseudo_jobs = []
-    for leaf in tree.leaves():
-        refs = table.store.files_for_leaf_query(leaf.id)
-        if refs:
-            pseudo_jobs.append(CompactionJob(
-                job_id=leaf.id, partition_id=leaf.id,
-                input_files=tuple(sorted({r.filename for r in refs})),
-                partition_region=leaf.region))
-    if not pseudo_jobs:
-        return {}
-    n_leaves = len(pseudo_jobs)
-    tagged, check_accounting = _tag_rows_with_jobs(
-        spark, pseudo_jobs, table.schema)
-    union = tagged.withColumnRenamed(JOB_COL, EXPORT_COL)
-
-    from sleeper_spark.iterators import (
-        apply_custom_iterators,
-        parse_aggregations,
-        parse_filters,
-    )
-    from sleeper_spark.processing import apply_processing
-    import time as _time
-    df = apply_processing(
-        union, table.schema,
-        parse_filters(table.props.filters),
-        parse_aggregations(table.props.aggregations),
-        int(_time.time() * 1000),
-        extra_group_cols=[EXPORT_COL],
-    )
-    # iterator chain order parity: filters -> aggregation -> custom
-    # (IteratorFactory.java:79-91); custom iterators are column-wise
-    # transforms, so the leaf tag passes through untouched
-    df = apply_custom_iterators(df, table.props.iterators, table.schema)
+    df = distributed_sorted_scan(table, leaf_id_col=EXPORT_COL)
     (
-        df.repartition(n_leaves, F.col(EXPORT_COL))
-        .sortWithinPartitions(EXPORT_COL, *table.schema.key_names)
-        .write.option("compression", table.props.compression)
+        df.write.option("compression", table.props.compression)
         .partitionBy(EXPORT_COL)
         .parquet(dest)
     )
-    # observed on the write: every source file matched by the file-name
-    # decode, or rows are missing from the export
-    check_accounting()
-    return _exported_files(tree, dest)
+    return _exported_files(table.store.tree, dest)
 
 
 def _exported_files(tree, dest: str) -> dict[str, str]:

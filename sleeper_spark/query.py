@@ -15,20 +15,21 @@ LeafPartitionQueryExecutor.java:73-131) re-shaped for Spark:
      the predicate ``(OR query regions) AND (OR selected leaf regions)``.
    - **Driver read** (key-bounded queries): when every region bounds
      the first row key on both sides (:func:`_key_bounds` — point gets,
-     small range scans, ``batch_exact_key_query``), the per-leaf
-     ``heapq.merge`` reader that ``sorted_rows`` uses reads only the row
-     groups whose footer min/max overlap a region's key range, keeps
-     the rows inside those ranges in Arrow, applies the table's
-     processing on the driver, and returns the rows as a local
-     DataFrame — no Spark job, like the reference's single-reader
-     LeafPartitionQueryExecutor. The Spark plan runs instead when a
-     region leaves the first row key unbounded (a full scan), when a
-     table- or query-level custom iterator has no row-wise form, when
-     the matched row groups hold more than :data:`DRIVER_SCAN_ROWS`
-     rows, or when more than :data:`DRIVER_KEY_ROWS` of their rows lie
-     inside the key ranges (a hot key or a wide range stays
-     distributed). ``batch_exact_key_query`` plans its leaves by tree
-     descent and falls back to a broadcast-join Spark plan.
+     small range scans, ``batch_exact_key_query``), the driver reads
+     only the row groups whose footer min/max overlap a region's key
+     range, keeps the rows inside those ranges in Arrow, merges and
+     processes them with the Arrow kernels the distributed sorted scan
+     and Arrow compaction run (the reader ``sorted_rows`` also uses),
+     and returns the rows as a local DataFrame — no Spark job, like the
+     reference's single-reader LeafPartitionQueryExecutor. The Spark
+     plan runs instead when a region leaves the first row key
+     unbounded (a full scan), when a table- or query-level custom
+     iterator has no row-wise form, when the matched row groups hold
+     more than :data:`DRIVER_SCAN_ROWS` rows, or when more than
+     :data:`DRIVER_KEY_ROWS` of their rows lie inside the key ranges
+     (a hot key or a wide range stays distributed).
+     ``batch_exact_key_query`` plans its leaves by tree descent and
+     falls back to a broadcast-join Spark plan.
 
 The Spark plan's predicate is the Spark-shaped dedup guard. The
 reference reads each leaf separately, ANDing that leaf's region so a row
@@ -304,30 +305,6 @@ def apply_value_ranges_df(df: DataFrame, value_ranges) -> DataFrame:
     return df
 
 
-def compile_value_ranges(value_ranges):
-    """Row-dict predicate with EXACTLY the SQL comparison semantics the
-    DataFrame paths get from apply_value_ranges_df: a NULL value fails
-    any actual bound, but an UNBOUNDED range (both ends None) adds no
-    predicate at all and keeps NULL rows — the three read paths must
-    agree."""
-    vr = [(r.field, r.min, r.min_inclusive, r.max, r.max_inclusive)
-          for r in value_ranges
-          if r.min is not None or r.max is not None]
-
-    def matches(row) -> bool:
-        for fld, mn, mni, mx, mxi in vr:
-            v = row.get(fld)
-            if v is None:  # NULL never satisfies a real bound
-                return False
-            if mn is not None and (v < mn or (v == mn and not mni)):
-                return False
-            if mx is not None and (v > mx or (v == mx and not mxi)):
-                return False
-        return True
-
-    return matches
-
-
 #: rows per Arrow batch of the driver reader
 DRIVER_BATCH_ROWS = 8192
 
@@ -342,14 +319,14 @@ DRIVER_BATCH_ROWS = 8192
 #:   against 95 / 76 / 69 / 65 / 62 ms in Spark with 8,192 / 65,536 /
 #:   524,288 / 1,048,576 / 2,097,152 rows in its row group;
 DRIVER_SCAN_ROWS = 1 << 19
-#: - the rows inside the first row key's bounds, which the driver turns
-#:   into Python rows: in a 65,536-row group, a key of 8,192 rows took
-#:   73 ms against 90 ms in Spark, one of 16,384 rows 165 ms against
-#:   130 ms; a range of 1,024 / 4,096 / 8,192 / 16,384 / 32,768 rows
-#:   (one row per key) took 76 / 120 / 168 / 339 / 628 ms against
-#:   242 / 246 / 216 / 234 / 373 ms. So a hot key (an index posting
-#:   list, say) and a wide range stay distributed.
-DRIVER_KEY_ROWS = 8192
+#: - the rows inside the first row key's bounds, which the driver
+#:   merges and hands back: in a file of 524,288 rows in 65,536-row
+#:   groups, a range of 1,024 / 8,192 / 16,384 / 32,768 / 65,536 /
+#:   131,072 / 262,144 rows (one row per key, collected) took
+#:   90 / 108 / 168 / 389 / 734 / 1,419 / 2,308 ms against
+#:   305 / 248 / 264 / 512 / 709 / 1,037 / 1,515 ms in Spark. So a hot
+#:   key (an index posting list, say) and a wide range stay distributed.
+DRIVER_KEY_ROWS = 1 << 16
 
 #: the Python type the driver reader compares each key type's values
 #: with; a query bound of another type runs as the Spark plan, whose
@@ -477,6 +454,54 @@ def _projected_columns(schema: Schema, query: Query) -> list[str] | None:
         return None
     wanted = set(query.requested_value_fields)
     return schema.key_names + [v for v in schema.value_names if v in wanted]
+
+
+def _pylist(t) -> list[dict]:
+    """The rows of Arrow table ``t`` as dicts, map columns as dicts (as
+    Spark rows hold them) rather than Arrow's (key, value) lists."""
+    import pyarrow as pa
+
+    rows = t.to_pylist()
+    for f in t.schema:
+        if pa.types.is_map(f.type):
+            for row in rows:
+                if row[f.name] is not None:
+                    row[f.name] = dict(row[f.name])
+    return rows
+
+
+def _through_rows(t, fns):
+    """Arrow table ``t`` passed row by row through the row-wise iterator
+    chain ``fns`` (each returns the row, changed or not, or None to drop
+    it); iterators keep the table schema."""
+    import pyarrow as pa
+
+    if not fns:
+        return t
+    out = []
+    for row in _pylist(t):
+        for fn in fns:
+            row = fn(row)
+            if row is None:
+                break
+        else:
+            out.append(row)
+    return pa.Table.from_pylist(out, schema=t.schema)
+
+
+def local_frame(spark: SparkSession, struct: T.StructType,
+                tables=()) -> DataFrame:
+    """Arrow ``tables`` (columns as in ``struct``; none for an empty
+    result) as a local DataFrame. ``createDataFrame`` of an Arrow table
+    plans a LocalRelation, so collecting it runs no Spark job, and it
+    keeps the table's types (maps included) and nullability."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(struct)
+    table = (pa.concat_tables([t.cast(schema) for t in tables]) if tables
+             else schema.empty_table())
+    return spark.createDataFrame(table, struct)
 
 
 class QueryExecutor:
@@ -624,52 +649,94 @@ class QueryExecutor:
     def sorted_rows(self, query: Query, now_millis: int,
                     batch_size: int = DRIVER_BATCH_ROWS):
         """Driver-read ``query`` as a row-dict stream in total table key
-        order (see :func:`_sorted_row_iterator_gen`). Argument errors
-        (value_ranges on an aggregation table, an iterator without a
-        row-wise form) raise here, at the call site, not at the first
-        ``next()``."""
+        order (:meth:`_driver_tables`). Argument errors (value_ranges
+        on an aggregation table, an iterator without a row-wise form)
+        raise here, at the call site, not at the first ``next()``."""
         reject_value_ranges_on_aggregation(
             query.value_ranges, self.table_aggregations)
         iterators = self._row_iterators(query)
         leaf_queries = QueryPlanner(self.store).split_into_leaf_queries(query)
         files = self._files_of(leaf_queries, query)
-        return self._driver_rows(query, leaf_queries, files, iterators,
-                                 now_millis, batch_size)
+        tables = self._driver_tables(query, leaf_queries, files, iterators,
+                                     now_millis, batch_size)
+        return (row for t in tables for row in _pylist(t))
 
-    def _driver_rows(self, query, leaf_queries, files, iterators,
-                     now_millis, batch_size, row_groups=None,
-                     bounds=None):
-        return _sorted_row_iterator_gen(
-            self.schema, query, leaf_queries, files, batch_size,
-            parse_filters(self.table_filters),
-            parse_aggregations(self.table_aggregations),
-            iterators, now_millis, row_groups, bounds)
+    def _driver_tables(self, query: Query, leaf_queries, files: list[str],
+                       iterators, now_millis: int, batch_rows: int,
+                       matched: dict | None = None,
+                       bounds: _KeyBounds | None = None):
+        """J1 k-way sorted merge on the driver: the rows of ``query``
+        over the planned ``leaf_queries`` and surviving ``files`` as
+        non-empty Arrow tables in total table order (row keys..., sort
+        keys...), WITHOUT a Spark sort.
+
+        The reference's read path returns a sorted iterator by
+        heap-merging each leaf's sorted files and concatenating leaves
+        (MergingIterator.java:37-114 + ConcatenatingIterator.java:28-85).
+        This runs the same Arrow kernels as the distributed sorted scan
+        and Arrow compaction (``sorted_scan._component_stream``): per
+        leaf, the vectorized merge, the leaf-region guard, the query
+        regions and value ranges, table ageOff and aggregation; leaves
+        whose first-key ranges overlap merge their streams. Then, in the
+        Spark plan's order: table custom iterators (row-wise, on each
+        table's rows), query-time ageOff, query-time iterators,
+        projection. ``iterators`` are the table- and query-level chains
+        in row-wise form. ``matched`` (``{file: (ParquetFile, row
+        groups, rows)}``, key-bounded queries) narrows each read to the
+        listed row groups, and ``bounds`` drops the rows outside them
+        in Arrow before the merge."""
+        from sleeper_spark import sorted_scan as ss
+
+        table_iters, query_iters = iterators
+        query_filters = [(f.column, f.max_age_millis)
+                         for f in parse_filters(query.query_time_filters)]
+        cols = _projected_columns(self.schema, query)
+        surviving = set(files)
+        key_mask = (None if bounds is None
+                    else lambda column: _key_mask(column, bounds))
+        query_desc = ss._query_desc(
+            self.schema, query, parse_filters(self.table_filters),
+            parse_aggregations(self.table_aggregations), now_millis,
+            batch_rows)
+        files_of = {lq.leaf.id: lq.files for lq in leaf_queries}
+        for component in ss._dim0_components(
+                [lq.leaf for lq in leaf_queries],
+                self.schema.row_key_names[0]):
+            descs = []
+            for leaf in component:
+                fns = sorted({r.filename for r in files_of[leaf.id]}
+                             & surviving)
+                if fns:
+                    descs.append(ss._leaf_desc(query_desc, leaf, fns))
+            if not descs:
+                continue
+            for t in ss._component_stream(descs, opened=matched,
+                                          key_mask=key_mask):
+                t = _through_rows(t, table_iters)
+                t = ss._age_off(t, query_filters, now_millis)
+                t = _through_rows(t, query_iters)
+                if cols is not None:
+                    t = t.select(cols)
+                if t.num_rows:
+                    yield t
 
     def driver_frame(self, query: Query, leaf_queries, files: list[str],
                      now_millis: int) -> DataFrame | None:
         """The rows of ``query`` over the planned ``leaf_queries`` and
         surviving ``files``, read and processed on the driver, as a
-        local DataFrame; None when :meth:`_driver_plan` declines the
-        query. ``createDataFrame`` of an Arrow table plans a
-        LocalRelation, so collecting it runs no Spark job, and it keeps
-        the table's types (maps included) and nullability."""
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
+        local DataFrame (:func:`local_frame`); None when
+        :meth:`_driver_plan` declines the query."""
         plan, _ = self._driver_plan(query, files)
         if plan is None:
             return None
         iterators, matched, bounds = plan
-        rows = list(self._driver_rows(
-            query, leaf_queries, list(matched), iterators, now_millis,
-            DRIVER_BATCH_ROWS, matched, bounds))
         struct = self.schema.to_struct_type()
         cols = _projected_columns(self.schema, query)
         if cols is not None:
             struct = T.StructType([struct[c] for c in cols])
-        return self.spark.createDataFrame(
-            pa.Table.from_pylist(rows, schema=to_arrow_schema(struct)),
-            struct)
+        return local_frame(self.spark, struct, list(self._driver_tables(
+            query, leaf_queries, list(matched), iterators, now_millis,
+            DRIVER_BATCH_ROWS, matched, bounds)))
 
     def _spark_frame(self, query: Query, leaf_queries, files: list[str],
                      now_millis: int) -> DataFrame:
@@ -680,7 +747,7 @@ class QueryExecutor:
             # requested_value_fields projection and the SQL stage — an
             # aggregate like "SELECT count(*) AS n" must yield its own
             # (0-row or 1-row) schema, not the table's
-            df = self.spark.createDataFrame([], self.schema.to_struct_type())
+            df = local_frame(self.spark, self.schema.to_struct_type())
         else:
             # one scan over the distinct physical files (module docstring)
             df = self.spark.read.schema(
@@ -718,309 +785,6 @@ class QueryExecutor:
         if cols is not None:
             df = df.select(*cols)
         return df
-
-
-def _merge_scalar(op: str, a, b):
-    if op == "sum":
-        # null-tolerant like Spark's sum: null input contributes nothing
-        if a is None:
-            return b
-        if b is None:
-            return a
-        return a + b
-    if op == "min":
-        return b if (a is None or (b is not None and b < a)) else a
-    if op == "max":
-        return b if (a is None or (b is not None and b > a)) else a
-    if op in ("map_sum", "map_min", "map_max"):
-        out = dict(a or {})
-        for k, v in (b or {}).items():
-            if k in out:
-                if op == "map_sum":
-                    out[k] = out[k] + v
-                elif op == "map_min":
-                    out[k] = min(out[k], v)
-                else:
-                    out[k] = max(out[k], v)
-            else:
-                out[k] = v
-        return out
-    raise ValueError(op)
-
-
-def _null_safe_key(values):
-    """Sort-key tuple matching Spark's NULLS FIRST default: None sorts
-    below every value and never reaches a Python ``<`` comparison."""
-    return tuple((v is not None, v if v is not None else 0) for v in values)
-
-
-def _exact_keys(regions) -> tuple[tuple, set] | None:
-    """``(fields, key tuples)`` when every region pins the same key
-    fields each to a single point (min == max, both inclusive), else
-    None. A row matches such a query iff its tuple of those fields is
-    in the set."""
-    fields, keys = None, set()
-    for region in regions:
-        got = {}
-        for r in region.ranges:
-            if (r.min is None or r.min != r.max or r.field in got
-                    or not (r.min_inclusive and r.max_inclusive)):
-                return None
-            got[r.field] = (bytes(r.min) if isinstance(r.min, bytearray)
-                            else r.min)
-        if fields is None:
-            fields = tuple(sorted(got))
-        elif set(got) != set(fields):
-            return None
-        keys.add(tuple(got[f] for f in fields))
-    return None if fields is None else (fields, keys)
-
-
-def _sorted_row_iterator_gen(schema: Schema, query: Query, leaf_queries,
-                             files: list[str], batch_size: int,
-                             filters, aggs, iterators, now_millis: int,
-                             row_groups: dict | None = None,
-                             bounds: _KeyBounds | None = None):
-    """J1 k-way sorted merge: stream query results in total table order
-    (row keys..., sort keys...) WITHOUT a global Spark sort.
-
-    The reference's read path returns a sorted iterator by heap-merging
-    each leaf's sorted files and concatenating leaves (MergingIterator
-    .java:37-114 + ConcatenatingIterator.java:28-85 — leaf key ranges are
-    disjoint, so leaf-order concat of sorted runs is globally sorted).
-    This is the same shape driver-side: leaves in key order, per-leaf
-    ``heapq.merge`` over pyarrow batch readers, O(merge-width) memory.
-
-    Reads the plan :class:`QueryExecutor` made: ``leaf_queries`` and the
-    ``files`` that survived skipping; ``row_groups`` (``{file:
-    (ParquetFile, row groups, rows)}``, key-bounded queries) narrows each
-    read to the listed row groups, and ``bounds`` (the query's
-    :class:`_KeyBounds`) drops the rows outside them in Arrow.
-    ``iterators`` are the table- and query-level custom chains in
-    row-wise form.
-
-    Use when a consumer needs ordered streaming (export to a
-    sorted-input system, head-k in key order). For distributed consumers
-    prefer ``output.bulk_export`` (per-leaf sorted files, one Spark job);
-    this iterator is single-reader by design, like the reference's.
-    """
-    import heapq
-
-    import pyarrow.parquet as pq_mod
-
-    vr = bool(query.value_ranges)
-    in_value_ranges = compile_value_ranges(query.value_ranges)
-
-    key_names = schema.key_names
-    col_names = [f.name for f in schema.all_fields()]
-    # Arrow hands maps back as (key, value) lists; the aggregation merge
-    # and Spark's rows both use dicts
-    map_cols = {f.name for f in schema.all_fields()
-                if isinstance(f.dtype, T.MapType)}
-    surviving = set(files)
-    # a key-bounded read keeps only the rows inside the first row key's
-    # bounds, in Arrow, before any row becomes a Python dict: the matched
-    # row groups may be far larger than those rows, and the region
-    # filter below drops the rest
-    key0 = schema.row_key_names[0]
-
-    def file_rows(filename):
-        pf, rgs, _ = (row_groups or {}).get(filename) or (
-            pq_mod.ParquetFile(filename), None, None)
-        # schema evolution: a file written before add_value_column lacks
-        # the new column(s) — read what it has, yield None for the rest
-        have = set(pf.schema_arrow.names)
-        cols_here = [c for c in col_names if c in have]
-        for batch in pf.iter_batches(batch_size=batch_size,
-                                     columns=cols_here, row_groups=rgs):
-            if bounds is not None:
-                batch = batch.filter(_key_mask(batch.column(key0), bounds))
-            pydict = {}
-            for n, c in zip(batch.schema.names, batch.columns):
-                vals = c.to_pylist()
-                if n in map_cols:
-                    vals = [None if v is None else dict(v) for v in vals]
-                pydict[n] = vals
-            for i in range(batch.num_rows):
-                row = {n: pydict[n][i] if n in have else None
-                       for n in col_names}
-                yield row
-
-    # canonicalise every region ONCE: Range.contains canonicalises per
-    # call (constructing throwaway Range objects), which on a 10M-row
-    # sorted export is hundreds of millions of allocations on the
-    # single-reader driver path
-    def canon(region):
-        return [(rr.field, rr.min, rr.max)
-                for r in region.ranges for rr in (r.canonicalise(),)]
-
-    def in_ranges(row, ranges):
-        for fld, mn, mx in ranges:
-            v = row[fld]
-            if mn is not None and (v is None or v < mn):
-                return False
-            if mx is not None and v is not None and v >= mx:
-                return False
-        return True
-
-    exact = _exact_keys(query.regions)
-    if exact is not None:
-        # every region pins the same key fields (a batch get): one set
-        # lookup per row instead of a scan over the regions
-        exact_fields, exact_set = exact
-
-        def row_matches(row):
-            return tuple(row[f] for f in exact_fields) in exact_set
-    else:
-        q_regions = [canon(reg) for reg in query.regions]
-
-        def row_matches(row):
-            return any(in_ranges(row, rs) for rs in q_regions)
-
-    agg_ops = {a.column: a for a in (aggs or [])}
-    row_key = lambda row: _null_safe_key(row[k] for k in key_names)  # noqa: E731
-
-    def leaf_stream(lq, leaf_ranges):
-        # the leaf's files that survived the planner's skipping
-        fns = sorted({r.filename for r in lq.files} & surviving)
-        runs = [file_rows(fn) for fn in fns]
-        for row in heapq.merge(*runs, key=row_key):
-            # leaf region is the dedup guard for shared ancestor files
-            if not in_ranges(row, leaf_ranges):
-                continue
-            if not row_matches(row):
-                continue
-            if vr and not in_value_ranges(row):
-                continue
-            ok = True
-            for f in (filters or []):
-                v = row.get(f.column)
-                if v is None or now_millis - v >= f.max_age_millis:
-                    ok = False
-                    break
-            if ok:
-                yield row
-
-    def stream():
-        # key order: unbounded-below (min=None) sorts first per dimension
-        leaves = sorted(leaf_queries, key=lambda lq: [
-            (0,) if r.min is None else (1, r.min)
-            for r in lq.leaf.region.ranges])
-        dim0 = key_names[0]
-        # concatenating disjoint-dim-0 leaves preserves total order, but
-        # a tree split on a later dimension has leaves whose dim-0
-        # ranges OVERLAP — those must heap-merge together or the stream
-        # interleaves out of order. Group consecutive leaves into
-        # overlap components on dim 0 (component = leaves whose dim-0
-        # ranges touch the running max), merge within, concat across.
-        components: list[list] = []
-        cur_hi: tuple | None = None  # (bounded?, value); None = empty
-        for lq in leaves:
-            ranges = canon(lq.leaf.region)
-            lo = next((mn for f, mn, mx in ranges if f == dim0), None)
-            hi = next((mx for f, mn, mx in ranges if f == dim0), None)
-            # new component iff the previous one is bounded above and
-            # this leaf starts at or past that bound (ranges are
-            # [min, max), so lo == prev hi means disjoint-adjacent)
-            if not components or (cur_hi is not None and cur_hi[0]
-                                  and lo is not None and lo >= cur_hi[1]):
-                components.append([(lq, ranges)])
-                cur_hi = (hi is not None, hi)
-            else:
-                components[-1].append((lq, ranges))
-                if cur_hi is not None and cur_hi[0]:
-                    cur_hi = (hi is not None,
-                              hi if hi is None or hi > cur_hi[1]
-                              else cur_hi[1])
-        for comp in components:
-            if len(comp) == 1:
-                yield from leaf_stream(*comp[0])
-            else:
-                yield from heapq.merge(
-                    *(leaf_stream(lq, rs) for lq, rs in comp), key=row_key)
-
-    # query-time processing — the same post-aggregation pipeline order as
-    # the Spark plan (table customs -> query-time filters -> query-time
-    # customs -> projection)
-    row_iterators, qt_iters = iterators
-    qt_filters = parse_filters(query.query_time_filters)
-    proj_cols = _projected_columns(schema, query)
-
-    def apply_row_iterators(row):
-        # custom chain runs AFTER filters + aggregation, matching the
-        # reference's filters -> aggregation -> custom composition
-        # (IteratorFactory.java:79-91) and the Spark read path
-        for fn in row_iterators:
-            row = fn(row)
-            if row is None:
-                return None
-        return row
-
-    def emit(rows):
-        for row in rows:
-            row = apply_row_iterators(row)
-            if row is None:
-                continue
-            ok = True
-            for f in qt_filters:
-                v = row.get(f.column)
-                if v is None or now_millis - v >= f.max_age_millis:
-                    ok = False
-                    break
-            if not ok:
-                continue
-            for fn in qt_iters:
-                row = fn(row)
-                if row is None:
-                    break
-            if row is None:
-                continue
-            if proj_cols is not None:
-                row = {n: row[n] for n in proj_cols}
-            yield row
-
-    if not agg_ops:
-        yield from emit(stream())
-        return
-
-    # A4 streaming group-adjacent aggregation (AggregatorIteratorImpl
-    # .java:64-93): input is key-sorted, so equal-key rows are adjacent —
-    # O(1) state, emit on key change
-    def aggregated():
-        # max_by/min_by keep (order, value) PAIR state separate from the
-        # accumulator: the order column may itself be aggregated in the
-        # same group, so acc's copy cannot serve as the comparison basis
-        current_key, acc, by_state = None, None, {}
-        by_aggs = [(col, a) for col, a in agg_ops.items()
-                   if a.op in ("max_by", "min_by")]
-
-        def finish(acc):
-            for col, _ in by_aggs:
-                acc[col] = by_state[col][1]
-            return acc
-
-        for row in stream():
-            k = tuple(row[n] for n in key_names)
-            if k != current_key:
-                if acc is not None:
-                    yield finish(acc)
-                current_key, acc = k, dict(row)
-                by_state = {col: (row[a.order_col], row[col])
-                            for col, a in by_aggs}
-            else:
-                for col, a in agg_ops.items():
-                    if a.op in ("max_by", "min_by"):
-                        cand = (row[a.order_col], row[col])
-                        cur = by_state[col]
-                        if (cand > cur) == (a.op == "max_by") \
-                                and cand != cur:
-                            by_state[col] = cand
-                    else:
-                        acc[col] = _merge_scalar(a.op, acc[col], row[col])
-        if acc is not None:
-            yield finish(acc)
-
-    yield from emit(aggregated())
 
 
 #: parsed-plan node names that make a statement a command, not a query.

@@ -6,8 +6,9 @@ order (ConcatenatingIterator.java:28-85). The Spark-native distributed
 form here:
 
 - ONE task per pruned leaf (``mapInPandas`` over a source DataFrame with
-  exactly one leaf descriptor per input partition — no exchange anywhere
-  in the plan).
+  exactly one task descriptor per input partition — no exchange anywhere
+  in the plan). Leaves whose first-key ranges overlap (a tree split on a
+  later dimension) share one task, which merges their processed streams.
 - Inside a task, a *vectorized* k-way merge over the leaf's sorted runs:
   pull one Arrow batch per file, cut every buffer at the minimum of the
   buffers' max keys (a lexicographic prefix count per buffer), sort the
@@ -25,11 +26,15 @@ Catalyst-side codegen for an Arrow-batched Python pipe but removes BOTH
 the range-sampling pass and the whole-table exchange; at 100 TB the
 exchange is the dominant cost and this plan has none.
 
-Processing parity: leaf-region dedup guard + query regions + ageOff
-filters + scalar continual aggregation are applied inside the task with
-Arrow kernels (same semantics as the Arrow compaction engine,
+Processing parity: leaf-region dedup guard + query regions + value
+ranges + ageOff filters + continual aggregation are applied inside the
+task with Arrow kernels (same semantics as the Arrow compaction engine,
 compact.rs:118-140). Leaf regions partition the row-key space, so
 per-leaf aggregation is complete — no cross-partition combine needed.
+
+The same merge (:func:`_component_stream`) serves the driver reads of
+``query.QueryExecutor`` (key-bounded queries and ``sorted_rows``), Arrow
+compaction and ``joins.cokeyed_join``.
 """
 
 from __future__ import annotations
@@ -45,7 +50,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sleeper_spark.partitions import sorted_leaves_dim0
 from sleeper_spark.query import Query
 from sleeper_spark.ranges import Range, Region
 from sleeper_spark.schema import Schema
@@ -74,37 +78,80 @@ def _leq_prefix_count(cols: list, bound: tuple) -> int:
     return _prefix_count(cols, bound, True)
 
 
-def _filter_chunk(t: pa.Table, leaf_ranges, query_regions, filters,
-                  now_millis: int) -> pa.Table:
-    def range_mask(fld, mn, mx):
-        arr = t.column(fld)
-        m = None
-        if mn is not None:
-            m = pc.greater_equal(arr, pa.scalar(mn, arr.type))
-        if mx is not None:
-            c = pc.less(arr, pa.scalar(mx, arr.type))
-            m = c if m is None else pc.and_(m, c)
-        return m
+def _and(a, b):
+    """Conjunction of two optional masks (None = every row)."""
+    return b if a is None else a if b is None else pc.and_(a, b)
 
-    mask = None
-    for fld, mn, mx in leaf_ranges:
-        m = range_mask(fld, mn, mx)
-        if m is not None:
-            mask = m if mask is None else pc.and_(mask, m)
-    qmask = None
-    for region in query_regions:
-        rmask = None
-        for fld, mn, mx in region:
-            m = range_mask(fld, mn, mx)
-            if m is not None:
-                rmask = m if rmask is None else pc.and_(rmask, m)
-        if rmask is None:
-            rmask = pa.array(np.ones(t.num_rows, dtype=bool))
-        qmask = rmask if qmask is None else pc.or_(qmask, rmask)
-    if qmask is not None:
-        mask = qmask if mask is None else pc.and_(mask, qmask)
-    if mask is not None:
-        t = t.filter(mask)
+
+def _range_mask(t: pa.Table, fld: str, mn, mx):
+    """Rows of ``t`` inside the canonical ``[mn, mx)`` on ``fld``; None
+    when the range is unbounded on both sides."""
+    arr = t.column(fld)
+    m = None
+    if mn is not None:
+        m = pc.greater_equal(arr, pa.scalar(mn, arr.type))
+    if mx is not None:
+        m = _and(m, pc.less(arr, pa.scalar(mx, arr.type)))
+    return m
+
+
+def _value_range_mask(t: pa.Table, fld: str, mn, min_inclusive: bool, mx,
+                      max_inclusive: bool):
+    """One value range with ``query.apply_value_ranges_df``'s SQL
+    semantics: a NULL compares to NULL and fails a real bound, an
+    unbounded range adds no predicate and keeps NULL rows. Built from
+    the inclusive flags, not by canonicalising: doubles have no
+    successor."""
+    col = t.column(fld)
+    m = None
+    if mn is not None:
+        m = (pc.greater_equal if min_inclusive else pc.greater)(col, mn)
+    if mx is not None:
+        m = _and(m, (pc.less_equal if max_inclusive else pc.less)(col, mx))
+    return m
+
+
+def _point_keys(regions) -> tuple[tuple, list] | None:
+    """``(fields, key tuples)`` when every region pins the same key
+    fields each to one value (min == max, both inclusive: a batch get),
+    else None."""
+    fields, keys = None, []
+    for region in regions:
+        got = {}
+        for r in region.ranges:
+            if (r.min is None or r.min != r.max or r.field in got
+                    or not (r.min_inclusive and r.max_inclusive)):
+                return None
+            got[r.field] = r.min
+        if fields is None:
+            fields = tuple(sorted(got))
+        elif set(got) != set(fields):
+            return None
+        keys.append(tuple(got[f] for f in fields))
+    return (fields, keys) if fields else None
+
+
+def _point_key_mask(t: pa.Table, point_keys: tuple[tuple, list]) -> pa.Array:
+    """Rows whose key tuple is one of the point keys: set membership on
+    one field, a left-semi join on the tuple for several (``pc.is_in``
+    has no struct kernel). Either way a batch of N keys costs one hash
+    probe per row, not N range masks."""
+    fields, keys = point_keys
+    probe = {f: pa.array([k[i] for k in keys], t.schema.field(f).type)
+             for i, f in enumerate(fields)}
+    if len(fields) == 1:
+        return pc.is_in(t.column(fields[0]), value_set=probe[fields[0]])
+    hit = (t.select(list(fields))
+           .append_column("__row", pa.array(np.arange(t.num_rows)))
+           .join(pa.table(probe), keys=list(fields), join_type="left semi"))
+    mask = np.zeros(t.num_rows, dtype=bool)
+    mask[hit.column("__row").to_numpy()] = True
+    return pa.array(mask)
+
+
+def _age_off(t: pa.Table, filters, now_millis: int) -> pa.Table:
+    """Drop rows whose ``(column, max_age)`` timestamp is NULL or at
+    least ``max_age`` old (AgeOffFilter.java:82-85)."""
     for col, max_age in filters:
         arr = t.column(col)
         keep = pc.and_(
@@ -114,6 +161,33 @@ def _filter_chunk(t: pa.Table, leaf_ranges, query_regions, filters,
                     pa.scalar(max_age, pa.int64())))
         t = t.filter(keep)
     return t
+
+
+def _filter_chunk(t: pa.Table, desc: dict) -> pa.Table:
+    """Keep the rows inside the leaf region (the dedup guard for shared
+    ancestor files), inside some query region or point key, and inside
+    the value ranges; then drop the aged-off rows."""
+    mask = None
+    for fld, mn, mx in desc["leaf_ranges"]:
+        mask = _and(mask, _range_mask(t, fld, mn, mx))
+    if desc.get("point_keys") is not None:
+        mask = _and(mask, _point_key_mask(t, desc["point_keys"]))
+    else:
+        qmask = None
+        for region in desc["query_regions"]:
+            rmask = None
+            for fld, mn, mx in region:
+                rmask = _and(rmask, _range_mask(t, fld, mn, mx))
+            if rmask is None:  # this region holds every row
+                qmask = None
+                break
+            qmask = rmask if qmask is None else pc.or_(qmask, rmask)
+        mask = _and(mask, qmask)
+    for vr in desc.get("value_ranges", ()):
+        mask = _and(mask, _value_range_mask(t, *vr))
+    if mask is not None:
+        t = t.filter(mask)
+    return _age_off(t, desc["filters"], desc["now_millis"])
 
 
 def _count_below(col: pa.Array, bound) -> int:
@@ -130,17 +204,18 @@ def _declared_arrow_schema(schema) -> "pa.Schema":
     return to_arrow_schema(schema.to_struct_type())
 
 
-def _merge_leaf(desc: dict) -> Iterator[pa.Table]:
-    """Vectorized k-way merge of one leaf's sorted runs, bounded memory.
+def _read_run(pf: pq.ParquetFile, desc: dict, row_groups=None,
+              key_mask=None) -> Iterator[pa.Table]:
+    """One sorted file as a run: non-empty key-sorted tables in
+    ``desc["column_order"]``.
 
-    Fast path: one remaining run streams through untouched (no compare,
-    no re-sort) — after a compaction most leaves are a single file.
-
+    ``row_groups`` narrows the read (else ``prune_range`` may);
+    ``key_mask`` maps a batch's first key column to the rows to keep.
     ``prune_range`` = (dim0_key, lo, hi): subrange merges (a) skip
     row groups whose stats fall outside [lo, hi), and (b) trim each
-    batch to the exact range BEFORE it enters the merge — the runs are
+    batch to the exact range BEFORE it enters the merge — the run is
     sorted, so the trim is a head/tail slice, and a batch whose tail
-    passes ``hi`` ends its file's read early. Without the trim every
+    passes ``hi`` ends the read early. Without the trim every
     boundary row group's rows would flow through merge+sort just to be
     filtered afterwards, costing more than the parallelism buys.
     """
@@ -153,49 +228,26 @@ def _merge_leaf(desc: dict) -> Iterator[pa.Table]:
     # schema-on-read, the same semantics Spark's explicit read schema
     # gives the DataFrame path
     declared: pa.Schema | None = desc.get("arrow_schema")
-    readers = []
-    absent: list[list[str]] = []
-    for fn in desc["files"]:
-        pf = pq.ParquetFile(fn)
-        have = set(pf.schema_arrow.names)
-        miss = [c for c in col_order if c not in have]
-        if miss and declared is None:
-            raise ValueError(
-                f"{fn} lacks column(s) {miss} and no declared schema was "
-                "provided to pad them — schema-evolved tables need "
-                "desc['arrow_schema']")
-        kwargs = {}
-        if prune is not None:
-            from sleeper_spark.sketches import row_groups_overlapping
+    have = set(pf.schema_arrow.names)
+    miss = [c for c in col_order if c not in have]
+    if miss and declared is None:
+        raise ValueError(
+            f"a run lacks column(s) {miss} and no declared schema was "
+            "provided to pad them — schema-evolved tables need "
+            "desc['arrow_schema']")
+    if prune is not None and row_groups is None:
+        from sleeper_spark.sketches import row_groups_overlapping
 
-            rgs = row_groups_overlapping(pf, prune[0], prune[1], prune[2])
-            if rgs is not None:
-                if not rgs:
-                    readers.append(None)
-                    absent.append(miss)
-                    continue
-                kwargs["row_groups"] = rgs
-        it = pf.iter_batches(batch_size=desc.get("batch_rows", _BATCH_ROWS),
-                             columns=[c for c in col_order if c in have],
-                             **kwargs)
-        readers.append(it)
-        absent.append(miss)
-    # buffer per file: (table, key arrays) — key arrays cached with the
-    # buffer so they are converted once per batch, not once per round
-    buffers: list[tuple[pa.Table, list[pa.Array]] | None] = [None] * len(readers)
-    # canonical batch schema: a leaf's files may come from different
-    # writers (J4 DataFrame ingest emits nullable fields, J5 RDD ingest
-    # non-null ones) and concat_tables refuses mixed nullability — relax
-    # every batch to the first file's types with nullable fields (a
-    # metadata-only cast when only nullability differs)
-    canon: list[pa.Schema | None] = [None]
-    # per-file carry: a buffer must always END at a group boundary of
-    # its run. A raw batch boundary may split an equal-key group (a
-    # user-supplied file is not guaranteed internally collapsed), and
-    # both cut rules — the multi-run min-of-max bound and the single-run
-    # stream-through — treat a buffer's last key as the run's last
-    # occurrence of that key. So refill withholds each batch's trailing
-    # equal-key group and prepends it to the file's next batch.
+        row_groups = row_groups_overlapping(pf, prune[0], prune[1], prune[2])
+        if row_groups == []:
+            return
+    # a run's tables must END at a group boundary: a raw batch boundary
+    # may split an equal-key group (a user-supplied file is not
+    # guaranteed internally collapsed), and both cut rules of
+    # _merge_runs — the multi-run min-of-max bound and the single-run
+    # stream-through — treat a table's last key as the run's last
+    # occurrence of that key. So each batch's trailing equal-key group
+    # is withheld and prepended to the next batch.
     #
     # ONLY when aggregating: group boundaries exist for group-adjacent
     # aggregation. Without aggs, a split group merely spreads equal keys
@@ -203,77 +255,93 @@ def _merge_leaf(desc: dict) -> Iterator[pa.Table]:
     # have no defined order), and withholding would buffer an entire
     # run in memory whenever one key value dominates a file.
     need_group_boundaries = bool(desc.get("aggs"))
-    carries: list[pa.Table | None] = [None] * len(readers)
+    carry: pa.Table | None = None
+    batches = pf.iter_batches(
+        batch_size=desc.get("batch_rows", _BATCH_ROWS),
+        columns=[c for c in col_order if c in have], row_groups=row_groups)
+    for batch in batches:
+        if key_mask is not None:
+            batch = batch.filter(key_mask(batch.column(key_names[0])))
+            if not batch.num_rows:
+                continue
+        t = pa.Table.from_batches([batch])
+        for c in miss:
+            fld = declared.field(c)
+            t = t.append_column(pa.field(fld.name, fld.type, True),
+                                pa.nulls(t.num_rows, fld.type))
+        t = t.select(col_order)
+        last = False
+        if prune is not None:
+            key, lo, hi = prune
+            col = t.column(key).combine_chunks()
+            start = _count_below(col, lo) if lo is not None else 0
+            end = _count_below(col, hi) if hi is not None else t.num_rows
+            last = end < t.num_rows  # sorted run: the rest is past hi
+            t = t.slice(start, max(0, end - start))
+        if carry is not None:
+            t = pa.concat_tables([carry, t])
+            carry = None
+        if t.num_rows and not last and need_group_boundaries:
+            # run continues: withhold the trailing equal-key group
+            cols = [t.column(k).combine_chunks() for k in key_names]
+            cnt_lt = _prefix_count(
+                cols, tuple(c[len(c) - 1].as_py() for c in cols), False)
+            carry, t = t.slice(cnt_lt), t.slice(0, cnt_lt)
+        if t.num_rows:
+            yield t
+        if last:
+            break
+    if carry is not None and carry.num_rows:
+        yield carry  # final group of the run
+
+
+def _merge_runs(runs: list, key_names: list[str]) -> Iterator[pa.Table]:
+    """Vectorized k-way merge of sorted runs (iterators of non-empty
+    key-sorted tables), bounded memory.
+
+    Fast path: one remaining run streams through untouched (no compare,
+    no re-sort) — after a compaction most leaves are a single file.
+    Otherwise each round cuts every run's buffered table at the minimum
+    of the buffers' last keys and sorts that bounded chunk.
+    """
+    runs = list(runs)
+    # buffer per run: (table, key arrays) — key arrays cached with the
+    # buffer so they are converted once per table, not once per round
+    buffers: list[tuple[pa.Table, list[pa.Array]] | None] = [None] * len(runs)
+    # canonical schema: a leaf's files may come from different writers
+    # (J4 DataFrame ingest emits nullable fields, J5 RDD ingest non-null
+    # ones) and concat_tables refuses mixed nullability — relax every
+    # table to the first one's types with nullable fields (a
+    # metadata-only cast when only nullability differs)
+    canon: pa.Schema | None = None
 
     def refill(i) -> None:
-        if buffers[i] is not None:
+        nonlocal canon
+        if buffers[i] is not None or runs[i] is None:
             return
-        while True:
-            it = readers[i]
-            if it is None:
-                if carries[i] is not None:  # final group of the run
-                    t = carries[i]
-                    carries[i] = None
-                    buffers[i] = (t, [t.column(k).combine_chunks()
-                                      for k in key_names])
-                return
-            try:
-                batch = next(it)
-            except StopIteration:
-                readers[i] = None
-                continue  # loop back to flush the carry, if any
-            t = pa.Table.from_batches([batch])
-            for c in absent[i]:
-                fld = declared.field(c)
-                t = t.append_column(pa.field(fld.name, fld.type, True),
-                                    pa.nulls(t.num_rows, fld.type))
-            t = t.select(col_order)
-            if canon[0] is None:
-                canon[0] = pa.schema(
-                    [pa.field(fld.name, fld.type) for fld in t.schema])
-            if t.schema != canon[0]:
-                t = t.cast(canon[0])
-            if prune is not None:
-                key, lo, hi = prune
-                col = t.column(key).combine_chunks()
-                start = _count_below(col, lo) if lo is not None else 0
-                end = _count_below(col, hi) if hi is not None else t.num_rows
-                if end < t.num_rows:
-                    readers[i] = None  # sorted run: rest is past hi
-                if end <= start:
-                    continue  # nothing in range; flush carry via the loop
-                if start > 0 or end < t.num_rows:
-                    t = t.slice(start, end - start)
-            if carries[i] is not None:
-                t = pa.concat_tables([carries[i], t])
-                carries[i] = None
-            cols = [t.column(k).combine_chunks() for k in key_names]
-            if readers[i] is not None and need_group_boundaries:
-                # run continues: withhold the trailing equal-key group
-                last = tuple(c[len(c) - 1].as_py() for c in cols)
-                cnt_lt = _prefix_count(cols, last, False)
-                if cnt_lt == 0:
-                    carries[i] = t  # whole batch one group: keep growing
-                    continue
-                if cnt_lt < t.num_rows:
-                    carries[i] = t.slice(cnt_lt)
-                    t = t.slice(0, cnt_lt)
-                    cols = [c.slice(0, cnt_lt) for c in cols]
-            buffers[i] = (t, cols)
+        t = next(runs[i], None)
+        if t is None:
+            runs[i] = None
             return
+        if canon is None:
+            canon = pa.schema(
+                [pa.field(fld.name, fld.type) for fld in t.schema])
+        if t.schema != canon:
+            t = t.cast(canon)
+        buffers[i] = (t, [t.column(k).combine_chunks() for k in key_names])
 
     sort_spec = [(k, "ascending") for k in key_names]
     while True:
-        for i in range(len(readers)):
+        for i in range(len(runs)):
             refill(i)
-        active = [i for i in range(len(readers)) if buffers[i] is not None]
+        active = [i for i in range(len(runs)) if buffers[i] is not None]
         if not active:
             return
-        if len(active) == 1 and all(r is None for j, r in enumerate(readers)
+        if len(active) == 1 and all(r is None for j, r in enumerate(runs)
                                     if j != active[0]):
-            # single surviving run: stream it through as-is (refill
-            # guarantees the buffer ends at a group boundary of its run,
-            # so the chunk cannot split an equal-key group)
+            # single surviving run: stream it through as-is (its tables
+            # end at group boundaries, so the chunk cannot split an
+            # equal-key group)
             i = active[0]
             t, _ = buffers[i]
             buffers[i] = None
@@ -294,8 +362,23 @@ def _merge_leaf(desc: dict) -> Iterator[pa.Table]:
             else:
                 buffers[i] = None
         chunk = pa.concat_tables(parts) if len(parts) > 1 else parts[0]
-        chunk = chunk.sort_by(sort_spec)
-        yield chunk
+        yield chunk.sort_by(sort_spec)
+
+
+def _merge_leaf(desc: dict, opened: dict | None = None,
+                key_mask=None) -> Iterator[pa.Table]:
+    """Merge one leaf's sorted files (``desc["files"]``) into key-sorted
+    chunks: a :func:`_read_run` per file fed to :func:`_merge_runs`.
+    ``opened`` (``{file: (ParquetFile, row groups, rows)}``) reuses
+    open handles and reads only the listed row groups."""
+    runs = []
+    for fn in desc["files"]:
+        if opened is None:
+            runs.append(_read_run(pq.ParquetFile(fn), desc))
+        else:
+            pf, rgs, _ = opened[fn]
+            runs.append(_read_run(pf, desc, rgs, key_mask))
+    return _merge_runs(runs, desc["key_names"])
 
 
 def _sorted_group_starts(chunk: pa.Table, key_names: list[str]) -> np.ndarray:
@@ -430,8 +513,10 @@ def _aggregate_chunk_sorted(chunk: pa.Table, desc: dict) -> pa.Table:
     """Collapse equal-(row key + sort key) rows of a key-sorted chunk —
     the Arrow-engine realisation of the FULL aggregation algebra (A1-A5:
     numeric sum, min/max on any orderable, string/binary concat-sum,
-    map_sum/map_min/map_max), group-adjacent like the reference's
-    streaming aggregator (AggregatorIteratorImpl.java:64-93).
+    map_sum/map_min/map_max, max_by/min_by), group-adjacent like the
+    reference's streaming aggregator (AggregatorIteratorImpl.java:64-93).
+    ``desc["aggs"]`` holds ``(column, op)`` pairs, and
+    ``(column, op, order_column)`` for max_by/min_by.
 
     Sorted input means group ids come from one neighbour-compare pass
     (no hash of the key columns) and the output is ALREADY in key order —
@@ -439,7 +524,7 @@ def _aggregate_chunk_sorted(chunk: pa.Table, desc: dict) -> pa.Table:
     contiguous run, so a ListArray over the group offsets + binary_join
     does the whole column in C++."""
     keys = desc["key_names"]
-    has_maps = any(op in _MAP_OPS for _, op in desc["aggs"])
+    has_maps = any(a[1] in _MAP_OPS for a in desc["aggs"])
     n = chunk.num_rows
     starts = _sorted_group_starts(chunk, keys)
     ng = len(starts)
@@ -455,10 +540,13 @@ def _aggregate_chunk_sorted(chunk: pa.Table, desc: dict) -> pa.Table:
     scalars: list[tuple[str, str]] = []
     concats: list[str] = []
     maps: list[tuple[str, str]] = []
-    for c, op in desc["aggs"]:
+    bys: list[tuple[str, str, str]] = []
+    for c, op, *order in desc["aggs"]:
         typ = chunk.schema.field(c).type
         if op in _MAP_OPS:
             maps.append((c, _MAP_OPS[op]))
+        elif op in ("max_by", "min_by"):
+            bys.append((c, op, order[0]))
         elif op == "sum" and (pa.types.is_string(typ)
                               or pa.types.is_large_string(typ)
                               or pa.types.is_binary(typ)
@@ -468,7 +556,7 @@ def _aggregate_chunk_sorted(chunk: pa.Table, desc: dict) -> pa.Table:
             scalars.append((c, op))
 
     gid_per_row = None
-    if scalars or maps:
+    if scalars or maps or bys:
         gid_per_row = np.repeat(np.arange(ng, dtype=np.int64),
                                 np.diff(bounds))
     if scalars:
@@ -494,6 +582,18 @@ def _aggregate_chunk_sorted(chunk: pa.Table, desc: dict) -> pa.Table:
         out_cols[c] = pc.binary_join(lst, sep)
     for c, op in maps:
         out_cols[c] = _agg_map_column(chunk.column(c), gid_per_row, ng, op)
+    for c, op, order in bys:
+        # pair state: the value of each group's (order, value) extremum,
+        # read from the INPUT rows (the order column may itself be
+        # aggregated). Ties on the order column break on the value, as
+        # the Spark engine's max(struct(o, v)) does. Sorting by group
+        # first keeps each group's rows at its original offsets.
+        way = "descending" if op == "max_by" else "ascending"
+        idx = pc.sort_indices(
+            pa.table({"__g": gid_per_row, "__o": chunk.column(order),
+                      "__v": chunk.column(c)}),
+            sort_keys=[("__g", "ascending"), ("__o", way), ("__v", way)])
+        out_cols[c] = chunk.column(c).take(idx.take(take_idx))
 
     orig = pa.schema([chunk.schema.field(name)
                       for name in desc["column_order"]])
@@ -503,45 +603,127 @@ def _aggregate_chunk_sorted(chunk: pa.Table, desc: dict) -> pa.Table:
 
 
 def _process_chunk(chunk: pa.Table, desc: dict) -> pa.Table:
-    chunk = _filter_chunk(chunk, desc["leaf_ranges"], desc["query_regions"],
-                          desc["filters"], desc["now_millis"])
+    chunk = _filter_chunk(chunk, desc)
     if desc["aggs"] and chunk.num_rows:
         chunk = _aggregate_chunk_sorted(chunk, desc)
     return chunk
+
+
+def _agg_spec(aggs) -> list[tuple]:
+    """Parsed aggregations as ``desc["aggs"]`` entries."""
+    return [(a.column, a.op) + ((a.order_col,) if a.order_col else ())
+            for a in aggs]
+
+
+def _query_desc(schema: Schema, query: Query, filters, aggs,
+                now_millis: int, batch_rows: int) -> dict:
+    """The part of a leaf descriptor shared by every leaf a query reads:
+    its regions (or point keys) and value ranges, and the table's parsed
+    ageOff ``filters`` and ``aggs``. :func:`_leaf_desc` adds the leaf."""
+    points = _point_keys(query.regions)
+    return {
+        "query_regions": [] if points else [
+            [(r.field, r.min, r.max) for r in
+             (rr.canonicalise() for rr in region.ranges)]
+            for region in query.regions],
+        "point_keys": points,
+        "value_ranges": [(r.field, r.min, r.min_inclusive, r.max,
+                          r.max_inclusive) for r in query.value_ranges],
+        "filters": [(f.column, f.max_age_millis) for f in filters],
+        "aggs": _agg_spec(aggs),
+        "key_names": list(schema.key_names),
+        "column_order": [f.name for f in schema.all_fields()],
+        "arrow_schema": _declared_arrow_schema(schema),
+        "now_millis": now_millis,
+        "batch_rows": batch_rows,
+    }
+
+
+def _leaf_desc(query_desc: dict, leaf, files: list[str]) -> dict:
+    return dict(query_desc, leaf_id=leaf.id, files=files, leaf_ranges=[
+        (r.field, r.min, r.max)
+        for r in (rr.canonicalise() for rr in leaf.region.ranges)])
+
+
+def _dim0_components(leaves, dim0: str) -> list[list]:
+    """``leaves`` in key order, grouped so that concatenating the
+    groups' merged streams is the total table order. On a tree split
+    only on dimension 0 the leaves are disjoint there and each is its
+    own group. A split on a later dimension leaves siblings whose
+    dimension-0 ranges overlap; a leaf joins the current group while it
+    starts below the group's highest dimension-0 upper bound (ranges are
+    ``[min, max)``, so starting at that bound is disjoint)."""
+    def lower(leaf):
+        lo = leaf.region.range_for(dim0).min
+        return (0,) if lo is None else (1, lo)
+
+    groups: list[list] = []
+    hi = None  # the current group's upper bound; None = unbounded
+    for leaf in sorted(leaves, key=lower):
+        r = leaf.region.range_for(dim0).canonicalise()
+        if groups and (hi is None or r.min is None or r.min < hi):
+            groups[-1].append(leaf)
+            hi = None if hi is None or r.max is None else max(hi, r.max)
+        else:
+            groups.append([leaf])
+            hi = r.max
+    return groups
+
+
+def _component_stream(descs: list[dict], tag_col: str | None = None,
+                      opened: dict | None = None,
+                      key_mask=None) -> Iterator[pa.Table]:
+    """The processed rows of one dimension-0 component (one descriptor
+    per leaf, see :func:`_dim0_components`) as non-empty tables in total
+    key order: each leaf's merged chunks go through
+    :func:`_process_chunk`, and the leaves' streams merge when there are
+    several. ``descs`` is not empty. ``tag_col`` adds a column holding
+    each row's leaf id before that merge; ``opened`` and ``key_mask`` go
+    to :func:`_merge_leaf`."""
+    def leaf_stream(desc):
+        for chunk in _merge_leaf(desc, opened, key_mask):
+            out = _process_chunk(chunk, desc)
+            if not out.num_rows:
+                continue
+            if tag_col is not None:
+                out = out.append_column(
+                    pa.field(tag_col, pa.string(), False),
+                    pa.array([desc["leaf_id"]] * out.num_rows, pa.string()))
+            yield out
+
+    streams = [leaf_stream(d) for d in descs]
+    if len(streams) == 1:
+        return streams[0]
+    # leaf regions are disjoint, so no key group spans two streams
+    return _merge_runs(streams, descs[0]["key_names"])
 
 
 def distributed_sorted_scan(table, query: Query | None = None,
                             now_millis: int | None = None,
                             batch_rows: int = _BATCH_ROWS,
                             leaf_id_col: str | None = None) -> DataFrame:
-    """Build the zero-shuffle sorted scan plan for a table (S2/J1/J6).
-
-    Requires the table's processing config to be Arrow-expressible
-    (full aggregation algebra + ageOff; same gate as the Arrow
-    compaction engine — only custom iterators are excluded, and those
-    are applied afterwards as order-preserving DataFrame transforms,
-    row-wise by the U1 contract).
+    """Build the zero-shuffle sorted scan plan for a table (S2/J1/J6):
+    one task per dimension-0 component of the pruned leaves
+    (:func:`_dim0_components` — one leaf each unless the tree splits on
+    a later dimension). The table's ageOff filters and aggregation run
+    inside the task on the Arrow kernels; custom iterators are applied
+    afterwards as order-preserving DataFrame transforms, row-wise by the
+    U1 contract. ``leaf_id_col`` adds a column holding each row's leaf
+    id.
     """
     import time as _time
 
-    from sleeper_spark import compaction as compaction_mod
     from sleeper_spark.iterators import (
         apply_custom_iterators,
         parse_aggregations,
         parse_filters,
     )
+    from sleeper_spark.query import (
+        _file_may_match,
+        local_frame,
+        reject_value_ranges_on_aggregation,
+    )
 
-    # algebra-only gate: custom iterators are fine here (applied below
-    # as order-preserving DataFrame transforms) — gating on the stricter
-    # compaction-engine check used to force the full-shuffle fallback
-    # for any iterators+aggregations table
-    if not compaction_mod.arrow_algebra_supported(
-            table.schema, table.props.aggregations) \
-            and parse_aggregations(table.props.aggregations):
-        raise ValueError(
-            "distributed_sorted_scan needs an Arrow-expressible processing "
-            "config (sum/min/max, concat-sum, map_* + ageOff); use query() "
-            "or sorted_rows() for array-valued aggregations")
     spark = table.spark
     schema: Schema = table.schema
     tree = table.store.tree
@@ -550,90 +732,59 @@ def distributed_sorted_scan(table, query: Query | None = None,
     if query is None:
         query = Query([Region(tuple(
             Range(f.name, None, None) for f in schema.row_key_fields))])
-    from sleeper_spark.query import (
-        _file_may_match,
-        apply_value_ranges_df,
-        reject_value_ranges_on_aggregation,
-    )
+    aggs = parse_aggregations(table.props.aggregations)
+    reject_value_ranges_on_aggregation(query.value_ranges, aggs)
 
-    reject_value_ranges_on_aggregation(
-        query.value_ranges, parse_aggregations(table.props.aggregations))
-
-    leaves = [lf for lf in sorted_leaves_dim0(tree)
+    query_desc = _query_desc(schema, query,
+                             parse_filters(table.props.filters), aggs,
+                             now_millis, batch_rows)
+    leaves = [lf for lf in tree.leaves()
               if any(reg.overlaps(lf.region) for reg in query.regions)]
-    descs = []
-    for leaf in leaves:
-        refs = table.store.files_for_leaf_query(leaf.id)
-        if not refs:
-            continue
-        files = sorted({r.filename for r in refs})
-        if query.value_ranges:
-            files = [f for f in files
-                     if _file_may_match(f, query.value_ranges)]
-            if not files:
-                continue
-        descs.append({
-            "leaf_id": leaf.id,
-            "files": files,
-            "leaf_ranges": [(r.field, r.min, r.max) for r in
-                            (rr.canonicalise() for rr in leaf.region.ranges)],
-            "query_regions": [
-                [(r.field, r.min, r.max) for r in
-                 (rr.canonicalise() for rr in region.ranges)]
-                for region in query.regions],
-            "filters": [(f.column, f.max_age_millis)
-                        for f in parse_filters(table.props.filters)],
-            "aggs": [(a.column, a.op)
-                     for a in parse_aggregations(table.props.aggregations)],
-            "key_names": list(schema.key_names),
-            "column_order": [f.name for f in schema.all_fields()],
-            "arrow_schema": _declared_arrow_schema(schema),
-            "now_millis": now_millis,
-            "batch_rows": batch_rows,
-        })
+    tasks = []
+    for component in _dim0_components(leaves, schema.row_key_names[0]):
+        descs = []
+        for leaf in component:
+            files = sorted({r.filename
+                            for r in table.store.files_for_leaf_query(leaf.id)})
+            if query.value_ranges:
+                files = [f for f in files
+                         if _file_may_match(f, query.value_ranges)]
+            if files:
+                descs.append(_leaf_desc(query_desc, leaf, files))
+        if descs:
+            tasks.append(descs)
     struct = schema.to_struct_type()
     if leaf_id_col is not None:
-        # leaf tag for shuffle-free partitioned export (S6): each task
-        # holds exactly one leaf, so partitionBy(leaf_id_col) writes one
-        # sorted file per leaf with no exchange
+        # leaf tag for shuffle-free partitioned export (S6): partitionBy
+        # (leaf_id_col) writes one sorted file per leaf with no exchange
         struct = T.StructType(
             list(struct.fields)
             + [T.StructField(leaf_id_col, T.StringType(), False)])
-    if not descs:
+    if not tasks:
         # an EMPTY source still flows through the custom-iterator chain
         # (same reason QueryExecutor.execute routes its empty source
         # through post-processing: a schema-changing iterator must give
         # the empty result the same schema as a non-empty one)
         return apply_custom_iterators(
-            spark.createDataFrame([], struct), table.props.iterators, schema)
+            local_frame(spark, struct), table.props.iterators, schema)
 
-    # exactly one leaf per input partition: parallelize(n items, n slices)
-    # puts item i in partition i, and mapInPandas preserves partitioning —
-    # the plan has NO exchange, so partition order remains leaf order.
-    # The descriptors travel in the function closure (pickled), so binary
-    # key bounds need no JSON encoding.
+    # exactly one component per input partition: parallelize(n items, n
+    # slices) puts item i in partition i, and mapInPandas preserves
+    # partitioning — the plan has NO exchange, so partition order
+    # remains key order. The descriptors travel in the function closure
+    # (pickled), so binary key bounds need no JSON encoding.
     src = spark.createDataFrame(
         spark.sparkContext.parallelize(
-            [(i,) for i in range(len(descs))], len(descs)),
+            [(i,) for i in range(len(tasks))], len(tasks)),
         "task int")
 
     def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in iterator:
             for task in pdf["task"]:
-                desc = descs[int(task)]
-                for chunk in _merge_leaf(desc):
-                    out = _process_chunk(chunk, desc)
-                    if out.num_rows:
-                        # maps_as_pydicts: Spark's pandas->Row conversion
-                        # needs dicts for MapType, not (k, v) tuple lists
-                        res = out.to_pandas(maps_as_pydicts="strict")
-                        if leaf_id_col is not None:
-                            res[leaf_id_col] = desc["leaf_id"]
-                        yield res
+                for out in _component_stream(tasks[int(task)], leaf_id_col):
+                    # maps_as_pydicts: Spark's pandas->Row conversion
+                    # needs dicts for MapType, not (k, v) tuple lists
+                    yield out.to_pandas(maps_as_pydicts="strict")
 
     df = src.mapInPandas(run, struct)
-    # STORED-value semantics, before custom iterators rewrite anything —
-    # identical to QueryExecutor.execute's ordering; row-wise filters
-    # preserve the sorted order
-    df = apply_value_ranges_df(df, query.value_ranges)
     return apply_custom_iterators(df, table.props.iterators, schema)

@@ -32,6 +32,7 @@ from sleeper_spark.query import (
     LeafPartitionQuery,
     Query,
     QueryExecutor,
+    local_frame,
 )
 from sleeper_spark.ranges import Range, Region
 from sleeper_spark.schema import Field, Schema
@@ -502,10 +503,11 @@ class SleeperTable:
 
         Read on the driver, like the reference's single-reader leaf
         query: the Bloom-surviving files' row groups that can hold the
-        key are merged and processed by the ``sorted_rows`` reader and
-        returned as a local DataFrame, so collecting it runs no Spark
-        job. The rows are read when this is called: a frame taken
-        before a compaction and GC still holds the earlier rows. It
+        key are merged and processed by the Arrow kernels of the sorted
+        scan and Arrow compaction, and returned as a local DataFrame, so
+        collecting it runs no Spark job. The rows are read when this is
+        called: a frame taken before a compaction and GC still holds the
+        earlier rows. It
         runs as the Spark plan instead when a table iterator has no
         row-wise form, when the matched row groups hold more than
         ``query.DRIVER_SCAN_ROWS`` rows, or when more than
@@ -597,7 +599,7 @@ class SleeperTable:
         from sleeper_spark.processing import apply_processing
 
         if not keys:
-            return self.spark.createDataFrame([], self.schema.to_struct_type())
+            return local_frame(self.spark, self.schema.to_struct_type())
         now_millis = now_millis if now_millis is not None else int(time.time() * 1000)
         self.store.refresh_if_stale(self.props.query_cache_timeout_seconds)
         tree = self.store.tree
@@ -627,9 +629,10 @@ class SleeperTable:
                                           now_millis)
         if df is not None:
             return df
-        if not files:
-            return self.spark.createDataFrame([], self.schema.to_struct_type())
-        scan = self.spark.read.schema(self.schema.to_struct_type()).parquet(*files)
+        # an empty source still flows through the processing below
+        scan = (self.spark.read.schema(self.schema.to_struct_type())
+                .parquet(*files) if files
+                else local_frame(self.spark, self.schema.to_struct_type()))
         from pyspark.sql import types as T
 
         # VALUES LocalRelation: the key set is caller-bounded; a

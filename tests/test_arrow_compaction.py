@@ -7,6 +7,7 @@ from pyspark.sql import types as T
 
 from sleeper_spark import Field, Schema, SleeperTable
 from sleeper_spark.compaction import arrow_engine_supported
+from sleeper_spark.iterators import parse_aggregations, validate_aggregations
 from sleeper_spark.properties import TableProperties
 
 SF = "/root/testdata/sf0.001"
@@ -51,14 +52,36 @@ def test_engine_selection(spark):
     assert arrow_engine_supported(m, TableProperties(aggregations="map_sum(m)"))
     a = Schema((Field("k", T.LongType()),), (),
                (Field("arr", T.ArrayType(T.LongType())),))
-    assert not arrow_engine_supported(a, TableProperties(aggregations="sum(arr)"))
+    with pytest.raises(ValueError, match="array column"):
+        validate_aggregations(a, parse_aggregations("sum(arr)"))
 
 
-@pytest.mark.parametrize("aggs", ["", "min(event_id), max(ts_ms), sum(n)"])
+def _versioned(spark, tmp_path, name, props):
+    """Upsert rows where each key's top version appears twice with
+    different values, so max_by must break the tie on the value."""
+    schema = Schema((Field("key", T.StringType()),), (),
+                    (Field("version", T.LongType()),
+                     Field("value", T.StringType())))
+    t = SleeperTable.create(spark, str(tmp_path / name), schema, props,
+                            split_points=["k5"])
+    rows = [(f"k{i % 10}", i % 3, f"v{i * 7 % 13}") for i in range(60)]
+    t.ingest(spark.createDataFrame(rows[::2], schema.to_struct_type()))
+    t.ingest(spark.createDataFrame(rows[1::2], schema.to_struct_type()))
+    return t
+
+
+_UPSERT = "max(version), max_by(value, version)"
+
+
+@pytest.mark.parametrize("aggs", ["", "min(event_id), max(ts_ms), sum(n)",
+                                  _UPSERT])
 def test_arrow_equals_spark_engine(spark, tmp_path, aggs):
-    base = dict(aggregations=aggs, filters="ageOff(ts_ms, 1209600000)")
-    ta = _make(spark, tmp_path, "a", TableProperties(compaction_engine="arrow", **base))
-    ts = _make(spark, tmp_path, "s", TableProperties(compaction_engine="spark", **base))
+    make, base = _make, dict(aggregations=aggs,
+                             filters="ageOff(ts_ms, 1209600000)")
+    if aggs == _UPSERT:
+        make, base = _versioned, dict(aggregations=aggs)
+    ta = make(spark, tmp_path, "a", TableProperties(compaction_engine="arrow", **base))
+    ts = make(spark, tmp_path, "s", TableProperties(compaction_engine="spark", **base))
     now = 1706140800000
     ta.compact(now_millis=now)
     ts.compact(now_millis=now)

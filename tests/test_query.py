@@ -1,9 +1,11 @@
 """Key-bounded queries read on the driver (query.QueryExecutor): a point
 get, a range scan or a batch get whose matched row groups and in-bounds
-key rows are under the caps is answered by the sorted-rows reader and
-handed back as a local DataFrame — no Spark job — while the Spark plan
-stays the answer for every other query. The two readers must agree row
-for row, and both must agree with a pure-Python model."""
+key rows are under the caps is merged and processed by the Arrow kernels
+of sorted_scan and handed back as a local DataFrame — no Spark job —
+while the Spark plan stays the answer for every other query. The two
+readers must agree row for row, both must agree with a pure-Python
+model, and the sorted_rows stream must give the same rows in key
+order."""
 
 from __future__ import annotations
 
@@ -206,7 +208,9 @@ def _check_parity(t, kind, rows, probe_keys, bloom_fp, regions,
 
     def agree(read, want, query=None):
         """The driver read runs no Spark job and equals the Spark plan
-        and the model; ``explain_query`` names the driver for it."""
+        and the model; ``explain_query`` names the driver for it, and
+        the ``sorted_rows`` stream of it is the Spark plan's rows in key
+        order."""
         if query is not None:
             assert t.explain_query(query)["read_path"] == "driver"
         got, jobs = _jobs_of(t.spark, lambda: read().collect())
@@ -214,6 +218,12 @@ def _check_parity(t, kind, rows, probe_keys, bloom_fp, regions,
             oracle = _norm(read().collect(), cols)
         assert jobs == [], (kind, query)
         assert _norm(got, cols) == oracle == _norm(want, cols), (kind, query)
+        if query is not None:
+            streamed = list(t.sorted_rows(query, now_millis=NOW))
+            order = [tuple(r[k] for k in t.schema.key_names)
+                     for r in streamed]
+            assert order == sorted(order), (kind, query)
+            assert _norm(streamed, cols) == oracle, (kind, query)
 
     ctx = (mock.patch.object(query_mod, "file_may_contain_keys",
                              lambda f, pts: True)
@@ -529,6 +539,15 @@ def test_exact_and_canonicalised_string_bounds(spark, tmp_path,
         streamed = [x["key"] for x in t.sorted_rows(q)]
         assert got == oracle == streamed == [
             w for w in sorted(words) if _inside(w, r)], r
+
+
+def test_empty_results_run_no_spark_job(spark, tmp_path):
+    schema = Schema((_long("key"),), (), (_long("v"),))
+    t = SleeperTable.create(spark, str(tmp_path / "t"), schema)
+    for read in (lambda: t.batch_exact_key_query([]),
+                 t.full_scan, t.sorted_scan):
+        rows, jobs = _jobs_of(spark, lambda: read().collect())
+        assert rows == [] and jobs == []
 
 
 def test_point_get_frame_outlives_compaction_and_gc(spark, tmp_path):

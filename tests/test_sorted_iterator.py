@@ -118,13 +118,16 @@ def test_null_sort_keys_and_null_sum(spark, tmp_path):
     t.ingest(spark.createDataFrame(rows, schema.to_struct_type()))
     got = [(r["k"], r["s"], r["v"]) for r in t.sorted_rows()]
     assert got == [("a", 1, 1), ("a", 5, None), ("b", 1, None), ("b", 2, 7)]
-    # null-tolerant streaming merge ops (nullable value columns are legal;
+    # null-tolerant aggregation kernel (nullable value columns are legal;
     # Spark's sum/min/max skip nulls rather than raise)
-    from sleeper_spark.query import _merge_scalar, _null_safe_key
-    assert _merge_scalar("sum", None, 3) == 3
-    assert _merge_scalar("sum", 3, None) == 3
-    assert _merge_scalar("sum", None, None) is None
-    # defensive NULLS FIRST ordering for any null that reaches the merge key
-    assert _null_safe_key([None, 2]) < _null_safe_key([1, 2])
-    assert sorted([_null_safe_key(["b"]), _null_safe_key([None]),
-                   _null_safe_key(["a"])])[0] == _null_safe_key([None])
+    import pyarrow as pa
+
+    from sleeper_spark.sorted_scan import _aggregate_chunk_sorted
+    chunk = pa.table({"k": ["a", "a", "b", "b", "c", "c"],
+                      "v": pa.array([None, 3, 3, None, None, None],
+                                    pa.int64())})
+    out = _aggregate_chunk_sorted(chunk, {
+        "key_names": ["k"], "aggs": [("v", "sum")],
+        "column_order": ["k", "v"]})
+    assert out.to_pylist() == [{"k": "a", "v": 3}, {"k": "b", "v": 3},
+                               {"k": "c", "v": None}]

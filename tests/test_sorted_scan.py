@@ -141,10 +141,9 @@ def test_bulk_export_zero_shuffle_path(spark, tmp_path):
 
 
 def test_bulk_export_fallback_custom_iterator_plus_aggs(spark, tmp_path):
-    """A custom iterator combined with aggregation is the one config the
-    zero-shuffle export can't run (the full algebra now can) — the
-    shuffle fallback must still apply filters -> aggs -> custom iterator
-    and export the same view full_scan serves."""
+    """A custom iterator combined with aggregation: the zero-shuffle
+    export applies filters -> aggs -> custom iterator and exports the
+    same view full_scan serves."""
     import pyarrow.parquet as pq
     from sleeper_spark import output
     t, ev = _events_table(spark, tmp_path, TableProperties(

@@ -492,7 +492,8 @@ class TestQueryPathReviewFixes:
 
     def test_sorted_rows_total_order_on_multidim_tree(self, spark, tmp_path):
         """A tree split on dimension 1 has leaves with overlapping dim-0
-        ranges: their streams must heap-merge, not concatenate."""
+        ranges: their streams must merge, not concatenate, in both the
+        driver stream and the distributed sorted scan."""
         schema = Schema((Field("a", T.LongType()), Field("b", T.LongType())),
                         (),
                         (Field("v", T.LongType(), nullable=True),))
@@ -506,9 +507,10 @@ class TestQueryPathReviewFixes:
         df = spark.range(100).selectExpr(
             "id AS a", "id % 20 AS b", "id * 2 AS v")
         t.ingest(df)
-        rows = [(r["a"], r["b"]) for r in t.sorted_rows()]
-        assert rows == sorted(rows)
-        assert len(rows) == 100
+        for rows in (list(t.sorted_rows()), t.sorted_scan().collect()):
+            rows = [(r["a"], r["b"]) for r in rows]
+            assert rows == sorted(rows)
+            assert len(rows) == 100
 
     def test_bulk_export_zero_shuffle_with_iterators_and_aggs(self, spark, tmp_path):
         """Custom iterators + Arrow-algebra aggregations must take the

@@ -1,15 +1,11 @@
 """max_by/min_by aggregation — last/first-writer-wins upsert semantics
-(iterators.py grammar, processing.py Spark engine, query.py row
-iterator). Beyond-reference: the reference's algebra (aggregate.rs)
+(iterators.py grammar, processing.py Spark engine, sorted_scan.py Arrow
+kernels). Beyond-reference: the reference's algebra (aggregate.rs)
 has no versioned-row op."""
 
 import pytest
 from pyspark.sql import types as T
 
-from sleeper_spark.compaction import (
-    arrow_algebra_supported,
-    arrow_engine_supported,
-)
 from sleeper_spark.iterators import (
     Aggregation,
     parse_aggregations,
@@ -62,13 +58,6 @@ class TestGrammar:
         with pytest.raises(ValueError, match="non-nullable"):
             validate_aggregations(nullable, [
                 Aggregation("value", "max_by", "version")])
-
-    def test_arrow_gate_rejects_by_ops(self):
-        s = _schema()
-        assert not arrow_algebra_supported(s, AGGS)
-        assert not arrow_engine_supported(
-            s, TableProperties(aggregations=AGGS))
-        assert arrow_algebra_supported(s, "max(version), max(value)")
 
 
 @pytest.fixture
