@@ -39,6 +39,7 @@ from sleeper_spark.functions import dedup, multimodal, sampling, similarity, tex
 from sleeper_spark.iterators import parse_aggregations, parse_filters
 from sleeper_spark.processing import apply_aggregations, apply_filters
 from sleeper_spark.properties import TableProperties
+from sleeper_spark.query import local_rows_df
 from sleeper_spark.ranges import Range, Region, regions_to_column
 from sleeper_spark.schema import Field, Schema
 from sleeper_spark.table import SleeperTable
@@ -168,7 +169,7 @@ def q_batch_point_lookup(spark: SparkSession, sf: str) -> DataFrame:
     predicate (N-invariant plan; SleeperTable.batch_exact_key_query is
     the table-backed form, pinned in lifecycle tests)."""
     ev = _load(spark, sf, "events")
-    keys = similarity.local_rows_df(
+    keys = local_rows_df(
         spark, [(i * 37,) for i in range(200)], "event_id long")
     return ev.join(F.broadcast(keys), "event_id").select(*_EVENTS_COLS)
 
@@ -787,7 +788,7 @@ def q_split_point_advisor(spark: SparkSession, sf: str) -> DataFrame:
     from sleeper_spark.maintenance import suggest_split_points
     li = _load(spark, sf, "lineitem").select("l_orderkey")
     pts = suggest_split_points(li, "l_orderkey", 8)
-    return similarity.local_rows_df(
+    return local_rows_df(
         spark, [(i + 1, int(p)) for i, p in enumerate(pts)],
         "rank int, split_point long")
 
@@ -3232,13 +3233,13 @@ def q_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
 
     tier_names = ("ivf", "ivf_pq", "lsh", "lsh_multiprobe", "pq")
 
-    # configs AND families as probe-frame DATA (VALUES LocalRelations —
-    # no Python-RDD slices): the exact-scoring tiers (brute force,
-    # both lsh probes, ivf) are rows of ONE cosine probe join against
-    # c_all, the two PQ tiers rows of ONE ADC join — 2 scoring joins +
-    # 2 windows where the stacked plan had 5 branches + 4 windows
-    # (the branch count was the dominant Catalyst-analysis cost here)
-    cos_probe = similarity.local_rows_df(spark, (
+    # configs AND families as probe-frame DATA (local frames): the
+    # exact-scoring tiers (brute force, both lsh probes, ivf) are rows
+    # of ONE cosine probe join against c_all, the two PQ tiers rows of
+    # ONE ADC join — 2 scoring joins + 2 windows where the stacked plan
+    # had 5 branches + 4 windows (the branch count was the dominant
+    # Catalyst-analysis cost here)
+    cos_probe = local_rows_df(spark, (
         [("exact", r["query_id"], "all", 0, r["__emb"]) for r in qx]
         + [(name, r["query_id"], "lsh", b, r["__emb"])
            for name, p in (("lsh", 1), ("lsh_multiprobe", 3))
@@ -3247,7 +3248,7 @@ def q_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
            for r in qx
            for c in ivf_cells[r["query_id"]][:_IVF["nprobe"]]]),
         probe_schema)
-    adc_probe = similarity.local_rows_df(spark, (
+    adc_probe = local_rows_df(spark, (
         [("ivf_pq", r["query_id"], "ivfpq", c, r["__emb"])
          for r in qx if r["query_id"] < 3
          for c in ivf_cells[r["query_id"]][:_IVFPQ_NPROBE]]
@@ -3278,15 +3279,12 @@ def q_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
     # re-stack the materialized rows under the tier label and evaluate
     # recall in ONE join+aggregate pass (tier_col) — per-tier
     # recall_at_k calls cost 5x the stage-scheduling overhead for
-    # identical results. The rebuilt tables are VALUES LocalRelations
-    # (similarity.local_rows_df), NOT createDataFrame: parallelizing
-    # six Q×k-row lists to defaultParallelism slices scheduled two
-    # 160-task Python-RDD stages (measured 1.4s + 2.5s) in the final
-    # action for ~280 rows of driver data.
-    exact = similarity.local_rows_df(spark, by_tier["exact"], schema)
+    # identical results. The rebuilt tables are local frames of ~280
+    # rows of driver data.
+    exact = local_rows_df(spark, by_tier["exact"], schema)
     tier_schema = T.StructType(
         [T.StructField("tier", T.StringType(), False), *schema.fields])
-    approx_all = similarity.local_rows_df(
+    approx_all = local_rows_df(
         spark,
         [(name, *t) for name in tier_names for t in by_tier[name]],
         tier_schema)
@@ -3349,18 +3347,18 @@ def q_ann_index_selection(spark: SparkSession, sf: str) -> DataFrame:
             cents_np, 4)
         for r in qx}
 
-    # configs AND families are DATA, not plan branches: one probe frame
-    # (a VALUES LocalRelation — no Python-RDD slices) carries every
-    # config's (cfg, query, family, bucket/cell) rows plus the
-    # brute-force ground truth as the 'all' family, so the stacked
-    # sweep plans ONE scoring join instead of 6 separate tier plans
+    # configs AND families are DATA, not plan branches: one local
+    # probe frame carries every config's (cfg, query, family,
+    # bucket/cell) rows plus the brute-force ground truth as the 'all'
+    # family, so the stacked sweep plans ONE scoring join instead of 6
+    # separate tier plans
     probe_schema = T.StructType([
         T.StructField("__cfg", T.StringType(), False),
         T.StructField("query_id", qid_t),
         T.StructField("__fam", T.StringType(), False),
         T.StructField("__jkey", T.LongType()),
         T.StructField("embedding", emb_t)])
-    probe = similarity.local_rows_df(spark, (
+    probe = local_rows_df(spark, (
         [("exact@0", r["query_id"], "all", 0, r["__emb"]) for r in qx]
         + [(f"lsh@{p}", r["query_id"], "lsh", b, r["__emb"])
            for p in (1, 3) for r in qx for b in r["__probes"][:p]]
@@ -3384,11 +3382,7 @@ def q_ann_index_selection(spark: SparkSession, sf: str) -> DataFrame:
             (r["query_id"], r["vec_id"], r["rank"]))
 
     def provider(tier, p):
-        # VALUES LocalRelation, not createDataFrame: six 32-slice
-        # Python-RDD frames union into 160-task stages inside the
-        # recall pass for <=300 rows of driver data (see q_ann_recall)
-        return similarity.local_rows_df(spark, by_cfg[(tier, p)],
-                                        topk_schema)
+        return local_rows_df(spark, by_cfg[(tier, p)], topk_schema)
 
     exact = provider("exact", 0)
 
@@ -3815,7 +3809,7 @@ def q_streaming_funnel(spark: SparkSession, sf: str) -> DataFrame:
     row = depth.agg(*[
         F.sum((F.col("d") >= i + 1).cast("long")).alias(f"c{i}")
         for i in range(len(steps))]).first()
-    return similarity.local_rows_df(
+    return local_rows_df(
         spark, [(s, i, int(row[f"c{i}"] or 0)) for i, s in enumerate(steps)],
         "step string, step_index int, n_users long")
 
@@ -4050,7 +4044,7 @@ def q_sketch_quantiles(spark: SparkSession, sf: str) -> DataFrame:
         ok = (row[f"le{i}"] >= target - budget
               and row[f"lt{i}"] < target + budget)
         out.append((qname, n, target, budget, bool(ok)))
-    return similarity.local_rows_df(
+    return local_rows_df(
         spark, out, "qname string, n long, target_rank long, budget long, "
                     "ok boolean")
 
@@ -4105,7 +4099,7 @@ def q_grouped_sketch_quantiles(spark: SparkSession, sf: str) -> DataFrame:
                   and row[f"lt{i}_{qn}"] < target + budget)
             out.append((r.l_returnflag, qn, n, target, budget,
                         bool(ok)))
-    return similarity.local_rows_df(
+    return local_rows_df(
         spark, out, "l_returnflag string, qname string, n long, "
                     "target_rank long, budget long, ok boolean")
 
@@ -4879,7 +4873,7 @@ def q_pagerank_states(spark: SparkSession, sf: str) -> DataFrame:
             c[d] = c.get(d, 0) + r[s] // od[s]
         r = {n: 150_000 // nn + (85 * c.get(n, 0)) // 100
              for n in nodes}
-    return similarity.local_rows_df(
+    return local_rows_df(
         spark, [(n, r[n]) for n in nodes], "node string, rank_micro long")
 
 

@@ -45,6 +45,7 @@ from sleeper_spark import sketches
 from sleeper_spark.partitions import PartitionTree
 from sleeper_spark.processing import apply_filters, apply_aggregations
 from sleeper_spark.properties import TableProperties
+from sleeper_spark.query import local_rows_df
 from sleeper_spark.ranges import Region
 from sleeper_spark.schema import Schema
 from sleeper_spark.statestore import FileReference, StateStore
@@ -213,10 +214,6 @@ def _tag_rows_with_jobs(spark: SparkSession, jobs: list[CompactionJob],
                 row.append(rng.min if rng is not None else None)
                 row.append(rng.max if rng is not None else None)
             rows.append(tuple(row))
-    # VALUES LocalRelation: the map is rows-sized-in-jobs (driver
-    # data); createDataFrame would evaluate it as a 32-slice Python
-    # RDD inside every compaction action
-    from sleeper_spark.functions.similarity import local_rows_df
     mapping = local_rows_df(spark, rows, T.StructType(map_fields))
 
     scan = (

@@ -57,7 +57,7 @@ def profile_columns(df: DataFrame,
     out = [(c, row["__n"], row["__n"] - row[f"__nn{i}"],
             row[f"__nd{i}"])
            for i, c in enumerate(names)]
-    from sleeper_spark.functions.similarity import local_rows_df
+    from sleeper_spark.query import local_rows_df
     return local_rows_df(
         df.sparkSession, out,
         "column string, n long, n_null long, n_distinct long")

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sleeper_spark.functions.text import bind_once
+from sleeper_spark.query import local_frame, local_rows_df
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -180,109 +181,6 @@ def _array_lit_sql(values, sql_type: str) -> str:
             return repr(v) + "D"
         return f"{int(v)}L"
     return f"CAST({render(values)} AS {sql_type})"
-
-
-#: VALUES-literal row-count ceiling: above this the SQL text is multi-MB
-#: and the single-threaded ANTLR parse is slower (and more OOM-prone)
-#: than distributing the rows — delete/batch-lookup callers legally pass
-#: up to their 1M-row caps (ADVICE r11).
-LOCAL_ROWS_VALUES_MAX = 10_000
-
-
-def local_rows_df(spark, rows, schema: "T.StructType | str") -> DataFrame:
-    """A small collected row set as ONE parsed ``VALUES`` LocalRelation
-    — the :func:`_array_lit` idiom applied to whole frames.
-
-    ``spark.createDataFrame(rows)`` wraps even a 50-row list in a
-    Python RDD parallelized to ``defaultParallelism`` slices, so a plan
-    that unions several rebuilt tables schedules hundreds of near-empty
-    Python-worker tasks (measured: two 160-task stages, 1.4s + 2.5s, in
-    ann_recall's final action at sf0.1). Rendering the rows as a SQL
-    ``VALUES`` literal parses JVM-side in one round trip and plans as a
-    LocalRelation: zero tasks, zero Python workers, identical values.
-
-    Bit-exact by the same argument as :func:`_array_lit` (repr doubles
-    round-trip through the parser's correctly-rounded parseDouble);
-    ints, strings, booleans and NULLs are exact trivially. Non-finite
-    doubles render as ``CAST('NaN'/'Infinity' AS DOUBLE)`` so probe
-    frames keep createDataFrame's accepted-input surface. Intended for
-    CONTRACT-BOUNDED row sets only (top-k tables, config matrices) —
-    the VALUES text is driver-built, so callers must pass row counts
-    that are already driver-sized; above
-    :data:`LOCAL_ROWS_VALUES_MAX` rows (a multi-MB literal is a
-    known-slow/OOM-prone ANTLR path) the call falls back to
-    ``createDataFrame``, which distributes.
-
-    Note the returned schema is all-NULLABLE: every column is a CAST
-    output, so StructField.nullable on the requested schema is not
-    preserved (createDataFrame honored it). Downstream schema-equality
-    checks must compare names/types, not nullability.
-
-    String escaping (backslash + ``\\'``) is only correct under the
-    default ``spark.sql.parser.escapedStringLiterals=false``; in the
-    Hive-compat mode backslashes are literal and the rendered text
-    would silently mis-parse — string-carrying frames fall back to
-    ``createDataFrame`` there (checked once per call)."""
-    rows = list(rows)
-    if isinstance(schema, str):
-        from pyspark.sql.types import _parse_datatype_string
-        schema = _parse_datatype_string(schema)
-    if len(rows) > LOCAL_ROWS_VALUES_MAX:
-        return spark.createDataFrame(rows, schema)
-
-    def _has_str(v):
-        if isinstance(v, str):
-            return True
-        if isinstance(v, (list, tuple)):
-            return any(_has_str(x) for x in v)
-        return False
-
-    if any(_has_str(v) for r in rows for v in r) and \
-            spark.conf.get("spark.sql.parser.escapedStringLiterals",
-                           "false").lower() == "true":
-        # Hive-compat literal mode: our backslash escaping would parse
-        # to DIFFERENT strings (and mutating callers — merge_when's
-        # touched-key semi-join, secondary-index deletes — would then
-        # touch the wrong rows). The row path is mode-independent.
-        return spark.createDataFrame(rows, schema)
-
-    def scalar(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, bool):
-            return "TRUE" if v else "FALSE"
-        if isinstance(v, float):
-            if v != v:
-                return "CAST('NaN' AS DOUBLE)"
-            if v == float("inf"):
-                return "CAST('Infinity' AS DOUBLE)"
-            if v == float("-inf"):
-                return "CAST('-Infinity' AS DOUBLE)"
-            return repr(v) + "D"
-        if isinstance(v, int):
-            return f"{v}L"
-        if isinstance(v, str):
-            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-        if isinstance(v, (bytes, bytearray)):
-            return "X'" + bytes(v).hex() + "'"
-        if isinstance(v, (list, tuple)):
-            return "array(" + ",".join(scalar(x) for x in v) + ")"
-        raise TypeError(f"unsupported VALUES scalar {type(v)}")
-
-    fields = schema.fields
-    casts = ", ".join(
-        f"CAST(c{i} AS {f.dataType.simpleString()}) AS `{f.name}`"
-        for i, f in enumerate(fields))
-    alias = ", ".join(f"c{i}" for i in range(len(fields)))
-    if rows:
-        vals = ", ".join(
-            "(" + ", ".join(scalar(v) for v in r) + ")" for r in rows)
-        tail = ""
-    else:
-        vals = "(" + ", ".join("NULL" for _ in fields) + ")"
-        tail = " WHERE 1=0"
-    return spark.sql(
-        f"SELECT {casts} FROM (VALUES {vals}) AS t({alias}){tail}")
 
 
 def _planes_lit(planes: list[list[float]]) -> Column:
@@ -575,9 +473,7 @@ def table_filtered_topk(
             "tuples — not a filtered search; scan the table and use "
             "attribute_filtered_topk directly")
     if not tuples:
-        spark = table.spark
-        empty = spark.createDataFrame(
-            [], table.schema.to_struct_type())
+        empty = local_frame(table.spark, table.schema.to_struct_type())
         return attribute_filtered_topk(
             empty, queries.limit(0), list(match_cols), k=k,
             id_col=id_col, vec_col=vec_col, query_id_col=query_id_col)
@@ -651,9 +547,7 @@ def ivf_topk(
                                  cents, nprobe)
     ]
     qid_t = queries.schema[query_id_col].dataType
-    # VALUES LocalRelation (local_rows_df): the probe frame is bounded
-    # by contract; createDataFrame would evaluate it as a 32-slice
-    # Python RDD inside every consuming action
+    # a local frame: the probe rows are bounded by contract
     q = _with_norm(local_rows_df(
         corpus.sparkSession, probe_rows, T.StructType([
             T.StructField(query_id_col, qid_t),
@@ -1299,7 +1193,7 @@ def select_ann_tier(
         chosen = min(rows, key=lambda r: (-r[2], r[3], r[0], r[1]))
     out = [(t, p, rec, frac, (t, p) == (chosen[0], chosen[1]))
            for t, p, rec, frac in rows]
-    # a |configs|-row decision table: VALUES LocalRelation, zero tasks
+    # a |configs|-row decision table
     return local_rows_df(spark, out, T.StructType([
         T.StructField("tier", T.StringType()),
         T.StructField("nprobe", T.IntegerType()),
@@ -1440,7 +1334,8 @@ def _pq_codes_expr(codebooks: list[list[list[float]]],
            f"0.0D, (acc, x) -> acc + x))), 1)")
     return F.expr(
         f"element_at(transform(array("
-        f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))), v -> "
+        f"transform(`{vec_col.replace('`', '``')}`, "
+        f"x -> CAST(x AS DOUBLE))), v -> "
         f"transform(sequence(0, {m - 1}), s -> "
         f"CAST(element_at(transform(array({d2s}), ds -> "
         f"array_position(ds, array_min(ds))), 1) - 1 AS INT))), 1)")
@@ -1501,7 +1396,8 @@ def _query_lut_expr(codebooks, vec_col: str) -> Column:
                            "array<array<array<double>>>")
     return F.expr(
         f"element_at(transform(array("
-        f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))), qv -> "
+        f"transform(`{vec_col.replace('`', '``')}`, "
+        f"x -> CAST(x AS DOUBLE))), qv -> "
         f"transform(sequence(0, {m - 1}), s -> "
         f"element_at(transform(array("
         f"slice(qv, (s * {dsub}) + 1, {dsub})), sub -> "

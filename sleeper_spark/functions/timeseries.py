@@ -210,7 +210,7 @@ def funnel_counts(df: DataFrame, steps: list, user_col: str = "user_id",
             F.lit(i).alias("i"), "n")
         stat = t if stat is None else stat.unionByName(t)
     counts = {r["i"]: r["n"] for r in stat.collect()}
-    from sleeper_spark.functions.similarity import local_rows_df
+    from sleeper_spark.query import local_rows_df
     return local_rows_df(
         spark, [(str(s), i, int(counts[i])) for i, s in enumerate(steps)],
         "step string, step_index int, n_users long")

@@ -32,6 +32,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from sleeper_spark.query import local_frame
 from sleeper_spark.schema import Schema
 
 _BATCH_ROWS = 65536
@@ -287,7 +288,7 @@ def cokeyed_join(table_a, table_b, how: str = "inner",
 
     spark = table_a.spark
     if not descs:
-        return spark.createDataFrame([], struct)
+        return local_frame(spark, struct)
 
     src = spark.createDataFrame(
         spark.sparkContext.parallelize(

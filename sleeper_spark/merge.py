@@ -56,7 +56,7 @@ import uuid
 from typing import TYPE_CHECKING
 
 from sleeper_spark.deletes import _DRIVER_SIDE_BYTES, _mask_ranges
-from sleeper_spark.query import file_may_contain_keys
+from sleeper_spark.query import file_may_contain_keys, local_rows_df
 from sleeper_spark.statestore import FileReference, StateStoreException
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -474,9 +474,6 @@ def merge_when(table: "SleeperTable", source_df: "DataFrame",
     touched_keys = {tuple(r[k] for k in key_names) for r in stats
                     if r["__t"] == 1}
     if touched_keys:
-        # VALUES LocalRelation (bounded by cap); createDataFrame would
-        # re-evaluate the list as a 32-slice Python RDD per action
-        from sleeper_spark.functions.similarity import local_rows_df
         touched_df = local_rows_df(
             table.spark, sorted(touched_keys),
             matched.select(*key_names).schema)

@@ -494,7 +494,10 @@ def local_frame(spark: SparkSession, struct: T.StructType,
     """Arrow ``tables`` (columns as in ``struct``; none for an empty
     result) as a local DataFrame. ``createDataFrame`` of an Arrow table
     plans a LocalRelation, so collecting it runs no Spark job, and it
-    keeps the table's types (maps included) and nullability."""
+    keeps the table's types (maps included) and nullability. Python rows
+    or an empty list would instead plan a Python RDD of
+    ``defaultParallelism`` slices, which every consuming action runs as
+    a stage of near-empty tasks."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -502,6 +505,24 @@ def local_frame(spark: SparkSession, struct: T.StructType,
     table = (pa.concat_tables([t.cast(schema) for t in tables]) if tables
              else schema.empty_table())
     return spark.createDataFrame(table, struct)
+
+
+def local_rows_df(spark: SparkSession, rows,
+                  schema: T.StructType | str) -> DataFrame:
+    """Driver-held ``rows`` (positional tuples) as a :func:`local_frame`
+    of ``schema`` (a StructType or a DDL string), built column by column
+    as one Arrow table. A value of the wrong type, or a None in a
+    non-nullable field, raises at the Arrow conversion."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return local_frame(spark, schema, [table])
 
 
 class QueryExecutor:

@@ -33,6 +33,7 @@ from sleeper_spark.query import (
     Query,
     QueryExecutor,
     local_frame,
+    local_rows_df,
 )
 from sleeper_spark.ranges import Range, Region
 from sleeper_spark.schema import Field, Schema
@@ -148,7 +149,6 @@ class SleeperTable:
                 bool(r.count_approximate),
                 r.job_id,
             ))
-        from sleeper_spark.functions.similarity import local_rows_df
         return local_rows_df(
             self.spark, rows,
             "partition_id string, min_key string, max_key string, "
@@ -328,7 +328,7 @@ class SleeperTable:
                 "your consumers' lag")
         struct = self.schema.to_struct_type()
         if not files:
-            return self.spark.createDataFrame([], struct)
+            return local_frame(self.spark, struct)
         return (self.spark.read.schema(struct).parquet(*files)
                 .select(*[f.name for f in self.schema.all_fields()]))
 
@@ -364,7 +364,7 @@ class SleeperTable:
                 "cover your consumers' lag")
         struct = self.schema.to_struct_type()
         if not files:
-            return self.spark.createDataFrame([], struct)
+            return local_frame(self.spark, struct)
         return (self.spark.read.schema(struct).parquet(*files)
                 .select(*[f.name for f in self.schema.all_fields()]))
 
@@ -395,7 +395,7 @@ class SleeperTable:
                 "cover your consumers' lag")
         struct = self.schema.to_struct_type()
         if not files:
-            return self.spark.createDataFrame([], struct)
+            return local_frame(self.spark, struct)
         return (self.spark.read.schema(struct).parquet(*files)
                 .select(*[f.name for f in self.schema.all_fields()]))
 
@@ -635,11 +635,6 @@ class SleeperTable:
                 else local_frame(self.spark, self.schema.to_struct_type()))
         from pyspark.sql import types as T
 
-        # VALUES LocalRelation: the key set is caller-bounded; a
-        # createDataFrame here evaluated a 32-slice Python RDD inside
-        # every consuming action (key types are Int/Long/String/Binary
-        # by the schema contract — all literal-renderable)
-        from sleeper_spark.functions.similarity import local_rows_df
         kdf = local_rows_df(
             self.spark,
             [tuple(key[k] for k in key_names) for key in keys],
@@ -1291,7 +1286,7 @@ class SleeperTable:
 
             def read(paths: list[str]) -> DataFrame:
                 if not paths:
-                    return self.spark.createDataFrame([], struct)
+                    return local_frame(self.spark, struct)
                 return self.spark.read.schema(struct).parquet(*paths)
 
             a_df = read([f for f in a_files if f not in shared_a])

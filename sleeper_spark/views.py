@@ -49,6 +49,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
+from sleeper_spark.query import local_frame, local_rows_df
+
 
 def classify_window(store, txs, refuse_msg: str
                     ) -> tuple[list[tuple[int, str]], int | None]:
@@ -459,7 +461,6 @@ class SecondaryIndex:
         # exact-row path is one is_in prefilter + tuple-set compare per
         # file and plans from the same Bloom/min-max sidecars
         # (guide §1.2: fix the algorithm, not the constants).
-        from sleeper_spark.functions.similarity import local_rows_df
         rows_df = local_rows_df(
             self.index.spark, [vv + kk for vv, kk in drop],
             self.index.schema.to_struct_type())
@@ -513,8 +514,8 @@ class SecondaryIndex:
             if name in exprs:
                 # resolve the expression's type against the source
                 # schema — analysis only, no job runs
-                probe = source.spark.createDataFrame(
-                    [], source.schema.to_struct_type())
+                probe = local_frame(source.spark,
+                                    source.schema.to_struct_type())
                 try:
                     proj = probe.selectExpr(
                         f"({exprs[name]}) AS `{name}`")
@@ -651,8 +652,8 @@ class SecondaryIndex:
             now_millis, **dict(zip(self.value_cols, vals)))
         head = postings.limit(threshold + 1).collect()
         if not head:
-            return self.source.spark.createDataFrame(
-                [], self.source.schema.to_struct_type())
+            return local_frame(self.source.spark,
+                               self.source.schema.to_struct_type())
         if len(head) <= threshold:
             keys = [{k: row[k] for k in self._src_keys} for row in head]
             return (self.source.batch_exact_key_query(keys, now_millis)
@@ -772,8 +773,8 @@ class SecondaryIndex:
                                 self.source.schema.all_fields()])
 
         if not head:
-            return _joined(self.source.spark.createDataFrame(
-                [], self.source.schema.to_struct_type()))
+            return _joined(local_frame(
+                self.source.spark, self.source.schema.to_struct_type()))
         if len(head) <= threshold:
             keys = [{k: row[k] for k in self._src_keys}
                     for row in head]
@@ -846,8 +847,8 @@ class SecondaryIndex:
         postings = self.index.query(Query([region]), now_millis)
         head = postings.limit(threshold + 1).collect()
         if not head:
-            return self.source.spark.createDataFrame(
-                [], self.source.schema.to_struct_type())
+            return local_frame(self.source.spark,
+                               self.source.schema.to_struct_type())
         if len(head) <= threshold:
             keys = [{k: row[k] for k in self._src_keys} for row in head]
             return (self.source.batch_exact_key_query(keys, now_millis)

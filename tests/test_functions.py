@@ -1105,6 +1105,24 @@ class TestProductQuantization:
             ._jdf.queryExecution().executedPlan().toString()
         assert "WindowGroupLimit" in plan
 
+    def test_vector_column_name_with_backtick(self, spark, embeddings):
+        """The codes and LUT expressions are SQL text: a vector column
+        named with a backtick must be quoted, not break the parse."""
+        from sleeper_spark.functions.similarity import (
+            pq_topk, train_pq_codebooks)
+        dim = len(embeddings.first().embedding)
+        books = train_pq_codebooks(embeddings, dim=dim, m=4, ksub=8,
+                                   train_rows=256)
+        corpus = embeddings.limit(40)
+        queries = corpus.limit(2).select(
+            F.col("vec_id").alias("query_id"), "embedding")
+        want = sorted(map(tuple, pq_topk(corpus, queries, books,
+                                         k=5).collect()))
+        got = pq_topk(corpus.withColumnRenamed("embedding", "v`x"),
+                      queries.withColumnRenamed("embedding", "v`x"),
+                      books, k=5, vec_col="v`x")
+        assert sorted(map(tuple, got.collect())) == want
+
 
 class TestSkew:
     def test_salted_join_equals_plain_join(self, spark):

@@ -16,6 +16,7 @@ from unittest import mock
 
 import pytest
 from hypothesis import HealthCheck, Phase, given, settings, strategies as st
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sleeper_spark import query as query_mod
@@ -545,7 +546,10 @@ def test_empty_results_run_no_spark_job(spark, tmp_path):
     schema = Schema((_long("key"),), (), (_long("v"),))
     t = SleeperTable.create(spark, str(tmp_path / "t"), schema)
     for read in (lambda: t.batch_exact_key_query([]),
-                 t.full_scan, t.sorted_scan):
+                 t.full_scan, t.sorted_scan,
+                 lambda: t.added_rows_between(0),
+                 lambda: t.deleted_rows_between(0),
+                 lambda: t.updated_rows_between(0)):
         rows, jobs = _jobs_of(spark, lambda: read().collect())
         assert rows == [] and jobs == []
 
@@ -587,3 +591,122 @@ def test_driver_readers_see_another_handles_ingest(spark, tmp_path, read):
                                         schema.to_struct_type()))
     assert len(read(reader)) == 2
     assert len(reader.full_scan().collect()) == 2
+
+
+# ---------------------------------------------------------------------------
+# local_rows_df: driver-held rows as a local frame
+# ---------------------------------------------------------------------------
+
+def test_local_rows_df_values_and_schema(spark):
+    """local_rows_df returns the exact rows and column types
+    createDataFrame would, including None/bool/float/str scalars and
+    the empty-row-set case, keeps the declared names and nullability —
+    and plans zero RDD stages."""
+    scalars = (T.StructType([
+        T.StructField("s", T.StringType()),
+        T.StructField("i", T.LongType()),
+        T.StructField("r", T.IntegerType()),
+        T.StructField("d", T.DoubleType()),
+        T.StructField("b", T.BooleanType())]),
+        [("a'b\\c", 1 << 40, 3, 0.1, True),
+         ("lsh@3", -7, None, -2.5e-300, False),
+         (None, 0, 0, -0.0, None)])
+    not_null = (T.StructType([
+        T.StructField("k", T.LongType(), False),
+        T.StructField("s", T.StringType(), True)]),
+        [(1, "x"), (2, None)])
+    quoted_names = (T.StructType([
+        T.StructField("a`b", T.LongType()),
+        T.StructField("c.d", T.StringType())]),
+        [(1, "x"), (2, None)])
+    for schema, rows in (scalars, not_null, quoted_names):
+        got = query_mod.local_rows_df(spark, rows, schema)
+        ref = spark.createDataFrame(rows, schema)
+        assert got.schema == schema
+        assert [f.dataType for f in got.schema.fields] == \
+            [f.dataType for f in ref.schema.fields]
+        assert sorted(map(tuple, got.collect()), key=str) == \
+            sorted(map(tuple, ref.collect()), key=str)
+        empty = query_mod.local_rows_df(spark, [], schema)
+        assert empty.count() == 0
+        assert [f.dataType for f in empty.schema.fields] == \
+            [f.dataType for f in ref.schema.fields]
+        # LocalRelation end to end: no scan, no exchange, no python worker
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "Exchange" not in plan
+
+
+def test_local_rows_df_nonfinite_doubles(spark):
+    """NaN/Infinity floats were accepted by createDataFrame and must
+    stay accepted (ivf/multi-family probe frames at the public API
+    boundary)."""
+    schema = T.StructType([T.StructField("i", T.LongType()),
+                           T.StructField("d", T.DoubleType())])
+    rows = [(1, float("nan")), (2, float("inf")),
+            (3, float("-inf")), (4, 1.5)]
+    got = {r.i: r.d for r in
+           query_mod.local_rows_df(spark, rows, schema).collect()}
+    assert got[1] != got[1]  # NaN
+    assert got[2] == float("inf")
+    assert got[3] == float("-inf")
+    assert got[4] == 1.5
+    # inside arrays too
+    schema2 = T.StructType([
+        T.StructField("v", T.ArrayType(T.DoubleType()))])
+    arr = query_mod.local_rows_df(
+        spark, [([float("nan"), 2.0],)], schema2).collect()[0].v
+    assert arr[0] != arr[0] and arr[1] == 2.0
+
+
+def test_local_rows_df_escaped_string_literals_mode(spark):
+    """Strings round-trip unchanged whatever the SQL parser's
+    spark.sql.parser.escapedStringLiterals mode (Hive compat): the
+    rows never pass through SQL text."""
+    schema = T.StructType([T.StructField("s", T.StringType()),
+                           T.StructField("i", T.LongType())])
+    rows = [("a'b\\c", 1), ("plain", 2), (None, 3)]
+    key = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(key, "false")
+    try:
+        spark.conf.set(key, "true")
+        got = sorted(map(tuple, query_mod.local_rows_df(
+            spark, rows, schema).collect()), key=str)
+        assert got == sorted(rows, key=str)
+    finally:
+        spark.conf.set(key, old)
+    # and in the default mode
+    got = sorted(map(tuple, query_mod.local_rows_df(
+        spark, rows, schema).collect()), key=str)
+    assert got == sorted(rows, key=str)
+
+
+def test_local_rows_df_large_set(spark):
+    """Delete and batch-lookup callers legally pass up to their 1M-row
+    caps: a 10,001-row set is still one local frame whose collect runs
+    no Spark job, with identical rows."""
+    n = 10_001
+    schema = T.StructType([T.StructField("k", T.LongType())])
+    df = query_mod.local_rows_df(spark, [(i,) for i in range(n)], schema)
+    rows, jobs = _jobs_of(spark, df.collect)
+    assert len(rows) == n and jobs == []
+    assert df.count() == n
+    assert df.agg(F.sum("k")).collect()[0][0] == n * (n - 1) // 2
+
+
+def test_local_rows_df_generator_input(spark):
+    """Callers pass generators (ann sweep probe frames)."""
+    schema = T.StructType([T.StructField("k", T.LongType())])
+    df = query_mod.local_rows_df(spark, ((i,) for i in range(3)), schema)
+    assert df.count() == 3
+    empty = query_mod.local_rows_df(spark, iter(()), schema)
+    assert empty.count() == 0
+
+
+def test_local_rows_df_rejects_bad_input(spark):
+    """A None in a non-nullable field or a value of the wrong type
+    fails at the Arrow conversion instead of building a frame."""
+    schema = T.StructType([T.StructField("k", T.LongType(), False)])
+    with pytest.raises(ValueError, match="non-nullable"):
+        query_mod.local_rows_df(spark, [(1,), (None,)], schema)
+    with pytest.raises(ValueError, match="convert"):
+        query_mod.local_rows_df(spark, [("x",)], schema)

@@ -154,35 +154,6 @@ def test_pq_index_corpus_matches_join_shape(spark, emb):
         sorted(map(tuple, via_ivfpq.collect()))
 
 
-def test_local_rows_df_values_and_schema(spark):
-    """local_rows_df's VALUES LocalRelation returns the exact rows and
-    column types createDataFrame would, including None/bool/float/str
-    scalars and the empty-row-set case — and plans zero RDD stages."""
-    from pyspark.sql import types as T
-    schema = T.StructType([
-        T.StructField("s", T.StringType()),
-        T.StructField("i", T.LongType()),
-        T.StructField("r", T.IntegerType()),
-        T.StructField("d", T.DoubleType()),
-        T.StructField("b", T.BooleanType())])
-    rows = [("a'b\\c", 1 << 40, 3, 0.1, True),
-            ("lsh@3", -7, None, -2.5e-300, False),
-            (None, 0, 0, -0.0, None)]
-    got = similarity.local_rows_df(spark, rows, schema)
-    ref = spark.createDataFrame(rows, schema)
-    assert [f.dataType for f in got.schema.fields] == \
-        [f.dataType for f in ref.schema.fields]
-    assert sorted(map(tuple, got.collect()), key=str) == \
-        sorted(map(tuple, ref.collect()), key=str)
-    empty = similarity.local_rows_df(spark, [], schema)
-    assert empty.count() == 0
-    assert [f.dataType for f in empty.schema.fields] == \
-        [f.dataType for f in ref.schema.fields]
-    # LocalRelation end to end: no scan, no exchange, no python worker
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in plan and "Exchange" not in plan
-
-
 def test_multi_family_topk_matches_standalone_tiers(spark, emb):
     """Every config slice of the fused multi-family cosine join equals
     the standalone tier it replaced (brute force / lsh_topk at each

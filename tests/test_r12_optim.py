@@ -1,5 +1,5 @@
-"""Round-12 optimization pins: local_rows_df edge behavior (ADVICE r11)
-and operator-internals changes made this round."""
+"""Round-12 optimization pins: operator-internals changes made this
+round."""
 
 import os
 import sys
@@ -7,74 +7,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
-from pyspark.sql import types as T  # noqa: E402
 
 from sleeper_spark.functions import similarity  # noqa: E402
-
-
-def test_local_rows_df_nonfinite_doubles(spark):
-    """NaN/Infinity floats were accepted by createDataFrame and must
-    stay accepted (ivf/multi-family probe frames at the public API
-    boundary): rendered as CAST('NaN'/'Infinity' AS DOUBLE)."""
-    schema = T.StructType([T.StructField("i", T.LongType()),
-                           T.StructField("d", T.DoubleType())])
-    rows = [(1, float("nan")), (2, float("inf")),
-            (3, float("-inf")), (4, 1.5)]
-    got = {r.i: r.d for r in
-           similarity.local_rows_df(spark, rows, schema).collect()}
-    assert got[1] != got[1]  # NaN
-    assert got[2] == float("inf")
-    assert got[3] == float("-inf")
-    assert got[4] == 1.5
-    # inside arrays too
-    schema2 = T.StructType([
-        T.StructField("v", T.ArrayType(T.DoubleType()))])
-    arr = similarity.local_rows_df(
-        spark, [([float("nan"), 2.0],)], schema2).collect()[0].v
-    assert arr[0] != arr[0] and arr[1] == 2.0
-
-
-def test_local_rows_df_escaped_string_literals_mode(spark):
-    """Under spark.sql.parser.escapedStringLiterals=true (Hive compat)
-    the backslash escaping of the VALUES text would silently mis-parse;
-    the call must return the same rows anyway (row-path fallback)."""
-    schema = T.StructType([T.StructField("s", T.StringType()),
-                           T.StructField("i", T.LongType())])
-    rows = [("a'b\\c", 1), ("plain", 2), (None, 3)]
-    key = "spark.sql.parser.escapedStringLiterals"
-    old = spark.conf.get(key, "false")
-    try:
-        spark.conf.set(key, "true")
-        got = sorted(map(tuple, similarity.local_rows_df(
-            spark, rows, schema).collect()), key=str)
-        assert got == sorted(rows, key=str)
-    finally:
-        spark.conf.set(key, old)
-    # and in the default mode the literal path still round-trips them
-    got = sorted(map(tuple, similarity.local_rows_df(
-        spark, rows, schema).collect()), key=str)
-    assert got == sorted(rows, key=str)
-
-
-def test_local_rows_df_large_set_falls_back(spark):
-    """Above LOCAL_ROWS_VALUES_MAX the single-threaded ANTLR parse of a
-    multi-MB literal is the wrong tool (ADVICE r11) — the call must
-    distribute via createDataFrame and return identical rows."""
-    n = similarity.LOCAL_ROWS_VALUES_MAX + 1
-    schema = T.StructType([T.StructField("k", T.LongType())])
-    df = similarity.local_rows_df(spark, [(i,) for i in range(n)], schema)
-    assert df.count() == n
-    assert df.agg(F.sum("k")).collect()[0][0] == n * (n - 1) // 2
-
-
-def test_local_rows_df_generator_input(spark):
-    """Callers pass generators (ann sweep probe frames); emptiness and
-    the size threshold must be decided on the materialised list."""
-    schema = T.StructType([T.StructField("k", T.LongType())])
-    df = similarity.local_rows_df(spark, ((i,) for i in range(3)), schema)
-    assert df.count() == 3
-    empty = similarity.local_rows_df(spark, iter(()), schema)
-    assert empty.count() == 0
 
 
 def test_simhash_default_hash_selfjoin_executes(spark):
