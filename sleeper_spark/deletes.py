@@ -1,37 +1,51 @@
-"""Copy-on-write row deletion: ``SleeperTable.delete_where``.
+"""Copy-on-write row deletion (``SleeperTable.delete_where``,
+``delete_exact_rows``) and the one copy-on-write rewriter that
+``updates.update_where`` and ``merge.merge_upsert`` share.
 
 The reference has no row delete — data leaves a table only via ageOff
 filters (docs/usage/data-processing.md). A training-data pipeline needs
 targeted removal (takedowns, contaminated documents, PII incidents), so
-this extends the engine the way Delta/Iceberg do copy-on-write DELETE:
+this extends the engine the way Delta/Iceberg do copy-on-write DELETE.
+Every copy-on-write mutation runs the same four steps:
 
-1. PLAN (driver, metadata only): of every live (file, partition)
-   reference, keep only those that MAY hold a matching row — partition
-   region overlap for key regions, sidecar footer min/max for value
-   ranges (query.py:_file_may_match), and the first-row-key Bloom
-   filter when every region is an exact point (bloom.py). At 10^5
-   files a key-targeted delete rewrites a handful of files, not the
-   table.
-2. CLAIM: assign the candidate references to a ``delete-*`` job id via
-   the ASSIGN_JOB_IDS transaction — the same claim compaction takes, so
-   a concurrent compactor and a delete can never rewrite the same
+1. PLAN (driver, metadata only, :func:`plan_candidates`): of every live
+   (file, partition) reference, keep only those that MAY hold a matching
+   row. For key regions and value ranges: partition region overlap,
+   sidecar footer min/max (query.py:_file_may_match), and the
+   first-row-key Bloom filter when every region is an exact point. For a
+   key set: the leaves the keys descend to, their lookup files, then the
+   Bloom filter. At 10^5 files a key-targeted rewrite touches a handful
+   of files, not the table.
+2. CLAIM (:func:`claimed`): assign the candidates to a ``delete-*`` /
+   ``update-*`` / ``merge-*`` job id via ASSIGN_JOB_IDS — the same claim
+   compaction takes, so two rewriters can never rewrite the same
    reference (the second claimant's commit fails and retries its plan).
-3. REWRITE (executors): each candidate (file, partition) reference is
-   rewritten 1:1 — keep rows inside the partition's region (a file
-   split across child partitions holds rows of several references;
-   each rewrite keeps only its own) that do NOT match the predicate.
-   Filtering preserves the file's sort order, so every engine invariant
-   (sorted leaves, merge-without-resort, sketch validity) survives.
-   Sidecars (quantile sketch + min/max + bloom) are rebuilt in the same
-   task.
-4. COMMIT: ONE ``REPLACE_FILE_REFERENCES`` transaction swaps all
-   rewritten references; fully-deleted references are simply removed
-   (empty output allowed for deletes only). Old files enter the GC
-   queue; time travel (``as_of``) still serves pre-delete states from
-   the log; the change feed does not emit deletes (``added_rows_between``
-   is append-only by contract — documented there).
+   Any failure before the commit releases the claim and removes the
+   job's output directory; a failure of the commit itself keeps the
+   claim, and ``unassign_job_ids`` is the recovery, as for a crashed
+   compaction.
+3. REWRITE (:func:`_rewrite_ref`, driver threads or executors): each
+   candidate reference is rewritten 1:1 — rows inside the partition's
+   region (a file split across child partitions holds rows of several
+   references; each rewrite keeps only its own) that the caller's match
+   function does not select are KEPT; the selected rows land as a
+   tombstone parquet, the observable record incremental consumers
+   (materialized views, secondary indexes) apply; with assignments they
+   also land, updated, as a third file. Filtering preserves the file's
+   sort order, so every engine invariant (sorted leaves,
+   merge-without-resort, sketch validity) survives, and each output's
+   sidecar (quantile sketch + min/max + Bloom) is rebuilt in the task.
+   A reference where nothing matched is left as it is.
+4. COMMIT: the caller's ONE transaction — ``REPLACE_FILE_REFERENCES``
+   here and in updates.py, ``MERGE_FILES`` in merge.py. Fully-deleted
+   references are simply removed. References where nothing matched are
+   left out of it and released after it, so ``files_untouched`` counts
+   the references present at the call that were neither rewritten nor
+   removed. Old files enter the GC queue; time travel (``as_of``) still
+   serves pre-delete states from the log; the append-only
+   ``added_rows_between`` feed does not emit deletes.
 
-Semantics: the predicate is (OR of key ``regions``) AND (AND of
+``delete_where``'s predicate is (OR of key ``regions``) AND (AND of
 ``value_ranges``), matching the query model. Value-range deletes are
 rejected on aggregation-configured tables — pre-collapse physical rows
 are not what the user sees, so "delete where value matches" would be
@@ -42,107 +56,311 @@ well-defined).
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
-from typing import TYPE_CHECKING
+from contextlib import contextmanager
+from dataclasses import dataclass, field
+from functools import partial
+from typing import TYPE_CHECKING, Callable
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from sleeper_spark.query import (
+    Query,
     _file_may_match,
     bloom_points,
     file_may_contain_keys,
 )
 from sleeper_spark.ranges import Range, Region
+from sleeper_spark.sketches import _DRIVER_SIDE_BYTES
+from sleeper_spark.sorted_scan import _and, _point_key_mask, _value_range_mask
 from sleeper_spark.statestore import FileReference, StateStoreException
 
 if TYPE_CHECKING:  # pragma: no cover
     from sleeper_spark.table import SleeperTable
 
 
-def _mask_ranges(tbl, ranges) -> "object":
-    """Conjunctive Range list -> numpy bool mask over an arrow table.
-    Null comparisons count as non-matching (fill_null False)."""
-    import numpy as np
-    import pyarrow.compute as pc
+def _bool_mask(tbl, m) -> np.ndarray:
+    """An optional Arrow mask (None = every row) as numpy bool; a NULL
+    comparison never matches."""
+    if m is None:
+        return np.ones(tbl.num_rows, dtype=bool)
+    return pc.fill_null(m, False).to_numpy(zero_copy_only=False)
 
-    m = np.ones(tbl.num_rows, dtype=bool)
+
+def _ranges_mask(tbl, ranges) -> np.ndarray:
+    """Rows inside every range of a conjunctive Range list."""
+    m = None
     for r in ranges:
-        col = tbl.column(r.field)
-        if r.min is not None:
-            op = pc.greater_equal if r.min_inclusive else pc.greater
-            m &= pc.fill_null(op(col, r.min), False).to_numpy(
-                zero_copy_only=False)
-        if r.max is not None:
-            op = pc.less_equal if r.max_inclusive else pc.less
-            m &= pc.fill_null(op(col, r.max), False).to_numpy(
-                zero_copy_only=False)
-    return m
+        m = _and(m, _value_range_mask(tbl, r.field, r.min, r.min_inclusive,
+                                      r.max, r.max_inclusive))
+    return _bool_mask(tbl, m)
 
 
-def _match_mask(tbl, regions, value_ranges):
-    """(OR regions) AND (AND value_ranges) as a numpy bool mask."""
-    import numpy as np
-
+def _region_match(regions, value_ranges, tbl) -> np.ndarray:
+    """delete_where/update_where match: (OR regions) AND (AND
+    value_ranges)."""
     if regions:
         m = np.zeros(tbl.num_rows, dtype=bool)
         for reg in regions:
-            m |= _mask_ranges(tbl, reg.ranges)
+            m |= _ranges_mask(tbl, reg.ranges)
     else:
         m = np.ones(tbl.num_rows, dtype=bool)
     if value_ranges:
-        m &= _mask_ranges(tbl, value_ranges)
+        m &= _ranges_mask(tbl, value_ranges)
     return m
 
 
-def _rewrite_one(desc: dict) -> tuple:
-    """Executor task: rewrite ONE (file, partition) reference without
-    the matching rows. Returns (partition_id, in_path, out_path|None,
-    rows_kept, rows_deleted, tomb_path|None).
+def _key_match(key_names, keys, tbl) -> np.ndarray:
+    """merge_upsert match: rows whose full row-key tuple is in ``keys``."""
+    return _bool_mask(tbl, _point_key_mask(tbl, (tuple(key_names), keys)))
 
-    The DELETED rows (own & match — region-filtered per reference, so
-    a file split across child partitions never tombstones a row twice)
-    land as a tombstone parquet beside the rewrite: the observable
-    record incremental consumers (materialized views, secondary
-    indexes) apply instead of rebuilding from a snapshot."""
-    import pyarrow as pa
+
+def _exact_rows_match(key0, rows_ipc, tbl) -> np.ndarray:
+    """delete_exact_rows match: rows that EXACTLY equal (null-safe, all
+    columns) some row of a bounded tombstone row set.
+
+    Matching is two-phase so the python-level exact comparison never
+    touches the bulk of the file: a vectorized ``is_in`` prefilter on
+    the first row-key column narrows to rows sharing a key with some
+    tombstone (≈ the tombstone count for point deletes), then only
+    those survivors are compared tuple-wise against the set. Both
+    sides are cast to the tombstone table's Arrow schema first, so
+    type-representation drift (e.g. timestamp unit) cannot cause a
+    silent non-match. Float NaN normalizes to a sentinel on BOTH
+    sides so NaN matches NaN — tombstones are the literal removed
+    rows (delete_exact_rows ``match_nan`` contract)."""
+    import math
+
+    tomb = pa.ipc.open_stream(rows_ipc).read_all()
+    pre = pc.fill_null(pc.is_in(
+        tbl.column(key0),
+        value_set=tomb.column(key0).combine_chunks().unique()), False)
+    cand_idx = np.nonzero(pre.to_numpy(zero_copy_only=False))[0]
+    match = np.zeros(tbl.num_rows, dtype=bool)
+    if not len(cand_idx):
+        return match
+    taken = tbl.take(pa.array(cand_idx))
+    # schema evolution: a pre-evolution file lacks later-added value
+    # columns physically — they read as NULL table-wide, so compare
+    # them as null columns instead of crashing mid-claim
+    cols = []
+    for name in tomb.column_names:
+        if name in taken.column_names:
+            cols.append(taken.column(name))
+        else:
+            cols.append(pa.nulls(taken.num_rows,
+                                 tomb.schema.field(name).type))
+    sub = pa.table(dict(zip(tomb.column_names, cols))).cast(tomb.schema)
+
+    # two to_pylist() NaN objects are neither identical nor equal, so
+    # raw tuples would silently never match: normalize every NaN to
+    # one sentinel before the tuple compare
+    nan = ("__nan__",)  # unique, hashable, never a cell value
+
+    def nanorm(row):
+        return tuple(nan if isinstance(v, float) and math.isnan(v) else v
+                     for v in row)
+
+    tomb_set = {nanorm(r) for r in zip(*(c.to_pylist() for c in tomb.columns))}
+    rows = zip(*(c.to_pylist() for c in sub.columns))
+    match[[i for i, row in zip(cand_idx, rows) if nanorm(row) in tomb_set]] \
+        = True
+    return match
+
+
+def _write(tbl, path: str, desc: dict, sidecar: bool = True) -> None:
+    """Write one rewrite output; data files (not tombstones) get their
+    sidecar. A filtered sorted file is still sorted."""
     import pyarrow.parquet as pq
 
-    from sleeper_spark import bloom as bl
     from sleeper_spark import sketches
 
-    tbl = pq.read_table(desc["in_path"])
-    own = _mask_ranges(tbl, desc["partition_ranges"])
-    match = _match_mask(tbl, desc["regions"], desc["value_ranges"])
-    keep = own & ~match
-    n_keep = int(keep.sum())
-    n_del = int(own.sum()) - n_keep
-    tomb_path = None
-    if n_del:
-        tomb_path = desc["tomb_path"]
-        pq.write_table(tbl.filter(pa.array(own & match)), tomb_path,
-                       compression=desc["compression"],
-                       data_page_size=desc["page_bytes"])
-    if n_keep == 0:
-        return (desc["partition_id"], desc["in_path"], None, 0, n_del,
-                tomb_path)
-    out = tbl.filter(pa.array(keep))
-    pq.write_table(out, desc["out_path"],
-                   compression=desc["compression"],
+    pq.write_table(tbl, path, compression=desc["compression"],
                    data_page_size=desc["page_bytes"])
-    keys = desc["key_names"]
-    sk = sketches.sketch_from_arrow_columns(
-        {k: out.column(k) for k in keys}, n_keep, desc["sketch_k"])
+    if sidecar:
+        sketches.write_sidecar(path, sketches.table_sketch(
+            tbl, desc["key_names"], desc["sketch_k"], first_key_sorted=True))
+
+
+def _rewrite_ref(desc: dict) -> tuple[int, int]:
+    """Executor task: rewrite ONE (file, partition) reference. Returns
+    (rows matched, rows kept); nothing is written when nothing matched.
+    The matched rows (own & match — region-filtered per reference, so a
+    file split across child partitions never tombstones a row twice)
+    land in the tombstone, the rest of the reference's rows in the kept
+    file, and, when ``desc["assign"]`` is set, the matched rows with the
+    assignments applied in the updated file."""
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(desc["in_path"])
+    own = _ranges_mask(tbl, desc["partition_ranges"])
+    hit = own & desc["match"](tbl)
+    n_hit = int(hit.sum())
+    if not n_hit:
+        return 0, 0
+    keep = own & ~hit
+    n_keep = int(keep.sum())
+    old = tbl.filter(pa.array(hit))
+    _write(old, desc["tomb_path"], desc, sidecar=False)
+    if n_keep:
+        _write(tbl.filter(pa.array(keep)), desc["kept_path"], desc)
+    if desc["assign"] is not None:
+        _write(desc["assign"](old), desc["upd_path"], desc)
+    return n_hit, n_keep
+
+
+def plan_candidates(table: "SleeperTable",
+                    regions: list[Region] | None = None,
+                    value_ranges: list[Range] | None = None,
+                    keys: list[tuple] | None = None) -> list[FileReference]:
+    """The references that MAY hold a row matching key ``regions`` and
+    ``value_ranges``, or, when ``keys`` (row-key tuples) is given, a row
+    of one of those keys (module doc, step 1)."""
+    store, tree = table.store, table.store.tree
+    assert tree is not None, "table not initialised"
+    names = table.schema.row_key_names
+    if keys is not None:
+        by_ref: dict[tuple[str, str], FileReference] = {}
+        for lid in {tree.leaf_for_row(dict(zip(names, kk))).id
+                    for kk in keys}:
+            for ref in store.files_for_leaf_query(lid):
+                by_ref[(ref.filename, ref.partition_id)] = ref
+        pts = {kk[0] for kk in keys}
+        return [r for r in by_ref.values()
+                if file_may_contain_keys(r.filename, pts)]
+    pts = bloom_points(Query(regions), names[0]) if regions else None
+    out = []
+    for ref in store.all_references():
+        if regions:
+            preg = tree[ref.partition_id].region
+            if not any(preg.overlaps(reg)
+                       and _file_may_match(ref.filename, reg.ranges)
+                       for reg in regions):
+                continue
+            if pts is not None and not file_may_contain_keys(ref.filename,
+                                                             pts):
+                continue
+        if value_ranges and not _file_may_match(ref.filename, value_ranges):
+            continue
+        out.append(ref)
+    return out
+
+
+@contextmanager
+def claimed(table: "SleeperTable", job_id: str, refs: list[FileReference]):
+    """Claim ``refs`` for ``job_id`` and yield the job's (empty) output
+    directory. A failure inside the block releases the claim and removes
+    the directory; the caller commits after the block, so a failed
+    commit keeps the claim. References already held by ``job_id`` (a
+    crashed attempt of the same caller-supplied job id) are kept."""
+    store = table.store
+    for ref in refs:
+        if ref.job_id not in (None, job_id):
+            raise StateStoreException(
+                f"{ref.filename} (partition {ref.partition_id}) is "
+                f"claimed by job {ref.job_id}; finish or abandon it "
+                "first")
+    to_claim = [r for r in refs if r.job_id != job_id]
+    if to_claim:
+        store.assign_job_ids(job_id, to_claim)
+    out_dir = os.path.join(table.data_dir, job_id)
     try:
-        b = bl.build_bloom(keys[0], out.column(keys[0]), n_keep)
-        if b is not None:
-            sk["bloom"] = b
-    except TypeError:
-        pass
-    sketches.write_sidecar(desc["out_path"], sk)
-    return (desc["partition_id"], desc["in_path"], desc["out_path"],
-            n_keep, n_del, tomb_path)
+        # a crashed attempt under the same job id left uncommitted
+        # bytes here; nothing references them, so the retry starts clean
+        shutil.rmtree(out_dir, ignore_errors=True)
+        os.makedirs(out_dir)
+        yield out_dir
+    except BaseException:
+        if refs:
+            store.unassign_job_ids(job_id)
+        shutil.rmtree(out_dir, ignore_errors=True)
+        raise
 
 
-#: same driver-threads-vs-executors threshold as sidecar building
-_DRIVER_SIDE_BYTES = 256 * 1024 * 1024
+@dataclass
+class Rewrite:
+    """What one copy-on-write pass produced, ready for the commit."""
+
+    replacements: list = field(default_factory=list)
+    tombstones: list[str] = field(default_factory=list)
+    updates: list[str] = field(default_factory=list)
+    rows_matched: int = 0
+    files_rewritten: int = 0
+    files_removed: int = 0
+    noops: int = 0
+
+
+def rewrite(table: "SleeperTable", refs: list[FileReference], out_dir: str,
+            match: Callable, assign: Callable | None = None) -> Rewrite:
+    """Rewrite every claimed reference (module doc, step 3): on driver
+    threads below ``_DRIVER_SIDE_BYTES`` of input, else one executor
+    task per reference. ``match`` and ``assign`` must pickle (module
+    functions or ``functools.partial`` of them)."""
+    tree = table.store.tree
+    descs = [{
+        "in_path": ref.filename,
+        "partition_ranges": list(tree[ref.partition_id].region.ranges),
+        "kept_path": os.path.join(out_dir, f"kept-{i:05d}.parquet"),
+        "upd_path": os.path.join(out_dir, f"updated-{i:05d}.parquet"),
+        "tomb_path": os.path.join(out_dir, f"tombstone-{i:05d}.parquet"),
+        "match": match,
+        "assign": assign,
+        "compression": table.props.compression,
+        "page_bytes": table.props.page_bytes,
+        "key_names": list(table.schema.key_names),
+        "sketch_k": table.props.sketch_size,
+    } for i, ref in enumerate(refs)]
+    if not descs:
+        results = []
+    elif sum(os.path.getsize(d["in_path"]) for d in descs) \
+            < _DRIVER_SIDE_BYTES:
+        from concurrent.futures import ThreadPoolExecutor
+        with ThreadPoolExecutor(max_workers=min(16, len(descs))) as ex:
+            results = list(ex.map(_rewrite_ref, descs))
+    else:
+        sc = table.spark.sparkContext
+        slices = min(len(descs), 4 * sc.defaultParallelism)
+        results = sc.parallelize(descs, slices).map(_rewrite_ref).collect()
+
+    out = Rewrite()
+    for ref, desc, (n_hit, n_keep) in zip(refs, descs, results):
+        if not n_hit:
+            out.noops += 1
+            continue
+        out.rows_matched += n_hit
+        out.tombstones.append(desc["tomb_path"])
+        outputs = [(desc["kept_path"], n_keep)] if n_keep else []
+        if assign is not None:
+            outputs.append((desc["upd_path"], n_hit))
+            out.updates.append(desc["upd_path"])
+        if outputs:
+            out.files_rewritten += 1
+        else:
+            out.files_removed += 1
+        out.replacements.append((ref.partition_id, [ref.filename], [
+            FileReference(filename=path, partition_id=ref.partition_id,
+                          number_of_rows=n,
+                          only_contains_data_for_this_partition=True)
+            for path, n in outputs]))
+    return out
+
+
+def commit_rewrite(table: "SleeperTable", job_id: str, rw: Rewrite) -> bool:
+    """The delete/update commit: ONE ``REPLACE_FILE_REFERENCES`` of every
+    changed reference, then the release of the untouched ones' claims
+    (after the commit, so a crash in between leaves only recoverable
+    claims, never a lost change). Returns whether anything committed."""
+    store = table.store
+    if rw.replacements:
+        store.replace_file_references_batch(
+            rw.replacements, allow_empty_outputs=True, job_id=job_id,
+            tombstones=sorted(rw.tombstones), updates=sorted(rw.updates))
+    if rw.noops:
+        store.unassign_job_ids(job_id)
+    return bool(rw.replacements)
 
 
 def delete_where(table: "SleeperTable",
@@ -161,209 +379,29 @@ def delete_where(table: "SleeperTable",
     store = table.store
     store.check_writable()  # upfront, same error surface as ingest/merge
     store.refresh_if_stale(0)
-    tree = store.tree
-    assert tree is not None, "table not initialised"
-
-    pts = (bloom_points(_QueryShim(regions), table.schema.row_key_names[0])
-           if regions else None)
-    candidates: list[FileReference] = []
-    untouched = 0
-    for ref in store.all_references():
-        may = True
-        if regions:
-            preg = tree[ref.partition_id].region
-            may = any(preg.overlaps(reg) for reg in regions)
-            if may:
-                # file-level: footer min/max on the key columns, then
-                # bloom for all-point predicates
-                may = any(_file_may_match(ref.filename, reg.ranges)
-                          for reg in regions)
-            if may and pts is not None:
-                may = file_may_contain_keys(ref.filename, pts)
-        if may and value_ranges:
-            may = _file_may_match(ref.filename, value_ranges)
-        if may:
-            if ref.job_id is not None:
-                raise StateStoreException(
-                    f"{ref.filename} (partition {ref.partition_id}) is "
-                    f"claimed by job {ref.job_id}; finish or abandon the "
-                    "compaction before deleting from it")
-            candidates.append(ref)
-        else:
-            untouched += 1
+    n_total = len(store.all_references())
+    candidates = plan_candidates(table, regions, value_ranges)
     if not candidates:
         return {"rows_deleted": 0, "files_rewritten": 0,
-                "files_removed": 0, "files_untouched": untouched,
+                "files_removed": 0, "files_untouched": n_total,
                 "job_id": None}
-
     job_id = f"delete-{uuid.uuid4().hex[:12]}"
-    store.assign_job_ids(job_id, candidates)
-
-    out_dir = os.path.join(table.data_dir, job_id)
-    os.makedirs(out_dir, exist_ok=True)
-    descs = []
-    for i, ref in enumerate(candidates):
-        descs.append({
-            "in_path": ref.filename,
-            "out_path": os.path.join(out_dir, f"part-{i:05d}.parquet"),
-            "tomb_path": os.path.join(out_dir,
-                                      f"tombstone-{i:05d}.parquet"),
-            "partition_id": ref.partition_id,
-            "partition_ranges": list(tree[ref.partition_id].region.ranges),
-            "regions": list(regions or []),
-            "value_ranges": list(value_ranges or []),
-            "compression": table.props.compression,
-            "page_bytes": table.props.page_bytes,
-            "key_names": list(table.schema.key_names),
-            "sketch_k": table.props.sketch_size,
-        })
-    total = sum(os.path.getsize(d["in_path"]) for d in descs)
-    if total < _DRIVER_SIDE_BYTES:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=min(16, len(descs))) as ex:
-            results = list(ex.map(_rewrite_one, descs))
-    else:
-        sc = table.spark.sparkContext
-        slices = min(len(descs), 4 * sc.defaultParallelism)
-        results = sc.parallelize(descs, slices).map(_rewrite_one).collect()
-
-    replacements = []
-    tombstones = []
-    rows_deleted = files_rewritten = files_removed = 0
-    now = None
-    for pid, in_path, out_path, n_keep, n_del, tomb_path in results:
-        rows_deleted += n_del
-        if tomb_path is not None:
-            tombstones.append(tomb_path)
-        if out_path is None:
-            files_removed += 1
-            replacements.append((pid, [in_path], []))
-        else:
-            files_rewritten += 1
-            replacements.append((pid, [in_path], [FileReference(
-                filename=out_path, partition_id=pid,
-                number_of_rows=n_keep,
-                only_contains_data_for_this_partition=True)]))
-    store.replace_file_references_batch(
-        replacements, allow_empty_outputs=True,
-        job_id=job_id, tombstones=sorted(tombstones))
-    return {"rows_deleted": rows_deleted,
-            "files_rewritten": files_rewritten,
-            "files_removed": files_removed,
-            "files_untouched": untouched,
-            "tombstone_files": len(tombstones),
-            "job_id": job_id}
+    with claimed(table, job_id, candidates) as out_dir:
+        rw = rewrite(table, candidates, out_dir, partial(
+            _region_match, list(regions or []), list(value_ranges or [])))
+    return _delete_result(rw, n_total, job_id,
+                          commit_rewrite(table, job_id, rw))
 
 
-class _QueryShim:
-    """Minimal duck-typed Query for bloom_points (regions only)."""
-
-    def __init__(self, regions):
-        self.regions = regions
-
-
-def _rewrite_exact_one(desc: dict) -> tuple:
-    """Executor task: rewrite ONE (file, partition) reference without
-    the rows that EXACTLY match (null-safe, all columns) a bounded
-    tombstone row set. Same return contract as :func:`_rewrite_one`.
-
-    Matching is two-phase so the python-level exact comparison never
-    touches the bulk of the file: a vectorized ``is_in`` prefilter on
-    the first row-key column narrows to rows sharing a key with some
-    tombstone (≈ the tombstone count for point deletes), then only
-    those survivors are compared tuple-wise against the set. Both
-    sides are cast to the tombstone table's Arrow schema first, so
-    type-representation drift (e.g. timestamp unit) cannot cause a
-    silent non-match. Float NaN normalizes to a sentinel on BOTH
-    sides so NaN matches NaN — tombstones are the literal removed
-    rows (delete_exact_rows ``match_nan`` contract)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from sleeper_spark import bloom as bl
-    from sleeper_spark import sketches
-
-    tomb = pa.ipc.open_stream(desc["rows_ipc"]).read_all()
-    tbl = pq.read_table(desc["in_path"])
-    own = _mask_ranges(tbl, desc["partition_ranges"])
-    k0 = desc["key_names"][0]
-    pre = pc.fill_null(pc.is_in(
-        tbl.column(k0),
-        value_set=tomb.column(k0).combine_chunks().unique()), False)
-    cand_idx = np.nonzero(own & pre.to_numpy(zero_copy_only=False))[0]
-    match = np.zeros(tbl.num_rows, dtype=bool)
-    if len(cand_idx):
-        taken = tbl.take(pa.array(cand_idx))
-        # schema evolution: a pre-evolution file lacks later-added
-        # value columns physically — they read as NULL table-wide, so
-        # compare them as null columns instead of crashing mid-claim
-        # (the update_where rewrite handles the same case)
-        cols = []
-        for name in tomb.column_names:
-            if name in taken.column_names:
-                cols.append(taken.column(name))
-            else:
-                cols.append(pa.nulls(taken.num_rows,
-                                     tomb.schema.field(name).type))
-        sub = pa.table(dict(zip(tomb.column_names, cols))) \
-            .cast(tomb.schema)
-
-        # tombstones are the LITERAL removed rows, so float NaN must
-        # match NaN (delete_exact_rows match_nan contract): normalize
-        # every NaN to one sentinel before the tuple compare — two
-        # to_pylist() NaN objects are neither identical nor equal, so
-        # raw tuples would silently never match
-        import math as _math
-        _NAN = ("__nan__",)  # unique, hashable, never a cell value
-
-        def _nanorm(row):
-            return tuple(
-                _NAN if isinstance(v, float) and _math.isnan(v) else v
-                for v in row)
-
-        tomb_set = {_nanorm(r) for r in
-                    zip(*(c.to_pylist() for c in tomb.columns))} \
-            if tomb.num_rows else set()
-        rows = zip(*(c.to_pylist() for c in sub.columns))
-        hits = [i for i, row in zip(cand_idx, rows)
-                if _nanorm(row) in tomb_set]
-        match[hits] = True
-    keep = own & ~match
-    n_keep = int(keep.sum())
-    n_del = int(own.sum()) - n_keep
-    tomb_path = None
-    if n_del:
-        tomb_path = desc["tomb_path"]
-        pq.write_table(tbl.filter(pa.array(own & match)), tomb_path,
-                       compression=desc["compression"],
-                       data_page_size=desc["page_bytes"])
-    else:
-        # nothing matched in this reference: signal a no-op so the
-        # driver releases the claim instead of committing a pointless
-        # 1:1 rewrite
-        return (desc["partition_id"], desc["in_path"], desc["in_path"],
-                n_keep, 0, None)
-    if n_keep == 0:
-        return (desc["partition_id"], desc["in_path"], None, 0, n_del,
-                tomb_path)
-    out = tbl.filter(pa.array(keep))
-    pq.write_table(out, desc["out_path"],
-                   compression=desc["compression"],
-                   data_page_size=desc["page_bytes"])
-    keys = desc["key_names"]
-    sk = sketches.sketch_from_arrow_columns(
-        {k: out.column(k) for k in keys}, n_keep, desc["sketch_k"])
-    try:
-        b = bl.build_bloom(keys[0], out.column(keys[0]), n_keep)
-        if b is not None:
-            sk["bloom"] = b
-    except TypeError:
-        pass
-    sketches.write_sidecar(desc["out_path"], sk)
-    return (desc["partition_id"], desc["in_path"], desc["out_path"],
-            n_keep, n_del, tomb_path)
+def _delete_result(rw: Rewrite, n_total: int, job_id: str,
+                   committed: bool) -> dict:
+    return {"rows_deleted": rw.rows_matched,
+            "files_rewritten": rw.files_rewritten,
+            "files_removed": rw.files_removed,
+            "files_untouched":
+            n_total - rw.files_rewritten - rw.files_removed,
+            "tombstone_files": len(rw.tombstones),
+            "job_id": job_id if committed else None}
 
 
 def delete_exact_rows(table: "SleeperTable", rows: "object",
@@ -392,18 +430,12 @@ def delete_exact_rows(table: "SleeperTable", rows: "object",
     ``match_nan=True``, which matches NaN-as-equal — the CDC
     replication contract (replication.sync_cdc), where tombstones are
     the LITERAL removed rows and a source row holding NaN must still
-    be removable from the replica. Plan/claim/rewrite/commit shape is
-    delete_where's; references where nothing matched release their
-    claim instead of rewriting 1:1."""
+    be removable from the replica."""
     import math
-
-    import pyarrow as pa
 
     store = table.store
     store.check_writable()
     store.refresh_if_stale(0)
-    tree = store.tree
-    assert tree is not None, "table not initialised"
     if table.props.aggregations:
         raise ValueError(
             "delete_exact_rows is not allowed on an "
@@ -435,112 +467,31 @@ def delete_exact_rows(table: "SleeperTable", rows: "object",
                         "rows or delete them by key regions, or pass "
                         "match_nan=True to match NaN-as-equal (the "
                         "CDC tombstone contract)")
+    n_total = len(store.all_references())
+    empty = {"rows_deleted": 0, "files_rewritten": 0, "files_removed": 0,
+             "files_untouched": n_total, "tombstone_files": 0,
+             "job_id": None}
     if tomb.num_rows == 0:
-        return {"rows_deleted": 0, "files_rewritten": 0,
-                "files_removed": 0,
-                "files_untouched": sum(1 for _ in
-                                       store.all_references()),
-                "tombstone_files": 0, "job_id": None}
+        return empty
 
-    key_names = [f.name for f in table.schema.row_key_fields]
-
-    def norm(v):
-        return bytes(v) if isinstance(v, bytearray) else v
-
-    key_tuples = {tuple(norm(v) for v in kk) for kk in zip(
-        *(tomb.column(k).to_pylist() for k in key_names))}
-    for kk in key_tuples:
-        if any(v is None for v in kk):
-            raise ValueError("null row key in rows to delete — key "
-                             "fields are non-nullable")
-    leaf_ids = {tree.leaf_for_row(dict(zip(key_names, kk))).id
-                for kk in key_tuples}
-    pts = sorted({kk[0] for kk in key_tuples})
-    by_ref: dict[tuple[str, str], FileReference] = {}
-    for lid in leaf_ids:
-        for ref in store.files_for_leaf_query(lid):
-            by_ref[(ref.filename, ref.partition_id)] = ref
-    n_total = sum(1 for _ in store.all_references())
-    candidates = [r for r in by_ref.values()
-                  if file_may_contain_keys(r.filename, pts)]
+    key_names = table.schema.row_key_names
+    key_tuples = {tuple(bytes(v) if isinstance(v, bytearray) else v
+                        for v in kk)
+                  for kk in zip(*(tomb.column(k).to_pylist()
+                                  for k in key_names))}
+    if any(v is None for kk in key_tuples for v in kk):
+        raise ValueError("null row key in rows to delete — key "
+                         "fields are non-nullable")
+    candidates = plan_candidates(table, keys=list(key_tuples))
     if not candidates:
-        return {"rows_deleted": 0, "files_rewritten": 0,
-                "files_removed": 0, "files_untouched": n_total,
-                "tombstone_files": 0, "job_id": None}
-    for ref in candidates:
-        if ref.job_id is not None:
-            raise StateStoreException(
-                f"{ref.filename} (partition {ref.partition_id}) is "
-                f"claimed by job {ref.job_id}; finish or abandon it "
-                "before deleting from it")
+        return empty
 
-    job_id = f"delete-{uuid.uuid4().hex[:12]}"
-    store.assign_job_ids(job_id, candidates)
-    out_dir = os.path.join(table.data_dir, job_id)
-    os.makedirs(out_dir, exist_ok=True)
     sink = pa.BufferOutputStream()
     with pa.ipc.new_stream(sink, tomb.schema) as w:
         w.write_table(tomb)
-    rows_ipc = sink.getvalue().to_pybytes()
-    descs = []
-    for i, ref in enumerate(candidates):
-        descs.append({
-            "in_path": ref.filename,
-            "out_path": os.path.join(out_dir, f"part-{i:05d}.parquet"),
-            "tomb_path": os.path.join(out_dir,
-                                      f"tombstone-{i:05d}.parquet"),
-            "partition_id": ref.partition_id,
-            "partition_ranges": list(
-                tree[ref.partition_id].region.ranges),
-            "rows_ipc": rows_ipc,
-            "compression": table.props.compression,
-            "page_bytes": table.props.page_bytes,
-            "key_names": list(table.schema.key_names),
-            "sketch_k": table.props.sketch_size,
-        })
-    total = sum(os.path.getsize(d["in_path"]) for d in descs)
-    if total < _DRIVER_SIDE_BYTES:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=min(16, len(descs))) as ex:
-            results = list(ex.map(_rewrite_exact_one, descs))
-    else:
-        sc = table.spark.sparkContext
-        slices = min(len(descs), 4 * sc.defaultParallelism)
-        results = sc.parallelize(descs, slices) \
-            .map(_rewrite_exact_one).collect()
-
-    replacements = []
-    tombstones = []
-    rows_deleted = files_rewritten = files_removed = untouched_noop = 0
-    for pid, in_path, out_path, n_keep, n_del, tomb_path in results:
-        if n_del == 0:
-            untouched_noop += 1  # claim released below, file untouched
-            continue
-        rows_deleted += n_del
-        if tomb_path is not None:
-            tombstones.append(tomb_path)
-        if out_path is None:
-            files_removed += 1
-            replacements.append((pid, [in_path], []))
-        else:
-            files_rewritten += 1
-            replacements.append((pid, [in_path], [FileReference(
-                filename=out_path, partition_id=pid,
-                number_of_rows=n_keep,
-                only_contains_data_for_this_partition=True)]))
-    if replacements:
-        store.replace_file_references_batch(
-            replacements, allow_empty_outputs=True,
-            job_id=job_id, tombstones=sorted(tombstones))
-    if untouched_noop:
-        # release the claims on references where nothing matched —
-        # AFTER the replace commit so a crash in between leaves only
-        # recoverable claims (unassign_job_ids is the documented
-        # recovery), never a lost delete
-        store.unassign_job_ids(job_id)
-    return {"rows_deleted": rows_deleted,
-            "files_rewritten": files_rewritten,
-            "files_removed": files_removed,
-            "files_untouched": n_total - files_rewritten - files_removed,
-            "tombstone_files": len(tombstones),
-            "job_id": job_id if replacements else None}
+    job_id = f"delete-{uuid.uuid4().hex[:12]}"
+    with claimed(table, job_id, candidates) as out_dir:
+        rw = rewrite(table, candidates, out_dir, partial(
+            _exact_rows_match, key_names[0], sink.getvalue().to_pybytes()))
+    return _delete_result(rw, n_total, job_id,
+                          commit_rewrite(table, job_id, rw))

@@ -28,17 +28,13 @@ allowed (key-group replacement is the same key-region semantics as
 key-region deletes; the source rows simply become the group's new
 physical rows and collapse like any ingest).
 
-Plan shape (driver metadata only, like delete_where): the source's
-distinct row keys (bounded by ``cap`` — MERGE is for CDC-sized
-batches; a bulk restatement should ingest + last-writer-wins compact
-instead) descend the partition tree to the leaves they hit; candidate
-(file, partition) references come from those leaves' lookup paths and
-are Bloom-pruned with the key set; candidates are claimed under a
-``merge-*`` job id (the same ASSIGN_JOB_IDS contention protocol as
-compaction/delete/update, so nothing ever rewrites a reference twice).
-Rewrites preserve file sort order and rebuild sidecars; the insert
-files come from the standard ingest writer (``write_sorted_files``),
-commit-free.
+Plan, claim, rewrite and commit are the shared copy-on-write
+rewriter's (deletes.py module doc) with a key set as the plan input:
+the source's distinct row keys (bounded by ``cap`` — MERGE is for
+CDC-sized batches; a bulk restatement should ingest + last-writer-wins
+compact instead) descend the partition tree, and candidates are claimed
+under a ``merge-*`` job id. The insert files come from the standard
+ingest writer (``write_sorted_files``), commit-free, inside the claim.
 
 Incremental consumers: the commit carries tombstones (old rows of
 replaced key groups — the deletion feed) and its addFiles flow through
@@ -53,80 +49,21 @@ from __future__ import annotations
 
 import os
 import uuid
+from functools import partial
 from typing import TYPE_CHECKING
 
-from sleeper_spark.deletes import _DRIVER_SIDE_BYTES, _mask_ranges
-from sleeper_spark.query import file_may_contain_keys, local_rows_df
-from sleeper_spark.statestore import FileReference, StateStoreException
+from sleeper_spark.deletes import (
+    _key_match,
+    claimed,
+    plan_candidates,
+    rewrite,
+)
+from sleeper_spark.query import local_rows_df
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
 
     from sleeper_spark.table import SleeperTable
-
-
-def _keys_mask(tbl, key_names: list[str], keys: list[tuple]):
-    """numpy bool mask: rows whose full row-key tuple is in ``keys``.
-    Vectorized via pandas (Multi)Index.isin — C-speed set membership,
-    never a Python loop over rows."""
-    import pandas as pd
-
-    def norm(s):
-        # arrow->pandas yields bytes (never bytearray) for binary and
-        # native dtypes for numerics — the lambda normalization only
-        # matters for object columns, so numeric key columns skip the
-        # per-value Python call entirely
-        if s.dtype != object:
-            return s
-        return s.map(lambda v: bytes(v) if isinstance(v, bytearray)
-                     else v)
-
-    cols = [norm(tbl.column(k).to_pandas()) for k in key_names]
-    if len(cols) == 1:
-        return cols[0].isin({k[0] for k in keys}).to_numpy()
-    return pd.MultiIndex.from_arrays(cols).isin(keys)
-
-
-def _rewrite_merge_one(desc: dict) -> tuple:
-    """Executor task: rewrite ONE (file, partition) reference without
-    the matched key groups. Returns (partition_id, in_path,
-    kept_path|None, n_keep, n_dropped, tomb_path|None)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from sleeper_spark import bloom as bl
-    from sleeper_spark import sketches
-
-    tbl = pq.read_table(desc["in_path"])
-    own = _mask_ranges(tbl, desc["partition_ranges"])
-    match = own & _keys_mask(tbl, desc["key_names_row"], desc["keys"])
-    keep = own & ~match
-    n_keep, n_drop = int(keep.sum()), int(match.sum())
-    tomb_path = None
-    if n_drop:
-        tomb_path = desc["tomb_path"]
-        pq.write_table(tbl.filter(pa.array(match)), tomb_path,
-                       compression=desc["compression"],
-                       data_page_size=desc["page_bytes"])
-    if n_keep == 0:
-        return (desc["partition_id"], desc["in_path"], None, 0,
-                n_drop, tomb_path)
-    out = tbl.filter(pa.array(keep))
-    pq.write_table(out, desc["out_path"],
-                   compression=desc["compression"],
-                   data_page_size=desc["page_bytes"])
-    keys = desc["key_names"]
-    sk = sketches.sketch_from_arrow_columns(
-        {k: out.column(k) for k in keys}, n_keep, desc["sketch_k"])
-    try:
-        b = bl.build_bloom(keys[0], out.column(keys[0]), n_keep)
-        if b is not None:
-            sk["bloom"] = b
-    except TypeError:
-        pass
-    sketches.write_sidecar(desc["out_path"], sk)
-    return (desc["partition_id"], desc["in_path"], desc["out_path"],
-            n_keep, n_drop, tomb_path)
 
 
 def merge_upsert(table: "SleeperTable", source_df: "DataFrame",
@@ -155,13 +92,11 @@ def merge_upsert(table: "SleeperTable", source_df: "DataFrame",
         raise ValueError(
             f"merge source is missing table column(s) {missing}")
     source_df = source_df.select(*need)
-    key_names = [f.name for f in schema.row_key_fields]
+    key_names = schema.row_key_names
 
     store = table.store
     store.check_writable()
     store.refresh_if_stale(0)
-    tree = store.tree
-    assert tree is not None, "table not initialised"
 
     if job_id is not None and not job_id.startswith("merge-"):
         # the claim-barrier and commit classification key off the
@@ -181,12 +116,15 @@ def merge_upsert(table: "SleeperTable", source_df: "DataFrame",
     def _noop_result(job: str | None, replayed: bool) -> dict:
         return {"rows_inserted": 0, "rows_replaced": 0,
                 "files_rewritten": 0, "files_removed": 0,
-                "files_untouched":
-                sum(1 for _ in store.all_references()),
+                "files_untouched": len(store.all_references()),
                 "tombstone_files": 0, "job_id": job,
                 "replayed": replayed}
 
     if job_id is not None and job_id in store.ingest_jobs_seen:
+        # a crash between the commit and the release of the untouched
+        # candidates' claims leaves those claims behind: release them
+        if any(r.job_id == job_id for r in store.all_references()):
+            store.unassign_job_ids(job_id)
         return _noop_result(job_id, replayed=True)
 
     def norm(v):
@@ -223,100 +161,27 @@ def merge_upsert(table: "SleeperTable", source_df: "DataFrame",
         if kk not in seen_keys:
             seen_keys.add(kk)
             keys.append(kk)
-    leaf_ids = {tree.leaf_for_row(dict(zip(key_names, kk))).id
-                for kk in keys}
-    by_ref: dict[tuple[str, str], FileReference] = {}
-    for lid in leaf_ids:
-        for ref in store.files_for_leaf_query(lid):
-            by_ref[(ref.filename, ref.partition_id)] = ref
-    pts = [kk[0] for kk in keys]
-    candidates = [r for r in by_ref.values()
-                  if file_may_contain_keys(r.filename, pts)]
-    n_total_refs = sum(1 for _ in store.all_references())
+    n_total = len(store.all_references())
+    candidates = plan_candidates(table, keys=keys)
     if job_id is None:
         job_id = f"merge-{uuid.uuid4().hex[:12]}"
-    for ref in candidates:
-        if ref.job_id is not None and ref.job_id != job_id:
-            raise StateStoreException(
-                f"{ref.filename} (partition {ref.partition_id}) is "
-                f"claimed by job {ref.job_id}; finish or abandon it "
-                "before merging")
-    # refs already carrying OUR job id are a crashed attempt's claims:
-    # re-claim only the rest and carry on (the retry owns them)
-    to_claim = [r for r in candidates if r.job_id != job_id]
-    if to_claim:
-        store.assign_job_ids(job_id, to_claim)
-
-    out_dir = os.path.join(table.data_dir, job_id)
-    # a crashed attempt under the SAME (caller-supplied) job id left
-    # uncommitted bytes here — the ingest_jobs_seen pre-check above
-    # proves nothing references them, so the retry starts clean
-    import shutil
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
-    # insert files FIRST (commit-free): on any failure below they are
-    # unreferenced bytes, not a state change
-    add_refs = write_sorted_files(
-        source_df, tree, store, os.path.join(out_dir, "inserts"),
-        table.props)
-    rows_inserted = sum(r.number_of_rows for r in add_refs)
-
-    descs = []
-    for i, ref in enumerate(candidates):
-        descs.append({
-            "in_path": ref.filename,
-            "out_path": os.path.join(out_dir, f"kept-{i:05d}.parquet"),
-            "tomb_path": os.path.join(out_dir,
-                                      f"tombstone-{i:05d}.parquet"),
-            "partition_id": ref.partition_id,
-            "partition_ranges": list(
-                tree[ref.partition_id].region.ranges),
-            "keys": keys,
-            "key_names_row": key_names,
-            "compression": table.props.compression,
-            "page_bytes": table.props.page_bytes,
-            "key_names": list(schema.key_names),
-            "sketch_k": table.props.sketch_size,
-        })
-    if descs:
-        total = sum(os.path.getsize(d["in_path"]) for d in descs)
-        if total < _DRIVER_SIDE_BYTES:
-            from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(
-                    max_workers=min(16, len(descs))) as ex:
-                results = list(ex.map(_rewrite_merge_one, descs))
-        else:
-            sc = table.spark.sparkContext
-            slices = min(len(descs), 4 * sc.defaultParallelism)
-            results = sc.parallelize(descs, slices) \
-                .map(_rewrite_merge_one).collect()
-    else:
-        results = []
-
-    replacements = []
-    tombstones: list[str] = []
-    rows_replaced = files_rewritten = files_removed = 0
-    for pid, in_path, out_path, n_keep, n_drop, tomb_path in results:
-        rows_replaced += n_drop
-        if tomb_path is not None:
-            tombstones.append(tomb_path)
-        if out_path is None:
-            files_removed += 1
-            replacements.append((pid, [in_path], []))
-        else:
-            files_rewritten += 1
-            replacements.append((pid, [in_path], [FileReference(
-                filename=out_path, partition_id=pid,
-                number_of_rows=n_keep,
-                only_contains_data_for_this_partition=True)]))
-    store.merge_files(replacements, add_refs, job_id,
-                      tombstones=sorted(tombstones))
-    return {"rows_inserted": rows_inserted,
-            "rows_replaced": rows_replaced,
-            "files_rewritten": files_rewritten,
-            "files_removed": files_removed,
-            "files_untouched": n_total_refs - len(candidates),
-            "tombstone_files": len(tombstones),
+    with claimed(table, job_id, candidates) as out_dir:
+        add_refs = write_sorted_files(
+            source_df, store.tree, store, os.path.join(out_dir, "inserts"),
+            table.props)
+        rw = rewrite(table, candidates, out_dir,
+                     partial(_key_match, key_names, keys))
+    store.merge_files(rw.replacements, add_refs, job_id,
+                      tombstones=sorted(rw.tombstones))
+    if rw.noops:
+        store.unassign_job_ids(job_id)
+    return {"rows_inserted": sum(r.number_of_rows for r in add_refs),
+            "rows_replaced": rw.rows_matched,
+            "files_rewritten": rw.files_rewritten,
+            "files_removed": rw.files_removed,
+            "files_untouched":
+            n_total - rw.files_rewritten - rw.files_removed,
+            "tombstone_files": len(rw.tombstones),
             "job_id": job_id,
             "replayed": False}
 

@@ -511,17 +511,26 @@ def local_rows_df(spark: SparkSession, rows,
                   schema: T.StructType | str) -> DataFrame:
     """Driver-held ``rows`` (positional tuples) as a :func:`local_frame`
     of ``schema`` (a StructType or a DDL string), built column by column
-    as one Arrow table. A value of the wrong type, or a None in a
-    non-nullable field, raises at the Arrow conversion."""
+    as one Arrow table. A value of the wrong type, a float that is not
+    integral in an integer field, or a None in a non-nullable field,
+    raises at the Arrow conversion."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
+
+    def column(values, typ):
+        if pa.types.is_integer(typ):
+            # a typed conversion truncates 1.5 to 1; a cast checks
+            inferred = pa.array(values)
+            if pa.types.is_floating(inferred.type):
+                return inferred.cast(typ)
+        return pa.array(values, typ)
 
     if isinstance(schema, str):
         schema = T._parse_datatype_string(schema)
     arrow = to_arrow_schema(schema)
     cols = list(zip(*rows)) or [()] * len(arrow)
     table = pa.Table.from_arrays(
-        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
+        [column(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
     return local_frame(spark, schema, [table])
 
 

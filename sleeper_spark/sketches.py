@@ -175,29 +175,37 @@ class SortedColumnSketch:
         return {"ranks": ranks, "values": [_enc(v) for v in vals]}
 
 
-def compute_file_sketch(path: str, key_names: list[str], k: int,
-                        first_key_sorted: bool = False) -> dict:
-    """Read ONLY the key columns of one Parquet file and sketch them.
-    Runs on an executor; columnar projection keeps IO to the key bytes.
-    The same pass builds the first-row-key Bloom filter (bloom.py) —
-    the key bytes are already in memory, so the filter is free IO-wise.
-    ``first_key_sorted`` hints that ``key_names[0]`` is non-decreasing
-    in the file (true for every ingest/compaction output), skipping its
-    sort (verified — see :func:`sketch_from_arrow_columns`)."""
-    import pyarrow.parquet as pq
+def table_sketch(t, key_names: list[str], k: int,
+                 first_key_sorted: bool = False) -> dict:
+    """The sidecar sketch of an Arrow table holding (at least) the key
+    columns: the quantile sketch plus the first-row-key Bloom filter
+    (bloom.py). ``first_key_sorted`` hints that ``key_names[0]`` is
+    non-decreasing (true for every ingest/compaction/copy-on-write
+    output), skipping its sort (verified — see
+    :func:`sketch_from_arrow_columns`)."""
+    from sleeper_spark import bloom as bl
 
-    t = pq.read_table(path, columns=list(key_names))
     sk = sketch_from_arrow_columns(
         {name: t.column(name) for name in key_names}, t.num_rows, k,
         sorted_fields={key_names[0]} if first_key_sorted else None)
     try:
-        from sleeper_spark import bloom as bl
         b = bl.build_bloom(key_names[0], t.column(key_names[0]), t.num_rows)
         if b is not None:  # None above MAX_USEFUL_ROWS
             sk["bloom"] = b
     except TypeError:
         pass  # non-hashable key type -> no bloom -> plan keeps the file
     return sk
+
+
+def compute_file_sketch(path: str, key_names: list[str], k: int,
+                        first_key_sorted: bool = False) -> dict:
+    """Read ONLY the key columns of one Parquet file and sketch them
+    (:func:`table_sketch`). Runs on an executor; columnar projection
+    keeps IO to the key bytes."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path, columns=list(key_names))
+    return table_sketch(t, key_names, k, first_key_sorted)
 
 
 def footer_minmax(path: str) -> dict[str, list]:

@@ -44,6 +44,17 @@ def table(spark, tmp_path):
     return t
 
 
+def _assert_sidecars_fresh(t):
+    """Every live file's sidecar holds footer min/max plus exactly the
+    sketch and Bloom that compute_file_sketch builds from the file."""
+    for ref in t.store.all_references():
+        side = sketches.load_sidecar(ref.filename)
+        assert "bloom" in side and side.pop("minmax")
+        assert side == sketches.compute_file_sketch(
+            ref.filename, t.schema.key_names, t.props.sketch_size), \
+            ref.filename
+
+
 class TestDeleteWhere:
     def test_key_region_delete(self, table):
         out = table.delete_where(
@@ -89,10 +100,7 @@ class TestDeleteWhere:
     def test_sort_order_preserved_and_sidecars_rebuilt(self, table):
         table.delete_where(
             regions=[Region.of(Range("key", "k-000100", "k-000200"))])
-        refs = [r for r in table.store.all_references()]
-        for r in refs:
-            side = sketches.load_sidecar(r.filename)
-            assert side and "bloom" in side and "minmax" in side
+        _assert_sidecars_fresh(table)
         # sorted merge path still serves the table in order
         keys = [row["key"] for row in table.sorted_rows()]
         assert keys == sorted(keys)
@@ -281,3 +289,170 @@ def test_delete_exact_rows_on_schema_evolved_table(spark, tmp_path):
     # the ORIGINAL k-000010 row (note NULL) survived
     assert got.where("key = 'k-000010' AND note IS NULL").count() == 1
     assert got.where("note = 'tagged'").count() == 0
+
+
+def _two_key_schema():
+    return Schema(
+        row_key_fields=(Field("key", T.StringType()),
+                        Field("part", T.LongType())),
+        sort_key_fields=(),
+        value_fields=(Field("value", T.LongType()),))
+
+
+def _cow_op(name, t, spark, key, hit):
+    """Run copy-on-write operation ``name`` on the row ``(key, 0, 100)``
+    (``hit``) or on something the file that holds it cannot match."""
+    region = Region.of(Range("key", key, key + "x") if hit
+                       else Range("key", key + "x", key + "y"))
+    row = spark.createDataFrame(
+        [(key, 0 if hit else 1, 100 if hit else -1)],
+        "key string, part long, value long")
+    if name == "delete_where":
+        return t.delete_where(regions=[region])
+    if name == "update_where":
+        return t.update_where({"value": -5}, regions=[region])
+    if name == "delete_exact_rows":
+        # miss: same key as a live row, another part and value
+        return t.delete_exact_rows(row)
+    # miss: the first key passes the Bloom, the (key, part) tuple is new
+    return t.merge_upsert(row)
+
+
+@pytest.mark.parametrize("name", ["delete_where", "delete_exact_rows",
+                                  "update_where", "merge_upsert"])
+def test_copy_on_write_contract(spark, tmp_path, name):
+    """The shared rewriter's contract, for all four operations: a
+    candidate reference that passes pruning (it is claimed) but holds no
+    matching row stays referenced as it is, keeps no claim and is not
+    counted as rewritten; every output file's sidecar is the one
+    compute_file_sketch builds from it."""
+    t = SleeperTable.create(spark, str(tmp_path / "t"), _two_key_schema(),
+                            split_points=["k-001000"])
+    t.ingest(_rows(spark, 0, 1000).withColumnRenamed("seq", "part")
+             .withColumn("part", F.lit(0).cast("long")))
+    t.ingest(_rows(spark, 1000, 2000).withColumnRenamed("seq", "part")
+             .withColumn("part", F.lit(0).cast("long")))
+    before = {(r.filename, r.partition_id)
+              for r in t.store.all_references()}
+    pre = t.store.current_seq
+    out = _cow_op(name, t, spark, "k-000100", hit=False)
+    kinds = [tx.get("type") for _s, tx in t.store.transactions_between(pre)]
+    assert "ASSIGN_JOB_IDS" in kinds  # the left file was a candidate
+    assert out["files_rewritten"] == 0 == out.get("files_removed", 0)
+    assert out["files_untouched"] == len(before)
+    assert before <= {(r.filename, r.partition_id)
+                      for r in t.store.all_references()}
+    assert all(r.job_id is None for r in t.store.all_references())
+
+    out = _cow_op(name, t, spark, "k-000100", hit=True)
+    assert out["files_rewritten"] == 1
+    assert all(r.job_id is None for r in t.store.all_references())
+    _assert_sidecars_fresh(t)
+
+
+def test_copy_on_write_model(spark, tmp_path):
+    """Model test of the copy-on-write surface: random sequences of
+    ingest, delete_where, delete_exact_rows, update_where, merge_upsert
+    and compact on a tiny table must keep the full scan equal to a
+    pure-Python model (``perfbench/model.py``'s PlainModel), keep
+    ``verify_integrity`` clean and leave no reference claimed."""
+    import itertools
+    import sys
+
+    from hypothesis import HealthCheck, settings, strategies as st
+    from hypothesis.stateful import (
+        RuleBasedStateMachine,
+        initialize,
+        invariant,
+        precondition,
+        rule,
+        run_state_machine_as_test,
+    )
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
+    from perfbench.model import PlainModel
+
+    schema = Schema(
+        row_key_fields=(Field("key", T.LongType()),),
+        sort_key_fields=(),
+        value_fields=(Field("v", T.LongType(), True),
+                      Field("s", T.StringType(), True)))
+    key_space, max_rows = 120, 200
+    row = st.tuples(st.integers(0, key_space - 1), st.integers(0, 3),
+                    st.sampled_from(["a", "b"]))
+    rows = st.lists(row, min_size=1, max_size=10)
+    span = st.tuples(st.integers(0, key_space - 1), st.integers(1, 40))
+    names = itertools.count()
+
+    def frame(rs):
+        return spark.createDataFrame(rs, schema.to_struct_type())
+
+    class CopyOnWriteModel(RuleBasedStateMachine):
+        @initialize(leaves=st.integers(2, 4))
+        def create(self, leaves):
+            splits = [key_space * i // leaves for i in range(1, leaves)]
+            self.table = SleeperTable.create(
+                spark, str(tmp_path / f"m{next(names)}"), schema,
+                split_points=splits)
+            self.model = PlainModel()
+
+        @precondition(lambda self: len(self.model.all_rows()) < max_rows)
+        @rule(rs=rows)
+        def ingest(self, rs):
+            self.table.ingest(frame(rs))
+            self.model.ingest(rs)
+
+        @rule(sp=span)
+        def delete_where(self, sp):
+            lo, hi = sp[0], sp[0] + sp[1]
+            out = self.table.delete_where(
+                regions=[Region.of(Range("key", lo, hi))])
+            assert out["rows_deleted"] == self.model.delete_range(lo, hi)
+
+        @precondition(lambda self: self.model.all_rows())
+        @rule(data=st.data())
+        def delete_exact_rows(self, data):
+            live = self.model.all_rows()
+            victims = data.draw(st.lists(st.sampled_from(live),
+                                         min_size=1, max_size=3))
+            # a row that differs from a live one only in its value
+            ghost = (victims[0][0], victims[0][1] + 100, victims[0][2])
+            out = self.table.delete_exact_rows(frame(victims + [ghost]))
+            gone = set(victims)
+            n = 0
+            for k in {r[0] for r in gone}:
+                kept = [r for r in self.model.rows[k] if r not in gone]
+                n += len(self.model.rows[k]) - len(kept)
+                self.model.rows[k] = kept
+            self.model._dirty()
+            assert out["rows_deleted"] == n
+
+        @rule(sp=span, v=st.integers(0, 3))
+        def update_where(self, sp, v):
+            lo, hi = sp[0], sp[0] + sp[1]
+            out = self.table.update_where(
+                {"v": v}, regions=[Region.of(Range("key", lo, hi))])
+            assert out["rows_updated"] == self.model.update_range(lo, hi, v)
+
+        @rule(rs=rows)
+        def merge_upsert(self, rs):
+            out = self.table.merge_upsert(frame(rs))
+            assert (out["rows_inserted"], out["rows_replaced"]) \
+                == self.model.merge(rs)
+
+        @rule()
+        def compact(self):
+            self.table.compact()
+
+        @invariant()
+        def matches_model(self):
+            got = sorted(tuple(r) for r in self.table.full_scan().collect())
+            assert got == self.model.all_rows()
+            assert self.table.verify_integrity()["ok"]
+            assert all(r.job_id is None
+                       for r in self.table.store.all_references())
+
+    run_state_machine_as_test(CopyOnWriteModel, settings=settings(
+        max_examples=6, stateful_step_count=8, derandomize=True,
+        deadline=None, suppress_health_check=list(HealthCheck)))

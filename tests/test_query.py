@@ -703,10 +703,13 @@ def test_local_rows_df_generator_input(spark):
 
 
 def test_local_rows_df_rejects_bad_input(spark):
-    """A None in a non-nullable field or a value of the wrong type
-    fails at the Arrow conversion instead of building a frame."""
+    """A None in a non-nullable field, a value of the wrong type or a
+    float that is not integral in an integer field fails at the Arrow
+    conversion instead of building a frame."""
     schema = T.StructType([T.StructField("k", T.LongType(), False)])
     with pytest.raises(ValueError, match="non-nullable"):
         query_mod.local_rows_df(spark, [(1,), (None,)], schema)
     with pytest.raises(ValueError, match="convert"):
         query_mod.local_rows_df(spark, [("x",)], schema)
+    with pytest.raises(ValueError, match="truncated"):
+        query_mod.local_rows_df(spark, [(1,), (1.5,)], schema)

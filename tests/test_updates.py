@@ -105,7 +105,11 @@ class TestUpdateWhere:
             keys = tbl.column("key").to_pylist()
             assert keys == sorted(keys), ref.filename
             assert tbl.num_rows == ref.number_of_rows
-            assert sketches.load_sidecar(ref.filename) is not None
+            side = sketches.load_sidecar(ref.filename)
+            side.pop("minmax")
+            assert side == sketches.compute_file_sketch(
+                ref.filename, table.schema.key_names,
+                table.props.sketch_size), ref.filename
         # the engine paths that rely on sorted leaves still work
         table.compact()
         assert table.full_scan().count() == 2000
@@ -156,6 +160,29 @@ class TestUpdateWhere:
             regions=[Region.of(Range("key", "k-000100", "k-000200"))])
         assert res["rows_updated"] == 100
         assert table.full_scan().where("status = 'done'").count() == 100
+
+    def test_failure_before_commit_releases_claim(self, table):
+        """An exception between the claim and the commit (here the
+        assignment callable returns the wrong number of values inside
+        the rewrite task) releases the claim and removes the job's
+        output directory: nothing is left for a recovery step."""
+        before = sorted(tuple(r) for r in table.full_scan().collect())
+        pre = table.store.current_seq
+        with pytest.raises(ValueError,
+                           match="returned 1 values for 5 matched rows"):
+            table.update_where(
+                {"value": lambda tbl: [1]},
+                regions=[Region.of(Range("key", "k-000100",
+                                         "k-000105"))])
+        assert all(r.job_id is None
+                   for r in table.store.all_references())
+        kinds = [tx.get("type")
+                 for _s, tx in table.store.transactions_between(pre)]
+        assert kinds == ["ASSIGN_JOB_IDS", "UNASSIGN_JOB_IDS"]
+        assert not [d for d in os.listdir(table.data_dir)
+                    if d.startswith("update-")]
+        assert sorted(tuple(r) for r in table.full_scan().collect()) \
+            == before
 
     def test_guards(self, spark, tmp_path, table):
         with pytest.raises(ValueError, match="at least one"):
@@ -360,3 +387,20 @@ def test_check_constraints_enforced_on_update(spark, tmp_path):
     assert t.full_scan().where(
         "key >= 'k-000010' AND key < 'k-000020' AND value = 7"
     ).count() == 10
+
+
+def test_check_constraint_reads_evolved_column_as_null(spark, tmp_path):
+    """The CHECK re-validation reads the updated files with the declared
+    schema: a column added after a file was written reads NULL there,
+    so a constraint on it resolves and passes (NULL passes a CHECK)."""
+    t = SleeperTable.create(spark, str(tmp_path / "c"), _schema(),
+                            split_points=["k-001000"])
+    t.ingest(_rows(spark, 0, 100))          # pre-evolution file
+    t.add_value_column(Field("w", T.LongType(), True))
+    t.props.constraints = "w IS NULL OR w > 0"
+    res = t.update_where(
+        {"value": 777},
+        regions=[Region.of(Range("key", "k-000010", "k-000020"))])
+    assert res["rows_updated"] == 10
+    assert t.full_scan().where("value = 777 AND w IS NULL").count() == 10
+    assert all(r.job_id is None for r in t.store.all_references())
