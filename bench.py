@@ -344,8 +344,7 @@ def bench_compaction_large(spark, n_rows: int) -> dict[str, float]:
     """One compaction job at the reference's shape — 11 sorted files -> 1
     (CompactionPerformanceST.java:59-83 runs 440M rows/job; default here
     50M so the bench stays minutes, override with
-    $SPARK_GRAFT_LARGE_ROWS). Measures BOTH engines on identical inputs
-    so the Arrow-vs-Spark crossover is data, not extrapolation.
+    $SPARK_GRAFT_LARGE_ROWS).
 
     Input files are generated directly with Arrow (vectorized lpad'd
     int->string keys, the reference system test's string-key/long-sort-key
@@ -419,8 +418,7 @@ def bench_compaction_large(spark, n_rows: int) -> dict[str, float]:
         warm_paths.append(p)
     wtable = SleeperTable.create(
         spark, os.path.join(tmp, "t_warm"), schema,
-        TableProperties(compaction_files_batch_size=n_files,
-                        compaction_engine="arrow"))
+        TableProperties(compaction_files_batch_size=n_files))
     wtable.store.add_files([
         FileReference(p, "root", pq.ParquetFile(p).metadata.num_rows)
         for p in warm_paths
@@ -435,32 +433,30 @@ def bench_compaction_large(spark, n_rows: int) -> dict[str, float]:
     log("compaction_large: worker warm-up done")
 
     out: dict[str, float] = {}
-    # arrow (the gated metric) is best-of-3 (r9 VERDICT Next #1: a
-    # min-of-2 leaves one contaminated rep able to decide the record on
-    # a box with chronic background drift); spark fallback timed once
-    for engine, reps in (("arrow", 3), ("spark", 1)):
-        times = []
-        for rep in range(reps):
-            props = TableProperties(compaction_files_batch_size=n_files,
-                                    compaction_engine=engine)
-            table = SleeperTable.create(
-                spark, os.path.join(tmp, f"t_{engine}_{rep}"), schema, props)
-            table.store.add_files([
-                FileReference(p, "root", pq.ParquetFile(p).metadata.num_rows)
-                for p in paths
-            ])
-            t0 = time.perf_counter()
-            refs = table.compact()
-            dt = time.perf_counter() - t0
-            # the Arrow engine may emit one sorted file OR K disjoint
-            # sorted range-parts (subrange-parallel); rows balance exactly
-            assert sum(r.number_of_rows for r in refs) == per_file * n_files
-            times.append(dt)
-            log(f"compaction_large[{engine}] run {rep + 1}: {dt:.1f}s, "
-                f"{len(refs)} part(s) "
-                f"({per_file * n_files / dt:,.0f} rows/s)")
-            os.sync()  # this run's output writeback must not bill the next
-        out[engine] = min(times)
+    # best-of-3 (r9 VERDICT Next #1: a min-of-2 leaves one contaminated
+    # rep able to decide the record on a box with chronic background
+    # drift)
+    times = []
+    for rep in range(3):
+        props = TableProperties(compaction_files_batch_size=n_files)
+        table = SleeperTable.create(
+            spark, os.path.join(tmp, f"t_arrow_{rep}"), schema, props)
+        table.store.add_files([
+            FileReference(p, "root", pq.ParquetFile(p).metadata.num_rows)
+            for p in paths
+        ])
+        t0 = time.perf_counter()
+        refs = table.compact()
+        dt = time.perf_counter() - t0
+        # compaction may emit one sorted file OR K disjoint sorted
+        # range-parts (subrange-parallel); rows balance exactly
+        assert sum(r.number_of_rows for r in refs) == per_file * n_files
+        times.append(dt)
+        log(f"compaction_large[arrow] run {rep + 1}: {dt:.1f}s, "
+            f"{len(refs)} part(s) "
+            f"({per_file * n_files / dt:,.0f} rows/s)")
+        os.sync()  # this run's output writeback must not bill the next
+    out["arrow"] = min(times)
     out["rows"] = per_file * n_files
     import shutil
     shutil.rmtree(tmp, ignore_errors=True)  # several GB of inputs+outputs
@@ -469,12 +465,10 @@ def bench_compaction_large(spark, n_rows: int) -> dict[str, float]:
 
 def bench_compaction_mapagg(spark, n_rows: int) -> dict[str, float]:
     """The full-algebra compaction shape: map_sum + numeric sum with a
-    4x duplicate factor, both engines on identical inputs. This is the
-    config that used to force the ~3x-slower Spark-SQL fallback — the
-    Arrow engine now runs the whole algebra group-adjacent
-    (sorted_scan._aggregate_chunk_sorted), and this metric keeps it
-    honest vs the reference's map-aggregating DataFusion engine
-    (rust/aggregator_udfs/src/map_aggregate.rs:28-40)."""
+    4x duplicate factor. The Arrow kernels run the whole algebra
+    group-adjacent (sorted_scan._aggregate_chunk_sorted), and this
+    metric keeps them honest vs the reference's map-aggregating
+    DataFusion engine (rust/aggregator_udfs/src/map_aggregate.rs:28-40)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -537,27 +531,26 @@ def bench_compaction_mapagg(spark, n_rows: int) -> dict[str, float]:
     props_base = dict(compaction_files_batch_size=n_files,
                       aggregations="sum(n), map_sum(tags)")
     out: dict[str, float] = {}
-    # arrow best-of-3 for the same reason as compaction_large
-    for engine, reps in (("arrow", 3), ("spark", 1)):
-        times = []
-        for rep in range(reps):
-            table = SleeperTable.create(
-                spark, os.path.join(tmp, f"t_{engine}_{rep}"), schema,
-                TableProperties(compaction_engine=engine, **props_base))
-            table.store.add_files([
-                FileReference(p, "root", pq.ParquetFile(p).metadata.num_rows)
-                for p in paths
-            ])
-            t0 = time.perf_counter()
-            refs = table.compact()
-            dt = time.perf_counter() - t0
-            got = sum(r.number_of_rows for r in refs)
-            assert got == n_groups, (got, n_groups)
-            times.append(dt)
-            log(f"compaction_mapagg[{engine}] run {rep + 1}: {dt:.1f}s "
-                f"({total / dt:,.0f} rows/s)")
-            os.sync()
-        out[engine] = min(times)
+    # best-of-3 for the same reason as compaction_large
+    times = []
+    for rep in range(3):
+        table = SleeperTable.create(
+            spark, os.path.join(tmp, f"t_arrow_{rep}"), schema,
+            TableProperties(**props_base))
+        table.store.add_files([
+            FileReference(p, "root", pq.ParquetFile(p).metadata.num_rows)
+            for p in paths
+        ])
+        t0 = time.perf_counter()
+        refs = table.compact()
+        dt = time.perf_counter() - t0
+        got = sum(r.number_of_rows for r in refs)
+        assert got == n_groups, (got, n_groups)
+        times.append(dt)
+        log(f"compaction_mapagg[arrow] run {rep + 1}: {dt:.1f}s "
+            f"({total / dt:,.0f} rows/s)")
+        os.sync()
+    out["arrow"] = min(times)
     out["rows"] = total
     import shutil
     shutil.rmtree(tmp, ignore_errors=True)
@@ -674,16 +667,14 @@ def main() -> None:
         compaction_s = min(compaction_s, compaction_s3)
     log(f"lifecycle: ingest {ingest_s:.2f}s, compaction {compaction_s:.2f}s, {n_rows} rows")
 
-    # phase 3 (exclusive): the 50M-row single-job shape. The Arrow engine
-    # (the headline gate metric) is best-of-3; the Spark fallback engine is
-    # timed once (it is 10x the cost and not the gated number).
+    # phase 3 (exclusive): the 50M-row single-job shape (the headline
+    # gate metric), best-of-3.
     large_rows = int(os.environ.get("SPARK_GRAFT_LARGE_ROWS", "50000000"))
     compaction_load_gate(noise, "compaction_large", arrow_ref)
     large = bench_compaction_large(spark, large_rows)
 
     # phase 4 (exclusive): the full-algebra (map_sum) compaction shape,
-    # both engines — smaller rowcount, the Spark engine is ~3x slower
-    # and it is the comparison, not the gate
+    # at a smaller rowcount
     mapagg_rows = int(os.environ.get("SPARK_GRAFT_MAPAGG_ROWS", "10000000"))
     compaction_load_gate(noise, "compaction_mapagg", arrow_ref)
     mapagg = bench_compaction_mapagg(spark, mapagg_rows)
@@ -707,7 +698,6 @@ def main() -> None:
 
     cores = int(cpus)
     arrow_rps = round(large["rows"] / large["arrow"])
-    spark_rps = round(large["rows"] / large["spark"])
     total = round(sum(t for t in timings.values() if t > 0), 3)
     failures = sorted(n for n, t in timings.items() if t < 0)
     slowest = dict(sorted(
@@ -728,16 +718,13 @@ def main() -> None:
         "n_lifecycle_rows": n_rows,
         "compaction_large_rows": int(large["rows"]),
         "compaction_large_rows_per_sec": arrow_rps,
-        "compaction_large_spark_rows_per_sec": spark_rps,
         # per-core honesty: the reference baselines are per-process on
         # 1-4 vCPUs; these divide by the whole box so a wider fan-out
         # can't masquerade as per-core speed (BASELINE.md: DataFusion
         # 3.5M rows/s on 4 cores = 875k/core)
         "compaction_large_rows_per_sec_per_core": round(arrow_rps / cores),
-        "compaction_large_spark_rows_per_sec_per_core": round(spark_rps / cores),
         "compaction_mapagg_rows": int(mapagg["rows"]),
         "compaction_mapagg_rows_per_sec": round(mapagg["rows"] / mapagg["arrow"]),
-        "compaction_mapagg_spark_rows_per_sec": round(mapagg["rows"] / mapagg["spark"]),
         "detail_file": "BENCH_DETAIL.json",
     }
     # one record, ALL headline gates, stamped together (Next #1): a

@@ -1,20 +1,17 @@
 """Compaction: merge N sorted files of one partition into 1, applying the
-table's filters + aggregation, then atomically swap the file references.
+table's filters, aggregation and custom iterators, then atomically swap
+the file references.
 
 Reference (O1: JavaCompactionRunner.java:69-166, compact.rs:61-140): a
 compaction job reads its partition's file references filtered to the
 partition region, runs the iterator chain, writes one sorted file + sketch
 sidecar, and commits a REPLACE_FILE_REFERENCES transaction.
 
-Spark-first shape — and our scale-out advantage over the reference's
-one-ECS-task-per-job model: MANY jobs batch into ONE Spark action. ONE
-scan over all jobs' distinct input files is joined to a broadcast
-``file -> (job id, region)`` map (see ``_tag_rows_with_jobs``), and
-``partitionBy(tag)`` writes one sorted file per job. Disjoint partition
-regions guarantee per-job key spaces never collide, so a single
-``groupBy(tag, keys)`` collapses all jobs at once. 1000 pending
-compactions = one Spark job with ONE scan node and 1000 write
-partitions, not 1000 task submissions or a 1000-branch union plan.
+The reference has two engines, a Java iterator engine and a DataFusion
+engine (QueryEngineSelector.java:49-57). Here every job runs on one:
+``sorted_scan``'s Arrow merge and aggregation kernels. MANY jobs batch
+into ONE Spark action and ONE commit transaction; only the tail differs
+by whether the table has custom iterators (see "job execution" below).
 
 Job creation strategies (O3):
 - ``basic`` — batch leaf files in creation order, size
@@ -22,6 +19,7 @@ Job creation strategies (O3):
 - ``size_ratio`` — compact a candidate set only if
   sum(sizes of all but largest) >= ratio * largest, Accumulo-style
   (SizeRatioLeafStrategy.java:36-121).
+- ``leveled`` — merge similar-sized files per size class.
 """
 
 from __future__ import annotations
@@ -31,8 +29,9 @@ import time
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -41,13 +40,16 @@ from sleeper_spark.iterators import (
     parse_aggregations,
     parse_filters,
 )
-from sleeper_spark import sketches
-from sleeper_spark.partitions import PartitionTree
-from sleeper_spark.processing import apply_filters, apply_aggregations
+from sleeper_spark import bloom, sketches
 from sleeper_spark.properties import TableProperties
-from sleeper_spark.query import local_rows_df
 from sleeper_spark.ranges import Region
 from sleeper_spark.schema import Schema
+from sleeper_spark.sorted_scan import (
+    _agg_spec,
+    _declared_arrow_schema,
+    _merge_leaf,
+    _process_chunk,
+)
 from sleeper_spark.statestore import FileReference, StateStore
 
 JOB_COL = "__sleeper_job__"
@@ -177,446 +179,36 @@ def _leveled_batches(refs: list[FileReference], fanout: int,
 # ---------------------------------------------------------------------------
 # job execution (O1, batched)
 # ---------------------------------------------------------------------------
-
-_FILE_COL = "__sleeper_file__"
-
-
-def _tag_rows_with_jobs(spark: SparkSession, jobs: list[CompactionJob],
-                        schema: Schema):
-    """ONE scan of all jobs' distinct input files + a broadcast
-    (file -> job, job region) map join.
-
-    The naive shape — one scan branch per job unioned N ways — re-lists
-    files per branch and grows the Catalyst plan linearly in N, so 1000
-    pending jobs means a 1000-branch plan whose analysis time dominates.
-    This shape is N-invariant: a single Parquet scan node, one broadcast
-    hash join against a rows-sized-in-jobs map, and a codegen'd range
-    filter. A shared ancestor file feeding several jobs joins to each of
-    them, and the per-job partition region (the reference's dedup guard,
-    RangeQueryUtils.java:49-56) keeps exactly the rows the job owns.
-    """
-    struct = schema.to_struct_type()
-    all_files = sorted({fn for job in jobs for fn in job.input_files})
-
-    # broadcast map: file path -> (job id, canonical region bounds per dim)
-    map_fields = [T.StructField(_FILE_COL, T.StringType(), False),
-                  T.StructField(JOB_COL, T.StringType(), False)]
-    for f in schema.row_key_fields:
-        map_fields.append(T.StructField(f"__min_{f.name}__", f.dtype, True))
-        map_fields.append(T.StructField(f"__max_{f.name}__", f.dtype, True))
-    rows = []
-    for job in jobs:
-        bounds = {r.field: r.canonicalise() for r in job.partition_region.ranges}
-        for fn in job.input_files:
-            row = [fn, job.job_id]
-            for f in schema.row_key_fields:
-                rng = bounds.get(f.name)
-                row.append(rng.min if rng is not None else None)
-                row.append(rng.max if rng is not None else None)
-            rows.append(tuple(row))
-    mapping = local_rows_df(spark, rows, T.StructType(map_fields))
-
-    scan = (
-        spark.read.schema(struct).parquet(*all_files)
-        # input_file_name() is a percent-encoded file:// URI; decode and
-        # strip the scheme to recover the stored absolute path. url_decode
-        # has x-www-form-urlencoded semantics (a bare '+' becomes a
-        # space), but URI encoding never emits '+' for space — so protect
-        # literal '+' in paths by re-encoding it first, or a table under
-        # a '+' directory would silently drop every row.
-        .withColumn(_FILE_COL, F.expr(
-            "regexp_replace(url_decode(replace(input_file_name(), '+', '%2B')),"
-            " '^file://', '')"))
-    )
-    # accounting guard as an OBSERVED METRIC on the main write action:
-    # the decoded scan key must cover every input file, else the inner
-    # join below silently drops a file's rows and the REPLACE commit
-    # loses data. observe() rides the write — no extra Spark action —
-    # and the caller checks it BEFORE committing the reference swap.
-    # The set is bounded by the batch's input-file count (not data).
-    from pyspark.sql import Observation
-
-    accounting = Observation("compaction-accounting")
-    scan = scan.observe(
-        accounting, F.collect_set(F.col(_FILE_COL)).alias("files_seen"))
-
-    def check_accounting() -> None:
-        seen = set(accounting.get["files_seen"])
-        missing = sorted(set(all_files) - seen)
-        if missing:
-            raise RuntimeError(
-                "compaction input files unmatched by scan file-name "
-                f"decoding (would lose their rows): {missing[:3]}"
-                f"{'...' if len(missing) > 3 else ''}")
-
-    joined = scan.join(F.broadcast(mapping), _FILE_COL, "inner")
-    region_pred = F.lit(True)
-    for f in schema.row_key_fields:
-        mn, mx = F.col(f"__min_{f.name}__"), F.col(f"__max_{f.name}__")
-        region_pred = (
-            region_pred
-            & (mn.isNull() | (F.col(f.name) >= mn))
-            & (mx.isNull() | (F.col(f.name) < mx))
-        )
-    drop = [_FILE_COL] + [c for f in schema.row_key_fields
-                          for c in (f"__min_{f.name}__", f"__max_{f.name}__")]
-    return joined.where(region_pred).drop(*drop), check_accounting
-
-
-#: below this many jobs the broadcast file->job machinery's fixed cost
-#: (broadcast build + input_file_name decode + accounting action)
-#: dominates — tag via a direct per-job scan union instead. The union
-#: plan grows linearly in N, so the threshold stays well under the point
-#: where Catalyst analysis time matters (the 200-job plan tests pin the
-#: single-scan shape above it).
-SMALL_BATCH_JOBS = 32
-
-
-#: separator between job id and subrange part index in the write tag
-_PART_SEP = "@p"
-
-
-def _tag_rows_small_batch(spark: SparkSession, jobs: list[CompactionJob],
-                          schema: Schema, store: StateStore,
-                          budget: int) -> tuple[DataFrame, dict[str, list[str]]]:
-    """Small-N tagging: one scan branch per (job, dim-0 subrange), region
-    + range filters pushed to each branch (Catalyst prunes parquet row
-    groups), no join and no extra action. At N <= SMALL_BATCH_JOBS this
-    beats the N-invariant broadcast plan by ~2x (fixed costs), and the
-    subrange tags let ONE big job sort in K reducers instead of one —
-    each tag becomes its own shuffle partition and output file, committed
-    as a list of disjoint sorted range-parts (same contract as the Arrow
-    engine's subrange merge).
-
-    Returns (tagged df, job id -> ordered list of write tags)."""
-    struct = schema.to_struct_type()
-    key0 = schema.key_names[0]
-    branches = []
-    job_tags: dict[str, list[str]] = {}
-    for job in jobs:
-        total_rows = sum(store.files[fn][job.partition_id].number_of_rows
-                         for fn in job.input_files)
-        subs = _job_subrange_bounds(job, schema, total_rows, budget)
-        tags = []
-        for si, (slo, shi) in enumerate(subs):
-            tag = job.job_id if len(subs) == 1 \
-                else f"{job.job_id}{_PART_SEP}{si:04d}"
-            pred = job.partition_region.to_column()
-            if slo is not None:
-                pred = pred & (F.col(key0) >= F.lit(slo))
-            if shi is not None:
-                pred = pred & (F.col(key0) < F.lit(shi))
-            branches.append(
-                spark.read.schema(struct).parquet(*job.input_files)
-                .where(pred)
-                .withColumn(JOB_COL, F.lit(tag)))
-            tags.append(tag)
-        job_tags[job.job_id] = tags
-    out = branches[0]
-    for p in branches[1:]:
-        out = out.unionByName(p)
-    return out, job_tags
-
-
-def _declared_arrow(schema):
-    """Table schema as Arrow (sorted_scan._declared_arrow_schema): the
-    padding source for files written before an add_value_column."""
-    from sleeper_spark.sorted_scan import _declared_arrow_schema
-
-    return _declared_arrow_schema(schema)
-
-
-def _write_empty_parquet(out_path: str, sample_input: str,
-                         column_order: list[str], compression: str,
-                         declared=None) -> None:
-    """Zero-row parquet with the table's column schema, cloned from an
-    input file's footer (or the declared table schema, which also
-    covers columns a schema-evolved input lacks) — pure Arrow, no
-    Spark action."""
-    import pyarrow as pa
-
-    in_schema = declared or pq.ParquetFile(sample_input).schema_arrow
-    empty = pa.table({
-        name: pa.array([], type=in_schema.field(name).type)
-        for name in column_order})
-    pq.write_table(empty, out_path, compression=compression)
-
-
-def run_jobs(
-    spark: SparkSession,
-    jobs: list[CompactionJob],
-    store: StateStore,
-    data_dir: str,
-    props: TableProperties,
-    now_millis: int | None = None,
-) -> list[FileReference]:
-    """Execute many compaction jobs as ONE Spark action; commit each job's
-    REPLACE_FILE_REFERENCES transaction afterwards."""
-    if not jobs:
-        return []
-    store.check_writable()  # before any output write (read-only views)
-    schema = store.schema
-    now_millis = now_millis if now_millis is not None else int(time.time() * 1000)
-
-    # mark inputs as owned by their job (AssignJobIdsTransaction) so a
-    # concurrent planner cannot double-compact them — one txn for the batch
-    store.assign_job_ids_batch([
-        (job.job_id,
-         [store.files[fn][job.partition_id] for fn in job.input_files])
-        for job in jobs
-    ])
-
-    out_dir = os.path.join(data_dir, f"compaction-{uuid.uuid4().hex[:12]}")
-    struct = schema.to_struct_type()
-
-    budget = max(1, spark.sparkContext.defaultParallelism // len(jobs))
-    check_accounting = None
-    if len(jobs) <= SMALL_BATCH_JOBS:
-        tagged, job_tags = _tag_rows_small_batch(
-            spark, jobs, schema, store, budget)
-    else:
-        tagged, check_accounting = _tag_rows_with_jobs(spark, jobs, schema)
-        job_tags = {job.job_id: [job.job_id] for job in jobs}
-    n_parts = sum(len(tags) for tags in job_tags.values())
-
-    filters = parse_filters(props.filters)
-    aggs = parse_aggregations(props.aggregations)
-    df = apply_filters(tagged, filters, now_millis)
-    if aggs:
-        df = apply_aggregations(df, schema, aggs, extra_group_cols=[JOB_COL])
-    # table-level custom iterators run at compaction too (U1: table
-    # iterators are applied on every read path; must preserve the schema)
-    df = apply_custom_iterators(df, props.iterators, schema)
-
-    (
-        df.repartition(n_parts, F.col(JOB_COL))
-        .sortWithinPartitions(JOB_COL, *schema.key_names)
-        .write.option("compression", props.compression)
-        .option("parquet.block.size", str(props.row_group_bytes))
-        .option("parquet.page.size", str(props.page_bytes))
-        .partitionBy(JOB_COL)
-        .parquet(out_dir)
-    )
-    if check_accounting is not None:
-        # observed metric from the write above: every input file must have
-        # been matched by the file-name decode, or rows were lost — abort
-        # before the reference swap. The just-written outputs are
-        # referenced by nothing and would never enter the GC queue, so
-        # delete them before re-raising (same leak class as zero-row
-        # subrange parts in run_jobs_arrow).
-        try:
-            check_accounting()
-        except Exception:
-            import shutil
-
-            shutil.rmtree(out_dir, ignore_errors=True)
-            raise
-
-    # commit: one REPLACE_FILE_REFERENCES per job (docs/design.md:169-199);
-    # a subrange-split job commits its ordered sorted range-parts as a
-    # list (same contract as the Arrow engine)
-    out_refs: list[FileReference] = []
-    new_paths: list[str] = []
-    replacements = []
-    empty_template: str | None = None
-    for job in jobs:
-        part_refs: list[FileReference] = []
-        for tag in job_tags[job.job_id]:
-            jdir = os.path.join(out_dir, f"{JOB_COL}={tag}")
-            files = sorted(os.listdir(jdir)) if os.path.isdir(jdir) else []
-            parquets = [os.path.join(jdir, f) for f in files
-                        if f.endswith(".parquet")]
-            if not parquets:
-                continue
-            path = parquets[0]
-            part_refs.append(FileReference(
-                filename=path,
-                partition_id=job.partition_id,
-                number_of_rows=pq.ParquetFile(path).metadata.num_rows,
-                only_contains_data_for_this_partition=True,
-            ))
-        if not part_refs:
-            # every input row was filtered/aged off — the swap still needs
-            # an output ref. Write ONE empty template with Arrow (no Spark
-            # action) and copy it per empty job: a mass ageOff sweep over
-            # hundreds of expired partitions must not serialize hundreds
-            # of tiny Spark jobs.
-            if empty_template is None:
-                empty_template = os.path.join(out_dir, ".empty-template.parquet")
-                os.makedirs(out_dir, exist_ok=True)
-                _write_empty_parquet(empty_template, job.input_files[0],
-                                     [f.name for f in schema.all_fields()],
-                                     props.compression,
-                                     declared=_declared_arrow(schema))
-            jdir = os.path.join(out_dir, f"{JOB_COL}={job.job_id}")
-            path = os.path.join(jdir, "empty.parquet")
-            os.makedirs(jdir, exist_ok=True)
-            import shutil
-            shutil.copyfile(empty_template, path)
-            part_refs = [FileReference(
-                filename=path, partition_id=job.partition_id,
-                number_of_rows=0,
-                only_contains_data_for_this_partition=True,
-            )]
-        new_paths.extend(r.filename for r in part_refs)
-        out_refs.extend(part_refs)
-        replacements.append((job.partition_id, list(job.input_files), part_refs))
-    # sketch sidecars before the reference swap, so a split planned right
-    # after commit sees them (compact.rs writes file + sketch together)
-    sketches.write_sidecars_distributed(
-        spark, new_paths, list(schema.key_names), props.sketch_size,
-        first_key_sorted=True)  # merge outputs are key-sorted per file
-    # ONE transaction for the whole batch (the reference's transaction
-    # carries a job list; 1000 jobs != 1000 log appends)
-    store.replace_file_references_batch(replacements)
-    return out_refs
-
-
-# ---------------------------------------------------------------------------
-# job execution, Arrow engine
-# ---------------------------------------------------------------------------
 #
-# The reference runs compaction on one of two engines per table: the Java
-# streaming-merge engine or the Rust/DataFusion vectorized engine
-# (QueryEngineSelector.java:49-57; compact.rs:61-140, ~17x faster). We
-# mirror that split: the Spark-SQL path above (shared shuffle plan, best
-# when many jobs amortize one action and for the full aggregation algebra)
-# and this Arrow path — one task per job running C++ vectorized kernels
-# (filter → group_by → sort_by → write) with ZERO shuffle: a compaction
-# job's inputs are one partition's files, so the work is embarrassingly
-# parallel and the only cross-node traffic is the object-store read/write,
-# exactly like the reference's per-container DataFusion jobs.
-
-def arrow_engine_supported(schema: Schema, props: TableProperties) -> bool:
-    """The Arrow COMPACTION engine covers ageOff + the full aggregation
-    algebra that ``validate_aggregations`` admits; only custom iterators
-    (arbitrary DataFrame transforms) force the Spark engine."""
-    return not props.iterators
-
-
-def _arrow_compact_one(desc: dict) -> tuple[str, str, int]:
-    """Run one compaction job with Arrow kernels (executed on an executor).
-
-    Mirrors compact.rs:118-140: merge sorted runs → partition-region
-    filter → ageOff → group-adjacent aggregate → write one sorted file.
-
-    Streaming shape: the inputs are SORTED runs, so instead of
-    concat+full-sort (which materialises the whole job — at the
-    reference's 440M-rows/job that is tens of GB per task) the job runs
-    the same vectorized bounded-memory k-way merge as sorted_scan and
-    appends each merged chunk to a ParquetWriter. Memory is
-    O(n_files x batch); chunk cuts never split an equal-key group, so
-    per-chunk group-by aggregation is exact (sorted_scan module doc).
-    """
-    import pyarrow as pa
-    import pyarrow.parquet as _pq
-
-    from sleeper_spark import sketches as sk_mod
-    from sleeper_spark.sorted_scan import _merge_leaf, _process_chunk
-
-    # Spark pins python workers to OMP_NUM_THREADS=1; a lone huge job
-    # should use the cores its batch left idle (the reference's DataFusion
-    # containers get 4 vCPUs each, SystemTestInstance.java:202-218)
-    budget = desc.get("cpu_budget", 1)
-    if budget > pa.cpu_count():
-        pa.set_cpu_count(budget)
-        pa.set_io_thread_count(max(8, budget // 2))
-
-    keys = desc["key_names"]
-    merge_desc = {
-        "files": list(desc["input_files"]),
-        "key_names": keys,
-        "column_order": desc["column_order"],
-        "arrow_schema": desc.get("arrow_schema"),
-        "leaf_ranges": desc["ranges"],
-        "query_regions": [],
-        "filters": desc["filters"],
-        "aggs": desc["aggs"],
-        "now_millis": desc["now_millis"],
-        # bigger merge batches than the query-latency-oriented
-        # sorted_scan default: fewer orchestration rounds (~10% at 50M),
-        # memory still bounded at n_files x batch x row-width
-        "batch_rows": desc.get("batch_rows", 524288),
-        # subrange jobs: row-group skip + exact batch trim at read time
-        "prune_range": desc.get("prune_range"),
-    }
-    writer = None
-    n_out = 0
-    # dim-0 output is globally sorted -> streaming O(k)-memory sketch (no
-    # buffered copy, no re-sort of the key column the merge already
-    # ordered); secondary dims are not globally sorted by themselves, so
-    # they keep the buffer + sort_indices path (usually narrow numerics)
-    d0_sketch = sk_mod.SortedColumnSketch(desc["sketch_k"])
-    # per-file Bloom over the first row key (bloom.py): sized from the
-    # planner's per-part row estimate (an upper bound on output rows —
-    # filters/aggregation only shrink it), fed from the same output
-    # batches the writer gets — zero extra passes over the data
-    from sleeper_spark import bloom as bl
-    # _reuse_bits is safe here: exactly one accumulator lives per task
-    # invocation and tasks run to completion per worker thread — the
-    # borrowed per-thread bitmap (one byte per bit, dtype=bool: up to
-    # 128 MiB per worker thread at the MAX_BITS cap) is re-zeroed
-    # in place instead of freshly faulted per output file, which
-    # measured ~1s/file of first-touch stalls on a memory-pressured host
-    d0_bloom = bl.BloomAccumulator(
-        keys[0], max(1, desc.get("expected_rows") or sum(
-            _pq.ParquetFile(f).metadata.num_rows
-            for f in desc["input_files"])), _reuse_bits=True)
-    rest_chunks: list[list] = [[] for _ in keys[1:]]
-    try:
-        for chunk in _merge_leaf(merge_desc):
-            out = _process_chunk(chunk, merge_desc)
-            if not out.num_rows:
-                continue
-            if writer is None:
-                writer = _pq.ParquetWriter(
-                    desc["out_path"], out.schema,
-                    compression=desc["compression"],
-                    data_page_size=desc["page_bytes"])
-            writer.write_table(out)
-            n_out += out.num_rows
-            d0_sketch.update(out.column(keys[0]))
-            if d0_bloom is not None:
-                try:
-                    d0_bloom.update(out.column(keys[0]))
-                except TypeError:
-                    d0_bloom = None  # non-hashable key type -> no bloom
-            for i, k in enumerate(keys[1:]):
-                rest_chunks[i].append(out.column(k).combine_chunks())
-    finally:
-        if writer is not None:
-            writer.close()
-    if writer is None:
-        # all rows filtered: still write an empty file for the swap.
-        # Prefer the declared table schema (schema-evolved inputs may
-        # lack new columns); fall back to the first input's footer
-        in_schema = (desc.get("arrow_schema")
-                     or _pq.ParquetFile(desc["input_files"][0]).schema_arrow)
-        empty = pa.table({
-            name: pa.array([], type=in_schema.field(name).type)
-            for name in desc["column_order"]})
-        _pq.write_table(empty, desc["out_path"],
-                        compression=desc["compression"])
-    # sketch sidecar computed inside the task — zero extra IO, like the
-    # reference computing sketches inside the compaction job
-    # (compact.rs writes file + sketch together)
-    rest_cols = {
-        k: pa.chunked_array(rest_chunks[i]) if rest_chunks[i]
-        else pa.chunked_array([pa.array([], type=pa.int64())])
-        for i, k in enumerate(keys[1:])
-    }
-    sketch = sk_mod.sketch_from_arrow_columns(
-        rest_cols, n_out, desc["sketch_k"])
-    sketch["fields"][keys[0]] = d0_sketch.field_dict()
-    if d0_bloom is not None and d0_bloom.n:
-        sketch["bloom"] = d0_bloom.to_dict()
-    sk_mod.write_sidecar(desc["out_path"], sketch)
-    return desc["job_id"], desc["out_path"], n_out
-
+# One engine: every job runs on sorted_scan's Arrow kernels, like the
+# reference's DataFusion engine (compact.rs:61-140): merge the sorted
+# input runs, clip to the partition region, ageOff, aggregate adjacent
+# equal keys. Jobs are cut into parts (one per dim-0 subrange) and
+# described once (:func:`_claim_parts`); two tails run the parts and
+# hand the rows per part to one commit (:func:`_commit_parts`):
+#
+# - ``run_jobs_arrow`` (tables without custom iterators): one task per
+#   part writes its file and sidecar, with ZERO shuffle — a compaction
+#   job's inputs are one partition's files, so the work is embarrassingly
+#   parallel, exactly like the reference's per-container jobs.
+# - ``run_jobs`` (tables with custom iterators, arbitrary DataFrame
+#   transforms): the same merged parts feed a ``mapInPandas`` source,
+#   the iterators run on that DataFrame, and a shuffle on the part tag
+#   re-sorts each part before a partitioned write, so an iterator that
+#   reorders rows cannot break the sorted-file invariant.
 
 #: minimum rows per subrange part — below this a part's fixed cost
 #: (Python worker handoff + k file opens) outweighs the parallelism
 SUBRANGE_MIN_ROWS = 1_000_000
+
+
+def _write_empty_parquet(out_path: str, declared, compression: str) -> None:
+    """Zero-row parquet with the declared table schema (which also
+    covers columns a schema-evolved input lacks): the output a job or
+    leaf whose every row was filtered still needs for its reference
+    swap. Pure Arrow, no Spark action."""
+    empty = pa.table({f.name: pa.array([], type=f.type) for f in declared})
+    pq.write_table(empty, out_path, compression=compression)
 
 
 def _job_subrange_bounds(job: CompactionJob, schema: Schema,
@@ -645,29 +237,24 @@ def _job_subrange_bounds(job: CompactionJob, schema: Schema,
     return [(bounds[i], bounds[i + 1]) for i in range(len(bounds) - 1)]
 
 
-def run_jobs_arrow(
-    spark: SparkSession,
-    jobs: list[CompactionJob],
-    store: StateStore,
-    data_dir: str,
-    props: TableProperties,
-    now_millis: int | None = None,
-) -> list[FileReference]:
-    """Execute compaction jobs on the Arrow engine — no shuffle; commit
-    all REPLACE_FILE_REFERENCES afterwards in one transaction.
+def _claim_parts(spark: SparkSession, jobs: list[CompactionJob],
+                 store: StateStore, data_dir: str, props: TableProperties,
+                 now_millis: int | None) -> tuple[str, list[dict]]:
+    """Claim the jobs' inputs and describe their parts. Returns the new
+    output directory and one descriptor per part, each job's parts in
+    key order.
 
-    Task fan-out: small jobs run as one task each; a big job is cut into
-    K disjoint dim-0 subranges (sketch/row-group metadata, no data read)
-    and each subrange merges independently with row-group-pruned reads,
-    emitting one sorted range-part file. The job commits its parts as a
-    list of disjoint sorted FileReferences — together they ARE the
-    compacted partition, in key order, and every reader already treats a
-    partition's files as sorted runs."""
-    if not jobs:
-        return []
+    Task fan-out: a small job is one part; a big job is cut into K
+    disjoint dim-0 subranges (sketch/row-group metadata, no data read)
+    and each subrange merges independently with row-group-pruned reads.
+    A descriptor is a ``sorted_scan`` leaf descriptor (``files``,
+    ``leaf_ranges``, ``filters``, ``aggs``, ...) plus the part's
+    ``job_id``, ``out_path`` and write settings."""
     store.check_writable()  # before any output write (read-only views)
     schema = store.schema
     now_millis = now_millis if now_millis is not None else int(time.time() * 1000)
+    # mark inputs as owned by their job (AssignJobIdsTransaction) so a
+    # concurrent planner cannot double-compact them — one txn for the batch
     store.assign_job_ids_batch([
         (job.job_id,
          [store.files[fn][job.partition_id] for fn in job.input_files])
@@ -676,8 +263,6 @@ def run_jobs_arrow(
 
     out_dir = os.path.join(data_dir, f"compaction-{uuid.uuid4().hex[:12]}")
     os.makedirs(out_dir, exist_ok=True)
-    from sleeper_spark.sorted_scan import _agg_spec
-
     aggs = _agg_spec(parse_aggregations(props.aggregations))
     filters = [(f.column, f.max_age_millis) for f in parse_filters(props.filters)]
     key0 = schema.key_names[0]
@@ -685,7 +270,6 @@ def run_jobs_arrow(
     budget = max(1, parallelism // len(jobs))
 
     descs: list[dict] = []
-    job_part_paths: dict[str, list[str]] = {}
     for job in jobs:
         ranges = [
             (r.field, r.min, r.max)
@@ -694,29 +278,27 @@ def run_jobs_arrow(
         total_rows = sum(store.files[fn][job.partition_id].number_of_rows
                          for fn in job.input_files)
         subs = _job_subrange_bounds(job, schema, total_rows, budget)
-        paths: list[str] = []
         for si, (slo, shi) in enumerate(subs):
-            sub_ranges = [
-                (f, slo if f == key0 else mn, shi if f == key0 else mx)
-                for f, mn, mx in ranges
-            ]
-            out_path = os.path.join(
-                out_dir,
-                f"{job.job_id}.parquet" if len(subs) == 1
-                else f"{job.job_id}-p{si:04d}.parquet")
             desc = {
                 "job_id": job.job_id,
-                "input_files": list(job.input_files),
-                "ranges": sub_ranges,
+                "files": list(job.input_files),
+                "leaf_ranges": [
+                    (f, slo if f == key0 else mn, shi if f == key0 else mx)
+                    for f, mn, mx in ranges
+                ],
+                "query_regions": [],
                 "filters": filters,
                 "aggs": aggs,
                 "key_names": list(schema.key_names),
                 "column_order": [f.name for f in schema.all_fields()],
-                "arrow_schema": _declared_arrow(schema),
-                "out_path": out_path,
+                "arrow_schema": _declared_arrow_schema(schema),
+                "now_millis": now_millis,
+                "out_path": os.path.join(
+                    out_dir,
+                    f"{job.job_id}.parquet" if len(subs) == 1
+                    else f"{job.job_id}-p{si:04d}.parquet"),
                 "compression": props.compression,
                 "page_bytes": props.page_bytes,
-                "now_millis": now_millis,
                 "sketch_k": props.sketch_size,
                 "cpu_budget": max(1, budget // len(subs)),
                 # bloom sizing: THIS PART's share of the job, not the
@@ -731,25 +313,120 @@ def run_jobs_arrow(
                 # file reads only its partition's slice
                 desc["prune_range"] = (key0, slo, shi)
             descs.append(desc)
-            paths.append(out_path)
-        job_part_paths[job.job_id] = paths
 
     # merge-batch sizing by concurrency: a lone task benefits from big
-    # batches (fewer orchestration rounds), but 32 concurrent Python
-    # workers each refilling n_files x 512k-row buffers stampede the
-    # kernel allocator (measured 12x slower at 32 tasks). Cap batches
-    # small whenever tasks actually run concurrently.
-    if min(len(descs), parallelism) > 4:
-        for d in descs:
-            d.setdefault("batch_rows", 131072)
+    # batches (fewer orchestration rounds, ~10% at 50M rows; memory
+    # still bounded at n_files x batch x row-width), but 32 concurrent
+    # Python workers each refilling n_files x 512k-row buffers stampede
+    # the kernel allocator (measured 12x slower at 32 tasks). Cap
+    # batches small whenever tasks actually run concurrently.
+    batch_rows = 131072 if min(len(descs), parallelism) > 4 else 524288
+    for d in descs:
+        d["batch_rows"] = batch_rows
+    return out_dir, descs
 
-    results = (
-        spark.sparkContext.parallelize(descs, len(descs))
-        .map(_arrow_compact_one)
-        .collect()
-    )
-    rows_by_path = {path: n for _, path, n in results}
 
+def _part_chunks(desc: dict):
+    """One part's output rows as non-empty key-sorted tables in key
+    order: the bounded-memory k-way merge of its sorted input runs
+    (O(n_files x batch) rows, never the whole job), each chunk clipped
+    to the part's range, aged off and aggregated. Chunk cuts never split
+    an equal-key group, so per-chunk aggregation is exact (sorted_scan
+    module doc)."""
+    for chunk in _merge_leaf(desc):
+        out = _process_chunk(chunk, desc)
+        if out.num_rows:
+            yield out
+
+
+def _arrow_compact_one(desc: dict) -> tuple[str, str, int]:
+    """Run one part with Arrow kernels (executed on an executor): merge
+    and process its rows (:func:`_part_chunks`), append each chunk to a
+    ParquetWriter and build the sketch sidecar from the same batches."""
+    # Spark pins python workers to OMP_NUM_THREADS=1; a lone huge job
+    # should use the cores its batch left idle (the reference's DataFusion
+    # containers get 4 vCPUs each, SystemTestInstance.java:202-218)
+    budget = desc.get("cpu_budget", 1)
+    if budget > pa.cpu_count():
+        pa.set_cpu_count(budget)
+        pa.set_io_thread_count(max(8, budget // 2))
+
+    keys = desc["key_names"]
+    writer = None
+    n_out = 0
+    # dim-0 output is globally sorted -> streaming O(k)-memory sketch (no
+    # buffered copy, no re-sort of the key column the merge already
+    # ordered); secondary dims are not globally sorted by themselves, so
+    # they keep the buffer + sort_indices path (usually narrow numerics)
+    d0_sketch = sketches.SortedColumnSketch(desc["sketch_k"])
+    # per-file Bloom over the first row key (bloom.py): sized from the
+    # planner's per-part row estimate (an upper bound on output rows —
+    # filters/aggregation only shrink it), fed from the same output
+    # batches the writer gets — zero extra passes over the data
+    # _reuse_bits is safe here: exactly one accumulator lives per task
+    # invocation and tasks run to completion per worker thread — the
+    # borrowed per-thread bitmap (one byte per bit, dtype=bool: up to
+    # 128 MiB per worker thread at the MAX_BITS cap) is re-zeroed
+    # in place instead of freshly faulted per output file, which
+    # measured ~1s/file of first-touch stalls on a memory-pressured host
+    d0_bloom = bloom.BloomAccumulator(
+        keys[0], max(1, desc.get("expected_rows") or sum(
+            pq.ParquetFile(f).metadata.num_rows
+            for f in desc["files"])), _reuse_bits=True)
+    rest_chunks: list[list] = [[] for _ in keys[1:]]
+    try:
+        for out in _part_chunks(desc):
+            if writer is None:
+                writer = pq.ParquetWriter(
+                    desc["out_path"], out.schema,
+                    compression=desc["compression"],
+                    data_page_size=desc["page_bytes"])
+            writer.write_table(out)
+            n_out += out.num_rows
+            d0_sketch.update(out.column(keys[0]))
+            if d0_bloom is not None:
+                try:
+                    d0_bloom.update(out.column(keys[0]))
+                except TypeError:
+                    d0_bloom = None  # non-hashable key type -> no bloom
+            for i, k in enumerate(keys[1:]):
+                rest_chunks[i].append(out.column(k).combine_chunks())
+    finally:
+        if writer is not None:
+            writer.close()
+    if writer is None:
+        _write_empty_parquet(desc["out_path"], desc["arrow_schema"],
+                             desc["compression"])
+    # sketch sidecar computed inside the task — zero extra IO, like the
+    # reference computing sketches inside the compaction job
+    # (compact.rs writes file + sketch together)
+    rest_cols = {
+        k: pa.chunked_array(rest_chunks[i]) if rest_chunks[i]
+        else pa.chunked_array([pa.array([], type=pa.int64())])
+        for i, k in enumerate(keys[1:])
+    }
+    sketch = sketches.sketch_from_arrow_columns(
+        rest_cols, n_out, desc["sketch_k"])
+    sketch["fields"][keys[0]] = d0_sketch.field_dict()
+    if d0_bloom is not None and d0_bloom.n:
+        sketch["bloom"] = d0_bloom.to_dict()
+    sketches.write_sidecar(desc["out_path"], sketch)
+    return desc["job_id"], desc["out_path"], n_out
+
+
+def _commit_parts(store: StateStore, jobs: list[CompactionJob],
+                  descs: list[dict],
+                  rows_by_path: dict[str, int]) -> list[FileReference]:
+    """Swap every job's inputs for its parts in ONE
+    REPLACE_FILE_REFERENCES transaction (the reference's transaction
+    carries a job list; 1000 jobs != 1000 log appends). A job commits
+    its non-empty parts as a list of disjoint sorted FileReferences —
+    together they ARE the compacted partition, in key order, and every
+    reader already treats a partition's files as sorted runs. A job
+    whose every row was filtered commits one empty part."""
+    paths_by_job: dict[str, list[str]] = {}
+    for d in descs:
+        paths_by_job.setdefault(d["job_id"], []).append(d["out_path"])
     out_refs: list[FileReference] = []
     replacements = []
     for job in jobs:
@@ -760,17 +437,15 @@ def run_jobs_arrow(
                 number_of_rows=rows_by_path[path],
                 only_contains_data_for_this_partition=True,
             )
-            for path in job_part_paths[job.job_id]
+            for path in paths_by_job[job.job_id]
         ]
-        keep = [r for r in parts if r.number_of_rows > 0]
-        if not keep:
-            keep = parts[:1]  # fully-filtered job: one empty marker ref
-        kept_files = {r.filename for r in keep}
+        keep = [r for r in parts if r.number_of_rows > 0] or parts[:1]
+        kept = {r.filename for r in keep}
         for r in parts:
             # a dropped zero-row part is referenced by nothing, so it
             # would never enter the GC queue — delete it (and its sketch
             # sidecar) now, before the reference swap
-            if r.filename not in kept_files:
+            if r.filename not in kept:
                 for p in (r.filename, sketches.sidecar_path(r.filename)):
                     try:
                         os.remove(p)
@@ -780,6 +455,115 @@ def run_jobs_arrow(
         replacements.append((job.partition_id, list(job.input_files), keep))
     store.replace_file_references_batch(replacements)
     return out_refs
+
+
+def run_jobs_arrow(
+    spark: SparkSession,
+    jobs: list[CompactionJob],
+    store: StateStore,
+    data_dir: str,
+    props: TableProperties,
+    now_millis: int | None = None,
+) -> list[FileReference]:
+    """Execute compaction jobs of a table without custom iterators: one
+    Spark action, one task per part (:func:`_arrow_compact_one`), no
+    shuffle; commit all REPLACE_FILE_REFERENCES afterwards in one
+    transaction."""
+    if not jobs:
+        return []
+    _, descs = _claim_parts(spark, jobs, store, data_dir, props, now_millis)
+    results = (
+        spark.sparkContext.parallelize(descs, len(descs))
+        .map(_arrow_compact_one)
+        .collect()
+    )
+    return _commit_parts(store, jobs, descs,
+                         {path: n for _, path, n in results})
+
+
+def run_jobs(
+    spark: SparkSession,
+    jobs: list[CompactionJob],
+    store: StateStore,
+    data_dir: str,
+    props: TableProperties,
+    now_millis: int | None = None,
+) -> list[FileReference]:
+    """Execute compaction jobs of a table with custom iterators
+    (U1: table iterators run on every read path, compaction included,
+    and must preserve the schema) as one Spark action; commit all
+    REPLACE_FILE_REFERENCES afterwards in one transaction.
+
+    The parts' merged, processed rows come out of a ``mapInPandas``
+    source tagged with their part (``JOB_COL``); descriptors pack into at
+    most 4 x defaultParallelism tasks, since the write's shuffle
+    regroups the rows by part anyway. After the iterators, each part is
+    re-sorted and written to its own file, which then moves to the
+    part's output path; a part the iterators emptied gets an empty
+    file."""
+    if not jobs:
+        return []
+    import shutil
+
+    out_dir, descs = _claim_parts(spark, jobs, store, data_dir, props,
+                                  now_millis)
+    schema = store.schema
+    tags = [os.path.basename(d["out_path"])[:-len(".parquet")]
+            for d in descs]
+    n_tasks = min(len(descs), 4 * spark.sparkContext.defaultParallelism)
+
+    def run(iterator):
+        for pdf in iterator:
+            for task in pdf["task"]:
+                for i in range(int(task), len(descs), n_tasks):
+                    for out in _part_chunks(descs[i]):
+                        out = out.append_column(
+                            pa.field(JOB_COL, pa.string(), False),
+                            pa.array([tags[i]] * out.num_rows, pa.string()))
+                        # maps_as_pydicts: Spark's pandas->Row conversion
+                        # needs dicts for MapType, not (k, v) tuple lists
+                        yield out.to_pandas(maps_as_pydicts="strict")
+
+    src = spark.createDataFrame(
+        spark.sparkContext.parallelize(
+            [(i,) for i in range(n_tasks)], n_tasks),
+        "task int")
+    struct = T.StructType(list(schema.to_struct_type().fields)
+                          + [T.StructField(JOB_COL, T.StringType(), False)])
+    df = apply_custom_iterators(src.mapInPandas(run, struct),
+                                props.iterators, schema)
+    staging = os.path.join(out_dir, "iterators")
+    (
+        df.repartition(len(descs), F.col(JOB_COL))
+        .sortWithinPartitions(JOB_COL, *schema.key_names)
+        .write.option("compression", props.compression)
+        .option("parquet.block.size", str(props.row_group_bytes))
+        .option("parquet.page.size", str(props.page_bytes))
+        .partitionBy(JOB_COL)
+        .parquet(staging)
+    )
+    rows_by_path: dict[str, int] = {}
+    for tag, d in zip(tags, descs):
+        tag_dir = os.path.join(staging, f"{JOB_COL}={tag}")
+        written = sorted(f for f in os.listdir(tag_dir)
+                         if f.endswith(".parquet")) \
+            if os.path.isdir(tag_dir) else []
+        assert len(written) <= 1, written  # one shuffle partition per tag
+        if written:
+            os.replace(os.path.join(tag_dir, written[0]), d["out_path"])
+            rows_by_path[d["out_path"]] = \
+                pq.ParquetFile(d["out_path"]).metadata.num_rows
+        else:
+            _write_empty_parquet(d["out_path"], d["arrow_schema"],
+                                 d["compression"])
+            rows_by_path[d["out_path"]] = 0
+    shutil.rmtree(staging)
+    # sketch sidecars before the reference swap, so a split planned right
+    # after commit sees them (compact.rs writes file + sketch together)
+    sketches.write_sidecars_distributed(
+        spark, list(rows_by_path), list(schema.key_names), props.sketch_size,
+        first_key_sorted=True)  # parts are key-sorted per file
+    return _commit_parts(store, jobs, descs, rows_by_path)
 
 
 # ---------------------------------------------------------------------------
@@ -887,25 +671,16 @@ def run_zorder_rewrite(
         by_leaf.setdefault(r.partition_id, []).append(r)
 
     replacements = []
-    empty_template: str | None = None
-    for (leaf_id, refs), (job_id, _) in zip(chosen, assignments):
+    for leaf_id, refs in chosen:
         outs = by_leaf.get(leaf_id, [])
         if not outs:
             # the leaf's inputs held zero rows (e.g. post-ageOff empty
             # files): the swap still needs an output ref
-            if empty_template is None:
-                empty_template = os.path.join(out_dir,
-                                              ".empty-template.parquet")
-                os.makedirs(out_dir, exist_ok=True)
-                _write_empty_parquet(empty_template, refs[0].filename,
-                                     [f.name for f in schema.all_fields()],
-                                     props.compression,
-                                     declared=_declared_arrow(schema))
-            jdir = os.path.join(out_dir, f"{PARTITION_COL}={leaf_id}")
-            path = os.path.join(jdir, "empty.parquet")
-            os.makedirs(jdir, exist_ok=True)
-            import shutil
-            shutil.copyfile(empty_template, path)
+            path = os.path.join(out_dir, f"{PARTITION_COL}={leaf_id}",
+                                "empty.parquet")
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            _write_empty_parquet(path, _declared_arrow_schema(schema),
+                                 props.compression)
             outs = [FileReference(
                 filename=path, partition_id=leaf_id, number_of_rows=0,
                 only_contains_data_for_this_partition=True)]

@@ -130,11 +130,10 @@ def validate_aggregations(schema: Schema, aggs: list[Aggregation]) -> None:
         f = schema.field(a.column)  # KeyError if unknown
         if f.nullable:
             raise ValueError(f"cannot aggregate nullable column {a.column!r}")
-        # op/type compatibility at CONFIG time, like the reference —
-        # previously only the Arrow engine-selection gate checked this,
-        # so the Spark path accepted configs that crash deep in the
-        # engine at compaction time (map_sum on a long column, min on a
-        # map, any aggregation on an array)
+        # op/type compatibility at CONFIG time, like the reference, so
+        # no config reaches compaction that crashes deep in the kernels
+        # (map_sum on a long column, min on a map, any aggregation on an
+        # array)
         from pyspark.sql import types as T
 
         if isinstance(f.dtype, T.ArrayType):

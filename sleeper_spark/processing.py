@@ -11,6 +11,10 @@ the same: datafusion.rs:271-295). The Java engine's single-pass
 group-adjacent aggregator (AggregatorIteratorImpl.java:64-93) is an
 optimization for presorted input, not different semantics.
 
+This module is the query plan's form. Compaction and driver reads run
+the same semantics on ``sorted_scan``'s Arrow kernels, group-adjacent
+over the sorted runs.
+
 Scale notes (100 TB):
 - Aggregation is a hash-agg with map-side partial combine — one shuffle on
   the group keys, no driver-side state.
@@ -121,19 +125,13 @@ def apply_aggregations(
     df: DataFrame,
     schema: Schema,
     aggs: list[Aggregation],
-    extra_group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Collapse rows equal on (row keys + sort keys) via the configured ops
-    (A1-A5, SURVEY §2.5). Output column order = schema order.
-
-    ``extra_group_cols`` lets batched compaction group by a job tag too —
-    key spaces of distinct jobs are disjoint, so this never changes results,
-    it only keeps each job's rows addressable for the partitioned write.
-    """
+    (A1-A5, SURVEY §2.5). Output column order = schema order."""
     if not aggs:
         return df
     by_col = {a.column: a for a in aggs}
-    group = (extra_group_cols or []) + schema.key_names
+    group = schema.key_names
     scalar_exprs: list[Column] = []
     map_fields = []
     for f in schema.value_fields:
@@ -155,7 +153,7 @@ def apply_aggregations(
     for f, op in map_fields:
         merged = _merge_maps_exploded(df, group, f.name, op, f.dtype.valueType)
         out = out.join(merged, group, "left")
-    keep = (extra_group_cols or []) + schema.key_names + [
+    keep = schema.key_names + [
         f.name for f in schema.value_fields if f.name in by_col
     ]
     return out.select(*keep)
@@ -167,9 +165,8 @@ def apply_processing(
     filters: list[AgeOffFilter],
     aggs: list[Aggregation],
     now_millis: int,
-    extra_group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Filters then aggregation, the reference's iterator chain order
     (IteratorFactory.java:79-91: filters -> aggregation -> custom)."""
     df = apply_filters(df, filters, now_millis)
-    return apply_aggregations(df, schema, aggs, extra_group_cols)
+    return apply_aggregations(df, schema, aggs)

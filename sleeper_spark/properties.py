@@ -32,7 +32,10 @@ class TableProperties:
     # iterator configs, reference grammar (docs/usage/data-processing.md)
     filters: str = ""              # e.g. "ageOff(timestamp, 1209600000)"
     aggregations: str = ""         # e.g. "sum(count), max(last_seen), map_sum(tags)"
-    iterators: str = ""            # custom chain, e.g. "securityFilter(label, public)"
+    # custom chain, e.g. "securityFilter(label, public)"; a table with
+    # one compacts through compaction.run_jobs, every other table
+    # through compaction.run_jobs_arrow
+    iterators: str = ""
     # parquet layout (S4: ParquetRowWriterFactory.java:74-77)
     compression: str = "zstd"
     row_group_bytes: int = 8 * 1024 * 1024
@@ -41,12 +44,6 @@ class TableProperties:
     partition_split_threshold: int = 1_000_000_000  # PartitionSplittingProperty.java:97
     compaction_files_batch_size: int = 11           # matches baseline job shape
     compaction_strategy: str = "basic"  # "basic" | "size_ratio" | "leveled"
-    # engine selection mirrors the reference's Java vs DataFusion split
-    # (QueryEngineSelector.java:49-57): "spark" = shared-shuffle Spark SQL
-    # plan (full algebra incl. concat-sum/map_*/custom iterators); "arrow" =
-    # one vectorized zero-shuffle task per job; "auto" = arrow when the
-    # table's processing config is arrow-expressible
-    compaction_engine: str = "auto"                 # "auto" | "spark" | "arrow"
     size_ratio: int = 3                             # SizeRatioCompactionStrategy
     level_fanout: int = 10                          # leveled: size class base
     level_trigger: int = 4                          # leveled: files per level

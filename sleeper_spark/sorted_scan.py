@@ -28,8 +28,7 @@ exchange is the dominant cost and this plan has none.
 
 Processing parity: leaf-region dedup guard + query regions + value
 ranges + ageOff filters + continual aggregation are applied inside the
-task with Arrow kernels (same semantics as the Arrow compaction engine,
-compact.rs:118-140). Leaf regions partition the row-key space, so
+task with Arrow kernels (the kernels compaction runs, compact.rs:118-140). Leaf regions partition the row-key space, so
 per-leaf aggregation is complete — no cross-partition combine needed.
 
 The same merge (:func:`_component_stream`) serves the driver reads of
@@ -400,7 +399,7 @@ def _sorted_group_starts(chunk: pa.Table, key_names: list[str]) -> np.ndarray:
     return np.flatnonzero(bnd)
 
 
-from sleeper_spark.processing import _MAP_SCALAR_OP as _MAP_OPS  # one op table, both engines
+from sleeper_spark.processing import _MAP_SCALAR_OP as _MAP_OPS  # one op table, both plans
 
 
 def _map_sum_dense(ekeys, eitems, egid: np.ndarray, n_groups: int,
@@ -459,7 +458,7 @@ def _agg_map_column(col, gid_per_row: np.ndarray, n_groups: int,
                     op: str) -> pa.Array:
     """Point-wise map merge per group (A3), vectorized: flatten entries
     with their group id, one hash-agg on (group, map key), rebuild maps
-    with keys sorted ascending (matching the Spark engine's
+    with keys sorted ascending (matching the Spark query plan's
     array_sort(entries) in processing.py:_merge_maps_exploded and the
     reference's map merge, AggregationOp.java:144-215 /
     rust/aggregator_udfs/src/map_aggregate.rs:28-40). Integer map_sum
@@ -483,7 +482,7 @@ def _agg_map_column(col, gid_per_row: np.ndarray, n_groups: int,
     if concat_items:
         # string/binary map values SUM by concatenation, same per-type
         # rule as scalar columns (AggregationOp.java:25-47) and the
-        # Spark engine's _merge_maps_exploded dispatch
+        # Spark query plan's _merge_maps_exploded dispatch
         at = (et.group_by(["__g", "__k"])
               .aggregate([("__v", "list")])
               .sort_by([("__g", "ascending"), ("__k", "ascending")]))
@@ -491,7 +490,7 @@ def _agg_map_column(col, gid_per_row: np.ndarray, n_groups: int,
             "" if pa.types.is_string(item_t)
             or pa.types.is_large_string(item_t) else b"", type=item_t)
         lst = at.column("__v_list").combine_chunks()
-        # null values concat as empty, matching the Spark engine's
+        # null values concat as empty, matching the Spark query plan's
         # collect_list-drops-nulls behavior
         lst = pa.ListArray.from_arrays(
             lst.offsets, pc.fill_null(lst.values, sep))
@@ -530,8 +529,8 @@ def _aggregate_chunk_sorted(chunk: pa.Table, desc: dict) -> pa.Table:
     ng = len(starts)
     if ng == n and not has_maps:
         # no duplicates — and no map columns, which must be rebuilt with
-        # sorted keys even when untouched so both engines emit one
-        # canonical map form (the Spark engine array_sorts every map)
+        # sorted keys even when untouched so both plans emit one
+        # canonical map form (the Spark query plan array_sorts every map)
         return chunk
     bounds = np.append(starts, n)
     take_idx = pa.array(starts, type=pa.int64())
@@ -572,8 +571,8 @@ def _aggregate_chunk_sorted(chunk: pa.Table, desc: dict) -> pa.Table:
         is_str = pa.types.is_string(col.type) \
             or pa.types.is_large_string(col.type)
         sep = pa.scalar("" if is_str else b"", type=col.type)
-        # null values are SKIPPED by the Spark engine (collect_list drops
-        # them; an all-null group concats to empty) — binary_join would
+        # null values are SKIPPED by the Spark query plan (collect_list
+        # drops them; an all-null group concats to empty) — binary_join would
         # instead emit null for any group containing a null, so fill
         # first to keep the engines bit-identical
         col = pc.fill_null(col, sep)
@@ -586,7 +585,7 @@ def _aggregate_chunk_sorted(chunk: pa.Table, desc: dict) -> pa.Table:
         # pair state: the value of each group's (order, value) extremum,
         # read from the INPUT rows (the order column may itself be
         # aggregated). Ties on the order column break on the value, as
-        # the Spark engine's max(struct(o, v)) does. Sorting by group
+        # the Spark query plan's max(struct(o, v)) does. Sorting by group
         # first keeps each group's rows at its original offsets.
         way = "descending" if op == "max_by" else "ascending"
         idx = pc.sort_indices(

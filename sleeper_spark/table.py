@@ -679,33 +679,18 @@ class SleeperTable:
     # maintenance
     # ------------------------------------------------------------------
     def compact(self, now_millis: int | None = None) -> list[FileReference]:
-        """Plan + run all pending compactions. Engine per table properties:
-        Arrow (one vectorized zero-shuffle task per job) when the
-        processing config allows, else the batched Spark-SQL plan.
+        """Plan + run all pending compactions on the Arrow kernels
+        (compaction module doc): ``run_jobs`` when the table has custom
+        iterators, else ``run_jobs_arrow``.
 
         Offline tables are skipped (docs/design.md:68-71)."""
         if not self.props.online:
             return []
         jobs = compaction_mod.create_jobs(self.store, self.props)
-        engine = self.props.compaction_engine
-        if engine == "auto":
-            # the Arrow engine wins at every job shape when the table's
-            # processing config is arrow-expressible: a batch of jobs is
-            # ONE parallelize action (no shuffle, no scan planning), a
-            # big job fans out over subranges, and measured small-many
-            # shapes (16 x 37k rows) run 2-6x faster than the Spark-SQL
-            # plan, and the Arrow engine covers the full aggregation
-            # algebra (map_*/concat-sum included). The Spark engine
-            # remains only for custom iterators.
-            engine = "arrow" if compaction_mod.arrow_engine_supported(
-                self.schema, self.props) else "spark"
-        if engine == "arrow":
-            return compaction_mod.run_jobs_arrow(
-                self.spark, jobs, self.store, self.data_dir, self.props, now_millis
-            )
-        return compaction_mod.run_jobs(
-            self.spark, jobs, self.store, self.data_dir, self.props, now_millis
-        )
+        run = (compaction_mod.run_jobs if self.props.iterators
+               else compaction_mod.run_jobs_arrow)
+        return run(self.spark, jobs, self.store, self.data_dir, self.props,
+                   now_millis)
 
     def delete_where(self, regions: list[Region] | None = None,
                      value_ranges: list[Range] | None = None) -> dict:

@@ -1,12 +1,13 @@
-"""Arrow compaction engine: equivalence with the Spark engine and with
-the uncompacted view (query(t) == query(compact(t)) for all configs)."""
+"""Compaction on the Arrow kernels: equivalence with the Spark query
+plan over the uncompacted files (query(t) == query(compact(t)) for all
+configs), on both tails — ``run_jobs_arrow`` and, for tables with custom
+iterators, ``run_jobs``."""
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sleeper_spark import Field, Schema, SleeperTable
-from sleeper_spark.compaction import arrow_engine_supported
 from sleeper_spark.iterators import parse_aggregations, validate_aggregations
 from sleeper_spark.properties import TableProperties
 
@@ -39,17 +40,7 @@ def _collect(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_engine_selection(spark):
-    schema = Schema((Field("k", T.LongType()),), (),
-                    (Field("v", T.LongType()), Field("s", T.StringType())))
-    assert arrow_engine_supported(schema, TableProperties(aggregations="sum(v), min(s)"))
-    # concat-sum and map_* now run on the Arrow engine (full algebra)
-    assert arrow_engine_supported(schema, TableProperties(aggregations="sum(v), sum(s)"))
-    assert not arrow_engine_supported(
-        schema, TableProperties(iterators="securityFilter(s, public)"))
-    m = Schema((Field("k", T.LongType()),), (),
-               (Field("m", T.MapType(T.StringType(), T.LongType())),))
-    assert arrow_engine_supported(m, TableProperties(aggregations="map_sum(m)"))
+def test_array_column_aggregation_rejected():
     a = Schema((Field("k", T.LongType()),), (),
                (Field("arr", T.ArrayType(T.LongType())),))
     with pytest.raises(ValueError, match="array column"):
@@ -75,26 +66,27 @@ _UPSERT = "max(version), max_by(value, version)"
 
 @pytest.mark.parametrize("aggs", ["", "min(event_id), max(ts_ms), sum(n)",
                                   _UPSERT])
-def test_arrow_equals_spark_engine(spark, tmp_path, aggs):
-    make, base = _make, dict(aggregations=aggs,
-                             filters="ageOff(ts_ms, 1209600000)")
+def test_arrow_equals_spark_engine(spark, spark_plan, tmp_path, aggs):
+    """Compacted rows equal the Spark query plan (filters and
+    aggregation through ``processing.apply_processing``) over the
+    uncompacted files, and each partition compacts to one file."""
+    make, props = _make, TableProperties(aggregations=aggs,
+                                         filters="ageOff(ts_ms, 1209600000)")
     if aggs == _UPSERT:
-        make, base = _versioned, dict(aggregations=aggs)
-    ta = make(spark, tmp_path, "a", TableProperties(compaction_engine="arrow", **base))
-    ts = make(spark, tmp_path, "s", TableProperties(compaction_engine="spark", **base))
+        make, props = _versioned, TableProperties(aggregations=aggs)
+    t = make(spark, tmp_path, "t", props)
     now = 1706140800000
-    ta.compact(now_millis=now)
-    ts.compact(now_millis=now)
-    assert _collect(ta.full_scan(now)) == _collect(ts.full_scan(now))
-    # outputs are single sorted files per partition on both engines
-    assert len(ta.store.all_references()) == len(ts.store.all_references())
+    with spark_plan():
+        expected = _collect(t.full_scan(now))
+    refs = t.compact(now_millis=now)
+    assert _collect(t.full_scan(now)) == expected
+    assert len(refs) == len(t.store.tree.leaves())
 
 
 def test_arrow_compaction_invariance(spark, tmp_path):
     """query(t) == query(compact(t)) on the arrow engine, incl. aggregation
     and ageOff, and the compacted files are key-sorted."""
-    props = TableProperties(compaction_engine="arrow",
-                            aggregations="min(event_id), max(ts_ms), sum(n)")
+    props = TableProperties(aggregations="min(event_id), max(ts_ms), sum(n)")
     t = _make(spark, tmp_path, "t", props)
     now = 1706140800000
     before = _collect(t.full_scan(now))
@@ -110,7 +102,7 @@ def test_arrow_compaction_invariance(spark, tmp_path):
         assert dict(df.dtypes)["n"] == "bigint"
 
 
-def _full_algebra_table(spark, tmp_path, name, engine):
+def _full_algebra_table(spark, tmp_path, name):
     """Table exercising every aggregation class at once: numeric sum,
     min/max, string concat-sum, binary concat-sum, map_sum, map_min."""
     rows = []
@@ -134,7 +126,6 @@ def _full_algebra_table(spark, tmp_path, name, engine):
          Field("mm", T.MapType(T.StringType(), T.LongType()))),
     )
     props = TableProperties(
-        compaction_engine=engine,
         aggregations="sum(n), max(v), sum(c), sum(b), map_sum(ms), map_min(mm)")
     t = SleeperTable.create(spark, str(tmp_path / name), schema, props,
                             split_points=[4])
@@ -143,40 +134,38 @@ def _full_algebra_table(spark, tmp_path, name, engine):
     return t
 
 
-def _rows_by_key(spark, refs):
+def _by_key(rows):
     out = {}
-    for ref in refs:
-        for r in spark.read.parquet(ref.filename).collect():
-            d = r.asDict()
-            out[(d["k"], d["sk"])] = (
-                d["n"], d["v"], sorted(d["c"]), sorted(d["b"]),
-                d["ms"], d["mm"], list(d["ms"]), list(d["mm"]))
+    for r in rows:
+        d = r.asDict()
+        out[(d["k"], d["sk"])] = (
+            d["n"], d["v"], sorted(d["c"]), sorted(d["b"]),
+            d["ms"], d["mm"], list(d["ms"]), list(d["mm"]))
     return out
 
 
-def test_full_algebra_arrow_equals_spark(spark, tmp_path):
-    """concat-sum + map_sum/map_min compact identically on both engines
-    (concat order compared as multiset — it is documented order-unstable
-    across equal-key duplicates; map key order compared exactly: both
-    engines emit sorted-key canonical maps)."""
-    ta = _full_algebra_table(spark, tmp_path, "a", "arrow")
-    ts = _full_algebra_table(spark, tmp_path, "s", "spark")
-    ra = ta.compact()
-    rs = ts.compact()
-    da, ds = _rows_by_key(spark, ra), _rows_by_key(spark, rs)
-    assert set(da) == set(ds) and len(da) == 10
-    for key in da:
-        assert da[key] == ds[key], key
-    # and the compacted table queries identically on both
-    qa = sorted((r.k, r.sk, r.n, r.v) for r in ta.full_scan().collect())
-    qs = sorted((r.k, r.sk, r.n, r.v) for r in ts.full_scan().collect())
-    assert qa == qs
+def test_full_algebra_arrow_equals_spark(spark, spark_plan, tmp_path):
+    """concat-sum + map_sum/map_min compact to what the Spark query plan
+    reads from the uncompacted files (concat order compared as multiset
+    — it is documented order-unstable across equal-key duplicates; map
+    key order compared exactly: both emit sorted-key canonical maps)."""
+    t = _full_algebra_table(spark, tmp_path, "t")
+    with spark_plan():
+        expected = _by_key(t.full_scan().collect())
+    refs = t.compact()
+    got = _by_key(r for ref in refs
+                  for r in spark.read.parquet(ref.filename).collect())
+    assert set(got) == set(expected) and len(got) == 10
+    for key in got:
+        assert got[key] == expected[key], key
+    # and the compacted table queries identically
+    assert _by_key(t.full_scan().collect()) == expected
 
 
 def test_arrow_map_agg_values(spark, tmp_path):
     """Exact map merge values on the Arrow engine: point-wise sum/min,
     keys sorted, untouched singleton maps canonicalised too."""
-    t = _full_algebra_table(spark, tmp_path, "t", "arrow")
+    t = _full_algebra_table(spark, tmp_path, "t")
     refs = t.compact()
     rows = {}
     for ref in refs:
@@ -199,8 +188,7 @@ def test_arrow_sum_int_cast_back(spark, tmp_path):
     df = spark.createDataFrame([(1, 2), (1, 3), (2, 5)], "k long, v int")
     schema = Schema((Field("k", T.LongType()),), (), (Field("v", T.IntegerType()),))
     t = SleeperTable.create(spark, str(tmp_path / "t"), schema,
-                            TableProperties(compaction_engine="arrow",
-                                            aggregations="sum(v)"))
+                            TableProperties(aggregations="sum(v)"))
     t.ingest(df)
     t.ingest(df)
     t.compact()
@@ -220,8 +208,7 @@ def test_subrange_compaction_equivalence(spark, tmp_path, monkeypatch):
     from sleeper_spark import compaction
 
     monkeypatch.setattr(compaction, "SUBRANGE_MIN_ROWS", 200)
-    props = TableProperties(compaction_engine="arrow",
-                            aggregations="min(event_id), max(ts_ms), sum(n)")
+    props = TableProperties(aggregations="min(event_id), max(ts_ms), sum(n)")
     # single root partition -> ONE job over all files
     ev = _events(spark)
     schema = Schema(
@@ -345,97 +332,6 @@ def test_multi_output_replace_txn(spark, tmp_path):
         {"/x/out-p0.parquet", "/x/out-p1.parquet"}
 
 
-def test_spark_engine_subrange_parts(spark, tmp_path, monkeypatch):
-    """The Spark engine also fans a single big job out: one scan branch
-    per dim-0 subrange (filters pushed down), one reducer per part, parts
-    committed as ordered disjoint sorted FileReferences."""
-    from sleeper_spark import compaction
-
-    monkeypatch.setattr(compaction, "SUBRANGE_MIN_ROWS", 200)
-    props = TableProperties(compaction_engine="spark")
-    ev = _events(spark)
-    schema = Schema(
-        (Field("user_id", T.LongType()),),
-        (Field("event_type", T.StringType()),),
-        (Field("event_id", T.LongType()), Field("ts_ms", T.LongType()),
-         Field("n", T.LongType())),
-    )
-    t = SleeperTable.create(spark, str(tmp_path / "t"), schema, props)
-    t.ingest(ev.where(F.col("event_id") % 2 == 0))
-    t.ingest(ev.where(F.col("event_id") % 2 == 1))
-    now = 1706140800000
-    before = _collect(t.full_scan(now))
-    refs = t.compact(now_millis=now)
-    assert len(refs) > 1
-    assert _collect(t.full_scan(now)) == before
-    prev_last = None
-    total = 0
-    for ref in refs:
-        df = spark.read.parquet(ref.filename)
-        keys = [(r.user_id, r.event_type) for r in df.collect()]
-        assert keys == sorted(keys)
-        assert len(keys) == ref.number_of_rows
-        total += len(keys)
-        if keys:
-            if prev_last is not None:
-                assert keys[0] >= prev_last
-            prev_last = keys[-1]
-    assert total == ev.count()
-
-
-def test_broadcast_tagging_survives_plus_in_path(spark, tmp_path):
-    """url_decode has x-www-form-urlencoded semantics ('+' -> space): a
-    table under a '+' directory used to silently drop every row from the
-    broadcast file->job join. The scan key must round-trip the stored
-    path exactly, and the accounting guard must see every input file."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq_
-
-    from sleeper_spark.compaction import CompactionJob, _tag_rows_with_jobs
-    from sleeper_spark.ranges import Range, Region
-
-    d = tmp_path / "data+dir with space"
-    d.mkdir()
-    p = str(d / "f.parquet")
-    pq_.write_table(pa.table({"k": pa.array(range(100), type=pa.int64()),
-                              "v": pa.array(range(100), type=pa.int64())}), p)
-    schema = Schema((Field("k", T.LongType()),), (),
-                    (Field("v", T.LongType()),))
-    job = CompactionJob("j1", "root", (p,),
-                        Region.of(Range("k", None, None)))
-    tagged, check_accounting = _tag_rows_with_jobs(spark, [job], schema)
-    assert tagged.count() == 100
-    check_accounting()  # observed metric fired by the count() action
-
-
-def test_accounting_guard_fires_on_poisoned_path(spark, tmp_path):
-    """The observe()-based accounting guard must still catch a scan key
-    that fails to round-trip a stored path (here: a '//' the filesystem
-    accepts but the scan's file-name decode normalises away), BEFORE any
-    reference swap. One action total — the guard rides it."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq_
-    import pytest
-
-    from sleeper_spark.compaction import CompactionJob, _tag_rows_with_jobs
-    from sleeper_spark.ranges import Range, Region
-
-    d = tmp_path / "data"
-    d.mkdir()
-    pq_.write_table(pa.table({"k": pa.array(range(50), type=pa.int64()),
-                              "v": pa.array(range(50), type=pa.int64())}),
-                    str(d / "f.parquet"))
-    poisoned = f"{d}//f.parquet"  # readable, but != input_file_name decode
-    schema = Schema((Field("k", T.LongType()),), (),
-                    (Field("v", T.LongType()),))
-    job = CompactionJob("j1", "root", (poisoned,),
-                        Region.of(Range("k", None, None)))
-    tagged, check_accounting = _tag_rows_with_jobs(spark, [job], schema)
-    # the broadcast join silently drops every row — the data-loss class
-    assert tagged.count() == 0
-    with pytest.raises(RuntimeError, match="unmatched"):
-        check_accounting()
-
 def test_empty_subrange_parts_removed_from_disk(spark, tmp_path, monkeypatch):
     """A subrange whose rows are entirely filtered writes a zero-row part
     that is dropped from the commit — the file and its sketch sidecar
@@ -455,8 +351,7 @@ def test_empty_subrange_parts_removed_from_disk(spark, tmp_path, monkeypatch):
          .otherwise(F.lit(now - 1000)).alias("ts_ms"))
     schema = Schema((Field("k", T.LongType()),), (),
                     (Field("ts_ms", T.LongType()),))
-    props = TableProperties(compaction_engine="arrow",
-                            filters="ageOff(ts_ms, 1209600000)")
+    props = TableProperties(filters="ageOff(ts_ms, 1209600000)")
     t = SleeperTable.create(spark, str(tmp_path / "t"), schema, props)
     t.ingest(df.where(F.col("k") % 2 == 0))
     t.ingest(df.where(F.col("k") % 2 == 1))
@@ -469,3 +364,60 @@ def test_empty_subrange_parts_removed_from_disk(spark, tmp_path, monkeypatch):
     assert on_disk == on_disk & referenced, on_disk - referenced
     for p in on_disk:
         assert os.path.exists(p + ".sketch.json")
+
+
+def test_iterator_compaction_equals_uncompacted_read(spark, spark_plan,
+                                                     tmp_path, monkeypatch):
+    """A table with custom iterators (a registered DataFrame-only one and
+    securityFilter) plus an aggregation compacts to exactly the rows the
+    uncompacted table reads through the Spark plan, in key-sorted parts
+    in key order, even when each job is cut into subranges and the table
+    directory holds a '+' and a space. The aggregation runs on the Arrow
+    kernels, not through the Spark-SQL aggregation."""
+    from itertools import groupby
+
+    from sleeper_spark import compaction, processing
+    from sleeper_spark.iterators import register_iterator
+    from sleeper_spark.sketches import load_sidecar
+
+    register_iterator("doubleN",
+                      lambda args, schema: lambda df: df.withColumn(
+                          "n", df["n"] * 2))
+    schema = Schema((Field("k", T.LongType()),), (),
+                    (Field("label", T.StringType()), Field("n", T.LongType())))
+    props = TableProperties(aggregations="max(label), sum(n)",
+                            iterators="doubleN(), securityFilter(label, public)")
+    t = SleeperTable.create(spark, str(tmp_path / "tbl+dir with space"),
+                            schema, props, split_points=[500])
+    labels = ["secret", "public", ""]
+    for rep in range(2):
+        rows = [(k, labels[(k + rep) % 3], k + rep) for k in range(1000)]
+        t.ingest(spark.createDataFrame(rows, schema.to_struct_type()))
+    with spark_plan():
+        expected = _collect(t.full_scan())
+    assert 0 < len(expected) < 1000  # the filter dropped some keys
+
+    monkeypatch.setattr(compaction, "SUBRANGE_MIN_ROWS", 200)
+
+    def no_spark_aggregation(*args, **kwargs):
+        raise AssertionError("compaction ran the Spark-SQL aggregation")
+
+    monkeypatch.setattr(processing, "apply_aggregations",
+                        no_spark_aggregation)
+    refs = t.compact()
+    monkeypatch.undo()
+
+    assert len(refs) > 2  # both jobs were cut into subrange parts
+    got = []
+    for _, parts in groupby(refs, key=lambda r: r.partition_id):
+        keys = []
+        for ref in parts:
+            part = _collect(spark.read.parquet(ref.filename))
+            assert [r[0] for r in part] == sorted(r[0] for r in part)
+            assert len(part) == ref.number_of_rows
+            assert load_sidecar(ref.filename)["rows"] == ref.number_of_rows
+            keys += [r[0] for r in part]
+            got += part
+        assert keys == sorted(set(keys))  # parts disjoint and in key order
+    assert sorted(got) == expected
+    assert t.verify_integrity()["ok"]

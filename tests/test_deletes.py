@@ -350,6 +350,40 @@ def test_copy_on_write_contract(spark, tmp_path, name):
     _assert_sidecars_fresh(t)
 
 
+@pytest.mark.parametrize("name", ["delete_where", "delete_exact_rows",
+                                  "update_where", "merge_upsert"])
+def test_copy_on_write_on_executors(spark, tmp_path, monkeypatch, name):
+    """Above ``_DRIVER_SIDE_BYTES`` of candidate input, ``rewrite`` runs
+    one executor task per reference instead of driver threads: the rows
+    equal the driver-thread rewrite's, every output sidecar is the one
+    compute_file_sketch builds, and verify_integrity is clean."""
+    from sleeper_spark import deletes
+
+    sc = spark.sparkContext
+    rows, jobs = {}, {}
+    for side, limit in (("driver", deletes._DRIVER_SIDE_BYTES),
+                        ("executor", 0)):
+        monkeypatch.setattr(deletes, "_DRIVER_SIDE_BYTES", limit)
+        t = SleeperTable.create(spark, str(tmp_path / side),
+                                _two_key_schema(), split_points=["k-001000"])
+        for lo in (0, 1000):
+            t.ingest(_rows(spark, lo, lo + 1000).withColumnRenamed(
+                "seq", "part").withColumn("part", F.lit(0).cast("long")))
+        group = f"test-deletes-{name}-{side}"
+        sc.setJobGroup(group, "job count")
+        try:
+            assert _cow_op(name, t, spark, "k-000100",
+                           hit=True)["files_rewritten"] == 1
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[side] = len(sc.statusTracker().getJobIdsForGroup(group))
+        rows[side] = sorted(tuple(r) for r in t.full_scan().collect())
+        _assert_sidecars_fresh(t)
+        assert t.verify_integrity()["ok"]
+    assert jobs["executor"] == jobs["driver"] + 1  # the rewrite's job
+    assert rows["executor"] == rows["driver"]
+
+
 def test_copy_on_write_model(spark, tmp_path):
     """Model test of the copy-on-write surface: random sequences of
     ingest, delete_where, delete_exact_rows, update_where, merge_upsert

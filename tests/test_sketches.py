@@ -50,10 +50,12 @@ class TestSidecarWriting:
             assert vals == sorted(vals)
 
     def test_spark_compaction_writes_sidecars(self, spark, table):
+        """The iterator tail (``compaction.run_jobs``) builds sidecars
+        after its Spark write."""
         df = spark.range(10_000).select(
             F.col("id").alias("key"), (F.col("id") * 3).alias("value"))
         table.ingest(df)
-        table.props.compaction_engine = "spark"
+        table.props.iterators = "addition(value, value, key)"
         out = table.compact()
         assert out
         for r in out:
@@ -64,7 +66,6 @@ class TestSidecarWriting:
         df = spark.range(10_000).select(
             F.col("id").alias("key"), (F.col("id") * 3).alias("value"))
         table.ingest(df)
-        table.props.compaction_engine = "arrow"
         out = table.compact()
         assert out
         for r in out:
@@ -74,6 +75,40 @@ class TestSidecarWriting:
             ks = sk["fields"]["key"]
             assert ks["ranks"][0] == 0
             assert ks["ranks"][-1] == sk["rows"] - 1
+
+    def test_sidecars_built_on_executors(self, spark, tmp_path,
+                                         monkeypatch):
+        """Above ``_DRIVER_SIDE_BYTES`` of new files, sidecars are built
+        by one executor task per file slice instead of driver threads:
+        the rows equal the driver-side build's, every sidecar is the one
+        compute_file_sketch builds, and verify_integrity is clean."""
+        from sleeper_spark import sketches
+
+        sc = spark.sparkContext
+        rows, jobs = {}, {}
+        df = spark.range(10_000).select(
+            F.col("id").alias("key"), (F.col("id") * 3).alias("value"))
+        for side, limit in (("driver", sketches._DRIVER_SIDE_BYTES),
+                            ("executor", 0)):
+            monkeypatch.setattr(sketches, "_DRIVER_SIDE_BYTES", limit)
+            t = SleeperTable.create(spark, str(tmp_path / side),
+                                    long_schema(), split_points=[5_000])
+            group = f"test-sketches-{side}"
+            sc.setJobGroup(group, "job count")
+            try:
+                t.ingest(df)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[side] = len(sc.statusTracker().getJobIdsForGroup(group))
+            rows[side] = sorted(tuple(r) for r in t.full_scan().collect())
+            for r in t.store.all_references():
+                side_car = load_sidecar(r.filename)
+                assert side_car.pop("minmax")
+                assert side_car == compute_file_sketch(
+                    r.filename, t.schema.key_names, t.props.sketch_size)
+            assert t.verify_integrity()["ok"]
+        assert jobs["executor"] == jobs["driver"] + 1  # the sidecar job
+        assert rows["executor"] == rows["driver"]
 
     def test_sidecar_is_small(self, table):
         r = table.store.all_references()[0]

@@ -1,7 +1,7 @@
-"""Run ONLY the bench_compaction_large shape (both engines optional) to
-iterate on big-job compaction without the full bench.
+"""Run ONLY the bench_compaction_large shape to iterate on big-job
+compaction without the full bench.
 
-Usage: python tools/profile_bench_large.py [n_rows] [engines...]
+Usage: python tools/profile_bench_large.py [n_rows] [reps]
 """
 from __future__ import annotations
 
@@ -26,7 +26,7 @@ from tools.profile_compact import gen
 
 def main():
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000_000
-    engines = sys.argv[2:] or ["arrow"]
+    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 1
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -50,11 +50,10 @@ def main():
     print(f"gen: {total} rows in {time.perf_counter()-t0:.1f}s", flush=True)
     os.sync()  # don't charge the engine for gen's dirty-page writeback
     time.sleep(2)
-    for rep, engine in enumerate(engines):
-        props = TableProperties(compaction_files_batch_size=11,
-                                compaction_engine=engine)
+    for rep in range(reps):
+        props = TableProperties(compaction_files_batch_size=11)
         table = SleeperTable.create(
-            spark, os.path.join(tmp, f"t_{engine}_{rep}"), schema, props)
+            spark, os.path.join(tmp, f"t_{rep}"), schema, props)
         table.store.add_files([
             FileReference(p, "root", pq.ParquetFile(p).metadata.num_rows)
             for p in paths
@@ -63,7 +62,7 @@ def main():
         refs = table.compact()
         dt = time.perf_counter() - t0
         assert sum(r.number_of_rows for r in refs) == total
-        print(f"compaction_large[{engine}] rep{rep}: {dt:.1f}s, "
+        print(f"compaction_large rep{rep}: {dt:.1f}s, "
               f"{len(refs)} part(s) ({total/dt:,.0f} rows/s)", flush=True)
         os.sync()
         time.sleep(2)
