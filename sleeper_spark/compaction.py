@@ -49,6 +49,7 @@ from sleeper_spark.sorted_scan import (
     _declared_arrow_schema,
     _merge_leaf,
     _process_chunk,
+    arrow_task_frame,
 )
 from sleeper_spark.statestore import FileReference, StateStore
 
@@ -192,7 +193,7 @@ def _leveled_batches(refs: list[FileReference], fanout: int,
 #   job's inputs are one partition's files, so the work is embarrassingly
 #   parallel, exactly like the reference's per-container jobs.
 # - ``run_jobs`` (tables with custom iterators, arbitrary DataFrame
-#   transforms): the same merged parts feed a ``mapInPandas`` source,
+#   transforms): the same merged parts feed a ``mapInArrow`` source,
 #   the iterators run on that DataFrame, and a shuffle on the part tag
 #   re-sorts each part before a partitioned write, so an iterator that
 #   reorders rows cannot break the sorted-file invariant.
@@ -494,13 +495,13 @@ def run_jobs(
     and must preserve the schema) as one Spark action; commit all
     REPLACE_FILE_REFERENCES afterwards in one transaction.
 
-    The parts' merged, processed rows come out of a ``mapInPandas``
-    source tagged with their part (``JOB_COL``); descriptors pack into at
-    most 4 x defaultParallelism tasks, since the write's shuffle
-    regroups the rows by part anyway. After the iterators, each part is
-    re-sorted and written to its own file, which then moves to the
-    part's output path; a part the iterators emptied gets an empty
-    file."""
+    The parts' merged, processed rows come out of an Arrow source
+    (``sorted_scan.arrow_task_frame``) tagged with their part
+    (``JOB_COL``); descriptors pack into at most 4 x defaultParallelism
+    tasks, since the write's shuffle regroups the rows by part anyway.
+    After the iterators, each part is re-sorted and written to its own
+    file, which then moves to the part's output path; a part the
+    iterators emptied gets an empty file."""
     if not jobs:
         return []
     import shutil
@@ -512,26 +513,18 @@ def run_jobs(
             for d in descs]
     n_tasks = min(len(descs), 4 * spark.sparkContext.defaultParallelism)
 
-    def run(iterator):
-        for pdf in iterator:
-            for task in pdf["task"]:
-                for i in range(int(task), len(descs), n_tasks):
-                    for out in _part_chunks(descs[i]):
-                        out = out.append_column(
-                            pa.field(JOB_COL, pa.string(), False),
-                            pa.array([tags[i]] * out.num_rows, pa.string()))
-                        # maps_as_pydicts: Spark's pandas->Row conversion
-                        # needs dicts for MapType, not (k, v) tuple lists
-                        yield out.to_pandas(maps_as_pydicts="strict")
+    def task_tables(task):
+        for i in range(task, len(descs), n_tasks):
+            for out in _part_chunks(descs[i]):
+                yield out.append_column(
+                    pa.field(JOB_COL, pa.string(), False),
+                    pa.array([tags[i]] * out.num_rows, pa.string()))
 
-    src = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(i,) for i in range(n_tasks)], n_tasks),
-        "task int")
     struct = T.StructType(list(schema.to_struct_type().fields)
                           + [T.StructField(JOB_COL, T.StringType(), False)])
-    df = apply_custom_iterators(src.mapInPandas(run, struct),
-                                props.iterators, schema)
+    df = apply_custom_iterators(
+        arrow_task_frame(spark, n_tasks, task_tables, struct),
+        props.iterators, schema)
     staging = os.path.join(out_dir, "iterators")
     (
         df.repartition(len(descs), F.col(JOB_COL))
@@ -542,15 +535,24 @@ def run_jobs(
         .partitionBy(JOB_COL)
         .parquet(staging)
     )
+    written = {}
+    for tag in tags:
+        tag_dir = os.path.join(staging, f"{JOB_COL}={tag}")
+        written[tag] = sorted(
+            os.path.join(tag_dir, f) for f in os.listdir(tag_dir)
+            if f.endswith(".parquet")) if os.path.isdir(tag_dir) else []
+        if len(written[tag]) > 1:
+            # one shuffle partition per tag writes one file, unless a
+            # writer option (spark.sql.files.maxRecordsPerFile) cut it:
+            # moving only one would drop rows the commit then forgets
+            shutil.rmtree(out_dir, ignore_errors=True)
+            raise RuntimeError(
+                f"compaction part {tag} was written as "
+                f"{len(written[tag])} files, expected one")
     rows_by_path: dict[str, int] = {}
     for tag, d in zip(tags, descs):
-        tag_dir = os.path.join(staging, f"{JOB_COL}={tag}")
-        written = sorted(f for f in os.listdir(tag_dir)
-                         if f.endswith(".parquet")) \
-            if os.path.isdir(tag_dir) else []
-        assert len(written) <= 1, written  # one shuffle partition per tag
-        if written:
-            os.replace(os.path.join(tag_dir, written[0]), d["out_path"])
+        if written[tag]:
+            os.replace(written[tag][0], d["out_path"])
             rows_by_path[d["out_path"]] = \
                 pq.ParquetFile(d["out_path"]).metadata.num_rows
         else:

@@ -7,7 +7,7 @@ of table B. Joining them therefore needs no shuffle at all — one task
 per leaf streams both sides' sorted runs (the same vectorized k-way
 merge the bulk export uses, table filters/aggregation applied) and
 merge-joins them chunk-aligned. The Spark plan is
-parallelize → mapInPandas: NO Exchange node anywhere (plan-pinned),
+parallelize → mapInArrow: NO Exchange node anywhere (plan-pinned),
 which is the join shape bucketed tables buy in warehouses — here it
 falls out of the LSM layout for free.
 
@@ -27,13 +27,13 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from sleeper_spark.query import local_frame
 from sleeper_spark.schema import Schema
+from sleeper_spark.sorted_scan import arrow_task_frame
 
 _BATCH_ROWS = 65536
 
@@ -290,15 +290,5 @@ def cokeyed_join(table_a, table_b, how: str = "inner",
     if not descs:
         return local_frame(spark, struct)
 
-    src = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(i,) for i in range(len(descs))], len(descs)),
-        "task int")
-
-    def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            for task in pdf["task"]:
-                for joined in _leaf_join_chunks(descs[int(task)]):
-                    yield joined.to_pandas(maps_as_pydicts="strict")
-
-    return src.mapInPandas(run, struct)
+    return arrow_task_frame(spark, len(descs),
+                            lambda i: _leaf_join_chunks(descs[i]), struct)

@@ -5,7 +5,7 @@ sorted files (MergingIterator.java:37-114) and concatenates leaves in key
 order (ConcatenatingIterator.java:28-85). The Spark-native distributed
 form here:
 
-- ONE task per pruned leaf (``mapInPandas`` over a source DataFrame with
+- ONE task per pruned leaf (``mapInArrow`` over a source DataFrame with
   exactly one task descriptor per input partition — no exchange anywhere
   in the plan). Leaves whose first-key ranges overlap (a tree split on a
   later dimension) share one task, which merges their processed streams.
@@ -28,7 +28,8 @@ exchange is the dominant cost and this plan has none.
 
 Processing parity: leaf-region dedup guard + query regions + value
 ranges + ageOff filters + continual aggregation are applied inside the
-task with Arrow kernels (the kernels compaction runs, compact.rs:118-140). Leaf regions partition the row-key space, so
+task with Arrow kernels (the kernels compaction runs,
+compact.rs:118-140). Leaf regions partition the row-key space, so
 per-leaf aggregation is complete — no cross-partition combine needed.
 
 The same merge (:func:`_component_stream`) serves the driver reads of
@@ -41,7 +42,6 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -399,7 +399,8 @@ def _sorted_group_starts(chunk: pa.Table, key_names: list[str]) -> np.ndarray:
     return np.flatnonzero(bnd)
 
 
-from sleeper_spark.processing import _MAP_SCALAR_OP as _MAP_OPS  # one op table, both plans
+# one op table for the Arrow kernels and the Spark query plan
+from sleeper_spark.processing import _MAP_SCALAR_OP as _MAP_OPS
 
 
 def _map_sum_dense(ekeys, eitems, egid: np.ndarray, n_groups: int,
@@ -574,7 +575,7 @@ def _aggregate_chunk_sorted(chunk: pa.Table, desc: dict) -> pa.Table:
         # null values are SKIPPED by the Spark query plan (collect_list
         # drops them; an all-null group concats to empty) — binary_join would
         # instead emit null for any group containing a null, so fill
-        # first to keep the engines bit-identical
+        # first to match the Spark query plan bit for bit
         col = pc.fill_null(col, sep)
         lst = pa.ListArray.from_arrays(
             pa.array(bounds.astype(np.int32), type=pa.int32()), col)
@@ -697,6 +698,37 @@ def _component_stream(descs: list[dict], tag_col: str | None = None,
     return _merge_runs(streams, descs[0]["key_names"])
 
 
+def arrow_task_frame(spark, n_tasks: int, task_tables,
+                     struct: T.StructType) -> DataFrame:
+    """A DataFrame of ``n_tasks`` partitions whose partition ``i`` holds,
+    in order, the rows of the Arrow tables ``task_tables(i)`` yields
+    (run on an executor). The tables pass to Spark as Arrow batches
+    (``mapInArrow``), their columns picked by ``struct``'s names and
+    cast to its types. There is no pandas conversion, so a NaN stays
+    NaN rather than becoming NULL and a nullable 64-bit column stays
+    exact rather than going through float64.
+    ``parallelize(n items, n slices)`` puts item ``i`` in partition
+    ``i`` and ``mapInArrow`` preserves partitioning, so the plan has no
+    exchange."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    # every target field nullable: the cast converts types only
+    target = pa.schema([f.with_nullable(True)
+                        for f in to_arrow_schema(struct)])
+    src = spark.createDataFrame(
+        spark.sparkContext.parallelize(
+            [(i,) for i in range(n_tasks)], n_tasks),
+        "task int")
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for task in batch.column(0).to_pylist():
+                for t in task_tables(task):
+                    yield from t.select(target.names).cast(target).to_batches()
+
+    return src.mapInArrow(run, struct)
+
+
 def distributed_sorted_scan(table, query: Query | None = None,
                             now_millis: int | None = None,
                             batch_rows: int = _BATCH_ROWS,
@@ -767,23 +799,11 @@ def distributed_sorted_scan(table, query: Query | None = None,
         return apply_custom_iterators(
             local_frame(spark, struct), table.props.iterators, schema)
 
-    # exactly one component per input partition: parallelize(n items, n
-    # slices) puts item i in partition i, and mapInPandas preserves
-    # partitioning — the plan has NO exchange, so partition order
-    # remains key order. The descriptors travel in the function closure
-    # (pickled), so binary key bounds need no JSON encoding.
-    src = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(i,) for i in range(len(tasks))], len(tasks)),
-        "task int")
-
-    def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            for task in pdf["task"]:
-                for out in _component_stream(tasks[int(task)], leaf_id_col):
-                    # maps_as_pydicts: Spark's pandas->Row conversion
-                    # needs dicts for MapType, not (k, v) tuple lists
-                    yield out.to_pandas(maps_as_pydicts="strict")
-
-    df = src.mapInPandas(run, struct)
+    # exactly one component per task: the plan has NO exchange, so
+    # partition order remains key order. The descriptors travel in the
+    # function closure (pickled), so binary key bounds need no JSON
+    # encoding.
+    df = arrow_task_frame(
+        spark, len(tasks),
+        lambda i: _component_stream(tasks[i], leaf_id_col), struct)
     return apply_custom_iterators(df, table.props.iterators, schema)

@@ -3,6 +3,8 @@ plan over the uncompacted files (query(t) == query(compact(t)) for all
 configs), on both tails — ``run_jobs_arrow`` and, for tables with custom
 iterators, ``run_jobs``."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -366,6 +368,36 @@ def test_empty_subrange_parts_removed_from_disk(spark, tmp_path, monkeypatch):
         assert os.path.exists(p + ".sketch.json")
 
 
+def _nan_safe(rows):
+    """Rows with each float NaN replaced by a marker, so rows that hold
+    NaN compare equal (NaN != NaN)."""
+    return [tuple("NaN" if isinstance(v, float) and math.isnan(v) else v
+                  for v in r) for r in rows]
+
+
+def _compacted_parts(spark, refs):
+    """The rows of compacted parts, checking on the way that every part
+    is key-sorted, matches its reference's and its sidecar's row counts,
+    and that a partition's parts are disjoint and in key order."""
+    from itertools import groupby
+
+    from sleeper_spark.sketches import load_sidecar
+
+    got = []
+    for _, parts in groupby(refs, key=lambda r: r.partition_id):
+        keys = []
+        for ref in parts:
+            part = [tuple(r) for r in spark.read.parquet(ref.filename)
+                    .collect()]
+            assert [r[0] for r in part] == sorted(r[0] for r in part)
+            assert len(part) == ref.number_of_rows
+            assert load_sidecar(ref.filename)["rows"] == ref.number_of_rows
+            keys += [r[0] for r in part]
+            got += part
+        assert keys == sorted(set(keys))  # parts disjoint and in key order
+    return got
+
+
 def test_iterator_compaction_equals_uncompacted_read(spark, spark_plan,
                                                      tmp_path, monkeypatch):
     """A table with custom iterators (a registered DataFrame-only one and
@@ -373,29 +405,30 @@ def test_iterator_compaction_equals_uncompacted_read(spark, spark_plan,
     uncompacted table reads through the Spark plan, in key-sorted parts
     in key order, even when each job is cut into subranges and the table
     directory holds a '+' and a space. The aggregation runs on the Arrow
-    kernels, not through the Spark-SQL aggregation."""
-    from itertools import groupby
-
+    kernels, not through the Spark-SQL aggregation; a NaN it sums stays
+    NaN."""
     from sleeper_spark import compaction, processing
     from sleeper_spark.iterators import register_iterator
-    from sleeper_spark.sketches import load_sidecar
 
     register_iterator("doubleN",
                       lambda args, schema: lambda df: df.withColumn(
                           "n", df["n"] * 2))
     schema = Schema((Field("k", T.LongType()),), (),
-                    (Field("label", T.StringType()), Field("n", T.LongType())))
-    props = TableProperties(aggregations="max(label), sum(n)",
+                    (Field("label", T.StringType()), Field("n", T.LongType()),
+                     Field("x", T.DoubleType())))
+    props = TableProperties(aggregations="max(label), sum(n), sum(x)",
                             iterators="doubleN(), securityFilter(label, public)")
     t = SleeperTable.create(spark, str(tmp_path / "tbl+dir with space"),
                             schema, props, split_points=[500])
     labels = ["secret", "public", ""]
     for rep in range(2):
-        rows = [(k, labels[(k + rep) % 3], k + rep) for k in range(1000)]
+        rows = [(k, labels[(k + rep) % 3], k + rep,
+                 math.nan if k % 7 == rep else k / 4) for k in range(1000)]
         t.ingest(spark.createDataFrame(rows, schema.to_struct_type()))
     with spark_plan():
-        expected = _collect(t.full_scan())
+        expected = _nan_safe(_collect(t.full_scan()))
     assert 0 < len(expected) < 1000  # the filter dropped some keys
+    assert any(r[3] == "NaN" for r in expected)
 
     monkeypatch.setattr(compaction, "SUBRANGE_MIN_ROWS", 200)
 
@@ -408,16 +441,66 @@ def test_iterator_compaction_equals_uncompacted_read(spark, spark_plan,
     monkeypatch.undo()
 
     assert len(refs) > 2  # both jobs were cut into subrange parts
-    got = []
-    for _, parts in groupby(refs, key=lambda r: r.partition_id):
-        keys = []
-        for ref in parts:
-            part = _collect(spark.read.parquet(ref.filename))
-            assert [r[0] for r in part] == sorted(r[0] for r in part)
-            assert len(part) == ref.number_of_rows
-            assert load_sidecar(ref.filename)["rows"] == ref.number_of_rows
-            keys += [r[0] for r in part]
-            got += part
-        assert keys == sorted(set(keys))  # parts disjoint and in key order
-    assert sorted(got) == expected
+    assert sorted(_nan_safe(_compacted_parts(spark, refs))) == expected
     assert t.verify_integrity()["ok"]
+
+
+def test_iterator_compaction_keeps_nan_and_wide_longs(spark, spark_plan,
+                                                      tmp_path):
+    """Values pass the iterator tail and the sorted scan exactly: a NaN
+    double stays NaN (not NULL) and a nullable long above 2**53 next to
+    NULLs keeps its last digit."""
+    schema = Schema((Field("k", T.LongType()),), (),
+                    (Field("label", T.StringType()),
+                     Field("big", T.LongType(), nullable=True),
+                     Field("x", T.DoubleType())))
+    t = SleeperTable.create(
+        spark, str(tmp_path / "t"), schema,
+        TableProperties(iterators="securityFilter(label, public)"),
+        split_points=[200])
+    for rep in range(2):
+        rows = [(2 * i + rep, "public" if i % 5 else "secret",
+                 None if i % 3 == 0 else 2**53 + 1 + 2 * i,
+                 math.nan if i % 4 == 0 else i / 3) for i in range(200)]
+        t.ingest(spark.createDataFrame(rows, schema.to_struct_type()))
+    with spark_plan():
+        expected = _nan_safe(_collect(t.full_scan()))
+    assert any(r[2] is None for r in expected)
+    # 2**53 + odd is not a float64: a trip through float64 rounds it even
+    assert all(r[2] % 2 == 1 for r in expected if r[2] is not None)
+    assert any(r[3] == "NaN" for r in expected)
+    assert _nan_safe(t.sorted_scan().collect()) == expected
+
+    refs = t.compact()
+    assert sorted(_nan_safe(_compacted_parts(spark, refs))) == expected
+    assert t.verify_integrity()["ok"]
+
+
+def test_iterator_compaction_refuses_a_part_split_across_files(
+        spark, tmp_path):
+    """A part Spark wrote as several files (a writer option such as
+    maxRecordsPerFile) fails the compaction before any commit: the
+    inputs stay referenced and no output is left behind."""
+    import os
+
+    schema = Schema((Field("k", T.LongType()),), (),
+                    (Field("label", T.StringType()),))
+    t = SleeperTable.create(
+        spark, str(tmp_path / "t"), schema,
+        TableProperties(iterators="securityFilter(label, public)"))
+    for rep in range(2):
+        t.ingest(spark.createDataFrame(
+            [(2 * i + rep, "public") for i in range(50)],
+            schema.to_struct_type()))
+    before = sorted(t.store.files)
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "10")
+    try:
+        with pytest.raises(RuntimeError, match="written as"):
+            t.compact()
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    assert sorted(t.store.files) == before
+    assert sorted(os.path.join(d, f)
+                  for d, _, fs in os.walk(t.data_dir)
+                  for f in fs if f.endswith(".parquet")) == before
+    assert len(_collect(t.full_scan())) == 100

@@ -89,6 +89,28 @@ class TestCokeyedJoin:
         got = {(r.k, r.name, r.n) for r in cokeyed_join(ta, tb).collect()}
         assert got == {(1, "a", 17), (5, "b", 2), (15, "c", 1)}
 
+    def test_left_join_keeps_nan_and_wide_longs(self, spark, tmp_path):
+        """Joined values reach Spark exactly: a NaN stays NaN (not NULL)
+        and a long above 2**53 next to a left join's NULL padding keeps
+        its last digit."""
+        import math
+
+        sa = Schema((Field("k", T.LongType()),), (),
+                    (Field("x", T.DoubleType()),))
+        sb = Schema((Field("k", T.LongType()),), (),
+                    (Field("big", T.LongType()),))
+        ta = SleeperTable.create(spark, str(tmp_path / "na"), sa)
+        tb = SleeperTable.create(spark, str(tmp_path / "nb"), sb)
+        ta.ingest(spark.createDataFrame([(1, math.nan), (2, 0.5)],
+                                        sa.to_struct_type()))
+        tb.ingest(spark.createDataFrame([(1, 2**53 + 1)],
+                                        sb.to_struct_type()))
+        got = sorted(tuple(r) for r in
+                     cokeyed_join(ta, tb, how="left").collect())
+        assert math.isnan(got[0][1])
+        assert (got[0][0], got[0][2]) == (1, 2**53 + 1)
+        assert got[1] == (2, 0.5, None)
+
     def test_colliding_value_column_gets_suffix(self, spark, tmp_path):
         sa = Schema((Field("k", T.LongType()),), (),
                     (Field("v", T.LongType(), True),))
