@@ -51,7 +51,7 @@ from __future__ import annotations
 import base64
 import math
 import zlib
-from typing import Any, Iterable
+from typing import Any
 
 import numpy as np
 
@@ -228,9 +228,9 @@ def _positions(h: np.ndarray, k: int, m: int) -> np.ndarray:
 
 class BloomAccumulator:
     """Streaming builder: size from an upfront row estimate, feed value
-    chunks, serialise once. The Arrow compaction engine feeds its
-    sorted output batches here so compacted files get blooms with zero
-    extra passes; ``build_bloom`` below is the one-shot form."""
+    chunks, serialise once. ``sketches.SidecarBuilder`` feeds it the
+    first key of every table a data file is written from, so a file's
+    Bloom costs no extra pass over the data."""
 
     def __init__(self, field: str, expected_rows: int,
                  _reuse_bits: bool = False):
@@ -241,7 +241,7 @@ class BloomAccumulator:
         if self.disabled:
             self._bits = np.zeros(0, dtype=bool)
         elif _reuse_bits:
-            # one-shot builds (build_bloom) borrow a per-thread arena:
+            # one build at a time per thread borrows a per-thread arena:
             # a fresh np.zeros(m) faults m new pages per FILE, and on a
             # memory-pressured host that first-touch measured ~1s for a
             # 2MB bitmap; re-zeroing resident pages is memset-fast.
@@ -270,7 +270,7 @@ class BloomAccumulator:
             h = _hash_array(part)
             if len(h):
                 # incremental double-hash scatter: bits[(h1 + i*h2) & mask]
-                # per i, identical positions to the one-shot _positions()
+                # per i, identical positions to the probe side's _positions()
                 # matrix but with O(n) temporaries instead of O(n*k) —
                 # fresh multi-MB allocations fault pages, and on a
                 # memory-pressured host a single first-touch of the n*k
@@ -306,8 +306,9 @@ _ARENA = __import__("threading").local()
 
 def _borrow_bits(m: int) -> np.ndarray:
     """Per-thread reusable bitmap: grown to the largest m seen, zeroed
-    in place per borrow. Valid only within one one-shot build (the
-    caller finishes with the slice before the next borrow)."""
+    in place per borrow. Valid only while one build at a time runs per
+    thread (the caller finishes with the slice before the next
+    borrow)."""
     buf = getattr(_ARENA, "bits", None)
     if buf is None or buf.size < m:
         buf = np.zeros(m, dtype=bool)
@@ -315,15 +316,6 @@ def _borrow_bits(m: int) -> np.ndarray:
     else:
         buf[:m] = False
     return buf[:m]
-
-
-def build_bloom(field: str, values, n_rows: int | None = None) -> dict | None:
-    """One-shot build; None above MAX_USEFUL_ROWS (no bloom beats a
-    useless one)."""
-    acc = BloomAccumulator(field, n_rows if n_rows is not None
-                           else len(values), _reuse_bits=True)
-    acc.update(values)
-    return acc.to_dict()
 
 
 def decode_bits(bloom: dict) -> np.ndarray:
@@ -340,8 +332,3 @@ def may_contain(bits: np.ndarray, bloom: dict, value: Any) -> bool:
     except TypeError:
         return True  # unhashable probe type -> unknown -> keep
     return bool(bits[_positions(h, bloom["k"], bloom["m"])].all())
-
-
-def may_contain_any(bloom: dict, values: Iterable[Any]) -> bool:
-    bits = decode_bits(bloom)
-    return any(may_contain(bits, bloom, v) for v in values)

@@ -40,7 +40,7 @@ from sleeper_spark.iterators import (
     parse_aggregations,
     parse_filters,
 )
-from sleeper_spark import bloom, sketches
+from sleeper_spark import sketches
 from sleeper_spark.properties import TableProperties
 from sleeper_spark.ranges import Region
 from sleeper_spark.schema import Schema
@@ -203,15 +203,6 @@ def _leveled_batches(refs: list[FileReference], fanout: int,
 SUBRANGE_MIN_ROWS = 1_000_000
 
 
-def _write_empty_parquet(out_path: str, declared, compression: str) -> None:
-    """Zero-row parquet with the declared table schema (which also
-    covers columns a schema-evolved input lacks): the output a job or
-    leaf whose every row was filtered still needs for its reference
-    swap. Pure Arrow, no Spark action."""
-    empty = pa.table({f.name: pa.array([], type=f.type) for f in declared})
-    pq.write_table(empty, out_path, compression=compression)
-
-
 def _job_subrange_bounds(job: CompactionJob, schema: Schema,
                          total_rows: int, budget: int) -> list[tuple]:
     """Cut one job's dim-0 key space into <= budget equal-depth
@@ -340,10 +331,20 @@ def _part_chunks(desc: dict):
             yield out
 
 
+def _write_part(desc: dict, tables) -> int:
+    """Write one part's file and sidecar (``sketches.write_sorted_file``)
+    with the part's write settings; no tables write the empty file."""
+    return sketches.write_sorted_file(
+        desc["out_path"], tables, key_names=desc["key_names"],
+        sketch_k=desc["sketch_k"], expected_rows=desc["expected_rows"],
+        compression=desc["compression"], page_bytes=desc["page_bytes"],
+        declared_schema=desc["arrow_schema"])
+
+
 def _arrow_compact_one(desc: dict) -> tuple[str, str, int]:
     """Run one part with Arrow kernels (executed on an executor): merge
-    and process its rows (:func:`_part_chunks`), append each chunk to a
-    ParquetWriter and build the sketch sidecar from the same batches."""
+    and process its rows (:func:`_part_chunks`) and stream them into the
+    part's file and sidecar in one pass (:func:`_write_part`)."""
     # Spark pins python workers to OMP_NUM_THREADS=1; a lone huge job
     # should use the cores its batch left idle (the reference's DataFusion
     # containers get 4 vCPUs each, SystemTestInstance.java:202-218)
@@ -351,67 +352,7 @@ def _arrow_compact_one(desc: dict) -> tuple[str, str, int]:
     if budget > pa.cpu_count():
         pa.set_cpu_count(budget)
         pa.set_io_thread_count(max(8, budget // 2))
-
-    keys = desc["key_names"]
-    writer = None
-    n_out = 0
-    # dim-0 output is globally sorted -> streaming O(k)-memory sketch (no
-    # buffered copy, no re-sort of the key column the merge already
-    # ordered); secondary dims are not globally sorted by themselves, so
-    # they keep the buffer + sort_indices path (usually narrow numerics)
-    d0_sketch = sketches.SortedColumnSketch(desc["sketch_k"])
-    # per-file Bloom over the first row key (bloom.py): sized from the
-    # planner's per-part row estimate (an upper bound on output rows —
-    # filters/aggregation only shrink it), fed from the same output
-    # batches the writer gets — zero extra passes over the data
-    # _reuse_bits is safe here: exactly one accumulator lives per task
-    # invocation and tasks run to completion per worker thread — the
-    # borrowed per-thread bitmap (one byte per bit, dtype=bool: up to
-    # 128 MiB per worker thread at the MAX_BITS cap) is re-zeroed
-    # in place instead of freshly faulted per output file, which
-    # measured ~1s/file of first-touch stalls on a memory-pressured host
-    d0_bloom = bloom.BloomAccumulator(
-        keys[0], max(1, desc.get("expected_rows") or sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in desc["files"])), _reuse_bits=True)
-    rest_chunks: list[list] = [[] for _ in keys[1:]]
-    try:
-        for out in _part_chunks(desc):
-            if writer is None:
-                writer = pq.ParquetWriter(
-                    desc["out_path"], out.schema,
-                    compression=desc["compression"],
-                    data_page_size=desc["page_bytes"])
-            writer.write_table(out)
-            n_out += out.num_rows
-            d0_sketch.update(out.column(keys[0]))
-            if d0_bloom is not None:
-                try:
-                    d0_bloom.update(out.column(keys[0]))
-                except TypeError:
-                    d0_bloom = None  # non-hashable key type -> no bloom
-            for i, k in enumerate(keys[1:]):
-                rest_chunks[i].append(out.column(k).combine_chunks())
-    finally:
-        if writer is not None:
-            writer.close()
-    if writer is None:
-        _write_empty_parquet(desc["out_path"], desc["arrow_schema"],
-                             desc["compression"])
-    # sketch sidecar computed inside the task — zero extra IO, like the
-    # reference computing sketches inside the compaction job
-    # (compact.rs writes file + sketch together)
-    rest_cols = {
-        k: pa.chunked_array(rest_chunks[i]) if rest_chunks[i]
-        else pa.chunked_array([pa.array([], type=pa.int64())])
-        for i, k in enumerate(keys[1:])
-    }
-    sketch = sketches.sketch_from_arrow_columns(
-        rest_cols, n_out, desc["sketch_k"])
-    sketch["fields"][keys[0]] = d0_sketch.field_dict()
-    if d0_bloom is not None and d0_bloom.n:
-        sketch["bloom"] = d0_bloom.to_dict()
-    sketches.write_sidecar(desc["out_path"], sketch)
+    n_out = _write_part(desc, _part_chunks(desc))
     return desc["job_id"], desc["out_path"], n_out
 
 
@@ -550,21 +491,20 @@ def run_jobs(
                 f"compaction part {tag} was written as "
                 f"{len(written[tag])} files, expected one")
     rows_by_path: dict[str, int] = {}
+    moved = []
     for tag, d in zip(tags, descs):
         if written[tag]:
             os.replace(written[tag][0], d["out_path"])
             rows_by_path[d["out_path"]] = \
                 pq.ParquetFile(d["out_path"]).metadata.num_rows
+            moved.append(d["out_path"])
         else:
-            _write_empty_parquet(d["out_path"], d["arrow_schema"],
-                                 d["compression"])
-            rows_by_path[d["out_path"]] = 0
+            rows_by_path[d["out_path"]] = _write_part(d, [])
     shutil.rmtree(staging)
     # sketch sidecars before the reference swap, so a split planned right
     # after commit sees them (compact.rs writes file + sketch together)
     sketches.write_sidecars_distributed(
-        spark, list(rows_by_path), list(schema.key_names), props.sketch_size,
-        first_key_sorted=True)  # parts are key-sorted per file
+        spark, moved, list(schema.key_names), props.sketch_size)
     return _commit_parts(store, jobs, descs, rows_by_path)
 
 
@@ -672,7 +612,7 @@ def run_zorder_rewrite(
     for r in new_refs:
         by_leaf.setdefault(r.partition_id, []).append(r)
 
-    replacements = []
+    replacements, empties = [], []
     for leaf_id, refs in chosen:
         outs = by_leaf.get(leaf_id, [])
         if not outs:
@@ -681,17 +621,19 @@ def run_zorder_rewrite(
             path = os.path.join(out_dir, f"{PARTITION_COL}={leaf_id}",
                                 "empty.parquet")
             os.makedirs(os.path.dirname(path), exist_ok=True)
-            _write_empty_parquet(path, _declared_arrow_schema(schema),
-                                 props.compression)
+            sketches.write_sorted_file(
+                path, [], key_names=list(schema.key_names),
+                sketch_k=props.sketch_size, expected_rows=0,
+                compression=props.compression, page_bytes=props.page_bytes,
+                declared_schema=_declared_arrow_schema(schema))
             outs = [FileReference(
                 filename=path, partition_id=leaf_id, number_of_rows=0,
                 only_contains_data_for_this_partition=True)]
-            new_refs.extend(outs)
+            empties.extend(outs)
         replacements.append((leaf_id, [r.filename for r in refs], outs))
 
     sketches.write_sidecars_distributed(
         spark, [r.filename for r in new_refs],
-        list(schema.key_names), props.sketch_size,
-        first_key_sorted=True)  # zorder files keep the key-sort invariant
+        list(schema.key_names), props.sketch_size)
     store.replace_file_references_batch(replacements)
-    return new_refs
+    return new_refs + empties

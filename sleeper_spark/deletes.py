@@ -33,8 +33,9 @@ Every copy-on-write mutation runs the same four steps:
    (materialized views, secondary indexes) apply; with assignments they
    also land, updated, as a third file. Filtering preserves the file's
    sort order, so every engine invariant (sorted leaves,
-   merge-without-resort, sketch validity) survives, and each output's
-   sidecar (quantile sketch + min/max + Bloom) is rebuilt in the task.
+   merge-without-resort, sketch validity) survives, and each data
+   output is written with its sidecar (quantile sketch + min/max +
+   Bloom) by the one sorted-file writer (``sketches.write_sorted_file``).
    A reference where nothing matched is left as it is.
 4. COMMIT: the caller's ONE transaction — ``REPLACE_FILE_REFERENCES``
    here and in updates.py, ``MERGE_FILES`` in merge.py. Fully-deleted
@@ -74,8 +75,13 @@ from sleeper_spark.query import (
     file_may_contain_keys,
 )
 from sleeper_spark.ranges import Range, Region
-from sleeper_spark.sketches import _DRIVER_SIDE_BYTES
-from sleeper_spark.sorted_scan import _and, _point_key_mask, _value_range_mask
+from sleeper_spark.sketches import _DRIVER_SIDE_BYTES, write_sorted_file
+from sleeper_spark.sorted_scan import (
+    _and,
+    _declared_arrow_schema,
+    _point_key_mask,
+    _value_range_mask,
+)
 from sleeper_spark.statestore import FileReference, StateStoreException
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -171,20 +177,6 @@ def _exact_rows_match(key0, rows_ipc, tbl) -> np.ndarray:
     return match
 
 
-def _write(tbl, path: str, desc: dict, sidecar: bool = True) -> None:
-    """Write one rewrite output; data files (not tombstones) get their
-    sidecar. A filtered sorted file is still sorted."""
-    import pyarrow.parquet as pq
-
-    from sleeper_spark import sketches
-
-    pq.write_table(tbl, path, compression=desc["compression"],
-                   data_page_size=desc["page_bytes"])
-    if sidecar:
-        sketches.write_sidecar(path, sketches.table_sketch(
-            tbl, desc["key_names"], desc["sketch_k"], first_key_sorted=True))
-
-
 def _rewrite_ref(desc: dict) -> tuple[int, int]:
     """Executor task: rewrite ONE (file, partition) reference. Returns
     (rows matched, rows kept); nothing is written when nothing matched.
@@ -204,11 +196,18 @@ def _rewrite_ref(desc: dict) -> tuple[int, int]:
     keep = own & ~hit
     n_keep = int(keep.sum())
     old = tbl.filter(pa.array(hit))
-    _write(old, desc["tomb_path"], desc, sidecar=False)
+    w = desc["write"]
+    # the tombstone records removed rows and is no data file: no sidecar
+    pq.write_table(old, desc["tomb_path"], compression=w["compression"],
+                   data_page_size=w["page_bytes"])
+    # a filtered sorted file is still sorted, and keys are never assigned
     if n_keep:
-        _write(tbl.filter(pa.array(keep)), desc["kept_path"], desc)
+        write_sorted_file(desc["kept_path"], [tbl.filter(pa.array(keep))],
+                          expected_rows=n_keep, **w)
     if desc["assign"] is not None:
-        _write(desc["assign"](old), desc["upd_path"], desc)
+        upd = desc["assign"](old)
+        write_sorted_file(desc["upd_path"], [upd],
+                          expected_rows=upd.num_rows, **w)
     return n_hit, n_keep
 
 
@@ -300,6 +299,11 @@ def rewrite(table: "SleeperTable", refs: list[FileReference], out_dir: str,
     task per reference. ``match`` and ``assign`` must pickle (module
     functions or ``functools.partial`` of them)."""
     tree = table.store.tree
+    write = {"key_names": list(table.schema.key_names),
+             "sketch_k": table.props.sketch_size,
+             "compression": table.props.compression,
+             "page_bytes": table.props.page_bytes,
+             "declared_schema": _declared_arrow_schema(table.schema)}
     descs = [{
         "in_path": ref.filename,
         "partition_ranges": list(tree[ref.partition_id].region.ranges),
@@ -308,10 +312,7 @@ def rewrite(table: "SleeperTable", refs: list[FileReference], out_dir: str,
         "tomb_path": os.path.join(out_dir, f"tombstone-{i:05d}.parquet"),
         "match": match,
         "assign": assign,
-        "compression": table.props.compression,
-        "page_bytes": table.props.page_bytes,
-        "key_names": list(table.schema.key_names),
-        "sketch_k": table.props.sketch_size,
+        "write": write,
     } for i, ref in enumerate(refs)]
     if not descs:
         results = []

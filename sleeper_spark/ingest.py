@@ -8,7 +8,11 @@ partition id, ``repartition`` on the tag so each leaf lands in exactly one
 task, ``sortWithinPartitions(tag, row keys..., sort keys...)``, and write
 with ``partitionBy(tag)`` so every leaf becomes one sorted file. Spark's
 external sorter replaces the reference's hand-rolled spill-and-merge
-ingest batches (ArrayListRowBatch.java:49-53, ArrowRowBatch.java).
+ingest batches (ArrayListRowBatch.java:49-53, ArrowRowBatch.java). It is
+the one ingest sort: the reference's global-sort (J3) and pair-RDD (J5)
+drivers write the same sorted runs and are not carried. Each written
+file then gets its sidecar from a read-back of its key columns
+(``sketches.write_sidecars_distributed``).
 
 Scale notes (100 TB):
 - The partition-id tag is a pure Column expression (nested CASE over leaf
@@ -24,7 +28,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import bisect
 import os
 import shutil
 import uuid
@@ -32,7 +35,6 @@ import uuid
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from sleeper_spark import sketches
 from sleeper_spark.partitions import PartitionTree
@@ -71,7 +73,6 @@ def ingest_dataframe(
     store: StateStore,
     data_dir: str,
     props: TableProperties,
-    strategy: str = "local_sort",
     job_id: str | None = None,
     layout: str | None = None,
     layout_cols: list[str] | None = None,
@@ -81,33 +82,19 @@ def ingest_dataframe(
     """Write ``df`` as sorted per-leaf-partition files and commit an
     ADD_FILES transaction (O7: IngestCoordinator.java:17-58).
 
-    Strategies mirror the reference's bulk-import drivers:
+    The one sort is the reference's local-sort bulk import (J4,
+    BulkImportDataframeLocalSortDriver): hash-repartition on the leaf
+    id and sort within partitions, no global sampling pass, one file per
+    leaf per ingest (:func:`write_sorted_files`).
 
-    - ``local_sort`` (J4, default, BulkImportDataframeLocalSortDriver):
-      hash-repartition on the leaf id + sort within partitions — no
-      global sampling pass, one file per leaf per ingest.
-    - ``global_sort`` (J3, BulkImportJobDataframeDriver.java:55-93): one
-      total ``orderBy(partition, row keys, sort keys)`` — Spark's range
-      partitioner samples bounds, so task outputs arrive in total order;
-      a leaf landing on a task boundary yields two DISJOINT sorted files
-      (still valid sorted runs). Useful when leaf-id hashing would skew
-      (few giant leaves) since ranges balance by rows, not by leaf.
-    - ``rdd`` (J5, BulkImportJobRDDDriver.java:40-55): pair-RDD
-      ``repartitionAndSortWithinPartitions`` with an explicit
-      SleeperPartitioner analog (leaf-bounds binary search, exactly the
-      reference's ``SleeperPartitioner.java`` + ``WrappedKeyComparator``).
-      Same output contract as ``local_sort`` (one sorted file per leaf)
-      but rows cross the Python boundary, so the DataFrame routes are
-      preferred (SURVEY §2.4); kept for parity and for callers that need
-      a hand-supplied partitioner.
-
-    ``layout="zorder"`` (local_sort only) writes ``layout_files_per_leaf``
-    files per leaf instead of one, clustered by the Morton interleave of
-    ``layout_cols`` (Delta/Iceberg OPTIMIZE ZORDER, expressed as one
-    window + write): each file keeps the per-file key-sorted invariant
-    the merge scan needs, but its footer min/max box is tight in every
-    layout column — so multi-dimensional ``value_ranges`` queries skip
-    whole files via the sidecar stats instead of scanning the leaf.
+    ``layout="zorder"`` writes ``layout_files_per_leaf`` files per leaf
+    instead of one, clustered by the Morton interleave of
+    ``layout_cols`` (Delta/Iceberg OPTIMIZE ZORDER: ``repartitionByRange``
+    on (leaf, Morton key), then the same per-task key sort): each file
+    keeps the per-file key-sorted invariant the merge scan needs, but
+    its footer min/max box is tight in every layout column — so
+    multi-dimensional ``value_ranges`` queries skip whole files via the
+    sidecar stats instead of scanning the leaf.
 
     Returns the committed file references.
     """
@@ -120,7 +107,7 @@ def ingest_dataframe(
     job_id = job_id if job_id is not None else f"ingest-{uuid.uuid4().hex[:12]}"
     out_dir = os.path.join(data_dir, f"{job_id}-{uuid.uuid4().hex[:8]}")
     refs = write_sorted_files(
-        df, tree, store, out_dir, props, strategy=strategy,
+        df, tree, store, out_dir, props,
         layout=layout, layout_cols=layout_cols,
         layout_files_per_leaf=layout_files_per_leaf,
         layout_bits=layout_bits)
@@ -140,7 +127,6 @@ def write_sorted_files(
     store: StateStore,
     out_dir: str,
     props: TableProperties,
-    strategy: str = "local_sort",
     layout: str | None = None,
     layout_cols: list[str] | None = None,
     layout_files_per_leaf: int = 8,
@@ -167,70 +153,52 @@ def write_sorted_files(
     n_parts = max(1, min(len(leaves), 2 * parallelism))
     if layout is not None and layout != "zorder":
         raise ValueError(f"unknown layout {layout!r}")
-    if layout == "zorder" and strategy != "local_sort":
-        raise ValueError("layout='zorder' requires strategy='local_sort'")
-    if props.constraints and strategy == "rdd":
-        raise ValueError(
-            "CHECK constraints are enforced inside the DataFrame "
-            "partition-id expression; strategy='rdd' bypasses it — "
-            "use local_sort or global_sort on constrained tables")
-    if strategy == "rdd":
-        sorted_df = _rdd_sorted(df, tree, schema)
-    else:
-        # row/sort keys are NON-NULLABLE by contract
-        # (Schema.java:275-295); a null row key would fall into the
-        # CASE chain's `otherwise` leaf, violate that leaf's region
-        # invariant, and then be filtered out by EVERY read's
-        # leaf-region guard — silently lost data. Fail the write job
-        # loudly instead: the guard is one codegen'd null check per
-        # row, evaluated inside the partition-id expression so Catalyst
-        # can never prune it.
-        null_any = None
-        for n in schema.key_names:
-            c = F.col(n).isNull()
-            null_any = c if null_any is None else (null_any | c)
-        leaf_expr = F.when(
-            null_any,
+    # row/sort keys are NON-NULLABLE by contract (Schema.java:275-295); a
+    # null row key would fall into the CASE chain's `otherwise` leaf,
+    # violate that leaf's region invariant, and then be filtered out by
+    # EVERY read's leaf-region guard — silently lost data. Fail the write
+    # job loudly instead: the guard is one codegen'd null check per row,
+    # evaluated inside the partition-id expression so Catalyst can never
+    # prune it.
+    null_any = None
+    for n in schema.key_names:
+        c = F.col(n).isNull()
+        null_any = c if null_any is None else (null_any | c)
+    leaf_expr = F.when(
+        null_any,
+        F.raise_error(F.lit(
+            "null key: row/sort key fields are non-nullable "
+            f"(fields {list(schema.key_names)}) — filter or "
+            "quarantine null-key rows before ingest"))
+    )
+    if props.constraints:
+        # CHECK constraint guard, same anti-pruning idiom as the null-key
+        # check: embedded in the partition-id expression, so Catalyst can
+        # never optimize it away and no second pass over the data runs.
+        # SQL CHECK semantics — NULL passes, only FALSE rejects.
+        violates = ~F.coalesce(
+            F.expr(props.constraints).cast("boolean"), F.lit(True))
+        leaf_expr = leaf_expr.when(
+            violates,
             F.raise_error(F.lit(
-                "null key: row/sort key fields are non-nullable "
-                f"(fields {list(schema.key_names)}) — filter or "
-                "quarantine null-key rows before ingest"))
+                "CHECK constraint violated: a row failed "
+                f"{props.constraints!r} — filter or quarantine "
+                "violating rows before ingest")))
+    leaf_expr = leaf_expr.otherwise(tree.leaf_id_column())
+    tagged = df.select(*[f.name for f in schema.all_fields()]).withColumn(
+        PARTITION_COL, leaf_expr
+    )
+    if layout == "zorder":
+        if not layout_cols:
+            raise ValueError("layout='zorder' needs layout_cols")
+        sorted_df = zorder_range_partitioned(
+            tagged, layout_cols, max(1, len(leaves) * layout_files_per_leaf),
+            layout_bits, list(schema.key_names))
+    else:
+        sorted_df = (
+            tagged.repartition(n_parts, F.col(PARTITION_COL))
+            .sortWithinPartitions(PARTITION_COL, *schema.key_names)
         )
-        if props.constraints:
-            # CHECK constraint guard, same anti-pruning idiom as the
-            # null-key check: embedded in the partition-id expression,
-            # so Catalyst can never optimize it away and no second
-            # pass over the data runs. SQL CHECK semantics — NULL
-            # passes, only FALSE rejects.
-            violates = ~F.coalesce(
-                F.expr(props.constraints).cast("boolean"), F.lit(True))
-            leaf_expr = leaf_expr.when(
-                violates,
-                F.raise_error(F.lit(
-                    "CHECK constraint violated: a row failed "
-                    f"{props.constraints!r} — filter or quarantine "
-                    "violating rows before ingest")))
-        leaf_expr = leaf_expr.otherwise(tree.leaf_id_column())
-        tagged = df.select(*[f.name for f in schema.all_fields()]).withColumn(
-            PARTITION_COL, leaf_expr
-        )
-        if strategy == "global_sort":
-            sorted_df = tagged.orderBy(PARTITION_COL, *schema.key_names)
-        elif strategy == "local_sort":
-            if layout == "zorder":
-                if not layout_cols:
-                    raise ValueError("layout='zorder' needs layout_cols")
-                sorted_df = zorder_range_partitioned(
-                    tagged, layout_cols,
-                    max(1, len(leaves) * layout_files_per_leaf),
-                    layout_bits, list(schema.key_names))
-            else:
-                sorted_df = (
-                    tagged.repartition(n_parts, F.col(PARTITION_COL))
-                    .sortWithinPartitions(PARTITION_COL, *schema.key_names)
-                )
-        else:
-            raise ValueError(f"unknown ingest strategy {strategy!r}")
     try:
         (
             sorted_df
@@ -248,90 +216,12 @@ def write_sorted_files(
         raise
 
     refs = _manifest_from_written_dir(out_dir)
-    # quantile sketch sidecar per file (Sketches.java:45-62), computed on
-    # executors so splitting later never re-reads data; every strategy
-    # above writes each file sorted by the key fields, so the first row
-    # key column skips its sketch sort (verified, sketches.py)
+    # quantile sketch sidecar per file (Sketches.java:45-62), read back
+    # from the key columns so splitting later never re-reads data
     sketches.write_sidecars_distributed(
         df.sparkSession, [r.filename for r in refs],
-        schema.key_names, props.sketch_size, first_key_sorted=True)
+        schema.key_names, props.sketch_size)
     return refs
-
-
-def _rdd_sorted(df: DataFrame, tree: PartitionTree, schema) -> DataFrame:
-    """J5: the RDD bulk-import strategy (BulkImportJobRDDDriver.java:40-55).
-
-    ``repartitionAndSortWithinPartitions`` with an explicit partitioner —
-    the PySpark analog of the reference's ``SleeperPartitioner`` (a range
-    partitioner that binary-searches the leaf split points) combined with
-    its ``WrappedKeyComparator`` (lexicographic compare over row keys then
-    sort keys; here the key IS the Python tuple, whose comparison is
-    exactly that).
-
-    Exactly one output partition per leaf, rows sorted within it, tagged
-    via ``mapPartitionsWithIndex`` (partition i == leaf i, so the tag is
-    attached from the partitioner's own mapping — no second assignment
-    pass). The closure carries only leaf bounds/ids (metadata-sized).
-
-    Scale/caveats vs the DataFrame routes: rows are pickled through the
-    Python workers both ways, and keys must be non-null (Python tuple
-    comparison has no null ordering) — which the reference also requires
-    of row keys. Preferred only when a caller needs partitioner-level
-    control; SURVEY §2.4 routes normal ingest to J3/J4.
-    """
-    from sleeper_spark.partitions import sorted_leaves_dim0
-
-    ordered = sorted_leaves_dim0(tree)
-    key_names = list(schema.key_names)
-    row_key_names = [f.name for f in schema.row_key_fields]
-    n_rk = len(row_key_names)
-    field_names = [f.name for f in schema.all_fields()]
-    leaf_ids = [p.id for p in ordered]
-    dims_used = {p.dimension for p in tree.all_partitions() if not p.is_leaf}
-
-    if dims_used <= {0}:
-        # every split on dimension 0 (the overwhelmingly common tree):
-        # leaf index = binary search of the sorted dim-0 lower bounds,
-        # the same O(log n) lookup as SleeperPartitioner.java
-        bounds = [p.region.range_for(row_key_names[0]).min
-                  for p in ordered[1:]]
-
-        def part_for_key(key: tuple) -> int:
-            return bisect.bisect_right(bounds, key[0])
-    else:
-        # multi-dimension tree: descend it (metadata-sized, pickled once
-        # per executor); index maps the landing leaf to its partition slot
-        index = {pid: i for i, pid in enumerate(leaf_ids)}
-
-        def part_for_key(key: tuple) -> int:
-            row = dict(zip(row_key_names, key[:n_rk]))
-            return index[tree.leaf_for_row(row).id]
-
-    def to_pair(r):
-        key = tuple(r[k] for k in key_names)
-        # same non-nullable contract the DataFrame routes enforce with a
-        # codegen'd raise_error (Schema.java:275-295): without this, a
-        # null second row key or null sort key on a dim-0-only tree only
-        # fails if tuple comparison happens to touch the None — otherwise
-        # the contract-violating row is written silently and every read's
-        # leaf-region guard filters it out (lost data). Fail loudly here.
-        if any(v is None for v in key):
-            raise ValueError(
-                "null key: row/sort key fields are non-nullable "
-                f"(fields {key_names}, got {key!r}) — filter or "
-                "quarantine null-key rows before ingest")
-        return key, tuple(r[f] for f in field_names)
-
-    pairs = df.rdd.map(to_pair)
-    srt = pairs.repartitionAndSortWithinPartitions(
-        numPartitions=len(ordered), partitionFunc=part_for_key)
-    tagged = srt.mapPartitionsWithIndex(
-        lambda i, it: ((*row, leaf_ids[i]) for _key, row in it),
-        preservesPartitioning=True)
-    struct = T.StructType(
-        list(schema.to_struct_type().fields)
-        + [T.StructField(PARTITION_COL, T.StringType(), False)])
-    return df.sparkSession.createDataFrame(tagged, struct)
 
 
 def _manifest_from_written_dir(out_dir: str) -> list[FileReference]:

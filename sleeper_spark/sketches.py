@@ -17,9 +17,14 @@ Spark-native equivalent:
   sidecars driver-side (tiny: K values x dims x files) and never opens a
   data file; only files missing a sidecar fall back to a bounded Spark
   scan of that partition.
-- Sidecar computation is distributed (one executor task per file at
-  ingest/compaction commit); the Arrow compaction engine computes the
-  sketch from the in-memory table with zero extra IO.
+- One builder makes every sidecar (:class:`SidecarBuilder`): quantile
+  sketch, first-row-key Bloom filter and footer min/max. Files written
+  from Arrow tables (compaction parts, copy-on-write outputs) go
+  through :func:`write_sorted_file`, which builds the sidecar from the
+  tables it writes, with zero extra IO. Files Spark writes (ingest, the
+  iterator compaction tail, the z-order rewrite) get theirs from a
+  read-back of their key columns (:func:`write_sidecars_distributed`,
+  driver threads or one executor task per file slice).
 
 Region clipping: a split file reference's sketch covers the whole file.
 Rank estimates are clipped to the partition's range on the dimension
@@ -76,34 +81,11 @@ def _spaced_ranks(n: int, k: int) -> list[int]:
     return sorted({round(i * (n - 1) / k) for i in range(k + 1)})
 
 
-def sketch_from_sorted_values(values_by_field: dict[str, list],
-                              n: int, k: int) -> dict:
-    """Build the sidecar dict given each key field's SORTED values."""
-    fields = {}
-    for name, vals in values_by_field.items():
-        ranks = _spaced_ranks(n, k)
-        fields[name] = {
-            "ranks": ranks,
-            "values": [_enc(vals[r]) for r in ranks],
-        }
-    return {"rows": n, "k": k, "fields": fields}
-
-
-def sketch_from_arrow_columns(columns: dict, n: int, k: int,
-                              sorted_fields: "set[str] | None" = None)\
-        -> dict:
+def sketch_from_arrow_columns(columns: dict, n: int, k: int) -> dict:
     """Sketch Arrow key columns without materialising them to Python:
     sort indices stay in C++, only the <=k+1 sampled rank values cross
     into Python (a full ``to_pylist`` of a 50M-row key column costs tens
-    of seconds and gigabytes of PyObjects).
-
-    ``sorted_fields`` names columns the CALLER believes are already
-    non-decreasing (every ingest/compaction output file is sorted by
-    the key fields, so the FIRST row key column always is): those skip
-    the O(n log n) ``sort_indices`` for one vectorised monotonicity
-    verification + a direct rank take. Verification is kept
-    unconditionally — a wrong sortedness hint must degrade to the sort,
-    never to a wrong sketch (split points derive from these)."""
+    of seconds and gigabytes of PyObjects)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -112,53 +94,81 @@ def sketch_from_arrow_columns(columns: dict, n: int, k: int,
     fields = {}
     for name, col in columns.items():
         arr = col.combine_chunks() if hasattr(col, "combine_chunks") else col
-        if sorted_fields and name in sorted_fields and n > 1 and \
-                arr.null_count == 0 and \
-                not pc.any(pc.less(arr.slice(1), arr.slice(0, n - 1)),
-                           min_count=0).as_py():
-            sampled = arr.take(rank_idx).to_pylist()
-        else:
-            order = pc.sort_indices(arr)
-            sampled = arr.take(order.take(rank_idx)).to_pylist()
+        order = pc.sort_indices(arr)
+        sampled = arr.take(order.take(rank_idx)).to_pylist()
         fields[name] = {"ranks": ranks, "values": [_enc(v) for v in sampled]}
     return {"rows": n, "k": k, "fields": fields}
 
 
 class SortedColumnSketch:
-    """Streaming equi-depth sketch of a column that arrives in GLOBALLY
-    SORTED chunks — the Arrow compaction engine's output order for the
-    dim-0 key. Buffering the whole column and re-sorting it at job end
+    """Streaming equi-depth sketch of a file's first key column, fed in
+    the file's row order. Buffering the whole column and re-sorting it
     (``sketch_from_arrow_columns``) costs a second copy of all key data
-    plus an O(n log n) sort the merge already paid for; here each chunk
-    contributes every s-th value (plus its tail) with its global rank,
-    O(k) memory per chunk, and finalisation is a nearest-rank lookup.
+    plus an O(n log n) sort the writer's input already paid for; here
+    the first chunk is kept whole, so a file written in one chunk gets
+    exact ranks, and once a second chunk arrives every chunk contributes
+    every s-th value (plus its tail) with its global rank: O(k) memory
+    per chunk, and finalisation is a nearest-rank lookup.
 
-    Rank error: a stored sample sits at most ``s - 1 <= chunk_rows/(4k)``
-    ranks below the requested rank — strictly inside the sidecar's
-    existing ``rows/k`` per-file error budget (module doc)."""
+    Rank error with several chunks: a stored sample sits at most
+    ``s - 1 <= chunk_rows/(4k)`` ranks below the requested rank,
+    strictly inside the sidecar's ``rows/k`` per-file error budget
+    (module doc). A value below its predecessor, within a chunk or
+    across chunks, raises ``ValueError`` naming ``path``: split points
+    derive from these ranks, so an unsorted file must not get a
+    sketch."""
 
-    def __init__(self, k: int) -> None:
+    def __init__(self, k: int, path: str, field: str) -> None:
         self.k = k
+        self.path = path
+        self.field = field
+        self._first = None  # the first chunk, whole until a second one
         self._vals: list = []   # pa.Array per chunk (sampled)
         self._ranks: list = []  # np.ndarray per chunk (global ranks)
+        self._last = None  # the last value fed, as an Arrow scalar
         self.n = 0
 
     def update(self, arr) -> None:
-        """Feed the next sorted chunk's column (pa.Array/ChunkedArray)."""
+        """Feed the next chunk's column (pa.Array/ChunkedArray)."""
         import numpy as np
-        import pyarrow as pa
+        import pyarrow.compute as pc
 
         m = len(arr)
         if m == 0:
             return
+        a = arr.combine_chunks() if hasattr(arr, "combine_chunks") else arr
+        down = pc.fill_null(pc.less(a.slice(1), a.slice(0, m - 1)), False)
+        at = None
+        if self._last is not None and pc.less(a[0], self._last).as_py():
+            at = 0
+        elif pc.any(down, min_count=0).as_py():
+            at = 1 + int(np.argmax(down.to_numpy(zero_copy_only=False)))
+        if at is not None:
+            raise ValueError(
+                f"{self.path}: key {self.field!r} decreases at row "
+                f"{self.n + at}; a sorted file's rows must arrive in key "
+                "order")
+        self._last = a[m - 1]
+        if self._first is not None:
+            self._sample(self._first, 0)
+            self._first = None
+        if self.n == 0:
+            self._first = a
+        else:
+            self._sample(a, self.n)
+        self.n += m
+
+    def _sample(self, a, base: int) -> None:
+        import numpy as np
+        import pyarrow as pa
+
+        m = len(a)
         s = max(1, m // (4 * self.k))
         idx = np.arange(0, m, s, dtype=np.int64)
         if idx[-1] != m - 1:
             idx = np.append(idx, m - 1)
-        a = arr.combine_chunks() if hasattr(arr, "combine_chunks") else arr
         self._vals.append(a.take(pa.array(idx)))
-        self._ranks.append(self.n + idx)
-        self.n += m
+        self._ranks.append(base + idx)
 
     def field_dict(self) -> dict:
         import numpy as np
@@ -167,45 +177,126 @@ class SortedColumnSketch:
         ranks = _spaced_ranks(self.n, self.k)
         if not ranks:
             return {"ranks": [], "values": []}
-        allv = pa.chunked_array(self._vals)
-        all_ranks = np.concatenate(self._ranks)
-        pick = np.searchsorted(all_ranks, np.asarray(ranks, dtype=np.int64),
-                               side="right") - 1
-        vals = allv.take(pa.array(pick)).to_pylist()
-        return {"ranks": ranks, "values": [_enc(v) for v in vals]}
+        if self._first is not None:  # one chunk: exact ranks
+            vals = self._first.take(pa.array(ranks, type=pa.int64()))
+        else:
+            allv = pa.chunked_array(self._vals)
+            all_ranks = np.concatenate(self._ranks)
+            pick = np.searchsorted(all_ranks,
+                                   np.asarray(ranks, dtype=np.int64),
+                                   side="right") - 1
+            vals = allv.take(pa.array(pick))
+        return {"ranks": ranks, "values": [_enc(v) for v in vals.to_pylist()]}
 
 
-def table_sketch(t, key_names: list[str], k: int,
-                 first_key_sorted: bool = False) -> dict:
-    """The sidecar sketch of an Arrow table holding (at least) the key
-    columns: the quantile sketch plus the first-row-key Bloom filter
-    (bloom.py). ``first_key_sorted`` hints that ``key_names[0]`` is
-    non-decreasing (true for every ingest/compaction/copy-on-write
-    output), skipping its sort (verified — see
-    :func:`sketch_from_arrow_columns`)."""
-    from sleeper_spark import bloom as bl
+class SidecarBuilder:
+    """The sidecar of one key-sorted file, built from the tables written
+    to it: the first key through :class:`SortedColumnSketch`, the other
+    key fields buffered and sketched by :func:`sketch_from_arrow_columns`,
+    and the first-row-key Bloom filter (bloom.py) sized on
+    ``expected_rows``, an upper bound on the rows fed. Feed every table,
+    empty ones included (an empty one still carries the column types),
+    then call :meth:`sketch`."""
 
-    sk = sketch_from_arrow_columns(
-        {name: t.column(name) for name in key_names}, t.num_rows, k,
-        sorted_fields={key_names[0]} if first_key_sorted else None)
-    try:
-        b = bl.build_bloom(key_names[0], t.column(key_names[0]), t.num_rows)
-        if b is not None:  # None above MAX_USEFUL_ROWS
+    def __init__(self, path: str, key_names: list[str], k: int,
+                 expected_rows: int) -> None:
+        from sleeper_spark import bloom
+
+        self.key_names = list(key_names)
+        self.k = k
+        self._first = SortedColumnSketch(k, path, self.key_names[0])
+        self._rest: dict[str, list] = {n: [] for n in self.key_names[1:]}
+        # _reuse_bits: one builder per file lives at a time per thread,
+        # so the per-thread bitmap arena (bloom._borrow_bits) is re-zeroed
+        # in place instead of freshly faulted per file, which measured
+        # ~1s/file of first-touch stalls on a memory-pressured host
+        self._bloom = bloom.BloomAccumulator(self.key_names[0],
+                                             expected_rows, _reuse_bits=True)
+
+    @property
+    def rows(self) -> int:
+        return self._first.n
+
+    def update(self, t) -> None:
+        col = t.column(self.key_names[0])
+        self._first.update(col)
+        for name, chunks in self._rest.items():
+            chunks.append(t.column(name).combine_chunks())
+        if self._bloom is not None:
+            try:
+                self._bloom.update(col)
+            except TypeError:
+                self._bloom = None  # non-hashable key type -> no bloom
+
+    def sketch(self) -> dict:
+        import pyarrow as pa
+
+        rest = sketch_from_arrow_columns(
+            {name: pa.chunked_array(chunks, type=chunks[0].type)
+             for name, chunks in self._rest.items()},
+            self.rows, self.k)["fields"]
+        sk = {"rows": self.rows, "k": self.k,
+              "fields": {self.key_names[0]: self._first.field_dict(), **rest}}
+        b = self._bloom.to_dict() if self._bloom is not None else None
+        if b is not None:  # None above bloom.MAX_USEFUL_ROWS
             sk["bloom"] = b
-    except TypeError:
-        pass  # non-hashable key type -> no bloom -> plan keeps the file
-    return sk
+        return sk
 
 
-def compute_file_sketch(path: str, key_names: list[str], k: int,
-                        first_key_sorted: bool = False) -> dict:
-    """Read ONLY the key columns of one Parquet file and sketch them
-    (:func:`table_sketch`). Runs on an executor; columnar projection
-    keeps IO to the key bytes."""
+def write_sorted_file(path: str, tables, *, key_names: list[str],
+                      sketch_k: int, expected_rows: int, compression: str,
+                      page_bytes: int, declared_schema) -> int:
+    """Write key-sorted Arrow ``tables`` as one Parquet file, one row
+    group per table, and its sidecar from the same tables in the same
+    pass (the reference's sink writes file and sketch together,
+    compact.rs). Zero rows write the ``declared_schema`` (pa.Schema)
+    empty file, which also covers columns a schema-evolved input lacks,
+    with the sidecar a read-back of it gets. On any failure, a first
+    key that decreases included, the partial file is removed and no
+    sidecar is written. Returns the rows written."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    builder = SidecarBuilder(path, key_names, sketch_k, expected_rows)
+    writer = None
+    try:
+        for t in tables:
+            if not t.num_rows:
+                continue
+            builder.update(t)
+            if writer is None:
+                writer = pq.ParquetWriter(path, t.schema,
+                                          compression=compression,
+                                          data_page_size=page_bytes)
+            writer.write_table(t)
+    except BaseException:
+        if writer is not None:
+            writer.close()
+        if os.path.exists(path):
+            os.remove(path)
+        raise
+    if writer is not None:
+        writer.close()
+    else:
+        empty = pa.table({f.name: pa.array([], type=f.type)
+                          for f in declared_schema})
+        pq.write_table(empty, path, compression=compression)
+        builder = SidecarBuilder(path, key_names, sketch_k, 0)
+        builder.update(empty)
+    write_sidecar(path, builder.sketch())
+    return builder.rows
+
+
+def compute_file_sketch(path: str, key_names: list[str], k: int) -> dict:
+    """Read ONLY the key columns of one Parquet file and build its
+    sidecar sketch (:class:`SidecarBuilder`). Runs on an executor;
+    columnar projection keeps IO to the key bytes."""
     import pyarrow.parquet as pq
 
     t = pq.read_table(path, columns=list(key_names))
-    return table_sketch(t, key_names, k, first_key_sorted)
+    builder = SidecarBuilder(path, key_names, k, t.num_rows)
+    builder.update(t)
+    return builder.sketch()
 
 
 def footer_minmax(path: str) -> dict[str, list]:
@@ -272,22 +363,18 @@ _DRIVER_SIDE_BYTES = 256 * 1024 * 1024
 
 
 def write_sidecars_distributed(spark: SparkSession, paths: list[str],
-                               key_names: list[str], k: int,
-                               first_key_sorted: bool = False) -> None:
-    """Sidecar per new data file. Small batches run on driver threads
+                               key_names: list[str], k: int) -> None:
+    """Sidecar per new data file, read back from the file
+    (:func:`compute_file_sketch`). Small batches run on driver threads
     (pyarrow releases the GIL; a Spark job's fixed overhead would
     dominate); big batches fan out one executor task per file, like the
-    reference computing sketches inside each ingest/compaction task.
-    ``first_key_sorted`` passes the ingest writers' per-file key-sorted
-    invariant through so the first row key skips its sort."""
+    reference computing sketches inside each ingest/compaction task."""
     if not paths:
         return
     names = list(key_names)
 
     def build(path: str) -> str:
-        sk = compute_file_sketch(path, names, k,
-                                 first_key_sorted=first_key_sorted)
-        write_sidecar(path, sk)
+        write_sidecar(path, compute_file_sketch(path, names, k))
         return path
 
     total_bytes = sum(os.path.getsize(p) for p in paths)

@@ -433,21 +433,20 @@ class SleeperTable:
     # write path
     # ------------------------------------------------------------------
     def ingest(self, df: DataFrame,
-               strategy: str = "local_sort",
                job_id: str | None = None,
                layout: str | None = None,
                layout_cols: list[str] | None = None,
                layout_files_per_leaf: int = 8,
                layout_bits: int = 16) -> list[FileReference]:
-        """O7: sorted per-leaf files + ADD_FILES commit. ``strategy`` =
-        ``local_sort`` (J4) or ``global_sort`` (J3); ``layout="zorder"``
-        Z-clusters each leaf's rows on ``layout_cols`` into
-        ``layout_files_per_leaf`` files so multi-dim value_ranges
-        queries skip files — see
+        """O7: one sorted file per leaf + ADD_FILES commit, through the
+        one ingest sort (the reference's local-sort bulk import, J4);
+        ``layout="zorder"`` Z-clusters each leaf's rows on
+        ``layout_cols`` into ``layout_files_per_leaf`` files so multi-dim
+        value_ranges queries skip files — see
         :func:`sleeper_spark.ingest.ingest_dataframe`."""
         assert self.store.tree is not None
         return ingest_dataframe(df, self.store.tree, self.store,
-                                self.data_dir, self.props, strategy,
+                                self.data_dir, self.props,
                                 job_id=job_id, layout=layout,
                                 layout_cols=layout_cols,
                                 layout_files_per_leaf=layout_files_per_leaf,

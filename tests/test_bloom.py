@@ -20,22 +20,30 @@ from sleeper_spark.schema import Field, Schema
 from sleeper_spark.table import SleeperTable
 
 
+def _build(values, n_rows=None):
+    """One file's Bloom: one accumulator sized on the file's rows, fed
+    every value at once."""
+    acc = bl.BloomAccumulator("k", len(values) if n_rows is None else n_rows)
+    acc.update(values)
+    return acc.to_dict()
+
+
 class TestBloomUnit:
     def test_no_false_negatives_strings(self):
         vals = [f"doc-{i:06d}" for i in range(5000)]
-        d = bl.build_bloom("k", vals)
+        d = _build(vals)
         bits = bl.decode_bits(d)
         assert all(bl.may_contain(bits, d, v) for v in vals)
 
     def test_no_false_negatives_ints_arrow(self):
         arr = pa.array(list(range(-2500, 2500)), type=pa.int64())
-        d = bl.build_bloom("k", arr, len(arr))
+        d = _build(arr, len(arr))
         bits = bl.decode_bits(d)
         assert all(bl.may_contain(bits, d, v)
                    for v in range(-2500, 2500, 37))
 
     def test_false_positive_rate_sane(self):
-        d = bl.build_bloom("k", [f"in-{i}" for i in range(10000)])
+        d = _build([f"in-{i}" for i in range(10000)])
         bits = bl.decode_bits(d)
         fp = sum(bl.may_contain(bits, d, f"out-{i}") for i in range(2000))
         # ~0.9% design point; 3% leaves generous slack without letting a
@@ -58,7 +66,7 @@ class TestBloomUnit:
         acc = bl.BloomAccumulator("k", 1000)
         acc.update(vals[:400])
         acc.update(vals[400:])
-        assert acc.to_dict() == bl.build_bloom("k", vals)
+        assert acc.to_dict() == _build(vals)
 
     def test_bitmap_cap_degrades_not_grows(self):
         m = bl._size_bits(10**12)
@@ -72,10 +80,10 @@ class TestBloomUnit:
         assert acc.disabled
         acc.update([1, 2, 3])
         assert acc.to_dict() is None
-        assert bl.build_bloom("k", [1], bl.MAX_USEFUL_ROWS + 1) is None
+        assert _build([1], bl.MAX_USEFUL_ROWS + 1) is None
 
     def test_unhashable_probe_keeps_file(self):
-        d = bl.build_bloom("k", [1, 2, 3])
+        d = _build([1, 2, 3])
         bits = bl.decode_bits(d)
         assert bl.may_contain(bits, d, None)  # unknown -> keep
 

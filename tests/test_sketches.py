@@ -436,7 +436,7 @@ class TestSortedColumnSketch:
         from sleeper_spark import sketches as sk
 
         vals = sorted(f"{v:05d}" for v in range(3000))
-        s = sk.SortedColumnSketch(64)
+        s = sk.SortedColumnSketch(64, "f.parquet", "k")
         for i in range(0, 3000, 200):  # chunk < 4k -> stride 1, exact
             s.update(pa.array(vals[i:i + 200]))
         exact = sk.sketch_from_arrow_columns(
@@ -451,7 +451,7 @@ class TestSortedColumnSketch:
         from sleeper_spark import sketches as sk
 
         n, k, chunk = 200_000, 32, 50_000
-        s = sk.SortedColumnSketch(k)
+        s = sk.SortedColumnSketch(k, "f.parquet", "k")
         for i in range(0, n, chunk):
             s.update(pa.array(range(i, min(n, i + chunk)), type=pa.int64()))
         fd = s.field_dict()
@@ -467,9 +467,161 @@ class TestSortedColumnSketch:
     def test_empty(self):
         from sleeper_spark import sketches as sk
 
-        s = sk.SortedColumnSketch(64)
+        s = sk.SortedColumnSketch(64, "f.parquet", "k")
         assert s.field_dict() == {"ranks": [], "values": []}
 
+
+class TestPinnedSidecars:
+    """Every sidecar equals an exact reference computed here: per key
+    field, the file's values at ``_spaced_ranks(rows, k)`` of that
+    field's sorted column, plus ``rows`` and ``k``; every written first
+    key probes present in the Bloom, and ``minmax`` is the footer's."""
+
+    K = 1024
+    SPLIT = {"long": 10**6, "string": "b", "row_sort": 10**6}
+
+    @staticmethod
+    def _schema(kind):
+        if kind == "string":
+            return Schema((Field("k", T.StringType()),), (),
+                          (Field("v", T.LongType()),))
+        sort = (Field("s", T.LongType()),) if kind == "row_sort" else ()
+        return Schema((Field("k", T.LongType()),), sort,
+                      (Field("v", T.LongType()),))
+
+    @staticmethod
+    def _frame(spark, kind, n):
+        """The left leaf gets ``n`` rows and the right leaf ``n`` rows
+        plus three extras at odd keys between them (the rows a
+        ``delete_where`` removes): keys come permuted, so the ingest
+        sort is real."""
+        perm = (F.col("id") * 7919) % F.lit(n)
+        if kind == "row_sort":  # repeated row keys
+            perm = F.floor(perm / 3)
+        left = spark.range(n).select(perm.alias("p"), F.col("id"))
+        right = spark.range(n).select((perm * 2).alias("p"), F.col("id"))
+        extras = spark.createDataFrame(
+            [(2 * j + 1, n + i) for i, j in enumerate((0, n // 2, n - 1))],
+            "p long, id long")
+
+        def key(prefix):
+            if kind == "string":
+                return F.format_string(prefix + "-%08d", F.col("p"))
+            return F.col("p") + (10**6 if prefix == "b" else 0)
+
+        frames = [left.select(key("a").alias("k"), "id"),
+                  right.unionByName(extras).select(key("b").alias("k"),
+                                                   "id")]
+        df = frames[0].unionByName(frames[1])
+        cols = [F.col("k")]
+        if kind == "row_sort":
+            cols.append(((F.col("id") * 31) % 97).alias("s"))
+        return df.select(*cols, F.col("id").alias("v"))
+
+    def _assert_pinned(self, path, key_names, rows):
+        import pyarrow.parquet as pq
+
+        from sleeper_spark import bloom as bl
+        from sleeper_spark.sketches import _spaced_ranks, footer_minmax
+
+        t = pq.read_table(path, columns=list(key_names))
+        assert t.num_rows == rows
+        ranks = _spaced_ranks(rows, self.K)
+        fields = {}
+        for name in key_names:
+            values = sorted(t.column(name).to_pylist())
+            fields[name] = {"ranks": ranks,
+                            "values": [values[r] for r in ranks]}
+        want = {"rows": rows, "k": self.K, "fields": fields}
+        side = load_sidecar(path)
+        assert {f: side[f] for f in ("rows", "k", "fields")} == want, path
+        b = side["bloom"]
+        bits = bl.decode_bits(b)
+        h = bl._hash_array(t.column(key_names[0]))
+        assert bits[bl._positions(h, b["k"], b["m"])].all(), path
+        assert side["minmax"] == footer_minmax(path)
+
+    @pytest.mark.parametrize("n", [1, 8191, 8192, 40_000])
+    @pytest.mark.parametrize("kind", ["long", "string", "row_sort"])
+    def test_ingest_and_delete_kept_outputs(self, spark, tmp_path, kind, n):
+        schema = self._schema(kind)
+        keys = list(schema.key_names)
+        t = SleeperTable.create(spark, str(tmp_path / "t"), schema,
+                                split_points=[self.SPLIT[kind]])
+        t.ingest(self._frame(spark, kind, n))
+        refs = sorted(t.store.all_references(),
+                      key=lambda r: r.number_of_rows)
+        assert [r.number_of_rows for r in refs] == [n, n + 3]
+        for r in refs:  # the read-back sidecars of ingest
+            self._assert_pinned(r.filename, keys, r.number_of_rows)
+        extras = sorted({2 * j + 1 for j in (0, n // 2, n - 1)})
+        if kind == "string":
+            points = [f"b-{j:08d}" for j in extras]
+        else:
+            points = [10**6 + j for j in extras]
+        out = t.delete_where(regions=[
+            Region.of(Range("k", p, p, max_inclusive=True)) for p in points])
+        assert out["rows_deleted"] == 3 and out["files_rewritten"] == 1
+        kept = [r for r in t.store.all_references()
+                if r.filename != refs[0].filename]
+        assert [r.number_of_rows for r in kept] == [n]
+        self._assert_pinned(kept[0].filename, keys, n)
+
+    @pytest.mark.parametrize("kind", ["long", "string", "row_sort"])
+    def test_empty_file_read_back(self, spark, tmp_path, kind):
+        """The read-back sidecar of a zero-row declared-schema file (the
+        empty output of a compaction or z-order leaf)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from sleeper_spark.sketches import write_sidecars_distributed
+        from sleeper_spark.sorted_scan import _declared_arrow_schema
+
+        schema = self._schema(kind)
+        path = str(tmp_path / "empty.parquet")
+        pq.write_table(pa.Table.from_pylist(
+            [], schema=pa.schema(_declared_arrow_schema(schema))), path)
+        write_sidecars_distributed(spark, [path], list(schema.key_names),
+                                   self.K)
+        self._assert_pinned(path, list(schema.key_names), 0)
+
+    def test_single_chunk_compaction_part_is_exact(self, spark, tmp_path):
+        """A compaction part whose merged rows arrive as one chunk of at
+        least 8,192 rows gets exact ranks: its sidecar is the one
+        compute_file_sketch builds from the written file."""
+        t = SleeperTable.create(spark, str(tmp_path / "t"), long_schema())
+        # even and odd keys, both files ending at 9998: the merge cuts
+        # one chunk at the smaller last key, which is every row
+        for odd in (0, 1):
+            t.ingest(spark.range(5000).select(
+                F.least(F.col("id") * 2 + odd, F.lit(9998)).alias("key"),
+                F.col("id").alias("value")))
+        (out,) = t.compact()
+        assert out.number_of_rows == 10_000
+        side = load_sidecar(out.filename)
+        assert side.pop("minmax")
+        assert side == compute_file_sketch(
+            out.filename, t.schema.key_names, t.props.sketch_size)
+
+
+    @pytest.mark.parametrize("chunks", [[[3, 1]], [[1, 2, 5], [4, 6]]],
+                             ids=["within_chunk", "across_chunks"])
+    def test_decreasing_first_key_raises_and_leaves_nothing(self, tmp_path,
+                                                            chunks):
+        import pyarrow as pa
+
+        from sleeper_spark.sketches import write_sorted_file
+
+        path = str(tmp_path / "unsorted.parquet")
+        declared = pa.schema([("key", pa.int64()), ("value", pa.int64())])
+        tables = [pa.table({"key": c, "value": c}, schema=declared)
+                  for c in chunks]
+        with pytest.raises(ValueError, match="unsorted.parquet"):
+            write_sorted_file(path, tables, key_names=["key"], sketch_k=self.K,
+                              expected_rows=5, compression="zstd",
+                              page_bytes=131072, declared_schema=declared)
+        assert not os.path.exists(sidecar_path(path))
+        assert not os.path.exists(path)
 
 class TestSplitPointAdvisor:
     def test_exact_points_balance_a_table(self, spark, tmp_path):

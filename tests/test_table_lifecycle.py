@@ -314,66 +314,11 @@ class TestOnlineOffline:
         assert t3.props.online is True
 
 
-def test_global_sort_ingest_equivalent(spark, tmp_path):
-    """J3 global-sort bulk import produces the same queryable table as
-    the J4 local-sort default: per-leaf files are sorted, a leaf's files
-    are disjoint ordered runs, and all queries agree."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from sleeper_spark import Field, Schema, SleeperTable
-    from sleeper_spark.properties import TableProperties
-
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").select(
-        "l_orderkey", "l_linenumber", F.col("l_quantity").alias("qty"))
-    schema = Schema((Field("l_orderkey", T.LongType()),),
-                    (Field("l_linenumber", T.IntegerType()),),
-                    (Field("qty", T.DoubleType(), nullable=True),))
-    tables = {}
-    # splits inside the sf0.001 key range [0, 1500) so every leaf is
-    # genuinely non-empty
-    for strat in ("local_sort", "global_sort", "rdd"):
-        t = SleeperTable.create(spark, str(tmp_path / strat), schema,
-                                TableProperties(), split_points=[500, 1000])
-        t.ingest(li, strategy=strat)
-        tables[strat] = t
-    want = sorted(tuple(r) for r in tables["local_sort"].full_scan().collect())
-    for strat in ("global_sort", "rdd"):
-        got = sorted(tuple(r) for r in tables[strat].full_scan().collect())
-        assert got == want and len(got) == li.count()
-    # J5 contract: exactly one sorted file per leaf (partition i == leaf i)
-    t_rdd = tables["rdd"]
-    for leaf in t_rdd.store.tree.leaves():
-        refs = t_rdd.store.references_for_partition(leaf.id)
-        assert len(refs) == 1
-        keys = [tuple(r) for r in spark.read.parquet(refs[0].filename)
-                .select("l_orderkey", "l_linenumber").collect()]
-        assert keys == sorted(keys)
-    # per-file sorted; a leaf's files are pairwise disjoint sorted runs
-    t = tables["global_sort"]
-    for leaf in t.store.tree.leaves():
-        runs = []
-        for ref in t.store.references_for_partition(leaf.id):
-            keys = [tuple(r) for r in spark.read.parquet(ref.filename)
-                    .select("l_orderkey", "l_linenumber").collect()]
-            assert keys == sorted(keys)
-            if keys:
-                runs.append((keys[0], keys[-1], ref.filename))
-        runs.sort()
-        for (lo1, hi1, _), (lo2, _hi2, _f2) in zip(runs, runs[1:]):
-            assert hi1 <= lo2  # disjoint ordered runs
-    # range query parity against raw parquet
-    got_r = sorted(tuple(r) for r in
-                   t.range_key_query([("l_orderkey", 500, 1500)]).collect())
-    want_r = sorted(tuple(r) for r in
-                    li.where("l_orderkey >= 500 and l_orderkey < 1500").collect())
-    assert got_r == want_r
-
-
 def test_rdd_ingest_multidim_tree(spark, tmp_path):
-    """J5 partitioner on a tree split on BOTH key dimensions: the
-    partition function must descend the tree (no single dim-0 bound
-    list exists), and every leaf still gets exactly its region's rows."""
+    """Ingest into a tree split on BOTH key dimensions: the leaf-id
+    expression must descend the tree (no single dim-0 bound list
+    exists), and every leaf gets exactly one file of its region's
+    rows."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -394,7 +339,7 @@ def test_rdd_ingest_multidim_tree(spark, tmp_path):
     df = spark.range(100).select(
         F.col("id").alias("a"), (F.col("id") % 20).alias("b"),
         F.format_string("v-%d", F.col("id")).alias("v"))
-    t.ingest(df, strategy="rdd")
+    t.ingest(df)
     got = sorted(tuple(r) for r in t.full_scan().collect())
     assert got == sorted((i, i % 20, f"v-{i}") for i in range(100))
     for leaf in t.store.tree.leaves():
@@ -406,9 +351,11 @@ def test_rdd_ingest_multidim_tree(spark, tmp_path):
 
 
 def test_compact_mixed_ingest_strategies(spark, tmp_path):
-    """Files written by the J5 RDD route carry non-null parquet fields
-    while J4 DataFrame files are nullable; the Arrow merge must relax
-    nullability instead of refusing to concat mixed batches."""
+    """A frame with non-nullable fields makes Spark write REQUIRED
+    parquet columns, while a frame read from parquet writes nullable
+    ones; the Arrow merge must relax nullability instead of refusing to
+    concat mixed batches."""
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -422,8 +369,12 @@ def test_compact_mixed_ingest_strategies(spark, tmp_path):
                     (Field("qty", T.DoubleType(), nullable=True),))
     t = SleeperTable.create(spark, str(tmp_path / "t"), schema,
                             TableProperties(), split_points=[750])
-    t.ingest(li, strategy="rdd")
-    t.ingest(li, strategy="local_sort")
+    required = spark.createDataFrame(li.rdd, schema.to_struct_type())
+    t.ingest(required)
+    t.ingest(li)
+    nullable = {pq.read_schema(r.filename).field("l_orderkey").nullable
+                for r in t.store.all_references()}
+    assert nullable == {False, True}
     before = sorted(tuple(r) for r in t.full_scan().collect())
     t.compact()
     after = sorted(tuple(r) for r in t.full_scan().collect())
@@ -916,9 +867,6 @@ class TestZOrderLayout:
         t = SleeperTable.create(spark, str(tmp_path / "t"), self._schema())
         with pytest.raises(ValueError, match="layout_cols"):
             t.ingest(self._rows(spark), layout="zorder")
-        with pytest.raises(ValueError, match="local_sort"):
-            t.ingest(self._rows(spark), strategy="global_sort",
-                     layout="zorder", layout_cols=["a"])
         with pytest.raises(ValueError, match="unknown layout"):
             t.ingest(self._rows(spark), layout="hilbert",
                      layout_cols=["a"])
@@ -956,24 +904,6 @@ class TestNullKeyRejection:
                                     "k long, s long, v long")
         with _pytest.raises(Exception, match="null key"):
             t.ingest(bad)
-
-    def test_null_key_fails_rdd_strategy_too(self, spark, tmp_path):
-        """The rdd bulk-import route bypasses the DataFrame-level
-        raise_error guard; on a dim-0-only tree its partitioner only
-        inspects key[0], so a null SECOND key (the sort key here)
-        would be written silently unless the rdd map itself checks.
-        All three strategies must fail loudly on the same contract."""
-        import pytest as _pytest
-        t = self._table(spark, tmp_path)
-        bad_sort = spark.createDataFrame([(1, None, 10)],
-                                         "k long, s long, v long")
-        with _pytest.raises(Exception, match="null key"):
-            t.ingest(bad_sort, strategy="rdd")
-        bad_row = spark.createDataFrame([(None, 2, 20)],
-                                        "k long, s long, v long")
-        with _pytest.raises(Exception, match="null key"):
-            t.ingest(bad_row, strategy="rdd")
-        assert t.store.all_references() == []
 
     def test_null_value_field_is_fine(self, spark, tmp_path):
         t = self._table(spark, tmp_path)
@@ -1045,16 +975,6 @@ class TestCheckConstraints:
             [(1, 7, "b"), (2, 8, "c")], "k long, v long, s string"))
         assert t.full_scan().count() == 2
         assert t.exact_key_query(k=1).first().v == 7
-
-    def test_rdd_strategy_refused_on_constrained_table(self, spark,
-                                                       tmp_path):
-        import pytest as _pytest
-
-        t = self._mk(spark, tmp_path, "v >= 0")
-        df = spark.createDataFrame([(1, 5, "a")],
-                                   "k long, v long, s string")
-        with _pytest.raises(ValueError, match="rdd"):
-            t.ingest(df, strategy="rdd")
 
 
 def test_vacuum_sweep_includes_orphan_stage(spark, tmp_path):

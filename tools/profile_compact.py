@@ -2,7 +2,10 @@
 
 Generates the bench_compaction_large shape (11 interleaved sorted runs,
 string key / long sort key / string payload), then times the phases of a
-single merge task: parquet decode, merge bookkeeping, sort, write, sketch.
+single merge task: the k-way merge (parquet decode included), processing
+(clip, ageOff, aggregation), and the shared sorted-file writer
+(``sketches.write_sorted_file``: Parquet write plus sketch and Bloom
+sidecar).
 
 Usage: python tools/profile_compact.py [n_rows] [batch_rows]
 """
@@ -56,49 +59,34 @@ def profile_task(paths, out_path, batch_rows, prune=None):
         "batch_rows": batch_rows,
         "prune_range": prune,
     }
-    ph = {"merge": 0.0, "process": 0.0, "write": 0.0, "sketch_buf": 0.0}
-    writer = None
-    n_out = 0
-    d0 = sk.SortedColumnSketch(1024)
-    ts_chunks = []
-    t_all = time.perf_counter()
-    gen_it = _merge_leaf(desc)
-    while True:
-        t0 = time.perf_counter()
-        try:
-            chunk = next(gen_it)
-        except StopIteration:
+    ph = {"merge": 0.0, "process": 0.0}
+
+    def timed_chunks():
+        chunks = _merge_leaf(desc)
+        while True:
+            t0 = time.perf_counter()
+            chunk = next(chunks, None)
             ph["merge"] += time.perf_counter() - t0
-            break
-        ph["merge"] += time.perf_counter() - t0
-        t0 = time.perf_counter()
-        out = _process_chunk(chunk, desc)
-        ph["process"] += time.perf_counter() - t0
-        if not out.num_rows:
-            continue
-        t0 = time.perf_counter()
-        if writer is None:
-            writer = pq.ParquetWriter(out_path, out.schema,
-                                      compression="zstd",
-                                      data_page_size=131072)
-        writer.write_table(out)
-        ph["write"] += time.perf_counter() - t0
-        n_out += out.num_rows
-        t0 = time.perf_counter()
-        d0.update(out.column("key"))
-        ts_chunks.append(out.column("ts").combine_chunks())
-        ph["sketch_buf"] += time.perf_counter() - t0
-    t0 = time.perf_counter()
-    if writer:
-        writer.close()
-    ph["close"] = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    sketch = sk.sketch_from_arrow_columns(
-        {"ts": pa.chunked_array(ts_chunks)} if ts_chunks else {}, n_out, 1024)
-    sketch["fields"]["key"] = d0.field_dict()
-    sk.write_sidecar(out_path, sketch)
-    ph["sketch"] = time.perf_counter() - t0
-    ph["TOTAL"] = time.perf_counter() - t_all
+            if chunk is None:
+                return
+            t0 = time.perf_counter()
+            out = _process_chunk(chunk, desc)
+            ph["process"] += time.perf_counter() - t0
+            yield out
+
+    t_all = time.perf_counter()
+    n_out = sk.write_sorted_file(
+        out_path, timed_chunks(), key_names=desc["key_names"],
+        sketch_k=1024,
+        expected_rows=sum(pq.ParquetFile(p).metadata.num_rows for p in paths),
+        compression="zstd", page_bytes=131072,
+        declared_schema=pq.read_schema(paths[0]))
+    total = time.perf_counter() - t_all
+    # everything the writer did between chunks: Parquet encode and write,
+    # the first-key sketch, the buffered sort-key sketch, the Bloom, and
+    # the sidecar file itself
+    ph["write+sidecar"] = total - ph["merge"] - ph["process"]
+    ph["TOTAL"] = total
     return n_out, ph
 
 
@@ -113,7 +101,7 @@ def main():
     n_out, ph = profile_task(paths, out_path, batch_rows)
     print(f"rows out: {n_out}, batch_rows={batch_rows}")
     for k, v in ph.items():
-        print(f"  {k:10s} {v:7.2f}s")
+        print(f"  {k:13s} {v:7.2f}s")
     print(f"throughput: {n_out/ph['TOTAL']:,.0f} rows/s (single task)")
     import shutil
     shutil.rmtree(tmp, ignore_errors=True)
