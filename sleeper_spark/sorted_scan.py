@@ -307,9 +307,10 @@ def _merge_runs(runs: list, key_names: list[str]) -> Iterator[pa.Table]:
     # buffer per run: (table, key arrays) — key arrays cached with the
     # buffer so they are converted once per table, not once per round
     buffers: list[tuple[pa.Table, list[pa.Array]] | None] = [None] * len(runs)
-    # canonical schema: a leaf's files may come from different writers
-    # (J4 DataFrame ingest emits nullable fields, J5 RDD ingest non-null
-    # ones) and concat_tables refuses mixed nullability — relax every
+    # canonical schema: a leaf's files may differ in nullability (an
+    # ingested frame with non-nullable fields writes required columns,
+    # one read from parquet nullable ones) and concat_tables refuses
+    # mixed nullability — relax every
     # table to the first one's types with nullable fields (a
     # metadata-only cast when only nullability differs)
     canon: pa.Schema | None = None
