@@ -10,8 +10,8 @@ sidecar, and commits a REPLACE_FILE_REFERENCES transaction.
 The reference has two engines, a Java iterator engine and a DataFusion
 engine (QueryEngineSelector.java:49-57). Here every job runs on one:
 ``sorted_scan``'s Arrow merge and aggregation kernels. MANY jobs batch
-into ONE Spark action and ONE commit transaction; only the tail differs
-by whether the table has custom iterators (see "job execution" below).
+into ONE dispatch and ONE commit transaction; only the tail differs by
+whether the table has custom iterators (see "job execution" below).
 
 Job creation strategies (O3):
 - ``basic`` — batch leaf files in creation order, size
@@ -25,12 +25,15 @@ Job creation strategies (O3):
 from __future__ import annotations
 
 import os
+import shutil
 import time
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark import TaskContext
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -52,6 +55,7 @@ from sleeper_spark.sorted_scan import (
     arrow_task_frame,
 )
 from sleeper_spark.statestore import FileReference, StateStore
+from sleeper_spark.tasks import pack_slices, run_tasks
 
 JOB_COL = "__sleeper_job__"
 
@@ -188,10 +192,10 @@ def _leveled_batches(refs: list[FileReference], fanout: int,
 # described once (:func:`_claim_parts`); two tails run the parts and
 # hand the rows per part to one commit (:func:`_commit_parts`):
 #
-# - ``run_jobs_arrow`` (tables without custom iterators): one task per
-#   part writes its file and sidecar, with ZERO shuffle — a compaction
-#   job's inputs are one partition's files, so the work is embarrassingly
-#   parallel, exactly like the reference's per-container jobs.
+# - ``run_jobs_arrow`` (tables without custom iterators): each part
+#   writes its file and sidecar with ZERO shuffle, on driver threads or
+#   in one Spark job — a job's inputs are one partition's files, so the
+#   work is embarrassingly parallel, as in the reference's containers.
 # - ``run_jobs`` (tables with custom iterators, arbitrary DataFrame
 #   transforms): the same merged parts feed a ``mapInArrow`` source,
 #   the iterators run on that DataFrame, and a shuffle on the part tag
@@ -229,32 +233,24 @@ def _job_subrange_bounds(job: CompactionJob, schema: Schema,
     return [(bounds[i], bounds[i + 1]) for i in range(len(bounds) - 1)]
 
 
+@contextmanager
 def _claim_parts(spark: SparkSession, jobs: list[CompactionJob],
                  store: StateStore, data_dir: str, props: TableProperties,
-                 now_millis: int | None) -> tuple[str, list[dict]]:
-    """Claim the jobs' inputs and describe their parts. Returns the new
-    output directory and one descriptor per part, each job's parts in
-    key order.
+                 now_millis: int | None):
+    """Describe the parts, claim the inputs and yield the output directory
+    and one descriptor per part (each job's in key order); a failure in
+    the block drops the claims and the directory, as ``deletes.claimed``.
 
     Task fan-out: a small job is one part; a big job is cut into K
     disjoint dim-0 subranges (sketch/row-group metadata, no data read)
     and each subrange merges independently with row-group-pruned reads.
     A descriptor is a ``sorted_scan`` leaf descriptor (``files``,
     ``leaf_ranges``, ``filters``, ``aggs``, ...) plus the part's
-    ``job_id``, ``out_path`` and write settings."""
+    ``job_id``, ``out_path``, write settings and ``input_bytes``."""
     store.check_writable()  # before any output write (read-only views)
     schema = store.schema
     now_millis = now_millis if now_millis is not None else int(time.time() * 1000)
-    # mark inputs as owned by their job (AssignJobIdsTransaction) so a
-    # concurrent planner cannot double-compact them — one txn for the batch
-    store.assign_job_ids_batch([
-        (job.job_id,
-         [store.files[fn][job.partition_id] for fn in job.input_files])
-        for job in jobs
-    ])
-
     out_dir = os.path.join(data_dir, f"compaction-{uuid.uuid4().hex[:12]}")
-    os.makedirs(out_dir, exist_ok=True)
     aggs = _agg_spec(parse_aggregations(props.aggregations))
     filters = [(f.column, f.max_age_millis) for f in parse_filters(props.filters)]
     key0 = schema.key_names[0]
@@ -297,6 +293,8 @@ def _claim_parts(spark: SparkSession, jobs: list[CompactionJob],
                 # whole job — an oversized bitmap costs packbits+zlib
                 # time per part and buys nothing
                 "expected_rows": max(1, total_rows // len(subs)),
+                "input_bytes": sum(map(os.path.getsize, job.input_files))
+                // len(subs),
             }
             if slo is not None or shi is not None:
                 # range-pruned read: row-group skip + exact batch trim,
@@ -315,7 +313,21 @@ def _claim_parts(spark: SparkSession, jobs: list[CompactionJob],
     batch_rows = 131072 if min(len(descs), parallelism) > 4 else 524288
     for d in descs:
         d["batch_rows"] = batch_rows
-    return out_dir, descs
+    # mark inputs as owned by their job (AssignJobIdsTransaction) so a
+    # concurrent planner cannot double-compact them — one txn for the batch
+    store.assign_job_ids_batch([
+        (job.job_id,
+         [store.files[fn][job.partition_id] for fn in job.input_files])
+        for job in jobs
+    ])
+    try:
+        os.makedirs(out_dir, exist_ok=True)
+        yield out_dir, descs
+    except BaseException:
+        for job in jobs:
+            store.unassign_job_ids(job.job_id)
+        shutil.rmtree(out_dir, ignore_errors=True)
+        raise
 
 
 def _part_chunks(desc: dict):
@@ -341,19 +353,19 @@ def _write_part(desc: dict, tables) -> int:
         declared_schema=desc["arrow_schema"])
 
 
-def _arrow_compact_one(desc: dict) -> tuple[str, str, int]:
-    """Run one part with Arrow kernels (executed on an executor): merge
+def _arrow_compact_one(desc: dict) -> int:
+    """Run one part with Arrow kernels (a ``tasks.run_tasks`` item): merge
     and process its rows (:func:`_part_chunks`) and stream them into the
     part's file and sidecar in one pass (:func:`_write_part`)."""
-    # Spark pins python workers to OMP_NUM_THREADS=1; a lone huge job
-    # should use the cores its batch left idle (the reference's DataFusion
-    # containers get 4 vCPUs each, SystemTestInstance.java:202-218)
+    # Spark pins python workers to OMP_NUM_THREADS=1; a lone huge job in a
+    # worker should use the cores its batch left idle (DataFusion containers
+    # get 4 vCPUs, SystemTestInstance.java:202-218). Not on the driver:
+    # its Arrow pool is the whole process's
     budget = desc.get("cpu_budget", 1)
-    if budget > pa.cpu_count():
+    if budget > pa.cpu_count() and TaskContext.get() is not None:
         pa.set_cpu_count(budget)
         pa.set_io_thread_count(max(8, budget // 2))
-    n_out = _write_part(desc, _part_chunks(desc))
-    return desc["job_id"], desc["out_path"], n_out
+    return _write_part(desc, _part_chunks(desc))
 
 
 def _commit_parts(store: StateStore, jobs: list[CompactionJob],
@@ -407,20 +419,18 @@ def run_jobs_arrow(
     props: TableProperties,
     now_millis: int | None = None,
 ) -> list[FileReference]:
-    """Execute compaction jobs of a table without custom iterators: one
-    Spark action, one task per part (:func:`_arrow_compact_one`), no
-    shuffle; commit all REPLACE_FILE_REFERENCES afterwards in one
-    transaction."""
+    """Execute compaction jobs of a table without custom iterators: each
+    part (:func:`_arrow_compact_one`) on driver threads when the input
+    is small, else in one Spark job (``tasks.run_tasks``), no shuffle;
+    commit all REPLACE_FILE_REFERENCES afterwards in one transaction."""
     if not jobs:
         return []
-    _, descs = _claim_parts(spark, jobs, store, data_dir, props, now_millis)
-    results = (
-        spark.sparkContext.parallelize(descs, len(descs))
-        .map(_arrow_compact_one)
-        .collect()
-    )
+    with _claim_parts(spark, jobs, store, data_dir, props,
+                      now_millis) as (_, descs):
+        rows = run_tasks(spark, descs, _arrow_compact_one,
+                         [d["input_bytes"] for d in descs])
     return _commit_parts(store, jobs, descs,
-                         {path: n for _, path, n in results})
+                         {d["out_path"]: n for d, n in zip(descs, rows)})
 
 
 def run_jobs(
@@ -438,73 +448,71 @@ def run_jobs(
 
     The parts' merged, processed rows come out of an Arrow source
     (``sorted_scan.arrow_task_frame``) tagged with their part
-    (``JOB_COL``); descriptors pack into at most 4 x defaultParallelism
-    tasks, since the write's shuffle regroups the rows by part anyway.
+    (``JOB_COL``); descriptors pack into ``tasks.pack_slices`` tasks,
+    since the write's shuffle regroups the rows by part anyway.
     After the iterators, each part is re-sorted and written to its own
     file, which then moves to the part's output path; a part the
     iterators emptied gets an empty file."""
     if not jobs:
         return []
-    import shutil
-
-    out_dir, descs = _claim_parts(spark, jobs, store, data_dir, props,
-                                  now_millis)
     schema = store.schema
-    tags = [os.path.basename(d["out_path"])[:-len(".parquet")]
-            for d in descs]
-    n_tasks = min(len(descs), 4 * spark.sparkContext.defaultParallelism)
+    with _claim_parts(spark, jobs, store, data_dir, props,
+                      now_millis) as (out_dir, descs):
+        tags = [os.path.basename(d["out_path"])[:-len(".parquet")]
+                for d in descs]
+        slices = pack_slices([d["input_bytes"] for d in descs],
+                             4 * spark.sparkContext.defaultParallelism)
 
-    def task_tables(task):
-        for i in range(task, len(descs), n_tasks):
-            for out in _part_chunks(descs[i]):
-                yield out.append_column(
-                    pa.field(JOB_COL, pa.string(), False),
-                    pa.array([tags[i]] * out.num_rows, pa.string()))
+        def task_tables(task):
+            for i in slices[task]:
+                for out in _part_chunks(descs[i]):
+                    yield out.append_column(
+                        pa.field(JOB_COL, pa.string(), False),
+                        pa.array([tags[i]] * out.num_rows, pa.string()))
 
-    struct = T.StructType(list(schema.to_struct_type().fields)
-                          + [T.StructField(JOB_COL, T.StringType(), False)])
-    df = apply_custom_iterators(
-        arrow_task_frame(spark, n_tasks, task_tables, struct),
-        props.iterators, schema)
-    staging = os.path.join(out_dir, "iterators")
-    (
-        df.repartition(len(descs), F.col(JOB_COL))
-        .sortWithinPartitions(JOB_COL, *schema.key_names)
-        .write.option("compression", props.compression)
-        .option("parquet.block.size", str(props.row_group_bytes))
-        .option("parquet.page.size", str(props.page_bytes))
-        .partitionBy(JOB_COL)
-        .parquet(staging)
-    )
-    written = {}
-    for tag in tags:
-        tag_dir = os.path.join(staging, f"{JOB_COL}={tag}")
-        written[tag] = sorted(
-            os.path.join(tag_dir, f) for f in os.listdir(tag_dir)
-            if f.endswith(".parquet")) if os.path.isdir(tag_dir) else []
-        if len(written[tag]) > 1:
-            # one shuffle partition per tag writes one file, unless a
-            # writer option (spark.sql.files.maxRecordsPerFile) cut it:
-            # moving only one would drop rows the commit then forgets
-            shutil.rmtree(out_dir, ignore_errors=True)
-            raise RuntimeError(
-                f"compaction part {tag} was written as "
-                f"{len(written[tag])} files, expected one")
-    rows_by_path: dict[str, int] = {}
-    moved = []
-    for tag, d in zip(tags, descs):
-        if written[tag]:
-            os.replace(written[tag][0], d["out_path"])
-            rows_by_path[d["out_path"]] = \
-                pq.ParquetFile(d["out_path"]).metadata.num_rows
-            moved.append(d["out_path"])
-        else:
-            rows_by_path[d["out_path"]] = _write_part(d, [])
-    shutil.rmtree(staging)
-    # sketch sidecars before the reference swap, so a split planned right
-    # after commit sees them (compact.rs writes file + sketch together)
-    sketches.write_sidecars_distributed(
-        spark, moved, list(schema.key_names), props.sketch_size)
+        struct = T.StructType(list(schema.to_struct_type().fields)
+                              + [T.StructField(JOB_COL, T.StringType(), False)])
+        df = apply_custom_iterators(
+            arrow_task_frame(spark, len(slices), task_tables, struct),
+            props.iterators, schema)
+        staging = os.path.join(out_dir, "iterators")
+        (
+            df.repartition(len(descs), F.col(JOB_COL))
+            .sortWithinPartitions(JOB_COL, *schema.key_names)
+            .write.option("compression", props.compression)
+            .option("parquet.block.size", str(props.row_group_bytes))
+            .option("parquet.page.size", str(props.page_bytes))
+            .partitionBy(JOB_COL)
+            .parquet(staging)
+        )
+        written = {}
+        for tag in tags:
+            tag_dir = os.path.join(staging, f"{JOB_COL}={tag}")
+            written[tag] = sorted(
+                os.path.join(tag_dir, f) for f in os.listdir(tag_dir)
+                if f.endswith(".parquet")) if os.path.isdir(tag_dir) else []
+            if len(written[tag]) > 1:
+                # one shuffle partition per tag writes one file, unless a
+                # writer option (spark.sql.files.maxRecordsPerFile) cut it:
+                # moving only one would drop rows the commit then forgets
+                raise RuntimeError(
+                    f"compaction part {tag} was written as "
+                    f"{len(written[tag])} files, expected one")
+        rows_by_path: dict[str, int] = {}
+        moved = []
+        for tag, d in zip(tags, descs):
+            if written[tag]:
+                os.replace(written[tag][0], d["out_path"])
+                rows_by_path[d["out_path"]] = \
+                    pq.ParquetFile(d["out_path"]).metadata.num_rows
+                moved.append(d["out_path"])
+            else:
+                rows_by_path[d["out_path"]] = _write_part(d, [])
+        shutil.rmtree(staging)
+        # sketch sidecars before the reference swap, so a split planned right
+        # after commit sees them (compact.rs writes file + sketch together)
+        sketches.write_sidecars_distributed(
+            spark, moved, list(schema.key_names), props.sketch_size)
     return _commit_parts(store, jobs, descs, rows_by_path)
 
 

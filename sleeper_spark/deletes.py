@@ -24,7 +24,7 @@ Every copy-on-write mutation runs the same four steps:
    job's output directory; a failure of the commit itself keeps the
    claim, and ``unassign_job_ids`` is the recovery, as for a crashed
    compaction.
-3. REWRITE (:func:`_rewrite_ref`, driver threads or executors): each
+3. REWRITE (:func:`_rewrite_ref`, via ``tasks.run_tasks``): each
    candidate reference is rewritten 1:1 — rows inside the partition's
    region (a file split across child partitions holds rows of several
    references; each rewrite keeps only its own) that the caller's match
@@ -75,7 +75,7 @@ from sleeper_spark.query import (
     file_may_contain_keys,
 )
 from sleeper_spark.ranges import Range, Region
-from sleeper_spark.sketches import _DRIVER_SIDE_BYTES, write_sorted_file
+from sleeper_spark.sketches import write_sorted_file
 from sleeper_spark.sorted_scan import (
     _and,
     _declared_arrow_schema,
@@ -83,6 +83,7 @@ from sleeper_spark.sorted_scan import (
     _value_range_mask,
 )
 from sleeper_spark.statestore import FileReference, StateStoreException
+from sleeper_spark.tasks import run_tasks
 
 if TYPE_CHECKING:  # pragma: no cover
     from sleeper_spark.table import SleeperTable
@@ -178,7 +179,7 @@ def _exact_rows_match(key0, rows_ipc, tbl) -> np.ndarray:
 
 
 def _rewrite_ref(desc: dict) -> tuple[int, int]:
-    """Executor task: rewrite ONE (file, partition) reference. Returns
+    """Task: rewrite ONE (file, partition) reference. Returns
     (rows matched, rows kept); nothing is written when nothing matched.
     The matched rows (own & match — region-filtered per reference, so a
     file split across child partitions never tombstones a row twice)
@@ -294,9 +295,8 @@ class Rewrite:
 
 def rewrite(table: "SleeperTable", refs: list[FileReference], out_dir: str,
             match: Callable, assign: Callable | None = None) -> Rewrite:
-    """Rewrite every claimed reference (module doc, step 3): on driver
-    threads below ``_DRIVER_SIDE_BYTES`` of input, else one executor
-    task per reference. ``match`` and ``assign`` must pickle (module
+    """Rewrite every claimed reference (module doc, step 3) through
+    ``tasks.run_tasks``; ``match`` and ``assign`` must pickle (module
     functions or ``functools.partial`` of them)."""
     tree = table.store.tree
     write = {"key_names": list(table.schema.key_names),
@@ -314,17 +314,8 @@ def rewrite(table: "SleeperTable", refs: list[FileReference], out_dir: str,
         "assign": assign,
         "write": write,
     } for i, ref in enumerate(refs)]
-    if not descs:
-        results = []
-    elif sum(os.path.getsize(d["in_path"]) for d in descs) \
-            < _DRIVER_SIDE_BYTES:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=min(16, len(descs))) as ex:
-            results = list(ex.map(_rewrite_ref, descs))
-    else:
-        sc = table.spark.sparkContext
-        slices = min(len(descs), 4 * sc.defaultParallelism)
-        results = sc.parallelize(descs, slices).map(_rewrite_ref).collect()
+    results = run_tasks(table.spark, descs, _rewrite_ref,
+                        [os.path.getsize(d["in_path"]) for d in descs])
 
     out = Rewrite()
     for ref, desc, (n_hit, n_keep) in zip(refs, descs, results):

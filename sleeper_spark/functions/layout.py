@@ -52,15 +52,6 @@ def zorder_key(cols: list[Column | str], bits: int = 16) -> Column:
     return out
 
 
-def zorder_sort(df: DataFrame, cols: list[str], bits: int = 16) -> DataFrame:
-    """Globally sort by the Z-order key of ``cols`` (range-partitioned
-    sort; the key column is dropped from the output). This is the
-    OPTIMIZE ZORDER rewrite step for a table region."""
-    key = "__zorder__"
-    return (df.withColumn(key, zorder_key(cols, bits))
-            .orderBy(key).drop(key))
-
-
 #: Mersenne prime 2^31-1 and two classic LCG multipliers — products stay
 #: under 2^63, so the arithmetic is exact in ANY engine with 64-bit ints
 #: (the same portability contract as sampling.py's congruential bucket)

@@ -47,19 +47,6 @@ def _bigrams(col: Column) -> Column:
     return bind_once(tokens(col), _bigrams_given)
 
 
-def train_bigram_counts(df: DataFrame,
-                        text_col: str = "text") -> tuple[DataFrame,
-                                                         DataFrame]:
-    """(unigram_counts, bigram_counts): ``(w, c1)`` and ``(bg, c12)``
-    over the corpus — the sufficient statistics of a bigram LM. Two
-    explodes + two hash aggregates; outputs are vocabulary-sized."""
-    uni = (df.select(F.explode(tokens(text_col)).alias("w"))
-           .groupBy("w").agg(F.count("*").alias("c1")))
-    bi = (df.select(F.explode(_bigrams(F.col(text_col))).alias("bg"))
-          .groupBy("bg").agg(F.count("*").alias("c12")))
-    return uni, bi
-
-
 def bigram_lm_scores(df: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id",
                      alpha: float = 0.1) -> DataFrame:

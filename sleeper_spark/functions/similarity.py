@@ -1574,16 +1574,6 @@ def quantize_micro(vec_col: Column | str) -> Column:
                        .cast("long"))
 
 
-def _sq_l2_micro(vec: Column, centroid: list[int]) -> Column:
-    """Squared L2 distance between a micro-long vector column and a
-    literal micro centroid. Bounds: |diff| ≤ ~4e6 ⇒ diff² ≤ 1.6e13;
-    × 4096 dims ≤ 6.6e16 < 2^63 — int64-safe at any realistic dim."""
-    lit = _array_lit(list(centroid), "array<long>")
-    return F.aggregate(
-        F.zip_with(vec, lit, lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"), lambda acc, d: acc + d)
-
-
 def kmeans_distributed(df: DataFrame, vec_col: str = "embedding",
                        id_col: str = "vec_id", k: int = 8,
                        iterations: int = 2,

@@ -99,11 +99,6 @@ def _language_scores_given(t: Column) -> dict[str, Column]:
     }
 
 
-def language_scores(col: Column | str) -> dict[str, Column]:
-    """Per-language stopword-hit counts over the token multiset."""
-    return _language_scores_given(tokens(col))
-
-
 def language_id(df: DataFrame, text_col: str = "text",
                 out_col: str = "predicted_lang") -> DataFrame:
     """Heuristic language ID: argmax of per-language stopword hit counts,

@@ -61,9 +61,6 @@ class Range:
             r = Range(r.field, r.min, _successor(r.max), r.min_inclusive, False)
         return Range(r.field, r.min, r.max, True, False)
 
-    def is_canonical(self) -> bool:
-        return self.min_inclusive and not self.max_inclusive
-
     # --- predicates ------------------------------------------------------
     def to_column(self) -> Column:
         """Spark predicate for this range (canonicalised first)."""

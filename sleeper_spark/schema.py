@@ -165,9 +165,6 @@ class Schema:
                 return f
         raise KeyError(name)
 
-    def row_key_dtype(self, dimension: int) -> T.DataType:
-        return self.row_key_fields[dimension].dtype
-
     # --- Spark interop ---------------------------------------------------
     def to_struct_type(self) -> T.StructType:
         """Spark StructType in schema order (keys first, then values)."""

@@ -24,7 +24,7 @@ Spark-native equivalent:
   tables it writes, with zero extra IO. Files Spark writes (ingest, the
   iterator compaction tail, the z-order rewrite) get theirs from a
   read-back of their key columns (:func:`write_sidecars_distributed`,
-  driver threads or one executor task per file slice).
+  on driver threads or in one Spark job: ``tasks.run_tasks``).
 
 Region clipping: a split file reference's sketch covers the whole file.
 Rank estimates are clipped to the partition's range on the dimension
@@ -46,6 +46,7 @@ from pyspark.sql import types as T
 
 from sleeper_spark.ranges import Region
 from sleeper_spark.schema import Schema
+from sleeper_spark.tasks import run_tasks
 
 SKETCH_SUFFIX = ".sketch.json"
 
@@ -289,8 +290,8 @@ def write_sorted_file(path: str, tables, *, key_names: list[str],
 
 def compute_file_sketch(path: str, key_names: list[str], k: int) -> dict:
     """Read ONLY the key columns of one Parquet file and build its
-    sidecar sketch (:class:`SidecarBuilder`). Runs on an executor;
-    columnar projection keeps IO to the key bytes."""
+    sidecar sketch (:class:`SidecarBuilder`), on a driver thread or an
+    executor; columnar projection keeps IO to the key bytes."""
     import pyarrow.parquet as pq
 
     t = pq.read_table(path, columns=list(key_names))
@@ -357,47 +358,14 @@ def load_sidecar(data_path: str) -> dict | None:
         return json.load(f)
 
 
-#: below this total input size, a Spark job's fixed cost (Python worker
-#: spin-up + scheduling, ~1-2 s) exceeds the work; use driver threads
-_DRIVER_SIDE_BYTES = 256 * 1024 * 1024
-
-
 def write_sidecars_distributed(spark: SparkSession, paths: list[str],
                                key_names: list[str], k: int) -> None:
     """Sidecar per new data file, read back from the file
-    (:func:`compute_file_sketch`). Small batches run on driver threads
-    (pyarrow releases the GIL; a Spark job's fixed overhead would
-    dominate); big batches fan out one executor task per file, like the
-    reference computing sketches inside each ingest/compaction task."""
-    if not paths:
-        return
-    names = list(key_names)
+    (:func:`compute_file_sketch`) through ``tasks.run_tasks``."""
+    def build(path: str) -> None:
+        write_sidecar(path, compute_file_sketch(path, key_names, k))
 
-    def build(path: str) -> str:
-        write_sidecar(path, compute_file_sketch(path, names, k))
-        return path
-
-    total_bytes = sum(os.path.getsize(p) for p in paths)
-    if total_bytes < _DRIVER_SIDE_BYTES:
-        # few small files: serial beats a thread pool (the numpy/json
-        # portions hold the GIL; measured 0.30s serial vs 0.55s pooled
-        # on 4 ingest-sized files) — pool only when the read IO (which
-        # does release the GIL) is worth overlapping
-        if len(paths) <= 4:
-            done = [build(p) for p in paths]
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
-                done = list(ex.map(build, paths))
-    else:
-        # slices track cores, not file count — 10^4 new files must not
-        # become 10^4 single-path tasks
-        slices = min(len(paths), 4 * spark.sparkContext.defaultParallelism)
-        done = (
-            spark.sparkContext.parallelize(paths, slices)
-            .map(build).collect()
-        )
-    assert sorted(done) == sorted(paths)
+    run_tasks(spark, paths, build, [os.path.getsize(p) for p in paths])
 
 
 # ---------------------------------------------------------------------------

@@ -46,12 +46,12 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sleeper_spark.query import Query
 from sleeper_spark.ranges import Range, Region
 from sleeper_spark.schema import Schema
+from sleeper_spark.tasks import ship_engine
 
 _BATCH_ROWS = 65536
 
@@ -716,6 +716,7 @@ def arrow_task_frame(spark, n_tasks: int, task_tables,
     # every target field nullable: the cast converts types only
     target = pa.schema([f.with_nullable(True)
                         for f in to_arrow_schema(struct)])
+    ship_engine(spark.sparkContext)
     src = spark.createDataFrame(
         spark.sparkContext.parallelize(
             [(i,) for i in range(n_tasks)], n_tasks),

@@ -680,7 +680,7 @@ class SleeperTable:
     def compact(self, now_millis: int | None = None) -> list[FileReference]:
         """Plan + run all pending compactions on the Arrow kernels
         (compaction module doc): ``run_jobs`` when the table has custom
-        iterators, else ``run_jobs_arrow``.
+        iterators, else ``run_jobs_arrow`` (driver threads when small).
 
         Offline tables are skipped (docs/design.md:68-71)."""
         if not self.props.online:

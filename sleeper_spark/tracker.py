@@ -181,9 +181,6 @@ class QueryTracker:
         return [t for (qid, sub), t in self._rows.items()
                 if qid == query_id and sub != PARENT]
 
-    def all_queries(self) -> list[TrackedQuery]:
-        return list(self._rows.values())
-
     def queries_in_state(self, state: QueryState) -> list[TrackedQuery]:
         return [t for t in self._rows.values() if t.state == state]
 

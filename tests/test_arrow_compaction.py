@@ -504,3 +504,105 @@ def test_iterator_compaction_refuses_a_part_split_across_files(
                   for d, _, fs in os.walk(t.data_dir)
                   for f in fs if f.endswith(".parquet")) == before
     assert len(_collect(t.full_scan())) == 100
+
+
+def _two_run_table(spark, path):
+    """Two sorted runs in each of two leaves: two compaction jobs."""
+    schema = Schema((Field("key", T.LongType()),), (),
+                    (Field("value", T.LongType()),))
+    t = SleeperTable.create(spark, path, schema, split_points=[500])
+    for rep in range(2):
+        t.ingest(spark.range(1000).select(
+            (F.col("id") * 2 + rep).alias("key"),
+            (F.col("id") * 3).alias("value")))
+    return t
+
+
+def test_compaction_on_executors(spark, tmp_path, monkeypatch):
+    """Above ``tasks.DRIVER_SIDE_BYTES`` of input, ``run_jobs_arrow``
+    runs its parts as one Spark job instead of on driver threads: the
+    rows and every sidecar equal the driver run's, and verify_integrity
+    is clean."""
+    import json
+
+    from sleeper_spark import tasks
+    from sleeper_spark.sketches import load_sidecar
+
+    sc = spark.sparkContext
+    rows, jobs, sidecars = {}, {}, {}
+    for side, limit in (("driver", tasks.DRIVER_SIDE_BYTES),
+                        ("executor", 0)):
+        monkeypatch.setattr(tasks, "DRIVER_SIDE_BYTES", limit)
+        t = _two_run_table(spark, str(tmp_path / side))
+        group = f"test-compaction-{side}"
+        sc.setJobGroup(group, "job count")
+        try:
+            out = t.compact()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(out) == 2
+        jobs[side] = len(sc.statusTracker().getJobIdsForGroup(group))
+        rows[side] = _collect(t.full_scan())
+        sidecars[side] = sorted(json.dumps(load_sidecar(r.filename),
+                                           sort_keys=True) for r in out)
+        assert t.verify_integrity()["ok"]
+    assert jobs == {"driver": 0, "executor": 1}
+    assert rows["executor"] == rows["driver"]
+    assert len(rows["driver"]) == 2000
+    assert sidecars["executor"] == sidecars["driver"]
+
+
+def test_driver_compaction_leaves_arrow_pool(spark, tmp_path):
+    """A part's CPU budget raises Arrow's pool only in a Python worker:
+    the driver's pool is the whole process's."""
+    import pyarrow as pa
+
+    t = _two_run_table(spark, str(tmp_path / "t"))
+    before = pa.cpu_count()
+    pa.set_cpu_count(1)
+    try:
+        t.compact()
+        assert pa.cpu_count() == 1
+    finally:
+        pa.set_cpu_count(before)
+
+
+@pytest.mark.parametrize("tail", ["arrow", "iterators"])
+def test_failed_compaction_releases_its_claims(spark, tmp_path,
+                                               monkeypatch, tail):
+    """A compaction that fails before its commit releases every input
+    claim and removes its output directory, so the next compact() takes
+    the same inputs and succeeds."""
+    import os
+
+    from sleeper_spark import compaction
+
+    t = _two_run_table(spark, str(tmp_path / tail))
+    if tail == "arrow":
+        def fail(desc, tables):
+            raise OSError("disk full")
+        monkeypatch.setattr(compaction, "_write_part", fail)
+        expect = "disk full"
+    else:
+        from sleeper_spark.iterators import register_iterator
+        register_iterator("keepAll", lambda args, schema: lambda df: df)
+        t.props.iterators = "keepAll()"
+        # a part written as several files is refused before the commit
+        spark.conf.set("spark.sql.files.maxRecordsPerFile", "10")
+        expect = "written as"
+    before = sorted((r.filename, r.partition_id)
+                    for r in t.store.all_references())
+    try:
+        with pytest.raises(Exception, match=expect):
+            t.compact()
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    assert all(r.job_id is None for r in t.store.all_references())
+    assert sorted((r.filename, r.partition_id)
+                  for r in t.store.all_references()) == before
+    assert not [d for d in os.listdir(t.data_dir)
+                if d.startswith("compaction-")]
+    monkeypatch.undo()
+    assert len(t.compact()) == 2
+    assert len(_collect(t.full_scan())) == 2000
+    assert t.verify_integrity()["ok"]

@@ -353,17 +353,17 @@ def test_copy_on_write_contract(spark, tmp_path, name):
 @pytest.mark.parametrize("name", ["delete_where", "delete_exact_rows",
                                   "update_where", "merge_upsert"])
 def test_copy_on_write_on_executors(spark, tmp_path, monkeypatch, name):
-    """Above ``_DRIVER_SIDE_BYTES`` of candidate input, ``rewrite`` runs
-    one executor task per reference instead of driver threads: the rows
-    equal the driver-thread rewrite's, every output sidecar is the one
+    """Above ``tasks.DRIVER_SIDE_BYTES`` of candidate input, ``rewrite``
+    runs as one Spark job instead of on driver threads: the rows equal
+    the driver-thread rewrite's, every output sidecar is the one
     compute_file_sketch builds, and verify_integrity is clean."""
-    from sleeper_spark import deletes
+    from sleeper_spark import tasks
 
     sc = spark.sparkContext
     rows, jobs = {}, {}
-    for side, limit in (("driver", deletes._DRIVER_SIDE_BYTES),
+    for side, limit in (("driver", tasks.DRIVER_SIDE_BYTES),
                         ("executor", 0)):
-        monkeypatch.setattr(deletes, "_DRIVER_SIDE_BYTES", limit)
+        monkeypatch.setattr(tasks, "DRIVER_SIDE_BYTES", limit)
         t = SleeperTable.create(spark, str(tmp_path / side),
                                 _two_key_schema(), split_points=["k-001000"])
         for lo in (0, 1000):
@@ -380,7 +380,10 @@ def test_copy_on_write_on_executors(spark, tmp_path, monkeypatch, name):
         rows[side] = sorted(tuple(r) for r in t.full_scan().collect())
         _assert_sidecars_fresh(t)
         assert t.verify_integrity()["ok"]
-    assert jobs["executor"] == jobs["driver"] + 1  # the rewrite's job
+    # the rewrite's job; merge_upsert's inserted rows are an ingest,
+    # whose sidecars the same threshold sends to executors too
+    assert jobs["executor"] == jobs["driver"] + (
+        2 if name == "merge_upsert" else 1)
     assert rows["executor"] == rows["driver"]
 
 

@@ -274,19 +274,35 @@ class TestBatchedCompactionPlan:
         t.ingest(df)  # 2 files/leaf -> one job per leaf
         return t
 
-    def test_200_jobs_compact_in_one_spark_job(self, spark, tmp_path):
+    def test_200_jobs_compact_in_one_spark_job(self, spark, tmp_path,
+                                               monkeypatch):
+        """200 small jobs run on driver threads (no Spark job); above the
+        dispatcher's byte threshold they are ONE Spark job of at most
+        4 x defaultParallelism tasks, not 200 one-task jobs."""
         from sleeper_spark import compaction as cm
-        t = self._many_job_table(spark, tmp_path, 200)
-        assert len(cm.create_jobs(t.store, t.props)) == 200
+        from sleeper_spark import tasks
         sc = spark.sparkContext
-        sc.setJobGroup("test-plans-200-jobs", "job count")
-        try:
-            out = t.compact()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert len(out) == 200
-        assert len(sc.statusTracker().getJobIdsForGroup(
-            "test-plans-200-jobs")) == 1
+        tracker = sc.statusTracker()
+        for side, limit in (("driver", tasks.DRIVER_SIDE_BYTES),
+                            ("executor", 0)):
+            monkeypatch.setattr(tasks, "DRIVER_SIDE_BYTES", limit)
+            t = self._many_job_table(spark, tmp_path / side, 200)
+            assert len(cm.create_jobs(t.store, t.props)) == 200
+            group = f"test-plans-200-jobs-{side}"
+            sc.setJobGroup(group, "job count")
+            try:
+                out = t.compact()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert len(out) == 200
+            jobs = tracker.getJobIdsForGroup(group)
+            if side == "driver":
+                assert jobs == []
+            else:
+                assert len(jobs) == 1
+                n_tasks = sum(tracker.getStageInfo(s).numTasks
+                              for s in tracker.getJobInfo(jobs[0]).stageIds)
+                assert n_tasks <= 4 * sc.defaultParallelism
 
     def test_200_jobs_execute_in_one_action_correctly(self, spark, tmp_path):
         """The iterator tail (``compaction.run_jobs``) at 200 jobs."""

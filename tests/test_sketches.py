@@ -78,19 +78,19 @@ class TestSidecarWriting:
 
     def test_sidecars_built_on_executors(self, spark, tmp_path,
                                          monkeypatch):
-        """Above ``_DRIVER_SIDE_BYTES`` of new files, sidecars are built
-        by one executor task per file slice instead of driver threads:
+        """Above ``tasks.DRIVER_SIDE_BYTES`` of new files, sidecars are
+        built by one executor task per file slice instead of driver threads:
         the rows equal the driver-side build's, every sidecar is the one
         compute_file_sketch builds, and verify_integrity is clean."""
-        from sleeper_spark import sketches
+        from sleeper_spark import tasks
 
         sc = spark.sparkContext
         rows, jobs = {}, {}
         df = spark.range(10_000).select(
             F.col("id").alias("key"), (F.col("id") * 3).alias("value"))
-        for side, limit in (("driver", sketches._DRIVER_SIDE_BYTES),
+        for side, limit in (("driver", tasks.DRIVER_SIDE_BYTES),
                             ("executor", 0)):
-            monkeypatch.setattr(sketches, "_DRIVER_SIDE_BYTES", limit)
+            monkeypatch.setattr(tasks, "DRIVER_SIDE_BYTES", limit)
             t = SleeperTable.create(spark, str(tmp_path / side),
                                     long_schema(), split_points=[5_000])
             group = f"test-sketches-{side}"
