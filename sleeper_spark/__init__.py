@@ -14,9 +14,11 @@ This package re-expresses that model Spark-first:
 - the metadata plane (partition tree + file manifest) is a tiny driver-side
   transaction log (`statestore.py`), mirroring the reference's
   transaction-log state store (docs/design.md:156-199);
-- ingest is a Spark job (`repartition` on the leaf id + sort within
-  partitions + parquet write), like the reference's Spark bulk import
-  (java/bulk-import/); compaction merges on Arrow kernels (`tasks.py`);
+- a small ingest batch is collected once and sorted in Arrow on the
+  driver, like the reference's standard ingest; a big one is a Spark job
+  (`repartition` on the leaf id + sort within partitions + parquet
+  write), like its Spark bulk import (java/bulk-import/); compaction
+  merges on Arrow kernels (`tasks.py`);
 - the query path is driver-side partition pruning + an explicit file-list
   scan + region predicates (Parquet row-group pushdown is automatic);
 - everything the reference lacks (joins, windows, SQL, dedup, similarity

@@ -324,8 +324,7 @@ def _claim_parts(spark: SparkSession, jobs: list[CompactionJob],
         os.makedirs(out_dir, exist_ok=True)
         yield out_dir, descs
     except BaseException:
-        for job in jobs:
-            store.unassign_job_ids(job.job_id)
+        store.unassign_job_ids(*(job.job_id for job in jobs))
         shutil.rmtree(out_dir, ignore_errors=True)
         raise
 

@@ -1,18 +1,31 @@
 """Ingest: sort a batch into one sorted Parquet file per leaf partition and
 commit the file references.
 
-This is the reference's bulk-import "local sort" strategy, which is itself
-a Spark job (BulkImportDataframeLocalSortDriver.java:49-72;
-RepartitionRowsBySleeperPartition.java): tag each row with its leaf
-partition id, ``repartition`` on the tag so each leaf lands in exactly one
-task, ``sortWithinPartitions(tag, row keys..., sort keys...)``, and write
-with ``partitionBy(tag)`` so every leaf becomes one sorted file. Spark's
-external sorter replaces the reference's hand-rolled spill-and-merge
-ingest batches (ArrayListRowBatch.java:49-53, ArrowRowBatch.java). It is
-the one ingest sort: the reference's global-sort (J3) and pair-RDD (J5)
-drivers write the same sorted runs and are not carried. Each written
-file then gets its sidecar from a read-back of its key columns
-(``sketches.write_sidecars_distributed``).
+Both branches tag each row with its leaf partition id (:func:`_tagged`),
+and the tag carries the null-key and CHECK guards, so a bad row fails
+the one Spark job that reads the batch on either branch.
+
+- **Standard ingest** (O7/J2: the reference's ``IngestCoordinator``
+  sorts an in-memory Arrow batch in its own process and writes one file
+  per leaf, IngestCoordinator.java:17-58, ArrowRowBatch.java). A batch
+  of at most ``DRIVER_INGEST_ROWS`` rows is collected once
+  (:func:`collect_batch`), sorted by (leaf, key fields) in Arrow on the
+  driver, and each leaf's slice is written with its sidecar in the same
+  pass by the one sorted-file writer (``sketches.write_sorted_file``)
+  through ``tasks.run_tasks``. A Spark write job's fixed ~0.35 s
+  outweighs the work for such a batch.
+- **Local-sort bulk import** (J4: BulkImportDataframeLocalSortDriver.java:49-72;
+  RepartitionRowsBySleeperPartition.java), for bigger batches and
+  ``layout="zorder"``: ``repartition`` on the tag so each leaf lands in
+  exactly one task, ``sortWithinPartitions(tag, row keys..., sort
+  keys...)``, and write with ``partitionBy(tag)`` so every leaf becomes
+  one sorted file. Spark's external sorter replaces the reference's
+  hand-rolled spill-and-merge ingest batches (ArrayListRowBatch.java:49-53).
+  Each written file then gets its sidecar from a read-back of its key
+  columns (``sketches.write_sidecars_distributed``).
+
+The reference's global-sort (J3) and pair-RDD (J5) drivers write the
+same sorted runs and are not carried.
 
 Scale notes (100 TB):
 - The partition-id tag is a pure Column expression (nested CASE over leaf
@@ -31,17 +44,26 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from urllib.parse import unquote, urlparse
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sleeper_spark import sketches
 from sleeper_spark.partitions import PartitionTree
 from sleeper_spark.properties import TableProperties
+from sleeper_spark.schema import Schema
+from sleeper_spark.sorted_scan import _declared_arrow_schema
 from sleeper_spark.statestore import FileReference, StateStore
+from sleeper_spark.tasks import run_tasks
 
 PARTITION_COL = "__sleeper_partition__"
+#: rows up to which a batch takes the driver branch (module doc); the
+#: crossover tools/profile_ingest.py measured on 4 cores (CHANGES.md)
+DRIVER_INGEST_ROWS = 1 << 18
 
 
 def zorder_range_partitioned(tagged: DataFrame, layout_cols: list[str],
@@ -82,10 +104,11 @@ def ingest_dataframe(
     """Write ``df`` as sorted per-leaf-partition files and commit an
     ADD_FILES transaction (O7: IngestCoordinator.java:17-58).
 
-    The one sort is the reference's local-sort bulk import (J4,
-    BulkImportDataframeLocalSortDriver): hash-repartition on the leaf
-    id and sort within partitions, no global sampling pass, one file per
-    leaf per ingest (:func:`write_sorted_files`).
+    One file per leaf per ingest (:func:`write_sorted_files`): a small
+    batch is sorted and written on the driver (standard ingest, O7/J2),
+    a bigger one by the reference's local-sort bulk import (J4,
+    BulkImportDataframeLocalSortDriver: hash-repartition on the leaf id
+    and sort within partitions, no global sampling pass).
 
     ``layout="zorder"`` writes ``layout_files_per_leaf`` files per leaf
     instead of one, clustered by the Morton interleave of
@@ -131,6 +154,8 @@ def write_sorted_files(
     layout_cols: list[str] | None = None,
     layout_files_per_leaf: int = 8,
     layout_bits: int = 16,
+    batch: pa.Table | None = None,
+    probe: bool = True,
 ) -> list[FileReference]:
     """The WRITE phase of ingest, commit-free: land ``df`` as sorted
     per-leaf-partition files (+ sketch/Bloom sidecars) under
@@ -140,8 +165,18 @@ def write_sorted_files(
     output is invisible to every reader and never enters GC, so a
     caller that crashes before its commit leaves orphan bytes, not a
     state change (same guarantee the failed-write cleanup below relies
-    on)."""
+    on).
+
+    A caller that already ran :func:`collect_batch` on ``df`` passes
+    its result as ``batch`` with ``probe=False``: a table takes the
+    driver branch, None the Spark branch, and no second probe runs."""
+    if layout is not None and layout != "zorder":
+        raise ValueError(f"unknown layout {layout!r}")
     schema = store.schema
+    if layout is None and probe:
+        batch = collect_batch(df, tree, schema, props)
+    if batch is not None:
+        return _write_batch(df.sparkSession, batch, schema, out_dir, props)
     leaves = tree.leaves()
 
     # shuffle width tracks the CLUSTER, not the leaf count: partitionBy
@@ -151,43 +186,7 @@ def write_sorted_files(
     # partitions to spread the sort across cores.
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     n_parts = max(1, min(len(leaves), 2 * parallelism))
-    if layout is not None and layout != "zorder":
-        raise ValueError(f"unknown layout {layout!r}")
-    # row/sort keys are NON-NULLABLE by contract (Schema.java:275-295); a
-    # null row key would fall into the CASE chain's `otherwise` leaf,
-    # violate that leaf's region invariant, and then be filtered out by
-    # EVERY read's leaf-region guard — silently lost data. Fail the write
-    # job loudly instead: the guard is one codegen'd null check per row,
-    # evaluated inside the partition-id expression so Catalyst can never
-    # prune it.
-    null_any = None
-    for n in schema.key_names:
-        c = F.col(n).isNull()
-        null_any = c if null_any is None else (null_any | c)
-    leaf_expr = F.when(
-        null_any,
-        F.raise_error(F.lit(
-            "null key: row/sort key fields are non-nullable "
-            f"(fields {list(schema.key_names)}) — filter or "
-            "quarantine null-key rows before ingest"))
-    )
-    if props.constraints:
-        # CHECK constraint guard, same anti-pruning idiom as the null-key
-        # check: embedded in the partition-id expression, so Catalyst can
-        # never optimize it away and no second pass over the data runs.
-        # SQL CHECK semantics — NULL passes, only FALSE rejects.
-        violates = ~F.coalesce(
-            F.expr(props.constraints).cast("boolean"), F.lit(True))
-        leaf_expr = leaf_expr.when(
-            violates,
-            F.raise_error(F.lit(
-                "CHECK constraint violated: a row failed "
-                f"{props.constraints!r} — filter or quarantine "
-                "violating rows before ingest")))
-    leaf_expr = leaf_expr.otherwise(tree.leaf_id_column())
-    tagged = df.select(*[f.name for f in schema.all_fields()]).withColumn(
-        PARTITION_COL, leaf_expr
-    )
+    tagged = _tagged(df, tree, schema, props)
     if layout == "zorder":
         if not layout_cols:
             raise ValueError("layout='zorder' needs layout_cols")
@@ -222,6 +221,151 @@ def write_sorted_files(
         df.sparkSession, [r.filename for r in refs],
         schema.key_names, props.sketch_size)
     return refs
+
+
+def _tagged(df: DataFrame, tree: PartitionTree, schema: Schema,
+            props: TableProperties) -> DataFrame:
+    """``df``'s table columns plus PARTITION_COL, each row's leaf id,
+    whose expression carries the null-key and CHECK guards."""
+    return df.select(*[f.name for f in schema.all_fields()],
+                     _leaf_expr(tree, schema, props).alias(PARTITION_COL))
+
+
+#: leaf-id expressions by (key fields, CHECK, leaves): building one costs
+#: hundreds of py4j calls (~90 ms for 8 leaves), more than the driver
+#: branch's sort and write of a small batch
+_LEAF_EXPRS: dict[tuple, Column] = {}
+
+
+def _leaf_expr(tree: PartitionTree, schema: Schema,
+               props: TableProperties) -> Column:
+    key = (tuple(schema.key_names), props.constraints,
+           tuple((p.id, p.region) for p in tree.leaves()))
+    expr = _LEAF_EXPRS.get(key)
+    if expr is not None:
+        return expr
+    # row/sort keys are NON-NULLABLE by contract (Schema.java:275-295); a
+    # null row key would fall into the CASE chain's `otherwise` leaf,
+    # violate that leaf's region invariant, and then be filtered out by
+    # EVERY read's leaf-region guard — silently lost data. Fail the
+    # job loudly instead: the guard is one codegen'd null check per row,
+    # evaluated inside the partition-id expression so Catalyst can never
+    # prune it.
+    null_any = None
+    for n in schema.key_names:
+        c = F.col(n).isNull()
+        null_any = c if null_any is None else (null_any | c)
+    expr = F.when(
+        null_any,
+        F.raise_error(F.lit(
+            "null key: row/sort key fields are non-nullable "
+            f"(fields {list(schema.key_names)}) — filter or "
+            "quarantine null-key rows before ingest"))
+    )
+    if props.constraints:
+        # CHECK constraint guard, same anti-pruning idiom as the null-key
+        # check: embedded in the partition-id expression, so Catalyst can
+        # never optimize it away and no second pass over the data runs.
+        # SQL CHECK semantics — NULL passes, only FALSE rejects.
+        violates = ~F.coalesce(
+            F.expr(props.constraints).cast("boolean"), F.lit(True))
+        expr = expr.when(
+            violates,
+            F.raise_error(F.lit(
+                "CHECK constraint violated: a row failed "
+                f"{props.constraints!r} — filter or quarantine "
+                "violating rows before ingest")))
+    expr = expr.otherwise(tree.leaf_id_column())
+    if len(_LEAF_EXPRS) >= 64:
+        _LEAF_EXPRS.clear()
+    _LEAF_EXPRS[key] = expr
+    return expr
+
+
+def collect_batch(df: DataFrame, tree: PartitionTree, schema: Schema,
+                  props: TableProperties) -> pa.Table | None:
+    """The collect half of the driver branch (module doc): ``df``'s
+    tagged rows as one Arrow table, read by one Spark job, or None when
+    the batch holds more than ``DRIVER_INGEST_ROWS`` rows. A batch whose
+    input files' footers already count more skips that capped collect,
+    which costs ~0.5 s at the cap (CHANGES.md)."""
+    if _footer_rows_above(df, DRIVER_INGEST_ROWS):
+        return None
+    batch = (_tagged(df, tree, schema, props)
+             .limit(DRIVER_INGEST_ROWS + 1).toArrow())
+    return batch if batch.num_rows <= DRIVER_INGEST_ROWS else None
+
+
+#: most input-file footers read to bound a batch before collecting it
+_FOOTER_FILES = 64
+
+
+def _footer_rows_above(df: DataFrame, cap: int) -> bool:
+    """Whether the Parquet footers of ``df``'s first local input files
+    already count more than ``cap`` rows. A filter in ``df`` may still
+    leave a small batch, which then takes the Spark branch; files that
+    are not local Parquet count nothing."""
+    n = 0
+    for uri in df.inputFiles()[:_FOOTER_FILES]:
+        url = urlparse(uri)
+        if url.scheme not in ("", "file"):
+            continue
+        try:
+            n += pq.ParquetFile(unquote(url.path)).metadata.num_rows
+        except (OSError, pa.ArrowInvalid):
+            continue
+        if n > cap:
+            return True
+    return False
+
+
+def _write_batch(spark, batch: pa.Table, schema: Schema, out_dir: str,
+                props: TableProperties) -> list[FileReference]:
+    """The write half of the driver branch: sort the collected ``batch``
+    by (leaf, key fields), and write each leaf's slice and its sidecar
+    with ``sketches.write_sorted_file`` on ``tasks.run_tasks``. On any
+    failure ``out_dir`` is removed."""
+    declared = _declared_arrow_schema(schema)
+    # declared types, collected nullability: Spark ingest writes a NULL
+    # in a value field declared non-nullable, and so must this branch
+    target = pa.schema([pa.field(f.name, f.type,
+                                 batch.schema.field(f.name).nullable)
+                        for f in declared])
+    batch = batch.take(pc.sort_indices(batch, sort_keys=[
+        (n, "ascending") for n in (PARTITION_COL, *schema.key_names)]))
+    # value_counts lists leaves in order of first occurrence, which
+    # after the sort is leaf order: consecutive slices
+    leaves = pc.value_counts(batch.column(PARTITION_COL))
+    data = batch.select(declared.names).cast(target)
+    slices, off = [], 0
+    for pid, n in zip(leaves.field("values").to_pylist(),
+                      leaves.field("counts").to_pylist()):
+        slices.append((pid, data.slice(off, n)))
+        off += n
+
+    def write(item: tuple) -> FileReference:
+        pid, t = item
+        path = os.path.join(out_dir, f"{PARTITION_COL}={pid}",
+                            f"part-{uuid.uuid4().hex}.parquet")
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        # one row group per table: cut the slice into even row groups of
+        # at most the row-group bytes (in memory, as Spark's writer counts)
+        groups = max(1, -(-t.nbytes // props.row_group_bytes))
+        step = -(-t.num_rows // groups)
+        sketches.write_sorted_file(
+            path, [t.slice(o, step) for o in range(0, t.num_rows, step)],
+            key_names=list(schema.key_names), sketch_k=props.sketch_size,
+            expected_rows=t.num_rows, compression=props.compression,
+            page_bytes=props.page_bytes, declared_schema=declared)
+        return FileReference(filename=path, partition_id=pid,
+                             number_of_rows=t.num_rows,
+                             only_contains_data_for_this_partition=True)
+
+    try:
+        return run_tasks(spark, slices, write, [t.nbytes for _, t in slices])
+    except BaseException:
+        shutil.rmtree(out_dir, ignore_errors=True)
+        raise
 
 
 def _manifest_from_written_dir(out_dir: str) -> list[FileReference]:

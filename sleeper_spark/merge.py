@@ -33,8 +33,13 @@ rewriter's (deletes.py module doc) with a key set as the plan input:
 the source's distinct row keys (bounded by ``cap`` — MERGE is for
 CDC-sized batches; a bulk restatement should ingest + last-writer-wins
 compact instead) descend the partition tree, and candidates are claimed
-under a ``merge-*`` job id. The insert files come from the standard
-ingest writer (``write_sorted_files``), commit-free, inside the claim.
+under a ``merge-*`` job id. The insert files come from the ingest
+writer (``write_sorted_files``), commit-free, inside the claim. A
+source small enough for ingest's driver branch is collected ONCE
+(``ingest.collect_batch``): its keys come from that Arrow table, which
+the writer then sorts and writes, so a small merge runs one Spark job.
+A bigger source lists its keys with a distinct collect and is written
+by Spark.
 
 Incremental consumers: the commit carries tombstones (old rows of
 replaced key groups — the deletion feed) and its addFiles flow through
@@ -82,7 +87,9 @@ def merge_upsert(table: "SleeperTable", source_df: "DataFrame",
     full re-execution of the source plan purely to list keys it
     already knew. Same null/cap/noop checks, applied to the given
     list."""
-    from sleeper_spark.ingest import write_sorted_files
+    from pyspark.errors import PySparkException
+
+    from sleeper_spark.ingest import collect_batch, write_sorted_files
 
     schema = table.schema
     src_cols = set(source_df.columns)
@@ -130,12 +137,28 @@ def merge_upsert(table: "SleeperTable", source_df: "DataFrame",
     def norm(v):
         return bytes(v) if isinstance(v, bytearray) else v
 
-    if known_keys is None:
-        head = (source_df.select(*key_names).distinct()
-                .limit(cap + 1).collect())
-        key_rows = [tuple(row[k] for k in key_names) for row in head]
-    else:
+    # a small source is collected once (the driver branch of ingest):
+    # its keys come from that table, which the insert write then reuses
+    batch, probe = None, known_keys is not None
+    if known_keys is not None:
         key_rows = [tuple(kk) for kk in known_keys]
+    else:
+        try:
+            batch = collect_batch(source_df, store.tree, schema, table.props)
+        except PySparkException as e:
+            if "null key" not in str(e):
+                raise
+            raise ValueError(
+                "null row key (or sort key) in merge source — key fields "
+                "are non-nullable; filter or quarantine first") from e
+        if batch is not None:
+            distinct = batch.group_by(key_names).aggregate([])
+            key_rows = list(zip(*(distinct.column(k).to_pylist()
+                                  for k in key_names)))
+        else:
+            head = (source_df.select(*key_names).distinct()
+                    .limit(cap + 1).collect())
+            key_rows = [tuple(row[k] for k in key_names) for row in head]
     if not key_rows and not delete_keys:
         return _noop_result(job_id, replayed=False)
     if len(key_rows) + len(delete_keys or ()) > cap:
@@ -168,7 +191,7 @@ def merge_upsert(table: "SleeperTable", source_df: "DataFrame",
     with claimed(table, job_id, candidates) as out_dir:
         add_refs = write_sorted_files(
             source_df, store.tree, store, os.path.join(out_dir, "inserts"),
-            table.props)
+            table.props, batch=batch, probe=probe)
         rw = rewrite(table, candidates, out_dir,
                      partial(_key_match, key_names, keys))
     store.merge_files(rw.replacements, add_refs, job_id,

@@ -19,12 +19,13 @@ Spark-native equivalent:
   scan of that partition.
 - One builder makes every sidecar (:class:`SidecarBuilder`): quantile
   sketch, first-row-key Bloom filter and footer min/max. Files written
-  from Arrow tables (compaction parts, copy-on-write outputs) go
-  through :func:`write_sorted_file`, which builds the sidecar from the
-  tables it writes, with zero extra IO. Files Spark writes (ingest, the
-  iterator compaction tail, the z-order rewrite) get theirs from a
-  read-back of their key columns (:func:`write_sidecars_distributed`,
-  on driver threads or in one Spark job: ``tasks.run_tasks``).
+  from Arrow tables (compaction parts, copy-on-write outputs, ingest's
+  driver branch) go through :func:`write_sorted_file`, which builds the
+  sidecar from the tables it writes, with zero extra IO. Files Spark
+  writes (ingest's Spark branch, the iterator compaction tail, the
+  z-order rewrite) get theirs from a read-back of their key columns
+  (:func:`write_sidecars_distributed`, on driver threads or in one
+  Spark job: ``tasks.run_tasks``).
 
 Region clipping: a split file reference's sketch covers the whole file.
 Rank estimates are clipped to the partition's range on the dimension
@@ -326,7 +327,13 @@ def footer_minmax(path: str) -> dict[str, list]:
             if st is None or not st.has_min_max:
                 bad.add(name)
                 continue
-            mn, mx = st.min, st.max
+            try:
+                mn, mx = st.min, st.max
+            except NotImplementedError:
+                # pyarrow decodes no stats of some physical/logical
+                # pairs, e.g. Spark's INT64 decimals: this column only
+                bad.add(name)
+                continue
             if name not in mins or mn < mins[name]:
                 mins[name] = mn
             if name not in maxs or mx > maxs[name]:

@@ -87,6 +87,12 @@ class TransactionConflict(StateStoreException):
     """Another writer committed this sequence number first — reload and retry."""
 
 
+def unassigned_job_ids(tx: dict[str, Any]) -> list[str]:
+    """The job ids an UNASSIGN_JOB_IDS record releases; records written
+    before one record could release several carry a single ``jobId``."""
+    return tx["jobIds"] if "jobIds" in tx else [tx["jobId"]]
+
+
 class StateStore:
     """Append-only transaction log over a local/posix directory.
 
@@ -517,10 +523,10 @@ class StateStore:
             # crash recovery: release a dead job's input claims so the
             # files become compactable/deletable again (the reference's
             # dead-job detection re-opens inputs the same way)
-            jid = tx["jobId"]
+            jids = set(unassigned_job_ids(tx))
             for fn, by_pid in self.files.items():
                 for pid, ref in list(by_pid.items()):
-                    if ref.job_id == jid:
+                    if ref.job_id in jids:
                         by_pid[pid] = replace(ref, job_id=None)
         elif t == "EVOLVE_SCHEMA":
             # schema evolution record (add/drop value column): a no-op
@@ -821,23 +827,24 @@ class StateStore:
 
         self._commit_with_retry(build)
 
-    def unassign_job_ids(self, job_id: str) -> None:
-        """Release every file reference claimed by ``job_id`` — the
-        recovery step after a compaction/delete worker died between its
-        ASSIGN and its REPLACE (without it the claims leak forever and
-        those files can never be compacted or deleted again). Refuses
-        unknown job ids: unassigning a job that holds nothing is almost
-        certainly a caller bug (e.g. double recovery racing the job's
-        own late commit, which the REPLACE path would then let through
-        against re-claimed files)."""
+    def unassign_job_ids(self, *job_ids: str) -> None:
+        """Release every file reference claimed by ``job_ids``, in one
+        transaction — the recovery step after a compaction/delete
+        worker died between its ASSIGN and its REPLACE (without it the
+        claims leak forever and those files can never be compacted or
+        deleted again). Refuses unknown job ids: unassigning a job that
+        holds nothing is almost certainly a caller bug (e.g. double
+        recovery racing the job's own late commit, which the REPLACE
+        path would then let through against re-claimed files)."""
         def build() -> dict[str, Any]:
-            held = [r for by_pid in self.files.values()
-                    for r in by_pid.values() if r.job_id == job_id]
-            if not held:
-                raise StateStoreException(
-                    f"job {job_id} holds no file claims (already "
-                    "finished, already recovered, or never existed)")
-            return {"type": "UNASSIGN_JOB_IDS", "jobId": job_id}
+            held = {r.job_id for by_pid in self.files.values()
+                    for r in by_pid.values()}
+            for job_id in job_ids:
+                if job_id not in held:
+                    raise StateStoreException(
+                        f"job {job_id} holds no file claims (already "
+                        "finished, already recovered, or never existed)")
+            return {"type": "UNASSIGN_JOB_IDS", "jobIds": list(job_ids)}
 
         self._commit_with_retry(build)
 

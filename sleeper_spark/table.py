@@ -438,9 +438,11 @@ class SleeperTable:
                layout_cols: list[str] | None = None,
                layout_files_per_leaf: int = 8,
                layout_bits: int = 16) -> list[FileReference]:
-        """O7: one sorted file per leaf + ADD_FILES commit, through the
-        one ingest sort (the reference's local-sort bulk import, J4);
-        ``layout="zorder"`` Z-clusters each leaf's rows on
+        """O7: one sorted file per leaf + ADD_FILES commit. A batch of
+        at most ``ingest.DRIVER_INGEST_ROWS`` rows is collected once and
+        sorted in Arrow on the driver (standard ingest, J2), a bigger
+        one sorted by Spark (the reference's local-sort bulk import,
+        J4); ``layout="zorder"`` Z-clusters each leaf's rows on
         ``layout_cols`` into ``layout_files_per_leaf`` files so multi-dim
         value_ranges queries skip files — see
         :func:`sleeper_spark.ingest.ingest_dataframe`."""

@@ -50,6 +50,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 from sleeper_spark.query import local_frame, local_rows_df
+from sleeper_spark.statestore import unassigned_job_ids
 
 
 def classify_window(store, txs, refuse_msg: str
@@ -136,7 +137,7 @@ def classify_window(store, txs, refuse_msg: str
                 min(s for s, _ in pending)):
             t2 = tx2.get("type")
             if t2 == "UNASSIGN_JOB_IDS":
-                unassigned.add(str(tx2.get("jobId", "")))
+                unassigned.update(unassigned_job_ids(tx2))
             elif t2 in ("REPLACE_FILE_REFERENCES", "MERGE_FILES"):
                 committed.add(str(tx2.get("jobId", "")))
         for _seq, jid in pending:

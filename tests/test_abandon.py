@@ -72,6 +72,31 @@ class TestAbandonJob:
         t2 = SleeperTable.load(spark, table.path)
         assert all(r.job_id is None for r in t2.store.all_references())
 
+    def test_unassign_several_jobs_in_one_record(self, table, spark):
+        a, b = table.store.all_references()
+        table.store.assign_job_ids("dead-a", [a])
+        table.store.assign_job_ids("dead-b", [b])
+        pre = table.store.current_seq
+        with pytest.raises(StateStoreException, match="never-existed"):
+            table.store.unassign_job_ids("dead-a", "never-existed")
+        assert table.store.current_seq == pre
+        table.store.unassign_job_ids("dead-a", "dead-b")
+        assert [tx["type"] for _s, tx in
+                table.store.transactions_between(pre)] == [
+                    "UNASSIGN_JOB_IDS"]
+        t2 = SleeperTable.load(spark, table.path)
+        assert all(r.job_id is None for r in t2.store.all_references())
+
+    def test_single_id_record_replays(self, table, spark):
+        """A record in the single-id form, as written before one record
+        could release several jobs, still replays."""
+        self._claim_all(table)
+        table.store._commit({"type": "UNASSIGN_JOB_IDS",
+                             "jobId": "dead-job"})
+        t2 = SleeperTable.load(spark, table.path)
+        assert all(r.job_id is None for r in t2.store.all_references())
+        assert table.claimed_jobs() == {}
+
     def test_late_commit_after_recovery_loses_cleanly(self, table, tmp_path):
         import pyarrow as pa
         import pyarrow.parquet as pq

@@ -592,12 +592,18 @@ def test_failed_compaction_releases_its_claims(spark, tmp_path,
         expect = "written as"
     before = sorted((r.filename, r.partition_id)
                     for r in t.store.all_references())
+    pre = t.store.current_seq
     try:
         with pytest.raises(Exception, match=expect):
             t.compact()
     finally:
         spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     assert all(r.job_id is None for r in t.store.all_references())
+    # both jobs are claimed in one record and released in one
+    records = t.store.transactions_between(pre)
+    assert [tx["type"] for _s, tx in records] == [
+        "ASSIGN_JOB_IDS", "UNASSIGN_JOB_IDS"]
+    assert len(records[1][1]["jobIds"]) == 2
     assert sorted((r.filename, r.partition_id)
                   for r in t.store.all_references()) == before
     assert not [d for d in os.listdir(t.data_dir)

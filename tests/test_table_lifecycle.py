@@ -350,16 +350,17 @@ def test_rdd_ingest_multidim_tree(spark, tmp_path):
             assert leaf.region.contains_point({"a": r.a, "b": r.b})
 
 
-def test_compact_mixed_ingest_strategies(spark, tmp_path):
-    """A frame with non-nullable fields makes Spark write REQUIRED
-    parquet columns, while a frame read from parquet writes nullable
-    ones; the Arrow merge must relax nullability instead of refusing to
-    concat mixed batches."""
+def test_compact_mixed_ingest_strategies(spark, tmp_path, monkeypatch):
+    """A frame with non-nullable fields writes REQUIRED parquet columns,
+    while a frame read from parquet writes nullable ones; the Arrow merge
+    must relax nullability instead of refusing to concat mixed batches.
+    The first file comes from ingest's driver branch, the second from its
+    Spark branch, so the merge also meets both writers' files."""
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from sleeper_spark import Field, Schema, SleeperTable
+    from sleeper_spark import Field, Schema, SleeperTable, ingest
     from sleeper_spark.properties import TableProperties
 
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").select(
@@ -371,7 +372,9 @@ def test_compact_mixed_ingest_strategies(spark, tmp_path):
                             TableProperties(), split_points=[750])
     required = spark.createDataFrame(li.rdd, schema.to_struct_type())
     t.ingest(required)
-    t.ingest(li)
+    with monkeypatch.context() as m:
+        m.setattr(ingest, "DRIVER_INGEST_ROWS", 0)
+        t.ingest(li)
     nullable = {pq.read_schema(r.filename).field("l_orderkey").nullable
                 for r in t.store.all_references()}
     assert nullable == {False, True}
