@@ -324,7 +324,9 @@ def _claim_parts(spark: SparkSession, jobs: list[CompactionJob],
         os.makedirs(out_dir, exist_ok=True)
         yield out_dir, descs
     except BaseException:
-        store.unassign_job_ids(*(job.job_id for job in jobs))
+        # a job of the batch may have been abandoned meanwhile
+        store.unassign_job_ids(*(job.job_id for job in jobs),
+                               missing_ok=True)
         shutil.rmtree(out_dir, ignore_errors=True)
         raise
 

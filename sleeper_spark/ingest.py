@@ -8,12 +8,12 @@ the one Spark job that reads the batch on either branch.
 - **Standard ingest** (O7/J2: the reference's ``IngestCoordinator``
   sorts an in-memory Arrow batch in its own process and writes one file
   per leaf, IngestCoordinator.java:17-58, ArrowRowBatch.java). A batch
-  of at most ``DRIVER_INGEST_ROWS`` rows is collected once
-  (:func:`collect_batch`), sorted by (leaf, key fields) in Arrow on the
-  driver, and each leaf's slice is written with its sidecar in the same
-  pass by the one sorted-file writer (``sketches.write_sorted_file``)
-  through ``tasks.run_tasks``. A Spark write job's fixed ~0.35 s
-  outweighs the work for such a batch.
+  of at most ``DRIVER_INGEST_ROWS`` rows and ``DRIVER_INGEST_BYTES``
+  bytes is collected once (:func:`collect_batch`), sorted by (leaf, key
+  fields) in Arrow on the driver, and each leaf's slice is written with
+  its sidecar in the same pass by the one sorted-file writer
+  (``sketches.write_sorted_file``) through ``tasks.run_tasks``. A Spark
+  write job's fixed ~0.35 s outweighs the work for such a batch.
 - **Local-sort bulk import** (J4: BulkImportDataframeLocalSortDriver.java:49-72;
   RepartitionRowsBySleeperPartition.java), for bigger batches and
   ``layout="zorder"``: ``repartition`` on the tag so each leaf lands in
@@ -51,6 +51,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sleeper_spark import sketches
 from sleeper_spark.partitions import PartitionTree
@@ -64,6 +65,17 @@ PARTITION_COL = "__sleeper_partition__"
 #: rows up to which a batch takes the driver branch (module doc); the
 #: crossover tools/profile_ingest.py measured on 4 cores (CHANGES.md)
 DRIVER_INGEST_ROWS = 1 << 18
+#: bytes (as :func:`_probe_columns` estimates them) up to which a batch
+#: takes the driver branch: the crossover tools/profile_ingest.py
+#: measured for wide rows, and a bound on what the driver holds of one
+#: batch, below ``tasks.DRIVER_SIDE_BYTES`` so the write stays there
+DRIVER_INGEST_BYTES = 32 << 20
+_VAR_BYTES = "__sleeper_var_bytes__"
+#: Arrow bytes per value of the fixed-width types; others take 8
+_FIXED_BYTES = {T.IntegerType: 4, T.FloatType: 4, T.DateType: 4,
+                T.BooleanType: 1, T.DecimalType: 16}
+#: the caller has not run :func:`collect_batch` (write_sorted_files)
+_PROBE = object()
 
 
 def zorder_range_partitioned(tagged: DataFrame, layout_cols: list[str],
@@ -154,8 +166,7 @@ def write_sorted_files(
     layout_cols: list[str] | None = None,
     layout_files_per_leaf: int = 8,
     layout_bits: int = 16,
-    batch: pa.Table | None = None,
-    probe: bool = True,
+    batch: pa.Table | None | object = _PROBE,
 ) -> list[FileReference]:
     """The WRITE phase of ingest, commit-free: land ``df`` as sorted
     per-leaf-partition files (+ sketch/Bloom sidecars) under
@@ -167,14 +178,15 @@ def write_sorted_files(
     state change (same guarantee the failed-write cleanup below relies
     on).
 
-    A caller that already ran :func:`collect_batch` on ``df`` passes
-    its result as ``batch`` with ``probe=False``: a table takes the
-    driver branch, None the Spark branch, and no second probe runs."""
+    ``batch`` is :func:`collect_batch`'s result for ``df`` when the
+    caller already ran it: a table takes the driver branch, None (too
+    big) the Spark branch. By default it runs here."""
     if layout is not None and layout != "zorder":
         raise ValueError(f"unknown layout {layout!r}")
     schema = store.schema
-    if layout is None and probe:
-        batch = collect_batch(df, tree, schema, props)
+    if batch is _PROBE:
+        batch = (collect_batch(df, tree, schema, props)
+                 if layout is None else None)
     if batch is not None:
         return _write_batch(df.sparkSession, batch, schema, out_dir, props)
     leaves = tree.leaves()
@@ -228,22 +240,36 @@ def _tagged(df: DataFrame, tree: PartitionTree, schema: Schema,
     """``df``'s table columns plus PARTITION_COL, each row's leaf id,
     whose expression carries the null-key and CHECK guards."""
     return df.select(*[f.name for f in schema.all_fields()],
-                     _leaf_expr(tree, schema, props).alias(PARTITION_COL))
+                     _leaf_expr(df, tree, schema, props).alias(PARTITION_COL))
 
 
-#: leaf-id expressions by (key fields, CHECK, leaves): building one costs
-#: hundreds of py4j calls (~90 ms for 8 leaves), more than the driver
-#: branch's sort and write of a small batch
-_LEAF_EXPRS: dict[tuple, Column] = {}
+#: built Columns by (application, what, inputs): building the leaf id
+#: costs hundreds of py4j calls (~90 ms for 8 leaves), more than the
+#: driver branch's sort and write of a small batch. Above 128 leaves it
+#: holds a pandas_udf, tied to the SparkContext that built it, hence the
+#: application id.
+_EXPRS: dict[tuple, object] = {}
 
 
-def _leaf_expr(tree: PartitionTree, schema: Schema,
+def _cached(df: DataFrame, key: tuple, build):
+    key = (df.sparkSession.sparkContext.applicationId, *key)
+    out = _EXPRS.get(key)
+    if out is None:
+        if len(_EXPRS) >= 64:
+            _EXPRS.clear()
+        out = _EXPRS[key] = build()
+    return out
+
+
+def _leaf_expr(df: DataFrame, tree: PartitionTree, schema: Schema,
                props: TableProperties) -> Column:
-    key = (tuple(schema.key_names), props.constraints,
-           tuple((p.id, p.region) for p in tree.leaves()))
-    expr = _LEAF_EXPRS.get(key)
-    if expr is not None:
-        return expr
+    return _cached(df, ("leaf", tuple(schema.key_names), props.constraints,
+                        tuple((p.id, p.region) for p in tree.leaves())),
+                   lambda: _build_leaf_expr(tree, schema, props))
+
+
+def _build_leaf_expr(tree: PartitionTree, schema: Schema,
+                     props: TableProperties) -> Column:
     # row/sort keys are NON-NULLABLE by contract (Schema.java:275-295); a
     # null row key would fall into the CASE chain's `otherwise` leaf,
     # violate that leaf's region invariant, and then be filtered out by
@@ -275,46 +301,109 @@ def _leaf_expr(tree: PartitionTree, schema: Schema,
                 "CHECK constraint violated: a row failed "
                 f"{props.constraints!r} — filter or quarantine "
                 "violating rows before ingest")))
-    expr = expr.otherwise(tree.leaf_id_column())
-    if len(_LEAF_EXPRS) >= 64:
-        _LEAF_EXPRS.clear()
-    _LEAF_EXPRS[key] = expr
-    return expr
+    return expr.otherwise(tree.leaf_id_column())
 
 
 def collect_batch(df: DataFrame, tree: PartitionTree, schema: Schema,
                   props: TableProperties) -> pa.Table | None:
     """The collect half of the driver branch (module doc): ``df``'s
-    tagged rows as one Arrow table, read by one Spark job, or None when
-    the batch holds more than ``DRIVER_INGEST_ROWS`` rows. A batch whose
-    input files' footers already count more skips that capped collect,
-    which costs ~0.5 s at the cap (CHANGES.md)."""
-    if _footer_rows_above(df, DRIVER_INGEST_ROWS):
+    tagged rows as one Arrow table, or None when the batch holds more
+    than ``DRIVER_INGEST_ROWS`` rows or ``DRIVER_INGEST_BYTES`` bytes.
+
+    One Spark job reads at most ``DRIVER_INGEST_ROWS + 1`` rows, each
+    with its variable-width bytes. A row whose variable-width values
+    exceed the byte cap's share of one row comes with them emptied, so
+    that read holds at most about the byte cap plus the capped rows'
+    fixed-width values; a batch that fits the cap with such rows is then
+    read whole by a second job. A batch whose
+    input files' Parquet footers already count more than either cap
+    skips the collect, which costs ~0.5 s at the row cap (CHANGES.md)."""
+    if _footers_above(df):
         return None
-    batch = (_tagged(df, tree, schema, props)
+    fields = schema.all_fields()
+    share = DRIVER_INGEST_BYTES // (DRIVER_INGEST_ROWS + 1)
+    fixed, var, emptied = _cached(
+        df, ("probe", tuple((f.name, f.dtype.simpleString()) for f in fields),
+             share), lambda: _probe_columns(fields, share))
+    leaf = _leaf_expr(df, tree, schema, props).alias(PARTITION_COL)
+
+    def read(cols: list) -> pa.Table | None:
+        t = (df.select(*cols, leaf, var)
              .limit(DRIVER_INGEST_ROWS + 1).toArrow())
-    return batch if batch.num_rows <= DRIVER_INGEST_ROWS else None
+        var_bytes = pc.sum(t.column(_VAR_BYTES)).as_py() or 0
+        if (t.num_rows > DRIVER_INGEST_ROWS
+                or var_bytes + t.num_rows * fixed > DRIVER_INGEST_BYTES):
+            return None
+        return t
+
+    batch = read(emptied)
+    if batch is not None and (pc.max(batch.column(_VAR_BYTES)).as_py()
+                              or 0) > share:
+        batch = read([f.name for f in fields])
+    return None if batch is None else batch.drop_columns([_VAR_BYTES])
+
+
+def _probe_columns(fields, share: int) -> tuple[int, Column, list]:
+    """A row's Arrow bytes, estimated: a constant for its fixed-width
+    values, and a column ``_VAR_BYTES`` for its variable-width ones (a
+    string's or binary's octets, a list's or map's string form; 4 offset
+    bytes each). Then the fields, each variable-width one emptied in a
+    row whose variable-width bytes exceed ``share``."""
+    fixed, var = 0, ["0"]
+    for f in fields:
+        if not _variable(f.dtype):
+            fixed += _FIXED_BYTES.get(type(f.dtype), 8)
+        elif isinstance(f.dtype, (T.ArrayType, T.MapType)):
+            var.append(f"coalesce(octet_length(CAST(`{f.name}` AS STRING)),"
+                       " 0) + 4")
+        else:
+            var.append(f"coalesce(octet_length(`{f.name}`), 0) + 4")
+    var = "(" + " + ".join(var) + ")"
+    emptied = [F.expr(f"CASE WHEN {var} > {share} THEN {_empty(f.dtype)}"
+                      f" ELSE `{f.name}` END").alias(f.name)
+               if _variable(f.dtype) else f.name for f in fields]
+    return fixed, F.expr(var).alias(_VAR_BYTES), emptied
+
+
+def _variable(dtype: T.DataType) -> bool:
+    return isinstance(dtype, (T.StringType, T.BinaryType, T.ArrayType,
+                              T.MapType))
+
+
+def _empty(dtype: T.DataType) -> str:
+    """SQL for a non-null empty value of a variable-width type, which
+    keeps the column's nullability."""
+    if isinstance(dtype, T.StringType):
+        return "''"
+    if isinstance(dtype, T.BinaryType):
+        return "X''"
+    kind = "array()" if isinstance(dtype, T.ArrayType) else "map()"
+    return f"CAST({kind} AS {dtype.simpleString()})"
 
 
 #: most input-file footers read to bound a batch before collecting it
 _FOOTER_FILES = 64
 
 
-def _footer_rows_above(df: DataFrame, cap: int) -> bool:
+def _footers_above(df: DataFrame) -> bool:
     """Whether the Parquet footers of ``df``'s first local input files
-    already count more than ``cap`` rows. A filter in ``df`` may still
-    leave a small batch, which then takes the Spark branch; files that
-    are not local Parquet count nothing."""
-    n = 0
+    already count more than ``DRIVER_INGEST_ROWS`` rows or
+    ``DRIVER_INGEST_BYTES`` uncompressed bytes. A filter in ``df`` may
+    still leave a small batch, which then takes the Spark branch; files
+    that are not local Parquet count nothing."""
+    rows = size = 0
     for uri in df.inputFiles()[:_FOOTER_FILES]:
         url = urlparse(uri)
         if url.scheme not in ("", "file"):
             continue
         try:
-            n += pq.ParquetFile(unquote(url.path)).metadata.num_rows
+            md = pq.ParquetFile(unquote(url.path)).metadata
         except (OSError, pa.ArrowInvalid):
             continue
-        if n > cap:
+        rows += md.num_rows
+        size += sum(md.row_group(i).total_byte_size
+                    for i in range(md.num_row_groups))
+        if rows > DRIVER_INGEST_ROWS or size > DRIVER_INGEST_BYTES:
             return True
     return False
 

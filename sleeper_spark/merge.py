@@ -139,26 +139,24 @@ def merge_upsert(table: "SleeperTable", source_df: "DataFrame",
 
     # a small source is collected once (the driver branch of ingest):
     # its keys come from that table, which the insert write then reuses
-    batch, probe = None, known_keys is not None
+    try:
+        batch = collect_batch(source_df, store.tree, schema, table.props)
+    except PySparkException as e:
+        if "null key" not in str(e):
+            raise
+        raise ValueError(
+            "null row key (or sort key) in merge source — key fields "
+            "are non-nullable; filter or quarantine first") from e
     if known_keys is not None:
         key_rows = [tuple(kk) for kk in known_keys]
+    elif batch is not None:
+        distinct = batch.group_by(key_names).aggregate([])
+        key_rows = list(zip(*(distinct.column(k).to_pylist()
+                              for k in key_names)))
     else:
-        try:
-            batch = collect_batch(source_df, store.tree, schema, table.props)
-        except PySparkException as e:
-            if "null key" not in str(e):
-                raise
-            raise ValueError(
-                "null row key (or sort key) in merge source — key fields "
-                "are non-nullable; filter or quarantine first") from e
-        if batch is not None:
-            distinct = batch.group_by(key_names).aggregate([])
-            key_rows = list(zip(*(distinct.column(k).to_pylist()
-                                  for k in key_names)))
-        else:
-            head = (source_df.select(*key_names).distinct()
-                    .limit(cap + 1).collect())
-            key_rows = [tuple(row[k] for k in key_names) for row in head]
+        head = (source_df.select(*key_names).distinct()
+                .limit(cap + 1).collect())
+        key_rows = [tuple(row[k] for k in key_names) for row in head]
     if not key_rows and not delete_keys:
         return _noop_result(job_id, replayed=False)
     if len(key_rows) + len(delete_keys or ()) > cap:
@@ -191,7 +189,7 @@ def merge_upsert(table: "SleeperTable", source_df: "DataFrame",
     with claimed(table, job_id, candidates) as out_dir:
         add_refs = write_sorted_files(
             source_df, store.tree, store, os.path.join(out_dir, "inserts"),
-            table.props, batch=batch, probe=probe)
+            table.props, batch=batch)
         rw = rewrite(table, candidates, out_dir,
                      partial(_key_match, key_names, keys))
     store.merge_files(rw.replacements, add_refs, job_id,

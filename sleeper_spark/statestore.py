@@ -827,7 +827,8 @@ class StateStore:
 
         self._commit_with_retry(build)
 
-    def unassign_job_ids(self, *job_ids: str) -> None:
+    def unassign_job_ids(self, *job_ids: str,
+                         missing_ok: bool = False) -> None:
         """Release every file reference claimed by ``job_ids``, in one
         transaction — the recovery step after a compaction/delete
         worker died between its ASSIGN and its REPLACE (without it the
@@ -835,16 +836,26 @@ class StateStore:
         deleted again). Refuses unknown job ids: unassigning a job that
         holds nothing is almost certainly a caller bug (e.g. double
         recovery racing the job's own late commit, which the REPLACE
-        path would then let through against re-claimed files)."""
-        def build() -> dict[str, Any]:
+        path would then let through against re-claimed files).
+
+        ``missing_ok`` skips the ids that hold no claim instead, checked
+        against the state each commit attempt builds on: a failed batch
+        releases what is left of its claims after another process
+        abandoned some of its jobs."""
+        def build() -> dict[str, Any] | None:
             held = {r.job_id for by_pid in self.files.values()
                     for r in by_pid.values()}
-            for job_id in job_ids:
-                if job_id not in held:
-                    raise StateStoreException(
-                        f"job {job_id} holds no file claims (already "
-                        "finished, already recovered, or never existed)")
-            return {"type": "UNASSIGN_JOB_IDS", "jobIds": list(job_ids)}
+            if not missing_ok:
+                for job_id in job_ids:
+                    if job_id not in held:
+                        raise StateStoreException(
+                            f"job {job_id} holds no file claims (already "
+                            "finished, already recovered, or never "
+                            "existed)")
+            release = [j for j in job_ids if j in held]
+            if not release:
+                return None
+            return {"type": "UNASSIGN_JOB_IDS", "jobIds": release}
 
         self._commit_with_retry(build)
 

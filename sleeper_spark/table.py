@@ -439,7 +439,8 @@ class SleeperTable:
                layout_files_per_leaf: int = 8,
                layout_bits: int = 16) -> list[FileReference]:
         """O7: one sorted file per leaf + ADD_FILES commit. A batch of
-        at most ``ingest.DRIVER_INGEST_ROWS`` rows is collected once and
+        at most ``ingest.DRIVER_INGEST_ROWS`` rows and
+        ``ingest.DRIVER_INGEST_BYTES`` bytes is collected once and
         sorted in Arrow on the driver (standard ingest, J2), a bigger
         one sorted by Spark (the reference's local-sort bulk import,
         J4); ``layout="zorder"`` Z-clusters each leaf's rows on

@@ -567,19 +567,30 @@ def test_driver_compaction_leaves_arrow_pool(spark, tmp_path):
         pa.set_cpu_count(before)
 
 
-@pytest.mark.parametrize("tail", ["arrow", "iterators"])
+@pytest.mark.parametrize("tail", ["arrow", "iterators", "abandoned"])
 def test_failed_compaction_releases_its_claims(spark, tmp_path,
                                                monkeypatch, tail):
     """A compaction that fails before its commit releases every input
     claim and removes its output directory, so the next compact() takes
-    the same inputs and succeeds."""
+    the same inputs and succeeds. ``abandoned``: another handle abandons
+    one job of the batch before the failure, and the failure releases
+    the other."""
     import os
+    import threading
 
     from sleeper_spark import compaction
 
     t = _two_run_table(spark, str(tmp_path / tail))
-    if tail == "arrow":
+    abandoned, once = [], threading.Lock()
+    if tail != "iterators":
         def fail(desc, tables):
+            with once:
+                if tail == "abandoned" and not abandoned:
+                    other = SleeperTable.load(spark, t.path)
+                    jid = next(r.job_id for r in other.store.all_references()
+                               if r.job_id)
+                    other.abandon_job(jid)
+                    abandoned.append(jid)
             raise OSError("disk full")
         monkeypatch.setattr(compaction, "_write_part", fail)
         expect = "disk full"
@@ -601,9 +612,15 @@ def test_failed_compaction_releases_its_claims(spark, tmp_path,
     assert all(r.job_id is None for r in t.store.all_references())
     # both jobs are claimed in one record and released in one
     records = t.store.transactions_between(pre)
+    released = [sorted(tx["jobIds"]) for _s, tx in records[1:]]
     assert [tx["type"] for _s, tx in records] == [
-        "ASSIGN_JOB_IDS", "UNASSIGN_JOB_IDS"]
-    assert len(records[1][1]["jobIds"]) == 2
+        "ASSIGN_JOB_IDS"] + ["UNASSIGN_JOB_IDS"] * len(released)
+    claimed = {a["jobId"] for a in records[0][1]["assignments"]}
+    assert len(claimed) == 2
+    if tail == "abandoned":  # then the rest in one record
+        assert released == [abandoned, sorted(claimed - set(abandoned))]
+    else:
+        assert released == [sorted(claimed)]
     assert sorted((r.filename, r.partition_id)
                   for r in t.store.all_references()) == before
     assert not [d for d in os.listdir(t.data_dir)

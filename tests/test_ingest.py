@@ -229,15 +229,20 @@ def test_empty_and_replayed_ingest(spark, tmp_path, monkeypatch, side, cap):
     assert t.verify_integrity()["ok"]
 
 
+@pytest.mark.parametrize("cap", ["rows", "bytes"])
 def test_parquet_source_above_cap_skips_the_collect(spark, tmp_path,
-                                                    monkeypatch):
-    """A source whose Parquet footers already count more rows than the
-    cap goes to the Spark branch without the capped collect."""
+                                                    monkeypatch, cap):
+    """A source whose Parquet footers already count more rows or more
+    bytes than the caps goes to the Spark branch without the capped
+    collect."""
     from pyspark.sql import DataFrame
 
     path = str(tmp_path / "src.parquet")
     _kv_rows(spark, 1000).write.parquet(path)
-    monkeypatch.setattr(ingest, "DRIVER_INGEST_ROWS", 999)
+    if cap == "rows":
+        monkeypatch.setattr(ingest, "DRIVER_INGEST_ROWS", 999)
+    else:
+        monkeypatch.setattr(ingest, "DRIVER_INGEST_BYTES", 1000)
 
     def no_collect(self):
         raise AssertionError("collected a batch above the cap")
@@ -247,3 +252,69 @@ def test_parquet_source_above_cap_skips_the_collect(spark, tmp_path,
     refs = t.ingest(spark.read.parquet(path))
     assert sum(r.number_of_rows for r in refs) == 1000
     assert t.verify_integrity()["ok"]
+
+
+def _driver_writes(monkeypatch):
+    """The row counts of the batches the driver branch writes."""
+    written, write = [], ingest._write_batch
+
+    def spy(spark, batch, *args):
+        written.append(batch.num_rows)
+        return write(spark, batch, *args)
+    monkeypatch.setattr(ingest, "_write_batch", spy)
+    return written
+
+
+def _wide_rows(spark, n, wide):
+    """``_kv_rows`` whose value is 2,000 bytes where ``wide`` holds."""
+    return _kv_rows(spark, n).withColumn("value", F.when(
+        F.expr(wide), F.repeat(F.lit("w"), 2000))
+        .otherwise(F.col("value")))
+
+
+@pytest.mark.parametrize("rows,wide,driver", [
+    (50, "ts = 0", True),  # 10 wide rows: ~20 KiB, inside the byte cap
+    (60, "true", False),   # every row wide: ~118 KiB, above it
+])
+def test_wide_rows_against_the_byte_cap(spark, tmp_path, monkeypatch,
+                                        rows, wide, driver):
+    """A batch of few rows can still exceed the byte cap. Its wide rows
+    come emptied from the first read, which so stays near the cap; a
+    batch that fits the cap is then read whole by a second job and
+    written on the driver, one that does not takes the Spark branch.
+    Either way every row lands."""
+    monkeypatch.setattr(ingest, "DRIVER_INGEST_ROWS", 100)
+    monkeypatch.setattr(ingest, "DRIVER_INGEST_BYTES", 64 << 10)
+    written = _driver_writes(monkeypatch)
+    t = SleeperTable.create(spark, str(tmp_path / "t"), _kv_schema(),
+                            split_points=["k-050000"])
+    df = _wide_rows(spark, rows, wide)
+    batch = ingest.collect_batch(df, t.store.tree, t.schema, t.props)
+    assert (batch is not None) == driver
+    if driver:
+        assert batch.num_rows == rows
+        assert max(len(v) for v in batch.column("value").to_pylist()) == 2000
+    refs, jobs = _jobs(spark, f"test-ingest-wide-{rows}",
+                       lambda: t.ingest(df))
+    assert sum(r.number_of_rows for r in refs) == rows
+    assert written == ([rows] if driver else [])
+    if driver:
+        assert jobs == 2
+    assert _rows(t) == sorted(repr(tuple(r)) for r in df.collect())
+    assert t.verify_integrity()["ok"]
+
+
+def test_leaf_expr_cached_per_application(spark, tmp_path, monkeypatch):
+    """The leaf-id expression is built once per leaf set and Spark
+    application: above 128 leaves it holds a pandas_udf bound to the
+    SparkContext that built it."""
+    from pyspark import SparkContext
+
+    t = SleeperTable.create(spark, str(tmp_path / "t"), _kv_schema(),
+                            split_points=["k-050000"])
+    args = (_kv_rows(spark, 1), t.store.tree, t.schema, t.props)
+    first = ingest._leaf_expr(*args)
+    assert ingest._leaf_expr(*args) is first
+    monkeypatch.setattr(SparkContext, "applicationId",
+                        property(lambda self: "another-application"))
+    assert ingest._leaf_expr(*args) is not first

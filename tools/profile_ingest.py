@@ -14,8 +14,12 @@ write phase is timed; nothing is committed.
 The batch is a Parquet file of string keys (the ``write_cycle`` key
 shape), a long sort key and a string value, or with ``--pandas`` a
 pandas frame (the benchmark's ``ingest`` operation's source).
+``--value-bytes N`` pads each value to N bytes, for wide rows; the
+driver branch then also stops at ``DRIVER_INGEST_BYTES``, which the
+driver side here lifts too.
 
-Usage: python tools/profile_ingest.py [--pandas] [--reps N] ROWS...
+Usage: python tools/profile_ingest.py [--pandas] [--value-bytes N]
+       [--reps N] ROWS...
 """
 from __future__ import annotations
 
@@ -46,16 +50,18 @@ SCHEMA = Schema(row_key_fields=(Field("key", T.StringType()),),
 SPLITS = [f"k-{i * 125_000:07d}" for i in range(1, 8)]
 
 
-def batch(rows: int) -> pa.Table:
+def batch(rows: int, value_bytes: int) -> pa.Table:
     ids = pa.array(range(rows), type=pa.int64())
     mixed = pc.multiply(ids, 7919)  # spreads keys over the leaves
+    value = pc.binary_join_element_wise("v", pc.cast(ids, pa.string()), "")
+    if value_bytes:
+        value = pc.utf8_rpad(value, value_bytes, "x")
     return pa.table({
         "key": pc.binary_join_element_wise(
             "k-", pc.utf8_lpad(pc.cast(pc.bit_wise_and(mixed, 0xFFFFF),
                                        pa.string()), 7, "0"), ""),
         "ts": pc.bit_wise_and(ids, 7),
-        "value": pc.binary_join_element_wise(
-            "v", pc.cast(ids, pa.string()), ""),
+        "value": value,
     })
 
 
@@ -63,25 +69,28 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("rows", type=int, nargs="+")
     ap.add_argument("--pandas", action="store_true")
+    ap.add_argument("--value-bytes", type=int, default=0)
     ap.add_argument("--reps", type=int, default=5)
     args = ap.parse_args()
     spark = (SparkSession.builder.master("local[4]")
              .config("spark.sql.shuffle.partitions", "4")
              .config("spark.ui.enabled", "false")
              .config("spark.ui.showConsoleProgress", "false")
+             .config("spark.driver.memory", "2g")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .config("spark.sql.session.timeZone", "UTC")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
-    cap = ingest.DRIVER_INGEST_ROWS
+    cap, cap_bytes = ingest.DRIVER_INGEST_ROWS, ingest.DRIVER_INGEST_BYTES
     tmp = tempfile.mkdtemp(prefix="profile-ingest-")
     try:
         t = SleeperTable.create(spark, os.path.join(tmp, "t"), SCHEMA,
                                 split_points=SPLITS)
         print(f"{'rows':>10} {'driver ms':>10} {'spark ms':>10} "
-              f"{'probe ms':>9}   (DRIVER_INGEST_ROWS = {cap:,})")
+              f"{'probe ms':>9}   (DRIVER_INGEST_ROWS = {cap:,}, "
+              f"DRIVER_INGEST_BYTES = {cap_bytes:,})")
         for rows in args.rows:
-            tbl = batch(rows)
+            tbl = batch(rows, args.value_bytes)
             if args.pandas:
                 df = spark.createDataFrame(tbl.to_pandas())
             else:
@@ -91,16 +100,18 @@ def main() -> None:
             n = [0]
 
             def driver():
-                ingest.DRIVER_INGEST_ROWS = rows
+                ingest.DRIVER_INGEST_ROWS = max(rows, cap)
+                ingest.DRIVER_INGEST_BYTES = max(4 * tbl.nbytes, cap_bytes)
                 try:
                     return ingest.write_sorted_files(
                         df, t.store.tree, t.store, out(), t.props)
                 finally:
                     ingest.DRIVER_INGEST_ROWS = cap
+                    ingest.DRIVER_INGEST_BYTES = cap_bytes
 
             def on_spark():
                 return ingest.write_sorted_files(
-                    df, t.store.tree, t.store, out(), t.props, probe=False)
+                    df, t.store.tree, t.store, out(), t.props, batch=None)
 
             def probe():
                 assert ingest.collect_batch(
@@ -111,7 +122,7 @@ def main() -> None:
                 return os.path.join(tmp, "out", str(n[0]))
 
             sides = {"driver": driver, "spark": on_spark}
-            if rows > cap:
+            if rows > cap or tbl.nbytes > cap_bytes:
                 sides["probe"] = probe
             times = {s: [] for s in sides}
             for rep in range(args.reps + 1):  # the first is a warm-up
