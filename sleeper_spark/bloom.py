@@ -10,11 +10,11 @@ filter: a point query consults ~10 bits/key of sidecar metadata and
 skips every file that provably does not contain the key — no footer
 read, no task, no IO.
 
-Spark mapping: the filter is built ONCE per file, inside the same
-executor pass that computes the quantile-sketch sidecar (ingest and
-compaction already read the key columns there — the bloom adds zero
-IO), and consulted at plan time on the DRIVER, shrinking the file list
-handed to ``spark.read.parquet``. On a 1000-executor cluster this is
+Spark mapping: the filter is built ONCE per file, in the same pass
+that writes the file and its quantile-sketch sidecar
+(``sketches.write_sorted_file`` — the bloom adds zero IO), sized on
+the rows the file got, and consulted at plan time on the DRIVER,
+shrinking the file list handed to ``spark.read.parquet``. On a 1000-executor cluster this is
 the difference between a point query scheduling one task per file of a
 hot partition and scheduling one task per file that can actually
 contain the key.
@@ -74,19 +74,19 @@ MIN_BITS = 1 << 9
 MAX_USEFUL_ROWS = MAX_BITS // 6
 
 
-def _size_bits(expected_rows: int) -> int:
+def _size_bits(rows: int) -> int:
     # next power of two >= rows*bits, so probe positions use a bitmask
     # instead of a vector modulo (measured ~2x on the scatter path);
     # the <=2x bitmap overshoot only LOWERS the false-positive rate
-    m = max(MIN_BITS, min(MAX_BITS, expected_rows * BITS_PER_VALUE))
+    m = max(MIN_BITS, min(MAX_BITS, rows * BITS_PER_VALUE))
     return 1 << (m - 1).bit_length()
 
 
-def _num_hashes(m_bits: int, expected_rows: int) -> int:
+def _num_hashes(m_bits: int, rows: int) -> int:
     # optimal k = (m/n) ln2, capped at 6: build/probe cost is linear in
     # k, and at our >=12.8 bits/key (power-of-two overshoot) k=6 is
     # within ~0.1pp of the optimum's false-positive rate
-    return max(1, min(6, round(m_bits / max(1, expected_rows) * math.log(2))))
+    return max(1, min(6, round(m_bits / max(1, rows) * math.log(2))))
 
 
 _MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
@@ -227,29 +227,17 @@ def _positions(h: np.ndarray, k: int, m: int) -> np.ndarray:
 
 
 class BloomAccumulator:
-    """Streaming builder: size from an upfront row estimate, feed value
-    chunks, serialise once. ``sketches.SidecarBuilder`` feeds it the
-    first key of every table a data file is written from, so a file's
-    Bloom costs no extra pass over the data."""
+    """Streaming builder: feed value chunks, serialise once.
+    ``sketches.SidecarBuilder`` feeds it the first key of every table a
+    data file is written from. A streaming writer cannot know a file's
+    rows up front, so the fed values' hashes are kept and the bitmap is
+    sized on their count in :meth:`to_dict`; past ``MAX_USEFUL_ROWS``
+    the hashes are dropped and no Bloom is built."""
 
-    def __init__(self, field: str, expected_rows: int,
-                 _reuse_bits: bool = False):
+    def __init__(self, field: str):
         self.field = field
-        self.disabled = expected_rows > MAX_USEFUL_ROWS
-        self.m = _size_bits(expected_rows)
-        self.k = _num_hashes(self.m, expected_rows)
-        if self.disabled:
-            self._bits = np.zeros(0, dtype=bool)
-        elif _reuse_bits:
-            # one build at a time per thread borrows a per-thread arena:
-            # a fresh np.zeros(m) faults m new pages per FILE, and on a
-            # memory-pressured host that first-touch measured ~1s for a
-            # 2MB bitmap; re-zeroing resident pages is memset-fast.
-            # NOT safe for long-lived streaming accumulators (two live
-            # borrowers would share bits), hence opt-in.
-            self._bits = _borrow_bits(self.m)
-        else:
-            self._bits = np.zeros(self.m, dtype=bool)
+        self.disabled = False
+        self._hashes: list[np.ndarray] = []
         self.n = 0
 
     #: hash+scatter chunk: keeps every intermediate (byte windows,
@@ -262,35 +250,42 @@ class BloomAccumulator:
             return
         total = len(values)
         is_arrow = hasattr(values, "slice")
-        mask = np.uint64(self.m - 1)
         for lo in range(0, total, self._CHUNK):
             sz = min(self._CHUNK, total - lo)
-            part = (values.slice(lo, sz) if is_arrow
-                    else values[lo:lo + sz])
-            h = _hash_array(part)
-            if len(h):
-                # incremental double-hash scatter: bits[(h1 + i*h2) & mask]
-                # per i, identical positions to the probe side's _positions()
-                # matrix but with O(n) temporaries instead of O(n*k) —
-                # fresh multi-MB allocations fault pages, and on a
-                # memory-pressured host a single first-touch of the n*k
-                # matrix measured >1s (the chronic "cold bloom" stall)
-                acc = h & np.uint64(0xFFFFFFFF)
-                h2 = (h >> np.uint64(32)) | np.uint64(1)
-                for _ in range(self.k):
-                    self._bits[acc & mask] = True
-                    acc += h2  # uint64 wrap == (h1 + i*h2) mod 2^64
-                self.n += len(h)
+            h = _hash_array(values.slice(lo, sz) if is_arrow
+                            else values[lo:lo + sz])
+            self._hashes.append(h)
+            self.n += len(h)
+            if self.n > MAX_USEFUL_ROWS:
+                self.disabled = True
+                self._hashes = []
+                return
 
     def to_dict(self) -> dict | None:
         if self.disabled:
             return None
-        packed = np.packbits(self._bits).tobytes()
+        m = _size_bits(self.n)
+        k = _num_hashes(m, self.n)
+        bits = _borrow_bits(m)
+        mask = np.uint64(m - 1)
+        for h in self._hashes:
+            # incremental double-hash scatter: bits[(h1 + i*h2) & mask]
+            # per i, identical positions to the probe side's _positions()
+            # matrix but with O(n) temporaries instead of O(n*k) —
+            # fresh multi-MB allocations fault pages, and on a
+            # memory-pressured host a single first-touch of the n*k
+            # matrix measured >1s (the chronic "cold bloom" stall)
+            acc = h & np.uint64(0xFFFFFFFF)
+            h2 = (h >> np.uint64(32)) | np.uint64(1)
+            for _ in range(k):
+                bits[acc & mask] = True
+                acc += h2  # uint64 wrap == (h1 + i*h2) mod 2^64
+        packed = np.packbits(bits).tobytes()
         return {
             "v": SCHEME_VERSION,
             "field": self.field,
-            "m": self.m,
-            "k": self.k,
+            "m": m,
+            "k": k,
             # zlib level 1: a half-empty bitmap (small file, capped m)
             # still shrinks a lot, a well-loaded one is ~incompressible
             # either way — and the serialise step was the DOMINANT cost
@@ -305,10 +300,10 @@ _ARENA = __import__("threading").local()
 
 
 def _borrow_bits(m: int) -> np.ndarray:
-    """Per-thread reusable bitmap: grown to the largest m seen, zeroed
-    in place per borrow. Valid only while one build at a time runs per
-    thread (the caller finishes with the slice before the next
-    borrow)."""
+    """Per-thread reusable bitmap, grown to the largest m seen and
+    zeroed in place per borrow: a fresh np.zeros(m) faults m new pages
+    per file, and on a memory-pressured host that first-touch measured
+    ~1s for a 2MB bitmap. Valid until the thread's next borrow."""
     buf = getattr(_ARENA, "bits", None)
     if buf is None or buf.size < m:
         buf = np.zeros(m, dtype=bool)

@@ -32,7 +32,6 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark import TaskContext
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -199,8 +198,10 @@ def _leveled_batches(refs: list[FileReference], fanout: int,
 # - ``run_jobs`` (tables with custom iterators, arbitrary DataFrame
 #   transforms): the same merged parts feed a ``mapInArrow`` source,
 #   the iterators run on that DataFrame, and a shuffle on the part tag
-#   re-sorts each part before a partitioned write, so an iterator that
-#   reorders rows cannot break the sorted-file invariant.
+#   re-sorts each part, so an iterator that reorders rows cannot break
+#   the sorted-file invariant. Each part, one sorted run of one task,
+#   streams into the same sorted-file writer
+#   (``sketches.write_sorted_runs``): one file and sidecar per part.
 
 #: minimum rows per subrange part — below this a part's fixed cost
 #: (Python worker handoff + k file opens) outweighs the parallelism
@@ -289,10 +290,6 @@ def _claim_parts(spark: SparkSession, jobs: list[CompactionJob],
                 "page_bytes": props.page_bytes,
                 "sketch_k": props.sketch_size,
                 "cpu_budget": max(1, budget // len(subs)),
-                # bloom sizing: THIS PART's share of the job, not the
-                # whole job — an oversized bitmap costs packbits+zlib
-                # time per part and buys nothing
-                "expected_rows": max(1, total_rows // len(subs)),
                 "input_bytes": sum(map(os.path.getsize, job.input_files))
                 // len(subs),
             }
@@ -313,19 +310,28 @@ def _claim_parts(spark: SparkSession, jobs: list[CompactionJob],
     batch_rows = 131072 if min(len(descs), parallelism) > 4 else 524288
     for d in descs:
         d["batch_rows"] = batch_rows
-    # mark inputs as owned by their job (AssignJobIdsTransaction) so a
-    # concurrent planner cannot double-compact them — one txn for the batch
-    store.assign_job_ids_batch([
+    with _claimed(store, [
         (job.job_id,
          [store.files[fn][job.partition_id] for fn in job.input_files])
         for job in jobs
-    ])
-    try:
+    ], out_dir):
         os.makedirs(out_dir, exist_ok=True)
         yield out_dir, descs
+
+
+@contextmanager
+def _claimed(store: StateStore, assignments: list, out_dir: str):
+    """Mark each ``(job id, references)`` of ``assignments`` as owned by
+    its job in one transaction (AssignJobIdsTransaction), so a
+    concurrent planner cannot double-compact them. A failure in the
+    block releases the claims in one transaction and removes
+    ``out_dir``; the caller commits after the block."""
+    store.assign_job_ids_batch(assignments)
+    try:
+        yield
     except BaseException:
         # a job of the batch may have been abandoned meanwhile
-        store.unassign_job_ids(*(job.job_id for job in jobs),
+        store.unassign_job_ids(*(job_id for job_id, _ in assignments),
                                missing_ok=True)
         shutil.rmtree(out_dir, ignore_errors=True)
         raise
@@ -349,8 +355,8 @@ def _write_part(desc: dict, tables) -> int:
     with the part's write settings; no tables write the empty file."""
     return sketches.write_sorted_file(
         desc["out_path"], tables, key_names=desc["key_names"],
-        sketch_k=desc["sketch_k"], expected_rows=desc["expected_rows"],
-        compression=desc["compression"], page_bytes=desc["page_bytes"],
+        sketch_k=desc["sketch_k"], compression=desc["compression"],
+        page_bytes=desc["page_bytes"],
         declared_schema=desc["arrow_schema"])
 
 
@@ -450,10 +456,10 @@ def run_jobs(
     The parts' merged, processed rows come out of an Arrow source
     (``sorted_scan.arrow_task_frame``) tagged with their part
     (``JOB_COL``); descriptors pack into ``tasks.pack_slices`` tasks,
-    since the write's shuffle regroups the rows by part anyway.
-    After the iterators, each part is re-sorted and written to its own
-    file, which then moves to the part's output path; a part the
-    iterators emptied gets an empty file."""
+    since the shuffle after the iterators regroups the rows by part
+    anyway. There each part is re-sorted and streamed into its file
+    and sidecar (``sketches.write_sorted_runs``); a part the iterators
+    emptied gets an empty file."""
     if not jobs:
         return []
     schema = store.schema
@@ -476,44 +482,20 @@ def run_jobs(
         df = apply_custom_iterators(
             arrow_task_frame(spark, len(slices), task_tables, struct),
             props.iterators, schema)
-        staging = os.path.join(out_dir, "iterators")
-        (
-            df.repartition(len(descs), F.col(JOB_COL))
-            .sortWithinPartitions(JOB_COL, *schema.key_names)
-            .write.option("compression", props.compression)
-            .option("parquet.block.size", str(props.row_group_bytes))
-            .option("parquet.page.size", str(props.page_bytes))
-            .partitionBy(JOB_COL)
-            .parquet(staging)
-        )
-        written = {}
-        for tag in tags:
-            tag_dir = os.path.join(staging, f"{JOB_COL}={tag}")
-            written[tag] = sorted(
-                os.path.join(tag_dir, f) for f in os.listdir(tag_dir)
-                if f.endswith(".parquet")) if os.path.isdir(tag_dir) else []
-            if len(written[tag]) > 1:
-                # one shuffle partition per tag writes one file, unless a
-                # writer option (spark.sql.files.maxRecordsPerFile) cut it:
-                # moving only one would drop rows the commit then forgets
-                raise RuntimeError(
-                    f"compaction part {tag} was written as "
-                    f"{len(written[tag])} files, expected one")
+        # one shuffle partition per part: each part is one sorted run,
+        # so one file
+        written = {tag: (path, rows) for tag, path, rows in
+                   sketches.write_sorted_runs(
+                       df.repartition(len(descs), F.col(JOB_COL))
+                       .sortWithinPartitions(JOB_COL, *schema.key_names),
+                       JOB_COL, out_dir, schema, props)}
         rows_by_path: dict[str, int] = {}
-        moved = []
         for tag, d in zip(tags, descs):
-            if written[tag]:
-                os.replace(written[tag][0], d["out_path"])
-                rows_by_path[d["out_path"]] = \
-                    pq.ParquetFile(d["out_path"]).metadata.num_rows
-                moved.append(d["out_path"])
+            if tag in written:
+                d["out_path"], rows = written[tag]
             else:
-                rows_by_path[d["out_path"]] = _write_part(d, [])
-        shutil.rmtree(staging)
-        # sketch sidecars before the reference swap, so a split planned right
-        # after commit sees them (compact.rs writes file + sketch together)
-        sketches.write_sidecars_distributed(
-            spark, moved, list(schema.key_names), props.sketch_size)
+                rows = _write_part(d, [])
+            rows_by_path[d["out_path"]] = rows
     return _commit_parts(store, jobs, descs, rows_by_path)
 
 
@@ -553,18 +535,25 @@ def run_zorder_rewrite(
     a running compaction job; others are skipped (run ``compact()``
     first to pull parent files down). Inputs are locked with job-id
     assignment and the whole rewrite commits as ONE
-    replace_file_references_batch transaction, same as compaction.
+    replace_file_references_batch transaction, same as compaction; a
+    failure before the commit releases the locks and removes the
+    output.
     """
-    from sleeper_spark.ingest import (
-        PARTITION_COL,
-        _manifest_from_written_dir,
-        zorder_range_partitioned,
-    )
+    from sleeper_spark.ingest import PARTITION_COL, zorder_range_partitioned
 
     store.check_writable()
     schema = store.schema
     tree = store.tree
     assert tree is not None, "table not initialised"
+    derive_cols = derive_cols or {}
+    bad = set(schema.key_names).intersection(derive_cols)
+    if bad:
+        raise ValueError(f"derive_cols may not touch key fields: {bad}")
+    unknown = set(derive_cols) - {f.name for f in schema.all_fields()}
+    if unknown:
+        raise ValueError(
+            f"derive_cols must name existing value fields "
+            f"(a rewrite cannot grow the schema): {sorted(unknown)}")
     chosen: list[tuple[str, list[FileReference]]] = []
     for leaf in tree.leaves():
         refs = store.references_for_partition(leaf.id)
@@ -577,72 +566,48 @@ def run_zorder_rewrite(
     if not chosen:
         return []
 
-    assignments = [(f"zorder-{uuid.uuid4().hex[:12]}", refs)
-                   for _, refs in chosen]
-    store.assign_job_ids_batch(assignments)
-
     out_dir = os.path.join(data_dir, f"zorder-{uuid.uuid4().hex[:12]}")
-    struct = schema.to_struct_type()
-    paths = [r.filename for _, refs in chosen for r in refs]
-    df = (
-        spark.read.schema(struct).parquet(*paths)
-        .select(*[f.name for f in schema.all_fields()])
-    )
-    if derive_cols:
-        keys = set(schema.key_names)
-        bad = keys.intersection(derive_cols)
-        if bad:
-            raise ValueError(f"derive_cols may not touch key fields: {bad}")
-        known = {f.name for f in schema.all_fields()}
-        unknown = set(derive_cols) - known
-        if unknown:
-            raise ValueError(
-                f"derive_cols must name existing value fields "
-                f"(a rewrite cannot grow the schema): {sorted(unknown)}")
+    with _claimed(store, [(f"zorder-{uuid.uuid4().hex[:12]}", refs)
+                          for _, refs in chosen], out_dir):
+        paths = [r.filename for _, refs in chosen for r in refs]
+        df = (
+            spark.read.schema(schema.to_struct_type()).parquet(*paths)
+            .select(*[f.name for f in schema.all_fields()])
+        )
         for name, col in derive_cols.items():
             df = df.withColumn(name, col)
-    # eligibility guarantees every file is leaf-local, so the tree's
-    # leaf-id expression re-derives exactly the owning leaf
-    df = df.withColumn(PARTITION_COL, tree.leaf_id_column())
-    clustered = zorder_range_partitioned(
-        df, layout_cols, max(1, len(chosen) * files_per_leaf), bits,
-        list(schema.key_names))
-    (
-        clustered
-        .write.option("compression", props.compression)
-        .option("parquet.block.size", str(props.row_group_bytes))
-        .option("parquet.page.size", str(props.page_bytes))
-        .partitionBy(PARTITION_COL)
-        .parquet(out_dir)
-    )
+        # eligibility guarantees every file is leaf-local, so the tree's
+        # leaf-id expression re-derives exactly the owning leaf
+        df = df.withColumn(PARTITION_COL, tree.leaf_id_column())
+        clustered = zorder_range_partitioned(
+            df, layout_cols, max(1, len(chosen) * files_per_leaf), bits,
+            list(schema.key_names))
+        by_leaf: dict[str, list[FileReference]] = {}
+        for leaf_id, path, rows in sketches.write_sorted_runs(
+                clustered, PARTITION_COL, out_dir, schema, props):
+            by_leaf.setdefault(leaf_id, []).append(FileReference(
+                filename=path, partition_id=leaf_id, number_of_rows=rows,
+                only_contains_data_for_this_partition=True))
 
-    new_refs = _manifest_from_written_dir(out_dir)
-    by_leaf: dict[str, list[FileReference]] = {}
-    for r in new_refs:
-        by_leaf.setdefault(r.partition_id, []).append(r)
-
-    replacements, empties = [], []
-    for leaf_id, refs in chosen:
-        outs = by_leaf.get(leaf_id, [])
-        if not outs:
-            # the leaf's inputs held zero rows (e.g. post-ageOff empty
-            # files): the swap still needs an output ref
-            path = os.path.join(out_dir, f"{PARTITION_COL}={leaf_id}",
-                                "empty.parquet")
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            sketches.write_sorted_file(
-                path, [], key_names=list(schema.key_names),
-                sketch_k=props.sketch_size, expected_rows=0,
-                compression=props.compression, page_bytes=props.page_bytes,
-                declared_schema=_declared_arrow_schema(schema))
-            outs = [FileReference(
-                filename=path, partition_id=leaf_id, number_of_rows=0,
-                only_contains_data_for_this_partition=True)]
-            empties.extend(outs)
-        replacements.append((leaf_id, [r.filename for r in refs], outs))
-
-    sketches.write_sidecars_distributed(
-        spark, [r.filename for r in new_refs],
-        list(schema.key_names), props.sketch_size)
+        replacements, new_refs = [], []
+        for leaf_id, refs in chosen:
+            outs = by_leaf.get(leaf_id)
+            if not outs:
+                # the leaf's inputs held zero rows (e.g. post-ageOff
+                # empty files): the swap still needs an output ref
+                path = os.path.join(out_dir, f"{PARTITION_COL}={leaf_id}",
+                                    "empty.parquet")
+                os.makedirs(os.path.dirname(path), exist_ok=True)
+                sketches.write_sorted_file(
+                    path, [], key_names=list(schema.key_names),
+                    sketch_k=props.sketch_size,
+                    compression=props.compression,
+                    page_bytes=props.page_bytes,
+                    declared_schema=_declared_arrow_schema(schema))
+                outs = [FileReference(
+                    filename=path, partition_id=leaf_id, number_of_rows=0,
+                    only_contains_data_for_this_partition=True)]
+            new_refs.extend(outs)
+            replacements.append((leaf_id, [r.filename for r in refs], outs))
     store.replace_file_references_batch(replacements)
-    return new_refs + empties
+    return new_refs

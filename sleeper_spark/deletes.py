@@ -204,11 +204,10 @@ def _rewrite_ref(desc: dict) -> tuple[int, int]:
     # a filtered sorted file is still sorted, and keys are never assigned
     if n_keep:
         write_sorted_file(desc["kept_path"], [tbl.filter(pa.array(keep))],
-                          expected_rows=n_keep, **w)
+                          **w)
     if desc["assign"] is not None:
         upd = desc["assign"](old)
-        write_sorted_file(desc["upd_path"], [upd],
-                          expected_rows=upd.num_rows, **w)
+        write_sorted_file(desc["upd_path"], [upd], **w)
     return n_hit, n_keep
 
 

@@ -12,17 +12,18 @@ the one Spark job that reads the batch on either branch.
   bytes is collected once (:func:`collect_batch`), sorted by (leaf, key
   fields) in Arrow on the driver, and each leaf's slice is written with
   its sidecar in the same pass by the one sorted-file writer
-  (``sketches.write_sorted_file``) through ``tasks.run_tasks``. A Spark
+  (``sketches.write_sorted_file``) on driver threads. A Spark
   write job's fixed ~0.35 s outweighs the work for such a batch.
 - **Local-sort bulk import** (J4: BulkImportDataframeLocalSortDriver.java:49-72;
   RepartitionRowsBySleeperPartition.java), for bigger batches and
   ``layout="zorder"``: ``repartition`` on the tag so each leaf lands in
   exactly one task, ``sortWithinPartitions(tag, row keys..., sort
-  keys...)``, and write with ``partitionBy(tag)`` so every leaf becomes
-  one sorted file. Spark's external sorter replaces the reference's
-  hand-rolled spill-and-merge ingest batches (ArrayListRowBatch.java:49-53).
-  Each written file then gets its sidecar from a read-back of its key
-  columns (``sketches.write_sidecars_distributed``).
+  keys...)``, and stream each task's run of each leaf into the same
+  sorted-file writer (``sketches.write_sorted_runs``), so every leaf
+  becomes one sorted file, written with its sidecar in one pass, and
+  the tasks' ``(leaf, path, rows)`` results are the manifest. Spark's
+  external sorter replaces the reference's hand-rolled spill-and-merge
+  ingest batches (ArrayListRowBatch.java:49-53).
 
 The reference's global-sort (J3) and pair-RDD (J5) drivers write the
 same sorted runs and are not carried.
@@ -35,8 +36,8 @@ Scale notes (100 TB):
   ours: split the partition (O5) so ingest fans out wider.
 - Files are written with zstd + 8 MiB row groups + 128 KiB pages to match
   the reference's point-lookup-friendly layout (ParquetRowWriterFactory.java:74-77).
-- Row counts for the manifest come from Parquet footers (no second pass
-  over the data).
+- Row counts for the manifest come from the writer (no listing, no
+  second pass over the data).
 """
 
 from __future__ import annotations
@@ -83,7 +84,7 @@ def zorder_range_partitioned(tagged: DataFrame, layout_cols: list[str],
                              key_names: list[str]) -> DataFrame:
     """Z-cluster ``tagged`` rows (already carrying PARTITION_COL) so each
     output task holds one contiguous (leaf, Morton-key) range, then sort
-    each task by key: the write's ``partitionBy(leaf)`` then emits one
+    each task by key: ``sketches.write_sorted_runs`` then writes one
     file per leaf per task whose footer min/max box is tight in EVERY
     layout column — the stats the sidecar file skipper prunes on.
 
@@ -91,8 +92,7 @@ def zorder_range_partitioned(tagged: DataFrame, layout_cols: list[str],
     (leaf, zkey) distribution, so files balance by rows under any value
     skew and every leaf clusters IN PARALLEL — deliberately NOT a
     per-leaf ntile window, which would funnel each whole leaf through a
-    single task (and whose ordering the parquet writer's own
-    required-ordering sort is allowed to discard)."""
+    single task."""
     from sleeper_spark.functions.layout import zorder_key
 
     zk = zorder_key(list(layout_cols), bits)
@@ -191,11 +191,11 @@ def write_sorted_files(
         return _write_batch(df.sparkSession, batch, schema, out_dir, props)
     leaves = tree.leaves()
 
-    # shuffle width tracks the CLUSTER, not the leaf count: partitionBy
-    # below already writes one file per leaf within a task, so a
-    # 10^4-leaf tree must not become 10^4 tiny shuffle partitions/tasks
-    # (task-launch overhead would dominate); it only needs enough
-    # partitions to spread the sort across cores.
+    # shuffle width tracks the CLUSTER, not the leaf count: a task
+    # writes one file per leaf it holds, so a 10^4-leaf tree must not
+    # become 10^4 tiny shuffle partitions/tasks (task-launch overhead
+    # would dominate); it only needs enough partitions to spread the
+    # sort across cores.
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     n_parts = max(1, min(len(leaves), 2 * parallelism))
     tagged = _tagged(df, tree, schema, props)
@@ -211,28 +211,18 @@ def write_sorted_files(
             .sortWithinPartitions(PARTITION_COL, *schema.key_names)
         )
     try:
-        (
-            sorted_df
-            .write.option("compression", props.compression)
-            .option("parquet.block.size", str(props.row_group_bytes))
-            .option("parquet.page.size", str(props.page_bytes))
-            .partitionBy(PARTITION_COL)
-            .parquet(out_dir)
-        )
-    except Exception:
+        runs = sketches.write_sorted_runs(sorted_df, PARTITION_COL, out_dir,
+                                          schema, props)
+    except BaseException:
         # failed write job (e.g. the null-key guard fired): nothing is
         # committed, so the partial output is unreferenced forever —
         # remove it now rather than leaking it past GC's visibility
         shutil.rmtree(out_dir, ignore_errors=True)
         raise
-
-    refs = _manifest_from_written_dir(out_dir)
-    # quantile sketch sidecar per file (Sketches.java:45-62), read back
-    # from the key columns so splitting later never re-reads data
-    sketches.write_sidecars_distributed(
-        df.sparkSession, [r.filename for r in refs],
-        schema.key_names, props.sketch_size)
-    return refs
+    return [FileReference(filename=path, partition_id=pid,
+                          number_of_rows=rows,
+                          only_contains_data_for_this_partition=True)
+            for pid, path, rows in runs]
 
 
 def _tagged(df: DataFrame, tree: PartitionTree, schema: Schema,
@@ -412,73 +402,32 @@ def _write_batch(spark, batch: pa.Table, schema: Schema, out_dir: str,
                 props: TableProperties) -> list[FileReference]:
     """The write half of the driver branch: sort the collected ``batch``
     by (leaf, key fields), and write each leaf's slice and its sidecar
-    with ``sketches.write_sorted_file`` on ``tasks.run_tasks``. On any
-    failure ``out_dir`` is removed."""
+    with ``sketches.write_sorted_file`` on driver threads
+    (``tasks.run_tasks`` with weights of 0: the slices are already in
+    driver memory and read nothing from storage, and shipping them to
+    executors measured 4x slower than Spark's own write, CHANGES.md).
+    On any failure ``out_dir`` is removed."""
     declared = _declared_arrow_schema(schema)
-    # declared types, collected nullability: Spark ingest writes a NULL
-    # in a value field declared non-nullable, and so must this branch
-    target = pa.schema([pa.field(f.name, f.type,
-                                 batch.schema.field(f.name).nullable)
-                        for f in declared])
     batch = batch.take(pc.sort_indices(batch, sort_keys=[
         (n, "ascending") for n in (PARTITION_COL, *schema.key_names)]))
-    # value_counts lists leaves in order of first occurrence, which
-    # after the sort is leaf order: consecutive slices
-    leaves = pc.value_counts(batch.column(PARTITION_COL))
-    data = batch.select(declared.names).cast(target)
-    slices, off = [], 0
-    for pid, n in zip(leaves.field("values").to_pylist(),
-                      leaves.field("counts").to_pylist()):
-        slices.append((pid, data.slice(off, n)))
-        off += n
+    slices = list(sketches.tag_runs(batch, PARTITION_COL, declared))
 
     def write(item: tuple) -> FileReference:
         pid, t = item
         path = os.path.join(out_dir, f"{PARTITION_COL}={pid}",
                             f"part-{uuid.uuid4().hex}.parquet")
         os.makedirs(os.path.dirname(path), exist_ok=True)
-        # one row group per table: cut the slice into even row groups of
-        # at most the row-group bytes (in memory, as Spark's writer counts)
-        groups = max(1, -(-t.nbytes // props.row_group_bytes))
-        step = -(-t.num_rows // groups)
         sketches.write_sorted_file(
-            path, [t.slice(o, step) for o in range(0, t.num_rows, step)],
+            path, sketches.row_groups([t], props.row_group_bytes),
             key_names=list(schema.key_names), sketch_k=props.sketch_size,
-            expected_rows=t.num_rows, compression=props.compression,
-            page_bytes=props.page_bytes, declared_schema=declared)
+            compression=props.compression, page_bytes=props.page_bytes,
+            declared_schema=declared)
         return FileReference(filename=path, partition_id=pid,
                              number_of_rows=t.num_rows,
                              only_contains_data_for_this_partition=True)
 
     try:
-        return run_tasks(spark, slices, write, [t.nbytes for _, t in slices])
+        return run_tasks(spark, slices, write, [0] * len(slices))
     except BaseException:
         shutil.rmtree(out_dir, ignore_errors=True)
         raise
-
-
-def _manifest_from_written_dir(out_dir: str) -> list[FileReference]:
-    """Build FileReferences from the partitionBy output layout, taking row
-    counts from Parquet footers. A Z-ordered write leaves SEVERAL part
-    files per leaf directory — each an independent key-sorted run of the
-    same leaf, clustered on a contiguous Morton-key range."""
-    refs: list[FileReference] = []
-    for entry in sorted(os.listdir(out_dir)):
-        if not entry.startswith(PARTITION_COL + "="):
-            continue
-        pid = entry.split("=", 1)[1]
-        pdir = os.path.join(out_dir, entry)
-        for fn in sorted(os.listdir(pdir)):
-            if not fn.endswith(".parquet"):
-                continue
-            path = os.path.join(pdir, fn)
-            n = pq.ParquetFile(path).metadata.num_rows
-            refs.append(
-                FileReference(
-                    filename=path,
-                    partition_id=pid,
-                    number_of_rows=n,
-                    only_contains_data_for_this_partition=True,
-                )
-            )
-    return refs

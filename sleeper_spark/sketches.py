@@ -18,14 +18,15 @@ Spark-native equivalent:
   data file; only files missing a sidecar fall back to a bounded Spark
   scan of that partition.
 - One builder makes every sidecar (:class:`SidecarBuilder`): quantile
-  sketch, first-row-key Bloom filter and footer min/max. Files written
-  from Arrow tables (compaction parts, copy-on-write outputs, ingest's
-  driver branch) go through :func:`write_sorted_file`, which builds the
-  sidecar from the tables it writes, with zero extra IO. Files Spark
-  writes (ingest's Spark branch, the iterator compaction tail, the
-  z-order rewrite) get theirs from a read-back of their key columns
-  (:func:`write_sidecars_distributed`, on driver threads or in one
-  Spark job: ``tasks.run_tasks``).
+  sketch, first-row-key Bloom filter and footer min/max. One writer,
+  :func:`write_sorted_file`, writes every data file and builds its
+  sidecar from the tables it writes, with zero extra IO. Arrow tables
+  (compaction parts, copy-on-write outputs, ingest's driver branch) go
+  to it directly; a sorted Spark frame (ingest's Spark branch, the
+  iterator compaction tail, the z-order rewrite) streams into it from
+  ``mapInArrow`` tasks (:func:`write_sorted_runs`). The Bloom is sized
+  on the rows fed, so every writer builds the sidecar a read-back of
+  the file (:func:`compute_file_sketch`) would.
 
 Region clipping: a split file reference's sketch covers the whole file.
 Rank estimates are clipped to the partition's range on the dimension
@@ -36,8 +37,10 @@ approximation for split references).
 from __future__ import annotations
 
 import base64
+import itertools
 import json
 import os
+import uuid
 from bisect import bisect_left, bisect_right
 from typing import Any
 
@@ -47,7 +50,7 @@ from pyspark.sql import types as T
 
 from sleeper_spark.ranges import Region
 from sleeper_spark.schema import Schema
-from sleeper_spark.tasks import run_tasks
+from sleeper_spark.tasks import run_tasks, ship_engine
 
 SKETCH_SUFFIX = ".sketch.json"
 
@@ -195,25 +198,18 @@ class SidecarBuilder:
     """The sidecar of one key-sorted file, built from the tables written
     to it: the first key through :class:`SortedColumnSketch`, the other
     key fields buffered and sketched by :func:`sketch_from_arrow_columns`,
-    and the first-row-key Bloom filter (bloom.py) sized on
-    ``expected_rows``, an upper bound on the rows fed. Feed every table,
-    empty ones included (an empty one still carries the column types),
-    then call :meth:`sketch`."""
+    and the first-row-key Bloom filter (bloom.py) sized on the rows fed.
+    Feed every table, empty ones included (an empty one still carries
+    the column types), then call :meth:`sketch`."""
 
-    def __init__(self, path: str, key_names: list[str], k: int,
-                 expected_rows: int) -> None:
+    def __init__(self, path: str, key_names: list[str], k: int) -> None:
         from sleeper_spark import bloom
 
         self.key_names = list(key_names)
         self.k = k
         self._first = SortedColumnSketch(k, path, self.key_names[0])
         self._rest: dict[str, list] = {n: [] for n in self.key_names[1:]}
-        # _reuse_bits: one builder per file lives at a time per thread,
-        # so the per-thread bitmap arena (bloom._borrow_bits) is re-zeroed
-        # in place instead of freshly faulted per file, which measured
-        # ~1s/file of first-touch stalls on a memory-pressured host
-        self._bloom = bloom.BloomAccumulator(self.key_names[0],
-                                             expected_rows, _reuse_bits=True)
+        self._bloom = bloom.BloomAccumulator(self.key_names[0])
 
     @property
     def rows(self) -> int:
@@ -246,8 +242,8 @@ class SidecarBuilder:
 
 
 def write_sorted_file(path: str, tables, *, key_names: list[str],
-                      sketch_k: int, expected_rows: int, compression: str,
-                      page_bytes: int, declared_schema) -> int:
+                      sketch_k: int, compression: str, page_bytes: int,
+                      declared_schema) -> int:
     """Write key-sorted Arrow ``tables`` as one Parquet file, one row
     group per table, and its sidecar from the same tables in the same
     pass (the reference's sink writes file and sketch together,
@@ -259,7 +255,7 @@ def write_sorted_file(path: str, tables, *, key_names: list[str],
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    builder = SidecarBuilder(path, key_names, sketch_k, expected_rows)
+    builder = SidecarBuilder(path, key_names, sketch_k)
     writer = None
     try:
         for t in tables:
@@ -283,10 +279,97 @@ def write_sorted_file(path: str, tables, *, key_names: list[str],
         empty = pa.table({f.name: pa.array([], type=f.type)
                           for f in declared_schema})
         pq.write_table(empty, path, compression=compression)
-        builder = SidecarBuilder(path, key_names, sketch_k, 0)
         builder.update(empty)
     write_sidecar(path, builder.sketch())
     return builder.rows
+
+
+def tag_runs(t, tag_col: str, declared):
+    """``(tag, rows)`` per run of equal ``tag_col`` values in ``t``,
+    which is sorted by them, the rows cast to their ``declared``
+    (pa.Schema) types, keeping ``t``'s nullability: Spark lands a NULL
+    in a value field declared non-nullable, and so does every writer."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    data = t.select(declared.names).cast(pa.schema(
+        [f.with_nullable(t.schema.field(f.name).nullable)
+         for f in declared]))
+    # in sorted rows value_counts lists the tags in order of first
+    # occurrence, with their runs' lengths
+    tags = pc.value_counts(t.column(tag_col))
+    off = 0
+    for tag, n in zip(tags.field("values").to_pylist(),
+                      tags.field("counts").to_pylist()):
+        yield tag, data.slice(off, n)
+        off += n
+
+
+def row_groups(tables, cap: int):
+    """One sorted run's ``tables``, in order, as tables of at most
+    ``cap`` in-memory bytes (as Spark's writer counts them), one row
+    group each in :func:`write_sorted_file`: consecutive tables are
+    coalesced, and one above ``cap`` is cut into even slices."""
+    import pyarrow as pa
+
+    held, size = [], 0
+    for t in tables:
+        if held and size + t.nbytes > cap:
+            yield pa.concat_tables(held)
+            held, size = [], 0
+        if t.nbytes > cap:
+            step = -(-t.num_rows // -(-t.nbytes // cap))
+            yield from (t.slice(o, step) for o in range(0, t.num_rows, step))
+        else:
+            held.append(t)
+            size += t.nbytes
+    if held:
+        yield pa.concat_tables(held)
+
+
+def write_sorted_runs(df: DataFrame, tag_col: str, out_dir: str,
+                      schema: Schema, props) -> list[tuple[str, str, int]]:
+    """Write ``df``, sorted by (``tag_col``, key fields) within each
+    partition, as one file per run of equal tags in a partition, at
+    ``out_dir/<tag_col>=<tag>/part-<uuid>.parquet``, each streamed into
+    :func:`write_sorted_file` by a ``mapInArrow`` task (:func:`tag_runs`),
+    in row groups of at most ``props.row_group_bytes``
+    (:func:`row_groups`). Returns ``(tag, path, rows)`` per file, sorted:
+    the manifest. A task that fails removes the files it wrote."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    declared = to_arrow_schema(schema.to_struct_type())
+    cap = props.row_group_bytes
+    write = dict(key_names=list(schema.key_names), sketch_k=props.sketch_size,
+                 compression=props.compression, page_bytes=props.page_bytes,
+                 declared_schema=declared)
+
+    def task(batches):
+        runs = (r for b in batches
+                for r in tag_runs(pa.Table.from_batches([b]), tag_col,
+                                  declared))
+        written = []
+        try:
+            for tag, run in itertools.groupby(runs, key=lambda r: r[0]):
+                path = os.path.join(out_dir, f"{tag_col}={tag}",
+                                    f"part-{uuid.uuid4().hex}.parquet")
+                os.makedirs(os.path.dirname(path), exist_ok=True)
+                written.append(path)
+                rows = write_sorted_file(
+                    path, row_groups((t for _, t in run), cap), **write)
+                yield pa.RecordBatch.from_pydict(
+                    {"tag": [tag], "path": [path], "rows": [rows]})
+        except BaseException:
+            for path in written:
+                for p in (path, sidecar_path(path)):
+                    if os.path.exists(p):
+                        os.remove(p)
+            raise
+
+    ship_engine(df.sparkSession.sparkContext)
+    return sorted((r.tag, r.path, r.rows) for r in df.mapInArrow(
+        task, "tag string, path string, rows long").collect())
 
 
 def compute_file_sketch(path: str, key_names: list[str], k: int) -> dict:
@@ -296,7 +379,7 @@ def compute_file_sketch(path: str, key_names: list[str], k: int) -> dict:
     import pyarrow.parquet as pq
 
     t = pq.read_table(path, columns=list(key_names))
-    builder = SidecarBuilder(path, key_names, k, t.num_rows)
+    builder = SidecarBuilder(path, key_names, k)
     builder.update(t)
     return builder.sketch()
 
@@ -367,8 +450,10 @@ def load_sidecar(data_path: str) -> dict | None:
 
 def write_sidecars_distributed(spark: SparkSession, paths: list[str],
                                key_names: list[str], k: int) -> None:
-    """Sidecar per new data file, read back from the file
-    (:func:`compute_file_sketch`) through ``tasks.run_tasks``."""
+    """Sidecar per existing data file, read back from the file
+    (:func:`compute_file_sketch`) through ``tasks.run_tasks``. The
+    engine's writers do not use it: :func:`write_sorted_file` builds
+    each sidecar as it writes the file."""
     def build(path: str) -> None:
         write_sidecar(path, compute_file_sketch(path, key_names, k))
 

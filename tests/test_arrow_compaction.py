@@ -476,11 +476,11 @@ def test_iterator_compaction_keeps_nan_and_wide_longs(spark, spark_plan,
     assert t.verify_integrity()["ok"]
 
 
-def test_iterator_compaction_refuses_a_part_split_across_files(
-        spark, tmp_path):
-    """A part Spark wrote as several files (a writer option such as
-    maxRecordsPerFile) fails the compaction before any commit: the
-    inputs stay referenced and no output is left behind."""
+def test_iterator_compaction_writes_one_file_per_part(spark, tmp_path):
+    """The iterator tail streams each part, one sorted run, into one
+    file, whatever Spark's file writer options say
+    (``spark.sql.files.maxRecordsPerFile`` does not apply to table
+    files): every row is committed."""
     import os
 
     schema = Schema((Field("k", T.LongType()),), (),
@@ -492,18 +492,18 @@ def test_iterator_compaction_refuses_a_part_split_across_files(
         t.ingest(spark.createDataFrame(
             [(2 * i + rep, "public") for i in range(50)],
             schema.to_struct_type()))
-    before = sorted(t.store.files)
+    before = set(t.store.files)
     spark.conf.set("spark.sql.files.maxRecordsPerFile", "10")
     try:
-        with pytest.raises(RuntimeError, match="written as"):
-            t.compact()
+        refs = t.compact()
     finally:
         spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-    assert sorted(t.store.files) == before
-    assert sorted(os.path.join(d, f)
-                  for d, _, fs in os.walk(t.data_dir)
-                  for f in fs if f.endswith(".parquet")) == before
-    assert len(_collect(t.full_scan())) == 100
+    assert [r.number_of_rows for r in refs] == [100]
+    assert {os.path.join(d, f) for d, _, fs in os.walk(t.data_dir)
+            for f in fs if f.endswith(".parquet")} - before == {
+        refs[0].filename}
+    assert [r[0] for r in _collect(t.full_scan())] == list(range(100))
+    assert t.verify_integrity()["ok"]
 
 
 def _two_run_table(spark, path):
@@ -595,20 +595,25 @@ def test_failed_compaction_releases_its_claims(spark, tmp_path,
         monkeypatch.setattr(compaction, "_write_part", fail)
         expect = "disk full"
     else:
-        from sleeper_spark.iterators import register_iterator
-        register_iterator("keepAll", lambda args, schema: lambda df: df)
+        from sleeper_spark import iterators
+        iterators.register_iterator("keepAll",
+                                    lambda args, schema: lambda df: df)
         t.props.iterators = "keepAll()"
-        # a part written as several files is refused before the commit
-        spark.conf.set("spark.sql.files.maxRecordsPerFile", "10")
-        expect = "written as"
+
+        def fail_in_job(args, schema):
+            # the iterator raises on the executors, inside the write job
+            return lambda df: df.withColumn("value", F.when(
+                F.col("value").isNotNull(),
+                F.raise_error(F.lit("iterator failed")))
+                .otherwise(F.col("value")))
+        monkeypatch.setitem(iterators._ITERATOR_REGISTRY, "keepall",
+                            fail_in_job)
+        expect = "iterator failed"
     before = sorted((r.filename, r.partition_id)
                     for r in t.store.all_references())
     pre = t.store.current_seq
-    try:
-        with pytest.raises(Exception, match=expect):
-            t.compact()
-    finally:
-        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    with pytest.raises(Exception, match=expect):
+        t.compact()
     assert all(r.job_id is None for r in t.store.all_references())
     # both jobs are claimed in one record and released in one
     records = t.store.transactions_between(pre)

@@ -20,10 +20,10 @@ from sleeper_spark.schema import Field, Schema
 from sleeper_spark.table import SleeperTable
 
 
-def _build(values, n_rows=None):
-    """One file's Bloom: one accumulator sized on the file's rows, fed
-    every value at once."""
-    acc = bl.BloomAccumulator("k", len(values) if n_rows is None else n_rows)
+def _build(values):
+    """One file's Bloom: one accumulator fed every value at once, sized
+    on them."""
+    acc = bl.BloomAccumulator("k")
     acc.update(values)
     return acc.to_dict()
 
@@ -37,7 +37,7 @@ class TestBloomUnit:
 
     def test_no_false_negatives_ints_arrow(self):
         arr = pa.array(list(range(-2500, 2500)), type=pa.int64())
-        d = _build(arr, len(arr))
+        d = _build(arr)
         bits = bl.decode_bits(d)
         assert all(bl.may_contain(bits, d, v)
                    for v in range(-2500, 2500, 37))
@@ -63,7 +63,7 @@ class TestBloomUnit:
 
     def test_accumulator_chunks_equal_oneshot(self):
         vals = [f"v{i}" for i in range(1000)]
-        acc = bl.BloomAccumulator("k", 1000)
+        acc = bl.BloomAccumulator("k")
         acc.update(vals[:400])
         acc.update(vals[400:])
         assert acc.to_dict() == _build(vals)
@@ -72,15 +72,21 @@ class TestBloomUnit:
         m = bl._size_bits(10**12)
         assert m == bl.MAX_BITS
 
-    def test_oversize_file_builds_no_bloom(self):
+    def test_oversize_file_builds_no_bloom(self, monkeypatch):
         # beyond MAX_USEFUL_ROWS the capped bitmap can't prune anything
-        # (sub-6-bits/key FPR) — the build is skipped entirely and the
-        # plan falls back to absence semantics (keep the file)
-        acc = bl.BloomAccumulator("k", bl.MAX_USEFUL_ROWS + 1)
-        assert acc.disabled
+        # (sub-6-bits/key FPR) — the build stops, its hashes are dropped
+        # and the plan falls back to absence semantics (keep the file)
+        monkeypatch.setattr(bl, "MAX_USEFUL_ROWS", 5)
+        acc = bl.BloomAccumulator("k")
         acc.update([1, 2, 3])
+        acc.update(pa.array([4, 5], pa.int64()))
+        assert not acc.disabled and acc.to_dict() is not None
+        acc.update([6])
+        assert acc.disabled and acc._hashes == []
+        acc.update([7, 8])
         assert acc.to_dict() is None
-        assert _build([1], bl.MAX_USEFUL_ROWS + 1) is None
+        assert _build(list(range(6))) is None
+        assert _build(list(range(5))) is not None
 
     def test_unhashable_probe_keeps_file(self):
         d = _build([1, 2, 3])

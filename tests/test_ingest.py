@@ -193,6 +193,44 @@ def test_one_spark_job_per_ingest_and_merge(spark, tmp_path):
     assert t.verify_integrity()["ok"]
 
 
+def test_spark_branch_runs_no_read_back_job(spark, tmp_path, monkeypatch):
+    """The Spark branch writes every file and its sidecar inside its
+    write job: a 2,000-row ingest into 4 leaves runs at most 3 Spark
+    jobs (the capped collect, the shuffle and the write), the same
+    whether or not ``tasks.run_tasks`` would run work on executors."""
+    from sleeper_spark import tasks
+
+    monkeypatch.setattr(ingest, "DRIVER_INGEST_ROWS", 0)
+    jobs = {}
+    for limit in (tasks.DRIVER_SIDE_BYTES, 0):
+        monkeypatch.setattr(tasks, "DRIVER_SIDE_BYTES", limit)
+        t = SleeperTable.create(spark, str(tmp_path / str(limit)),
+                                _kv_schema(), split_points=[
+                                    f"k-{i * 25_000:06d}" for i in (1, 2, 3)])
+        refs, jobs[limit] = _jobs(spark, f"test-ingest-runs-{limit}",
+                                  lambda: t.ingest(_kv_rows(spark, 2000)))
+        assert len(refs) == 4 and sum(r.number_of_rows for r in refs) == 2000
+        assert t.verify_integrity()["ok"]
+    assert jobs[0] == jobs[tasks.DRIVER_SIDE_BYTES] <= 3
+
+
+def test_driver_slices_written_on_driver_threads(spark, tmp_path,
+                                                 monkeypatch):
+    """The driver branch's slices are already in driver memory: they are
+    written on driver threads even when ``tasks.run_tasks`` would send
+    any input that reads from storage to executors."""
+    from sleeper_spark import tasks
+
+    monkeypatch.setattr(tasks, "DRIVER_SIDE_BYTES", 1)
+    t = SleeperTable.create(spark, str(tmp_path / "t"), _kv_schema(),
+                            split_points=[f"k-{i * 12_500:06d}"
+                                          for i in range(1, 8)])
+    refs, jobs = _jobs(spark, "test-ingest-driver-threads",
+                       lambda: t.ingest(_kv_rows(spark, 2000)))
+    assert jobs == 1 and sum(r.number_of_rows for r in refs) == 2000
+    assert t.verify_integrity()["ok"]
+
+
 def test_merge_above_cap_takes_spark_branch(spark, tmp_path, monkeypatch):
     """A merge source above the cap is probed once, keyed by a distinct
     collect and written by Spark: the same rows as the driver branch."""

@@ -552,7 +552,7 @@ class TestPinnedSidecars:
         refs = sorted(t.store.all_references(),
                       key=lambda r: r.number_of_rows)
         assert [r.number_of_rows for r in refs] == [n, n + 3]
-        for r in refs:  # the read-back sidecars of ingest
+        for r in refs:  # the sidecars ingest wrote
             self._assert_pinned(r.filename, keys, r.number_of_rows)
         extras = sorted({2 * j + 1 for j in (0, n // 2, n - 1)})
         if kind == "string":
@@ -566,6 +566,57 @@ class TestPinnedSidecars:
                 if r.filename != refs[0].filename]
         assert [r.number_of_rows for r in kept] == [n]
         self._assert_pinned(kept[0].filename, keys, n)
+
+    def _assert_all_pinned(self, refs, key_names, rows):
+        assert sorted(r.number_of_rows for r in refs) == rows
+        for r in refs:
+            self._assert_pinned(r.filename, key_names, r.number_of_rows)
+
+    @pytest.mark.parametrize("n", [1, 8191, 8192, 40_000])
+    @pytest.mark.parametrize("kind", ["long", "string", "row_sort"])
+    def test_spark_ingest_outputs(self, spark, tmp_path, monkeypatch, kind,
+                                  n):
+        """Ingest's Spark branch: each leaf's run streamed from the
+        sorted frame (``sketches.write_sorted_runs``)."""
+        from sleeper_spark import ingest
+
+        monkeypatch.setattr(ingest, "DRIVER_INGEST_ROWS", 0)
+        schema = self._schema(kind)
+        t = SleeperTable.create(spark, str(tmp_path / "t"), schema,
+                                split_points=[self.SPLIT[kind]])
+        t.ingest(self._frame(spark, kind, n))
+        self._assert_all_pinned(t.store.all_references(),
+                                list(schema.key_names), [n, n + 3])
+
+    @pytest.mark.parametrize("kind", ["long", "string", "row_sort"])
+    def test_iterator_compaction_outputs(self, spark, tmp_path, kind):
+        """The iterator compaction tail: one file per part."""
+        from sleeper_spark.iterators import register_iterator
+
+        register_iterator("keepAll", lambda args, schema: lambda df: df)
+        schema = self._schema(kind)
+        t = SleeperTable.create(spark, str(tmp_path / "t"), schema,
+                                TableProperties(iterators="keepAll()"),
+                                split_points=[self.SPLIT[kind]])
+        df = self._frame(spark, kind, 8192)
+        for odd in (0, 1):
+            t.ingest(df.where(F.col("v") % 2 == odd))
+        self._assert_all_pinned(t.compact(), list(schema.key_names),
+                                [8192, 8195])
+
+    @pytest.mark.parametrize("kind", ["long", "string", "row_sort"])
+    def test_zorder_rewrite_outputs(self, spark, tmp_path, kind):
+        """OPTIMIZE ZORDER: several files per leaf."""
+        schema = self._schema(kind)
+        t = SleeperTable.create(spark, str(tmp_path / "t"), schema,
+                                split_points=[self.SPLIT[kind]])
+        t.ingest(self._frame(spark, kind, 8192))
+        refs = t.optimize_zorder(["v"], files_per_leaf=3, bits=8)
+        assert len(refs) > 2
+        for r in refs:
+            self._assert_pinned(r.filename, list(schema.key_names),
+                                r.number_of_rows)
+        assert sum(r.number_of_rows for r in refs) == 2 * 8192 + 3
 
     @pytest.mark.parametrize("kind", ["long", "string", "row_sort"])
     def test_empty_file_read_back(self, spark, tmp_path, kind):
@@ -618,8 +669,8 @@ class TestPinnedSidecars:
                   for c in chunks]
         with pytest.raises(ValueError, match="unsorted.parquet"):
             write_sorted_file(path, tables, key_names=["key"], sketch_k=self.K,
-                              expected_rows=5, compression="zstd",
-                              page_bytes=131072, declared_schema=declared)
+                              compression="zstd", page_bytes=131072,
+                              declared_schema=declared)
         assert not os.path.exists(sidecar_path(path))
         assert not os.path.exists(path)
 

@@ -866,6 +866,42 @@ class TestZOrderLayout:
             for j in jobs])
         assert t.optimize_zorder(["a", "b"]) == []  # locked -> skipped
 
+    @pytest.mark.parametrize("failure", ["refusal", "write"])
+    def test_failed_optimize_zorder_releases_its_claims(self, spark,
+                                                        tmp_path, failure):
+        """A z-order rewrite refused up front (a derived key) or failing
+        inside its write job leaves no reference claimed and no new
+        file, so the next compact() takes the inputs."""
+        import os
+
+        from sleeper_spark.compaction import run_zorder_rewrite
+
+        t = SleeperTable.create(spark, str(tmp_path / "t"), self._schema())
+        for lo in (0, 1024):
+            t.ingest(self._rows(spark)
+                     .where(f"k >= {lo} AND k < {lo + 1024}"))
+
+        def parquet_files():
+            return {os.path.join(d, f) for d, _, fs in os.walk(t.data_dir)
+                    for f in fs if f.endswith(".parquet")}
+
+        before = parquet_files()
+        if failure == "refusal":
+            derive, expect = {"k": F.col("k") + 1}, "key fields"
+        else:
+            derive = {"a": F.when(F.col("a").isNotNull(), F.raise_error(
+                F.lit("derive failed"))).otherwise(F.col("a"))}
+            expect = "derive failed"
+        with pytest.raises(Exception, match=expect):
+            run_zorder_rewrite(spark, t.store, t.data_dir, t.props,
+                               ["a", "b"], derive_cols=derive)
+        assert all(r.job_id is None for r in t.store.all_references())
+        assert parquet_files() == before
+        assert not [d for d in os.listdir(t.data_dir)
+                    if d.startswith("zorder-")]
+        (out,) = t.compact()
+        assert out.number_of_rows == 2048
+
     def test_zorder_ingest_validation(self, spark, tmp_path):
         t = SleeperTable.create(spark, str(tmp_path / "t"), self._schema())
         with pytest.raises(ValueError, match="layout_cols"):

@@ -77,9 +77,7 @@ def profile_task(paths, out_path, batch_rows, prune=None):
     t_all = time.perf_counter()
     n_out = sk.write_sorted_file(
         out_path, timed_chunks(), key_names=desc["key_names"],
-        sketch_k=1024,
-        expected_rows=sum(pq.ParquetFile(p).metadata.num_rows for p in paths),
-        compression="zstd", page_bytes=131072,
+        sketch_k=1024, compression="zstd", page_bytes=131072,
         declared_schema=pq.read_schema(paths[0]))
     total = time.perf_counter() - t_all
     # everything the writer did between chunks: Parquet encode and write,

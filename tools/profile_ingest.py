@@ -2,10 +2,12 @@
 where does the driver branch stop paying?
 
 For each batch size, writes the same batch into an 8-leaf table through
-the driver branch (collect once, Arrow sort, the sorted-file writer) and
-through the Spark branch (repartition, sort, ``partitionBy`` write and
-the sidecar read-back), alternating which runs first, and prints the
-median wall times. ``probe ms`` is what a batch above the cap spends
+the driver branch (collect once, Arrow sort, the sorted-file writer on
+driver threads) and through the Spark branch (repartition and sort in
+Spark, then each task streams its leaves' runs into the same
+sorted-file writer, ``sketches.write_sorted_runs``, with no listing
+and no read-back), alternating which runs first, and prints
+the median wall times. ``probe ms`` is what a batch above the cap spends
 before it takes the Spark branch: reading its input files' Parquet
 footers, or, for a source without files (``--pandas``), collecting
 ``DRIVER_INGEST_ROWS + 1`` rows to find that it is too big. Only the
@@ -86,7 +88,7 @@ def main() -> None:
     try:
         t = SleeperTable.create(spark, os.path.join(tmp, "t"), SCHEMA,
                                 split_points=SPLITS)
-        print(f"{'rows':>10} {'driver ms':>10} {'spark ms':>10} "
+        print(f"{'rows':>10} {'driver ms':>10} {'runs ms':>10} "
               f"{'probe ms':>9}   (DRIVER_INGEST_ROWS = {cap:,}, "
               f"DRIVER_INGEST_BYTES = {cap_bytes:,})")
         for rows in args.rows:
@@ -121,7 +123,7 @@ def main() -> None:
                 n[0] += 1
                 return os.path.join(tmp, "out", str(n[0]))
 
-            sides = {"driver": driver, "spark": on_spark}
+            sides = {"driver": driver, "runs": on_spark}
             if rows > cap or tbl.nbytes > cap_bytes:
                 sides["probe"] = probe
             times = {s: [] for s in sides}
@@ -134,7 +136,7 @@ def main() -> None:
                         times[s].append(time.perf_counter() - t0)
                 shutil.rmtree(os.path.join(tmp, "out"), ignore_errors=True)
             med = {s: 1000 * statistics.median(v) for s, v in times.items()}
-            print(f"{rows:>10,} {med['driver']:>10.0f} {med['spark']:>10.0f} "
+            print(f"{rows:>10,} {med['driver']:>10.0f} {med['runs']:>10.0f} "
                   f"{med.get('probe', float('nan')):>9.0f}", flush=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
