@@ -43,8 +43,8 @@ Every copy-on-write mutation runs the same four steps:
    left out of it and released after it, so ``files_untouched`` counts
    the references present at the call that were neither rewritten nor
    removed. Old files enter the GC queue; time travel (``as_of``) still
-   serves pre-delete states from the log; the append-only
-   ``added_rows_between`` feed does not emit deletes.
+   serves pre-delete states from the log; the removed rows are the
+   ``deleted_rows_between`` feed.
 
 ``delete_where``'s predicate is (OR of key ``regions``) AND (AND of
 ``value_ranges``), matching the query model. Value-range deletes are
@@ -75,6 +75,7 @@ from sleeper_spark.query import (
     file_may_contain_keys,
 )
 from sleeper_spark.ranges import Range, Region
+from sleeper_spark.schema import key_tuple
 from sleeper_spark.sketches import write_sorted_file
 from sleeper_spark.sorted_scan import (
     _and,
@@ -466,8 +467,7 @@ def delete_exact_rows(table: "SleeperTable", rows: "object",
         return empty
 
     key_names = table.schema.row_key_names
-    key_tuples = {tuple(bytes(v) if isinstance(v, bytearray) else v
-                        for v in kk)
+    key_tuples = {key_tuple(kk)
                   for kk in zip(*(tomb.column(k).to_pylist()
                                   for k in key_names))}
     if any(v is None for kk in key_tuples for v in kk):

@@ -64,6 +64,7 @@ from sleeper_spark.deletes import (
     rewrite,
 )
 from sleeper_spark.query import local_rows_df
+from sleeper_spark.schema import key_tuple
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
@@ -134,9 +135,6 @@ def merge_upsert(table: "SleeperTable", source_df: "DataFrame",
             store.unassign_job_ids(job_id)
         return _noop_result(job_id, replayed=True)
 
-    def norm(v):
-        return bytes(v) if isinstance(v, bytearray) else v
-
     # a small source is collected once (the driver branch of ingest):
     # its keys come from that table, which the insert write then reuses
     try:
@@ -171,14 +169,14 @@ def merge_upsert(table: "SleeperTable", source_df: "DataFrame",
                 "null row key in merge source — key fields are "
                 "non-nullable; filter or quarantine first")
 
-    keys = [tuple(norm(v) for v in kk) for kk in key_rows]
+    keys = [key_tuple(kk) for kk in key_rows]
     seen_keys = set(keys)
     for kk in delete_keys or ():
         if len(kk) != len(key_names) or any(v is None for v in kk):
             raise ValueError(
                 f"delete_keys entries must be non-null tuples in "
                 f"row-key order {key_names}, got {kk!r}")
-        kk = tuple(norm(v) for v in kk)
+        kk = key_tuple(kk)
         if kk not in seen_keys:
             seen_keys.add(kk)
             keys.append(kk)
@@ -354,9 +352,6 @@ def merge_when(table: "SleeperTable", source_df: "DataFrame",
                   F.max((~del_cond).cast("int")).alias("__sv"))
              .limit(cap + 1).collect())
 
-    def _norm(v):
-        return bytes(v) if isinstance(v, bytearray) else v
-
     touched_keys = {tuple(r[k] for k in key_names) for r in stats
                     if r["__t"] == 1}
     if touched_keys:
@@ -379,16 +374,16 @@ def merge_when(table: "SleeperTable", source_df: "DataFrame",
     # key columns and the source carries every source key) — so
     # merge_upsert can skip its distinct-key collect, which re-executed
     # this whole replacement chain purely to list these keys
-    frame_keys = {tuple(_norm(r[k]) for k in key_names) for r in stats
+    frame_keys = {key_tuple(r[k] for k in key_names) for r in stats
                   if r["__t"] == 1 and r["__sv"] == 1}
     if insert:
         inserts = s.join(matched.select(*key_names).distinct(),
                          on=key_names, how="leftanti") \
             .select(*need)
         frame = replacement.unionByName(inserts)
-        matched_keys = {tuple(_norm(r[k]) for k in key_names)
+        matched_keys = {key_tuple(r[k] for k in key_names)
                         for r in stats}
-        frame_keys |= {tuple(_norm(r[k]) for k in key_names)
+        frame_keys |= {key_tuple(r[k] for k in key_names)
                        for r in head} - matched_keys
     try:
         res = merge_upsert(table, frame, cap=cap, job_id=job_id,

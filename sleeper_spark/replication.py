@@ -253,7 +253,8 @@ def sync_cdc(src: Any, dst: Any, max_seqs: int | None = None) -> dict:
     replica (in log order, idempotently — an already-evolved replica
     skips; a shape diverging from a record's stamped resulting schema
     raises loudly). Replay is EAGER — ahead of the window's data
-    events, and even ahead of a bounded ``max_seqs`` horizon — and
+    events, and even ahead of a bounded ``max_seqs`` horizon or a
+    claim barrier — and
     must be: every feed reads through the source's HEAD schema, so
     after a source DROP the shipped appends no longer carry the
     column and the replica must drop it before ingesting them. Eager
@@ -266,62 +267,52 @@ def sync_cdc(src: Any, dst: Any, max_seqs: int | None = None) -> dict:
 
     An in-flight delete/update claim (commit not yet landed) is a
     BARRIER: the step stops before its seq and reports
-    ``caught_up=False``; the next call re-plans. :data:`DELETE_CAP` /
+    ``caught_up=False``; the next call re-plans. The window is planned
+    by ``views.walk_window`` from one read of the source log, which
+    also refuses ``max_seqs < 1`` and a watermark beyond the source
+    head. :data:`DELETE_CAP` /
     :data:`MERGE_CAP` bound the driver-side row sets per event (a mass
     delete should re-seed instead — the caps raise loudly)."""
+    from pyspark.sql import functions as F
+
+    from sleeper_spark.merge import merge_upsert
     from sleeper_spark.ranges import Region
-    from sleeper_spark.views import classify_window
+    from sleeper_spark.schema import key_tuple
+    from sleeper_spark.views import walk_window
 
     prefix = source_prefix(src)
     from_seq = applied_seq(dst, prefix)
-    src.store.refresh_if_stale(0)
+    to_seq, segments = walk_window(src.store, from_seq, max_seqs,
+                                   _CDC_REFUSE_MSG)
     head = src.store.current_seq
-    if from_seq > head:
-        raise ValueError(
-            f"replica watermark {from_seq} is beyond the source head "
-            f"{head} — wrong source, or stale/corrupt replica state")
-    to_seq = min(head, from_seq + max_seqs) \
-        if max_seqs is not None else head
-    summary = {"from_seq": from_seq, "to_seq": from_seq,
+    summary = {"from_seq": from_seq, "to_seq": to_seq,
                "files_ingested": 0, "deletes_applied": 0,
                "updates_applied": 0, "merges_applied": 0,
                "schema_evolutions_applied": 0,
-               "rows_deleted": 0, "caught_up": from_seq >= head}
-    if to_seq <= from_seq:
-        _check_schema(src, dst)
-        return summary
-    txs = src.store.transactions_between(from_seq, to_seq)
-    events, barrier = classify_window(src.store, txs, _CDC_REFUSE_MSG)
-    if barrier is not None:
-        events = [e for e in events if e[0] < barrier]
-        to_seq = barrier - 1
-        if to_seq <= from_seq:
-            return summary  # blocked on the in-flight claim
+               "rows_deleted": 0, "caught_up": to_seq >= head}
 
     if (_columns(src.schema.to_struct_type())
             != _columns(dst.schema.to_struct_type())):
-        # drift. Every feed (added/deleted/updated_rows_between) reads
-        # through the source's HEAD schema, so the only consistent
-        # replica shape is head's — find the evolution records that
-        # explain the drift and replay them ALL (in log order), even
-        # the ones past a bounded to_seq: schema is metadata, not
-        # content, and applying an add/drop "early" is safe precisely
-        # because ingest projects to the replica schema (pre-add rows
-        # carry the new column as all-NULL; pre-drop rows lose values
-        # the drop erases anyway). Replays are idempotent, so the
-        # EVOLVE seqs inside later windows skip as already-applied.
-        evolutions = [(s, tx) for s, tx in txs
+        # drift. Every feed reads through the source's HEAD schema, so
+        # the only consistent replica shape is head's — find the
+        # evolution records that explain the drift and replay them ALL
+        # (in log order), even the ones past a bounded or blocked
+        # to_seq: schema is metadata, not content, and applying an
+        # add/drop "early" is safe precisely because ingest projects to
+        # the replica schema (pre-add rows carry the new column as
+        # all-NULL; pre-drop rows lose values the drop erases anyway).
+        # Replays are idempotent, so the EVOLVE seqs inside later
+        # windows skip as already-applied.
+        window = (src.store.transactions_between(from_seq)
+                  if to_seq < head
+                  else [st for seg in segments for st in seg.txs])
+        evolutions = [(s, tx) for s, tx in window
                       if tx.get("type") == "EVOLVE_SCHEMA"]
-        if to_seq < head:
-            evolutions = [
-                (s, tx) for s, tx
-                in src.store.transactions_between(from_seq)
-                if tx.get("type") == "EVOLVE_SCHEMA"]
         if not evolutions:
             # no evolution record anywhere past the watermark: the
             # drift is manual/divergent — strict refusal
             _check_schema(src, dst)
-        for _s, tx in sorted(evolutions):
+        for _s, tx in evolutions:
             if _apply_evolution(dst, tx):
                 summary["schema_evolutions_applied"] += 1
         # after replaying every record the shapes must agree —
@@ -337,76 +328,67 @@ def sync_cdc(src: Any, dst: Any, max_seqs: int | None = None) -> dict:
     # merge replay matches by ROW keys (merge_upsert's unit), unlike
     # the delete path's full key group
     key_names_row = [f.name for f in src.schema.row_key_fields]
-    progressed = {"any": False}
-
-    def _apply_appends(a: int, b: int) -> None:
-        if b <= a:
-            return
-        window = src.store.transactions_between(a, b)
-        # event seqs never fall inside an append window (the loop
-        # splits at every classified event), so ADD_FILES is the only
-        # content-carrying type here; a content-neutral window
-        # (claims, compactions, splits) commits nothing — if the
-        # whole call turns out neutral, ONE marker at the end
-        # advances the watermark (see below)
-        if not any(tx.get("type") == "ADD_FILES" for _s, tx in window):
-            return
-        # file-shipping fast path: copy the committed files + sidecars
-        # instead of re-sorting the rows (falls back to the row replay
-        # when schemas/leaf boxes don't line up — see the helper)
-        refs = _ship_append_window(src, dst, window, f"{prefix}{a}-{b}")
-        if refs is None:
-            rows = src.added_rows_between(a, b)
-            refs = dst.ingest(rows, job_id=f"{prefix}{a}-{b}")
-        progressed["any"] = True
-        summary["files_ingested"] += len(refs)
+    progressed = False
 
     def _mark(seq: int) -> None:
         # zero-file marker: parses to `seq` in applied_seq, durable in
         # the replica's own log like any ingest job id
         dst.store.add_files([], job_id=f"{prefix}applied-{seq}")
 
-    cur = from_seq
-    for eseq, kind in events:
-        _apply_appends(cur, eseq - 1)
-        if kind == "merge":
+    for seg in segments:
+        a, b = seg.start, seg.end
+        if seg.kind == "append":
+            # events are segments of their own, so ADD_FILES is the
+            # only content-carrying type here; a content-neutral run
+            # (claims, compactions, splits) commits nothing — if the
+            # whole call turns out neutral, ONE marker at the end
+            # advances the watermark (see below)
+            if not any(tx.get("type") == "ADD_FILES"
+                       for _s, tx in seg.txs):
+                continue
+            # file-shipping fast path: copy the committed files +
+            # sidecars instead of re-sorting the rows (falls back to the
+            # row replay when schemas/leaf boxes don't line up — see
+            # the helper)
+            refs = _ship_append_window(src, dst, seg.txs,
+                                       f"{prefix}{a}-{b}")
+            if refs is None:
+                refs = dst.ingest(src._read_feed(seg.txs, "added"),
+                                  job_id=f"{prefix}{a}-{b}")
+            summary["files_ingested"] += len(refs)
+        elif seg.kind == "merge":
             # replays of a half-applied step dedupe via the merge
             # replay contract (ingest_jobs_seen). The commit's insert
             # rows replace their key groups — but a conditional merge
             # (merge_when WHEN MATCHED DELETE) can tombstone groups
             # with NO replacement rows; those keys must ship as
             # delete_keys or they silently survive on the replica.
-            ins = src.added_rows_between(eseq - 1, eseq)
-            old = src.deleted_rows_between(eseq - 1, eseq)
-            # ONE action for both key sets (guide §1.2 — these were two
-            # sequential collects over two tiny distinct frames): each
-            # side keeps its own pre-union cap, so truncation semantics
-            # are unchanged
-            from pyspark.sql import functions as _F
+            ins = src._read_feed(seg.txs, "added")
+            old = src._read_feed(seg.txs, "deleted")
+            # one collect for both key sets, each side under its own cap
             both = (ins.select(*key_names_row).distinct()
-                    .limit(MERGE_CAP + 1).withColumn("__ins", _F.lit(True))
+                    .limit(MERGE_CAP + 1).withColumn("__ins", F.lit(True))
                     .unionByName(
                         old.select(*key_names_row).distinct()
                         .limit(MERGE_CAP + 1)
-                        .withColumn("__ins", _F.lit(False)))
+                        .withColumn("__ins", F.lit(False)))
                     .collect())
-            ins_keys = {tuple(r[k] for k in key_names_row)
+            ins_keys = {key_tuple(r[k] for k in key_names_row)
                         for r in both if r["__ins"]}
-            old_keys = [tuple(r[k] for k in key_names_row)
+            old_keys = [key_tuple(r[k] for k in key_names_row)
                         for r in both if not r["__ins"]]
             if len(old_keys) > MERGE_CAP or len(ins_keys) > MERGE_CAP:
                 raise ValueError(
-                    f"merge commit at seq {eseq} touched more than "
+                    f"merge commit at seq {b} touched more than "
                     f"{MERGE_CAP} distinct keys — a mass restatement; "
                     "re-seed the replica instead")
             gone = sorted(k for k in old_keys if k not in ins_keys)
-            from sleeper_spark.merge import merge_upsert as _mu
-            _mu(dst, ins, cap=MERGE_CAP, delete_keys=gone,
-                job_id=f"merge-{prefix}{eseq - 1}-{eseq}")
-            _mark(eseq)
+            merge_upsert(dst, ins, cap=MERGE_CAP, delete_keys=gone,
+                         job_id=f"merge-{prefix}{a}-{b}")
+            _mark(b)
             summary["merges_applied"] += 1
         else:
-            old = src.deleted_rows_between(eseq - 1, eseq)
+            old = src._read_feed(seg.txs, "deleted")
             if dst.props.aggregations:
                 # aggregation tables: source deletes are key-region
                 # only → whole key groups; exact-key delete_where is
@@ -416,17 +398,13 @@ def sync_cdc(src: Any, dst: Any, max_seqs: int | None = None) -> dict:
                     .limit(DELETE_CAP + 1).collect()
                 if len(keys) > DELETE_CAP:
                     raise ValueError(
-                        f"delete commit at seq {eseq} removed more "
+                        f"delete commit at seq {b} removed more "
                         f"than {DELETE_CAP} distinct keys — a mass "
                         "delete; re-seed the replica instead")
                 if keys:
-                    def _norm(v):
-                        return (bytes(v) if isinstance(v, bytearray)
-                                else v)
                     res = dst.delete_where(regions=[
-                        Region.exact(dst.schema,
-                                     **{k: _norm(r[k])
-                                        for k in key_names})
+                        Region.exact(dst.schema, **dict(zip(
+                            key_names, key_tuple(r[k] for k in key_names))))
                         for r in keys])
                     summary["rows_deleted"] += res["rows_deleted"]
             else:
@@ -437,17 +415,15 @@ def sync_cdc(src: Any, dst: Any, max_seqs: int | None = None) -> dict:
                 res = dst.delete_exact_rows(old, cap=DELETE_CAP,
                                             match_nan=True)
                 summary["rows_deleted"] += res["rows_deleted"]
-            if kind == "update":
-                new = src.updated_rows_between(eseq - 1, eseq)
-                dst.ingest(new, job_id=f"{prefix}{eseq - 1}-{eseq}")
+            if seg.kind == "update":
+                dst.ingest(src._read_feed(seg.txs, "updated"),
+                           job_id=f"{prefix}{a}-{b}")
                 summary["updates_applied"] += 1
             else:
-                _mark(eseq)
+                _mark(b)
                 summary["deletes_applied"] += 1
-        progressed["any"] = True
-        cur = eseq
-    _apply_appends(cur, to_seq)
-    if not progressed["any"] and to_seq > from_seq:
+        progressed = True
+    if not progressed and to_seq > from_seq:
         # the whole window was content-neutral (claims, compactions,
         # splits, GC): advance the watermark with ONE marker, or a
         # bounded catch-up (max_seqs) over neutral history would stall
@@ -455,8 +431,6 @@ def sync_cdc(src: Any, dst: Any, max_seqs: int | None = None) -> dict:
         # not per segment — events and ingests carry their own
         # watermark, so a call that applied anything needs none.
         _mark(to_seq)
-    summary["to_seq"] = to_seq
-    summary["caught_up"] = barrier is None and to_seq >= head
     return summary
 
 

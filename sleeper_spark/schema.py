@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field as dc_field
-from typing import Any
+from typing import Any, Iterable
 
 from pyspark.sql import types as T
 
@@ -47,6 +47,14 @@ _VALUE_PRIMITIVES: dict[str, T.DataType] = {
 }
 
 _KEY_TYPES = set(_PRIMITIVES)
+
+
+def key_tuple(values: Iterable[Any]) -> tuple:
+    """Key values as a hashable tuple: a collected Spark Row holds a
+    binary value as an unhashable ``bytearray``, stored here as
+    ``bytes``."""
+    return tuple(bytes(v) if isinstance(v, bytearray) else v
+                 for v in values)
 
 
 def _parse_type(t: Any) -> T.DataType:

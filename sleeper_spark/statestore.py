@@ -93,6 +93,27 @@ def unassigned_job_ids(tx: dict[str, Any]) -> list[str]:
     return tx["jobIds"] if "jobIds" in tx else [tx["jobId"]]
 
 
+#: change feed -> {transaction type: field listing the feed's files}:
+#: appended rows (ingests, a merge's inserts), removed rows (the
+#: tombstones of a delete, update or merge) and update_where's new rows
+FEED_FIELDS = {
+    "added": {"ADD_FILES": "files", "MERGE_FILES": "addFiles"},
+    "deleted": {"REPLACE_FILE_REFERENCES": "tombstones",
+                "MERGE_FILES": "tombstones"},
+    "updated": {"REPLACE_FILE_REFERENCES": "updates"},
+}
+
+
+def feed_files(txs: Iterable[tuple[int, dict[str, Any]]],
+               kind: str) -> list[str]:
+    """The distinct files feed ``kind`` reads from ``(seq, tx)`` pairs,
+    sorted (ADD_FILES lists a file once per partition reference)."""
+    fields = FEED_FIELDS[kind]
+    return sorted({f if isinstance(f, str) else f["filename"]
+                   for _seq, tx in txs if tx.get("type") in fields
+                   for f in tx.get(fields[tx["type"]], ())})
+
+
 class StateStore:
     """Append-only transaction log over a local/posix directory.
 

@@ -47,6 +47,7 @@ from pyspark.sql import types as T
 from sleeper_spark.processing import age_off_condition
 from sleeper_spark.iterators import AgeOffFilter
 from sleeper_spark.table import SleeperTable
+from sleeper_spark.views import bound_window
 
 
 def stream_ingest(
@@ -422,9 +423,9 @@ def streaming_funnel(
 
 class ChangeFeedTail:
     """Bridge a table's change data feed into Structured Streaming: each
-    :meth:`drain` polls ``poll_changes`` (bounded by ``max_seqs``) and
-    lands the newly appended rows as parquet files in a staging
-    directory that :meth:`read_stream` tails as an ordinary file-source
+    :meth:`drain` takes the next window (at most ``max_seqs`` seqs, as
+    ``poll_changes`` bounds it) and lands its appended rows as parquet
+    files in a staging directory that :meth:`read_stream` tails as an ordinary file-source
     stream — so the table's CDF becomes consumable by the engine's own
     streaming operators (windowed aggregation, streaming dedup, stateful
     totals) without any custom source implementation.
@@ -514,8 +515,10 @@ class ChangeFeedTail:
             n += self._land(frm, to)
             self.state = {"seq": to, "pending": None}
             self._save()
-        _, to_seq = self.table.poll_changes(self.state["seq"],
-                                            self.max_seqs)
+        # the bound only: _land builds the window's frame itself
+        to_seq = bound_window(
+            self.table.store, self.state["seq"], self.max_seqs,
+            self.table.props.query_cache_timeout_seconds)
         if to_seq == self.state["seq"]:
             return n
         self.state["pending"] = [self.state["seq"], to_seq]

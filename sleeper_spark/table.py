@@ -37,7 +37,8 @@ from sleeper_spark.query import (
 )
 from sleeper_spark.ranges import Range, Region
 from sleeper_spark.schema import Field, Schema
-from sleeper_spark.statestore import FileReference, StateStore
+from sleeper_spark.statestore import (
+    FileReference, StateStore, StateStoreException, feed_files)
 
 
 class SleeperTable:
@@ -266,7 +267,6 @@ class SleeperTable:
             r.filename for r in view.all_references()
             if not os.path.exists(r.filename)})
         if missing:
-            from sleeper_spark.statestore import StateStoreException
             raise StateStoreException(
                 f"time travel to seq {seq} needs {len(missing)} "
                 f"garbage-collected file(s): {missing[:3]}... — raise the "
@@ -274,22 +274,47 @@ class SleeperTable:
         return SleeperTable(self.spark, self.path, self.schema,
                             self.props, view)
 
+    def _read_feed(self, txs: list, kind: str) -> DataFrame:
+        """The rows of feed ``kind`` (a ``statestore.FEED_FIELDS`` key)
+        in the loaded ``(seq, tx)`` pairs ``txs``, through the head
+        schema. A garbage-collected feed file raises by name."""
+        files = feed_files(txs, kind)
+        missing = [f for f in files if not os.path.exists(f)]
+        if missing:
+            raise StateStoreException(
+                f"{kind}-rows feed needs {len(missing)} garbage-collected "
+                f"file(s): {missing[:3]} — raise the GC delay to cover "
+                "your consumers' lag")
+        struct = self.schema.to_struct_type()
+        if not files:
+            return local_frame(self.spark, struct)
+        return (self.spark.read.schema(struct).parquet(*files)
+                .select(*[f.name for f in self.schema.all_fields()]))
+
+    def _log(self, from_seq: int, to_seq: int | None) -> list:
+        # a long-lived poller must see other writers' commits (same TTL
+        # contract as table.query); without this the feed's head is
+        # pinned at open time and every poll returns empty forever
+        self.store.refresh_if_stale(self.props.query_cache_timeout_seconds)
+        return self.store.transactions_between(from_seq, to_seq)
+
     def added_rows_between(self, from_seq: int,
                            to_seq: int | None = None) -> DataFrame:
-        """Change data feed: the rows APPENDED to the table by ingest
-        commits in ``(from_seq, to_seq]`` — what an incremental
-        downstream pipeline consumes per poll instead of re-reading the
-        table (checkpoint = the last ``current_seq`` it processed).
+        """Change data feed: the rows APPENDED to the table in
+        ``(from_seq, to_seq]`` — ingest commits and the inserted rows
+        of ``merge_upsert`` commits — what an incremental downstream
+        pipeline consumes per poll instead of re-reading the table
+        (checkpoint = the last ``current_seq`` it processed).
 
-        Log-native: only ``ADD_FILES`` transactions contribute
-        (compaction's REPLACE rewrites are content-neutral and
-        correctly emit nothing; partition splits move references, not
-        rows). The feed is therefore APPEND-ONLY by contract:
-        ``delete_where`` rewrites also emit nothing — a consumer that
-        must observe deletions should diff ``as_of`` snapshots instead.
-        The returned frame reads exactly the files those commits
-        added — at any scale the cost is the new data, never a table
-        scan.
+        Log-native: compaction's REPLACE rewrites are content-neutral
+        and correctly emit nothing; partition splits move references,
+        not rows. Removed rows are in :meth:`deleted_rows_between` and
+        the new versions ``update_where`` writes in
+        :meth:`updated_rows_between`; a consumer that must see every
+        change classifies the commits (``views.classify_window``) and
+        reads all three. The returned frame reads exactly the files
+        those commits added — at any scale the cost is the new data,
+        never a table scan.
 
         Two inherent caveats, both surfaced loudly: an ARCHIVED range
         (delete_old_transactions) raises from the statestore, and a
@@ -298,39 +323,7 @@ class SleeperTable:
         tables the feed is the RAW appended rows (pre-collapse): the
         merge is a table-read-time semantic, not an append-time one.
         """
-        from sleeper_spark.statestore import StateStoreException
-        # a long-lived poller must see other writers' commits (same TTL
-        # contract as table.query); without this the feed's head is
-        # pinned at open time and every poll returns empty forever
-        self.store.refresh_if_stale(self.props.query_cache_timeout_seconds)
-        txs = self.store.transactions_between(from_seq, to_seq)
-        # MERGE commits carry their insert files as "addFiles" — new
-        # content, so it belongs in this feed (the REMOVAL half of a
-        # merge is only visible via deleted_rows_between; consumers
-        # that must observe it, like MaterializedView, classify the
-        # commit by type instead of relying on this feed alone)
-        files = [
-            f["filename"]
-            for _, tx in txs
-            for f in (tx.get("files", [])
-                      if tx.get("type") == "ADD_FILES"
-                      else tx.get("addFiles", [])
-                      if tx.get("type") == "MERGE_FILES" else [])
-        ]
-        # one physical file can appear once per partition reference;
-        # read each exactly once
-        files = sorted(set(files))
-        missing = [f for f in files if not os.path.exists(f)]
-        if missing:
-            raise StateStoreException(
-                f"change feed needs {len(missing)} garbage-collected "
-                f"file(s): {missing[:3]} — raise the GC delay to cover "
-                "your consumers' lag")
-        struct = self.schema.to_struct_type()
-        if not files:
-            return local_frame(self.spark, struct)
-        return (self.spark.read.schema(struct).parquet(*files)
-                .select(*[f.name for f in self.schema.all_fields()]))
+        return self._read_feed(self._log(from_seq, to_seq), "added")
 
     def deleted_rows_between(self, from_seq: int,
                              to_seq: int | None = None) -> DataFrame:
@@ -347,26 +340,8 @@ class SleeperTable:
         the GC delay to your consumers' max lag. Deletes committed
         BEFORE this engine recorded tombstones are invisible here
         (consumers detect them via the transaction shape and refuse —
-        see views.MaterializedView._plan_window)."""
-        from sleeper_spark.statestore import StateStoreException
-        self.store.refresh_if_stale(self.props.query_cache_timeout_seconds)
-        txs = self.store.transactions_between(from_seq, to_seq)
-        files = sorted({
-            t for _, tx in txs
-            if tx.get("type") in ("REPLACE_FILE_REFERENCES",
-                                  "MERGE_FILES")
-            for t in tx.get("tombstones", ())})
-        missing = [f for f in files if not os.path.exists(f)]
-        if missing:
-            raise StateStoreException(
-                f"deletion feed needs {len(missing)} garbage-collected "
-                f"tombstone(s): {missing[:3]} — raise the GC delay to "
-                "cover your consumers' lag")
-        struct = self.schema.to_struct_type()
-        if not files:
-            return local_frame(self.spark, struct)
-        return (self.spark.read.schema(struct).parquet(*files)
-                .select(*[f.name for f in self.schema.all_fields()]))
+        see views.classify_window)."""
+        return self._read_feed(self._log(from_seq, to_seq), "deleted")
 
     def updated_rows_between(self, from_seq: int,
                              to_seq: int | None = None) -> DataFrame:
@@ -380,24 +355,7 @@ class SleeperTable:
         updated rows. The stamped files are ordinary live references;
         one a LATER compaction already collected raises here by name —
         same GC-delay-vs-consumer-lag rule as every feed."""
-        from sleeper_spark.statestore import StateStoreException
-        self.store.refresh_if_stale(self.props.query_cache_timeout_seconds)
-        txs = self.store.transactions_between(from_seq, to_seq)
-        files = sorted({
-            u for _, tx in txs
-            if tx.get("type") == "REPLACE_FILE_REFERENCES"
-            for u in tx.get("updates", ())})
-        missing = [f for f in files if not os.path.exists(f)]
-        if missing:
-            raise StateStoreException(
-                f"update feed needs {len(missing)} garbage-collected "
-                f"file(s): {missing[:3]} — raise the GC delay to "
-                "cover your consumers' lag")
-        struct = self.schema.to_struct_type()
-        if not files:
-            return local_frame(self.spark, struct)
-        return (self.spark.read.schema(struct).parquet(*files)
-                .select(*[f.name for f in self.schema.all_fields()]))
+        return self._read_feed(self._log(from_seq, to_seq), "updated")
 
     def poll_changes(self, from_seq: int,
                      max_seqs: int | None = None) -> tuple[DataFrame, int]:
@@ -414,19 +372,9 @@ class SleeperTable:
                 batch, ckpt = table.poll_changes(ckpt, max_seqs=1000)
                 process(batch)
         """
-        self.store.refresh_if_stale(self.props.query_cache_timeout_seconds)
-        head = self.store.current_seq
-        if from_seq > head:
-            raise ValueError(
-                f"checkpoint {from_seq} is beyond the committed head "
-                f"{head} — stale/corrupt consumer state")
-        if max_seqs is not None and max_seqs < 1:
-            # 0 is not "unbounded" — a computed bound that reaches 0
-            # means "no capacity this poll", and silently polling to
-            # head would hand the consumer more than it asked for
-            raise ValueError(f"max_seqs must be >= 1, got {max_seqs}")
-        to_seq = min(head, from_seq + max_seqs) \
-            if max_seqs is not None else head
+        from sleeper_spark.views import bound_window
+        to_seq = bound_window(self.store, from_seq, max_seqs,
+                              self.props.query_cache_timeout_seconds)
         return self.added_rows_between(from_seq, to_seq), to_seq
 
     # ------------------------------------------------------------------
@@ -918,7 +866,6 @@ class SleeperTable:
             r.filename for r in target.all_references()
             if not os.path.exists(r.filename)})
         if missing:
-            from sleeper_spark.statestore import StateStoreException
             raise StateStoreException(
                 f"rollback to seq {seq} needs {len(missing)} "
                 f"garbage-collected file(s): {missing[:3]}... — raise "

@@ -35,7 +35,7 @@ claim released, outputs deleted, the old version readable — so an
 update can never smuggle out-of-constraint values past the ingest gate.
 
 Change-feed note: like deletes, updates do NOT flow through the
-append-only ``added_rows_between`` feed — incremental consumers read
+``added_rows_between`` feed — incremental consumers read
 ``updated_rows_between``/``deleted_rows_between`` (MaterializedView
 and SecondaryIndex do this through their refresh), and
 ``replication.sync_cdc`` converges a replica through an update by

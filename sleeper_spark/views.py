@@ -45,11 +45,12 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Callable
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame
 
 from sleeper_spark.query import local_frame, local_rows_df
+from sleeper_spark.schema import key_tuple
 from sleeper_spark.statestore import unassigned_job_ids
 
 
@@ -148,6 +149,72 @@ def classify_window(store, txs, refuse_msg: str
     return sorted(events), barrier
 
 
+def bound_window(store, from_seq: int, max_seqs: int | None,
+                 ttl_seconds: float = 0) -> int:
+    """The end of the next change-feed window past checkpoint
+    ``from_seq``: the head (refreshed past ``ttl_seconds``), at most
+    ``max_seqs`` seqs on. A checkpoint beyond the head and a
+    ``max_seqs`` below 1 raise."""
+    store.refresh_if_stale(ttl_seconds)
+    head = store.current_seq
+    if from_seq > head:
+        raise ValueError(
+            f"checkpoint {from_seq} is beyond the committed head {head} "
+            "— wrong or recreated source, or stale/corrupt consumer "
+            "state")
+    if max_seqs is not None and max_seqs < 1:
+        # 0 is not "unbounded" — a computed bound that reaches 0
+        # means "no capacity this poll", and silently polling to
+        # head would hand the consumer more than it asked for
+        raise ValueError(f"max_seqs must be >= 1, got {max_seqs}")
+    return min(head, from_seq + max_seqs) if max_seqs is not None \
+        else head
+
+
+class Segment(NamedTuple):
+    """A piece ``(start, end]`` of a change-feed window and its own
+    ``(seq, tx)`` pairs: an ``"append"`` run between events, or one
+    event commit of a :func:`classify_window` kind."""
+    kind: str
+    txs: list
+
+    @property
+    def start(self) -> int:
+        return self.txs[0][0] - 1
+
+    @property
+    def end(self) -> int:
+        return self.txs[-1][0]
+
+
+def walk_window(store, from_seq: int, max_seqs: int | None,
+                refuse_msg: str) -> tuple[int, list[Segment]]:
+    """The next window past checkpoint ``from_seq`` for a consumer that
+    applies every content change in log order (CDC replication,
+    materialized views), as ``(to_seq, segments)``: bounded by
+    :func:`bound_window`, read with ONE ``transactions_between`` call
+    and cut before an in-flight claim (``to_seq == from_seq`` when
+    blocked). The segments cover ``(from_seq, to_seq]`` in order."""
+    to_seq = bound_window(store, from_seq, max_seqs)
+    if to_seq <= from_seq:
+        return to_seq, []
+    txs = store.transactions_between(from_seq, to_seq)
+    events, barrier = classify_window(store, txs, refuse_msg)
+    if barrier is not None:
+        to_seq = barrier - 1
+    kinds = dict(events)
+    segments: list[Segment] = []
+    for seq, tx in txs:
+        if seq > to_seq:
+            break
+        kind = kinds.get(seq, "append")
+        if kind == "append" and segments and segments[-1].kind == kind:
+            segments[-1].txs.append((seq, tx))
+        else:
+            segments.append(Segment(kind, [(seq, tx)]))
+    return to_seq, segments
+
+
 class MaterializedView:
     """Binds (source table, destination table, transform). State (the
     change-feed checkpoint) lives in ``<dest>/mview.json`` so any
@@ -189,21 +256,15 @@ class MaterializedView:
         "would drift; pass on_delete= to maintain through "
         "deletes/updates, or rebuild it from scratch")
 
-    def _plan_window(self, txs) -> tuple[list[tuple[int, str]],
-                                         int | None]:
-        return classify_window(self.source.store, txs,
-                               self._REFUSE_MSG)
-
-    def _advance_appends(self, state: dict, from_seq: int,
-                         to_seq: int) -> None:
-        """Apply the appends in ``(from_seq, to_seq]`` and checkpoint.
-        Windows holding no ADD_FILES commits (compaction, splits, GC —
-        content-neutral metadata) advance the checkpoint without a
+    def _apply_appends(self, state: dict, seg: Segment) -> None:
+        """Apply the appends of one append run and checkpoint at its
+        end. Runs holding no ADD_FILES commits (compaction, splits, GC
+        — content-neutral metadata) advance the checkpoint without a
         Spark job.
 
         Segment boundaries are NOT a pure function of the log alone —
-        ``to_seq`` depends on the source head at planning time, and a
-        barrier from an in-flight ``delete-*`` claim depends on
+        the window end depends on the source head at planning time, and
+        a barrier from an in-flight ``delete-*`` claim depends on
         whether the claim is still outstanding when the plan runs. So
         before ingesting, the planned segment end is PERSISTED as an
         intent (``segment_to`` in the state file): a crash between
@@ -212,16 +273,12 @@ class MaterializedView:
         advanced or the in-flight delete committed meanwhile, and the
         ingest-job dedupe makes the replay a no-op instead of
         re-ingesting the overlap under a different id."""
-        if to_seq <= from_seq:
-            return
-        txs = self.source.store.transactions_between(from_seq, to_seq)
-        if any(tx.get("type") == "ADD_FILES" for _s, tx in txs):
-            state["segment_to"] = to_seq
+        if any(tx.get("type") == "ADD_FILES" for _s, tx in seg.txs):
+            state["segment_to"] = seg.end
             self._save_state(state)  # durable intent BEFORE the write
-            batch = self.source.added_rows_between(from_seq, to_seq)
-            delta = self.transform(batch)
-            self.dest.ingest(delta, job_id=f"mv-{from_seq}-{to_seq}")
-        state["seq"] = to_seq
+            delta = self.transform(self.source._read_feed(seg.txs, "added"))
+            self.dest.ingest(delta, job_id=f"mv-{seg.start}-{seg.end}")
+        state["seq"] = seg.end
         state.pop("segment_to", None)
         self._save_state(state)
 
@@ -232,7 +289,8 @@ class MaterializedView:
         every segment (append window or single delete commit)
         checkpoints on completion and replays as a no-op — append
         ingests dedupe by job id, delete handlers are idempotent by
-        contract (class doc)."""
+        contract (class doc). A checkpoint beyond the source head (a
+        wrong or recreated source) and ``max_seqs < 1`` raise."""
         state = self._load_state()
         if "rebuild_to" in state:
             # a crash-interrupted rebuild left its intent: finish it
@@ -246,28 +304,22 @@ class MaterializedView:
             # re-planning first could pick a different first-segment
             # end (head advanced, in-flight delete resolved) whose job
             # id would not dedupe against the half-applied one
-            self._advance_appends(state, state["seq"],
-                                  state["segment_to"])
+            self._apply_appends(state, Segment(
+                "append", self.source.store.transactions_between(
+                    state["seq"], state["segment_to"])))
         from_seq = state["seq"]
-        self.source.store.refresh_if_stale(0)
-        head = self.source.store.current_seq
-        to_seq = min(head, from_seq + max_seqs) \
-            if max_seqs is not None else head
-        if to_seq <= from_seq:
-            return 0
-        txs = self.source.store.transactions_between(from_seq, to_seq)
-        events, barrier = self._plan_window(txs)
-        if barrier is not None:
-            events = [e for e in events if e[0] < barrier]
-            to_seq = barrier - 1
-        if events and self.on_delete is None:
+        to_seq, segments = walk_window(self.source.store, from_seq,
+                                       max_seqs, self._REFUSE_MSG)
+        if self.on_delete is None and any(
+                seg.kind != "append" for seg in segments):
             raise ValueError(self._REFUSE_MSG)
-        cur = from_seq
-        for dseq, kind in events:
-            self._advance_appends(state, cur, dseq - 1)
-            deleted = self.source.deleted_rows_between(dseq - 1, dseq)
-            self.on_delete(deleted, f"mv-del-{dseq}")
-            if kind in ("update", "merge"):
+        for seg in segments:
+            if seg.kind == "append":
+                self._apply_appends(state, seg)
+                continue
+            self.on_delete(self.source._read_feed(seg.txs, "deleted"),
+                           f"mv-del-{seg.end}")
+            if seg.kind != "delete":
                 # update/merge = delete-old + ingest-new: the handler
                 # above removed the old versions; the new versions
                 # (update commits stamp them as `updates`, merge
@@ -275,23 +327,21 @@ class MaterializedView:
                 # re-enter through the transform under a deterministic
                 # job id, so a crash-replay of this segment dedupes
                 # (handler idempotent by contract, ingest by job id)
-                new_rows = (self.source.updated_rows_between(
-                    dseq - 1, dseq) if kind == "update"
-                    else self.source.added_rows_between(dseq - 1, dseq))
+                new_rows = self.source._read_feed(
+                    seg.txs, "updated" if seg.kind == "update" else "added")
                 self.dest.ingest(self.transform(new_rows),
-                                 job_id=f"mv-upd-{dseq}")
-            state["seq"] = dseq
+                                 job_id=f"mv-upd-{seg.end}")
+            state["seq"] = seg.end
             self._save_state(state)
-            cur = dseq
-        self._advance_appends(state, cur, to_seq)
-        return max(0, to_seq - from_seq)
+        return to_seq - from_seq
 
     # ------------------------------------------------------------------
     def rebuild(self) -> int:
-        """Full rebuild — the recovery path after the incremental
-        contract is invalidated (``delete_where`` on the source trips
-        ``refresh`` permanently, because the change feed carries
-        appends only). Snapshot-consistent AND crash-safe:
+        """Full rebuild — the recovery path when the incremental
+        contract cannot hold: a source delete/update/merge on a view
+        without ``on_delete`` (``refresh`` refuses it permanently), a
+        legacy pre-tombstone delete, or a mass delete past a handler's
+        cap. Snapshot-consistent AND crash-safe:
 
         1. the source head seq is captured and persisted as a
            ``rebuild_to`` INTENT before anything is touched;
@@ -425,9 +475,6 @@ class SecondaryIndex:
         the indexed value alive). Idempotent: re-running re-deletes
         already-absent postings (a no-op plan) and re-skips alive
         pairs, so a crash between handler and checkpoint is safe."""
-        def norm(v):
-            return bytes(v) if isinstance(v, bytearray) else v
-
         cap = self.MAX_INCREMENTAL_DELETE_KEYS
         head = (self._project(deleted).distinct()
                 .limit(cap + 1).collect())
@@ -438,13 +485,13 @@ class SecondaryIndex:
                 f"delete commit tombstoned more than {cap} distinct "
                 "(value, key) postings — a mass delete; rebuild() the "
                 "index instead of maintaining it point-wise")
-        pairs = {(tuple(norm(r[c]) for c in self.value_cols),
-                  tuple(norm(r[k]) for k in self._src_keys))
+        pairs = {(key_tuple(r[c] for c in self.value_cols),
+                  key_tuple(r[k] for k in self._src_keys))
                  for r in head}
         keyset = [dict(zip(self._src_keys, kk))
                   for kk in {kk for _, kk in pairs}]
-        alive = {(tuple(norm(r[c]) for c in self.value_cols),
-                  tuple(norm(r[k]) for k in self._src_keys))
+        alive = {(key_tuple(r[c] for c in self.value_cols),
+                  key_tuple(r[k] for k in self._src_keys))
                  for r in self._project(
                      self.source.batch_exact_key_query(keyset))
                  .collect()}

@@ -809,3 +809,53 @@ class TestFileShipping:
             for f in from_arrow_schema(pq.read_schema(r.filename)).fields:
                 assert f.dataType == want[f.name], (r.filename, f)
         dst.full_scan().collect()
+
+
+def test_sync_step_reads_the_source_log_once(spark, tmp_path,
+                                             monkeypatch):
+    """One sync_cdc step over an append, a delete, an update and a
+    merge (appends between them) plans its window and reads every
+    feed from ONE source log read: the walker's segments carry their
+    own transactions."""
+    from sleeper_spark.ranges import Range, Region
+    src = SleeperTable.create(spark, str(tmp_path / "s"), _full_schema(),
+                              split_points=[500])
+    dst = SleeperTable.create(spark, str(tmp_path / "d"), _full_schema(),
+                              split_points=[500])
+    src.ingest(_frows(spark, 0, 400))
+    src.delete_where(regions=[Region.of(Range("k", 100, 150))])
+    src.ingest(_frows(spark, 400, 700))
+    src.update_where({"s": "upd"},
+                     regions=[Region.of(Range("k", 200, 260))])
+    src.ingest(_frows(spark, 700, 900))
+    src.merge_upsert(_frows(spark, 850, 950, tag="m"))
+    src.ingest(_frows(spark, 2000, 2050, tag="late"))
+    calls = {"n": 0}
+    real = src.store.transactions_between
+
+    def counting(*a, **kw):
+        calls["n"] += 1
+        return real(*a, **kw)
+
+    monkeypatch.setattr(src.store, "transactions_between", counting)
+    s = replication.sync_cdc(src, dst)
+    assert calls["n"] == 1, calls["n"]
+    assert s["caught_up"]
+    assert (s["deletes_applied"], s["updates_applied"],
+            s["merges_applied"]) == (1, 1, 1)
+    assert _fsorted(dst) == _fsorted(src)
+
+
+@pytest.mark.parametrize("step", [replication.sync_cdc,
+                                  replication.sync_cdc_to_head])
+def test_sync_refuses_max_seqs_below_one(spark, tmp_path, step):
+    """max_seqs=0 is neither "unbounded" nor a claim barrier: each step
+    refuses it by name, as poll_changes does (sync_cdc used to return a
+    no-progress summary, sync_cdc_to_head to blame an in-flight
+    claim)."""
+    src = SleeperTable.create(spark, str(tmp_path / "s"), _schema())
+    dst = SleeperTable.create(spark, str(tmp_path / "d"), _schema())
+    src.ingest(_rows(spark, 0, 10))
+    with pytest.raises(ValueError, match="max_seqs must be >= 1"):
+        step(src, dst, max_seqs=0)
+    assert replication.applied_seq(dst) == 0

@@ -707,3 +707,27 @@ def test_interval_join_query_leaves_parent_conf_untouched(spark):
     out = em.q_streaming_interval_join(spark, SF_DIR)
     assert out.count() >= 0
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_change_feed_tail_builds_one_frame_per_drain(spark, tmp_path,
+                                                     monkeypatch):
+    """drain takes only the window bound from the shared code: the
+    window's rows are read once, by the landing, not also by a
+    discarded poll_changes frame."""
+    schema = Schema((Field("k", T.LongType()),), (),
+                    (Field("v", T.LongType(), True),))
+    t = SleeperTable.create(spark, str(tmp_path / "t"), schema)
+    tail = streaming.ChangeFeedTail(t, str(tmp_path / "stage"))
+    t.ingest(spark.range(10).selectExpr("id AS k", "id AS v"))
+    built = {"n": 0}
+    real = t.added_rows_between
+
+    def counting(*a, **kw):
+        built["n"] += 1
+        return real(*a, **kw)
+
+    monkeypatch.setattr(t, "added_rows_between", counting)
+    assert tail.drain() == 10
+    assert built["n"] == 1
+    with pytest.raises(ValueError, match="max_seqs must be >= 1"):
+        streaming.ChangeFeedTail(t, str(tmp_path / "s2"), 0).drain()

@@ -891,3 +891,87 @@ def test_mview_refresh_passes_through_evolve_records(spark, tmp_path):
     got = {r.k: r.n for r in dest.full_scan().collect()}
     assert got == {k: 1 for k in range(50)}
     assert mv.refresh() == 0  # caught up; no replay, no refusal
+
+
+def _sum_view(spark, tmp_path):
+    """A source and a sum view over ``g`` that maintains itself through
+    deletes, updates and merges (negated deltas on delete)."""
+    src_schema = Schema((Field("k", T.LongType()),), (),
+                        (Field("g", T.LongType(), True),
+                         Field("v", T.LongType(), True)))
+    view_schema = Schema((Field("g", T.LongType()),), (),
+                         (Field("n", T.LongType()), Field("s", T.LongType())))
+    src = SleeperTable.create(spark, str(tmp_path / "s"), src_schema,
+                              split_points=[500])
+    dest = SleeperTable.create(spark, str(tmp_path / "view"), view_schema,
+                               TableProperties(aggregations="sum(n), sum(s)"))
+
+    def transform(b):
+        return b.select("g", F.lit(1).cast("long").alias("n"),
+                        F.col("v").alias("s"))
+
+    def on_delete(deleted, job_id):
+        dest.ingest(deleted.select(
+            "g", F.lit(-1).cast("long").alias("n"),
+            (-F.col("v")).alias("s")), job_id=job_id)
+
+    return src, dest, MaterializedView(src, dest, transform, on_delete)
+
+
+def _g_rows(spark, lo, hi, mult=10):
+    return spark.range(lo, hi).selectExpr(
+        "id AS k", "id % 7 AS g", f"id * {mult} AS v")
+
+
+def test_refresh_reads_the_source_log_once(spark, tmp_path, monkeypatch):
+    """One refresh over an append, a delete, an update and a merge
+    (appends between them) plans its window and reads every feed from
+    ONE source log read; the view still equals the batch recompute."""
+    src, dest, mv = _sum_view(spark, tmp_path)
+    src.ingest(_g_rows(spark, 0, 400))
+    src.delete_where(regions=[Region.of(Range("k", 100, 150))])
+    src.ingest(_g_rows(spark, 400, 700))
+    src.update_where({"v": 5}, regions=[Region.of(Range("k", 200, 260))])
+    src.ingest(_g_rows(spark, 700, 900))
+    src.merge_upsert(_g_rows(spark, 850, 950, mult=3))
+    src.ingest(_g_rows(spark, 2000, 2050))
+    calls = {"n": 0}
+    real = src.store.transactions_between
+
+    def counting(*a, **kw):
+        calls["n"] += 1
+        return real(*a, **kw)
+
+    monkeypatch.setattr(src.store, "transactions_between", counting)
+    assert mv.refresh() == src.store.current_seq
+    assert calls["n"] == 1, calls["n"]
+    want = {r.g: (r.n, r.s) for r in src.full_scan().groupBy("g").agg(
+        F.count("*").alias("n"), F.sum("v").alias("s")).collect()}
+    got = {r.g: (r.n, r.s) for r in dest.full_scan().collect()
+           if (r.n, r.s) != (0, 0)}
+    assert got == want
+
+
+def test_refresh_refuses_max_seqs_below_one(spark, tmp_path):
+    """refresh(max_seqs=0) raises, as poll_changes does; it used to
+    return 0 without consuming anything."""
+    src, _dest, mv = _sum_view(spark, tmp_path)
+    src.ingest(_g_rows(spark, 0, 100))
+    with pytest.raises(ValueError, match="max_seqs must be >= 1"):
+        mv.refresh(max_seqs=0)
+    assert mv._load_state()["seq"] == 0
+
+
+def test_refresh_refuses_checkpoint_beyond_source_head(spark, tmp_path):
+    """A view whose checkpoint is beyond its source's head (re-pointed
+    at a recreated source) raises; it used to return 0 on every call
+    and never update."""
+    src, dest, mv = _sum_view(spark, tmp_path)
+    for lo in range(0, 300, 100):
+        src.ingest(_g_rows(spark, lo, lo + 100))
+    assert mv.refresh() == src.store.current_seq
+    fresh = SleeperTable.create(spark, str(tmp_path / "s2"), src.schema)
+    fresh.ingest(_g_rows(spark, 0, 10))
+    moved = MaterializedView(fresh, dest, mv.transform, mv.on_delete)
+    with pytest.raises(ValueError, match="beyond the committed head"):
+        moved.refresh()
